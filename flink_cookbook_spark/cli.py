@@ -48,7 +48,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--duration-seconds", type=int, default=None)
     # runtime (flinkarima.py:498-499)
     p.add_argument("--parallelism", type=int, default=None,
-                   help="shuffle partitions (reference: job parallelism)")
+                   help="partitions of every shuffle and of streaming state "
+                   "(reference: job parallelism); default: state on 1 "
+                   "partition, batch shuffles at the core count. A "
+                   "streaming checkpoint keeps the state width of its "
+                   "first start")
     p.add_argument("--checkpoint-ms", type=int, default=60_000)
     p.add_argument("--checkpoint-dir", default="/tmp/fcs-checkpoints")
     # model state (flinkarima.py:500-515)

@@ -2,10 +2,24 @@
 
 Local testing runs on local[N] (single JVM); the config is nonetheless
 written for a real cluster: AQE handles runtime re-planning (partition
-coalescing, skew-join splitting), shuffle partitions default to the local
-core count but should be ~2-3x total executor cores on a cluster, and the
-session timezone is pinned to UTC so results are reproducible and
-comparable against the DuckDB oracle (DuckDB timestamps are UTC-naive).
+coalescing, skew-join splitting), and the session timezone is pinned to
+UTC so results are reproducible and comparable against the DuckDB oracle
+(DuckDB timestamps are UTC-naive).
+
+Two confs set two different widths:
+
+- ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` is the
+  width of every batch shuffle. With AQE and partition coalescing on,
+  Spark reads it in place of ``spark.sql.shuffle.partitions``, and AQE
+  then coalesces down by data volume. It defaults to the local core
+  count; on a cluster raise it to ~2-3x total executor cores.
+- ``spark.sql.shuffle.partitions`` is the width of streaming state and
+  of any exchange that runs without AQE. Structured Streaming disables
+  AQE and writes this number into each stateful query's checkpoint at
+  its first start, so it is the query's state-store partition count for
+  life. It defaults to 1, the reference's default job parallelism,
+  because a micro-batch pays one state store, one task and one sink
+  file per partition however few rows it holds.
 """
 
 from __future__ import annotations
@@ -23,21 +37,30 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
+    ``shuffle_partitions=None`` gives streaming state one partition and
+    batch shuffles the core count (``initialPartitionNum``). An explicit
+    ``shuffle_partitions=n`` (the CLI's ``--parallelism``, the
+    reference's job parallelism) sets both widths to ``n``.
+
     At 100 TB these same knobs apply — only the values change:
-    ``spark.sql.shuffle.partitions`` ~ 2-3x total cores (AQE coalesces
-    down), ``spark.sql.files.maxPartitionBytes`` sized so a scan task's
-    input fits comfortably in executor memory.
+    ``initialPartitionNum`` ~ 2-3x total cores (AQE coalesces down),
+    ``spark.sql.files.maxPartitionBytes`` sized so a scan task's input
+    fits comfortably in executor memory.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
+    state_partitions = shuffle_partitions or 1
+    batch_partitions = shuffle_partitions or cpus
 
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(state_partitions))
+        .config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(batch_partitions),
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # size post-shuffle partitions by data volume (advisory 64 MB

@@ -48,7 +48,10 @@ def main() -> None:
         page_hinkley_streaming,
     )
 
-    spark = get_spark(app_name="fcs-restart10k-probe")
+    # state at the core count, as in the recorded results (the session
+    # default is one state partition)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    spark = get_spark(app_name="fcs-restart10k-probe", shuffle_partitions=cpus)
 
     rng = random.Random(20260816)
     data = []

@@ -60,7 +60,10 @@ def main() -> None:
     from flink_cookbook_spark.session import get_spark
     from flink_cookbook_spark.streaming.recipes import windowed_avg_stream
 
-    spark = get_spark(app_name="fcs-stream100m-probe")
+    # state at the core count, as in the recorded results (the session
+    # default is one state partition)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    spark = get_spark(app_name="fcs-stream100m-probe", shuffle_partitions=cpus)
     work = tempfile.mkdtemp(prefix="fcs_stream100m_")
     stage = os.path.join(work, "staged")
     sink = os.path.join(work, "sink")

@@ -5,6 +5,10 @@ identical batch expressions."""
 
 from __future__ import annotations
 
+import contextlib
+import os
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -36,6 +40,21 @@ def _run_to_memory(df, name):
     )
     q.processAllAvailable()
     q.stop()
+
+
+@contextlib.contextmanager
+def _state_partitions(spark, n):
+    """Streaming queries started inside run at ``n`` state-store
+    partitions. A query clones the session conf at ``start()`` and a
+    checkpoint keeps the width of its first start, so restoring the conf
+    afterwards leaves started queries and checkpoints alone."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def _metrics_view(stream_df):
@@ -159,6 +178,77 @@ def test_streaming_alerts_pipeline(spark, windowed_stage_dir):
         assert r.alert_type == "cpu_deviation"
         assert r.severity in ("high", "medium")
         assert abs(r.z_score) >= 3.0 or abs(r.pct_deviation) >= 50.0
+
+
+def test_default_session_widths(spark):
+    """get_spark() defaults: streaming state on one partition (the
+    reference's job parallelism), batch shuffles at the core count
+    through AQE's initial partition number."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+    assert spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    ) == str(cpus)
+    # a batch exchange is planned at the core count, before AQE coalesces
+    plan = (
+        spark.range(100).withColumn("k", F.col("id") % 7).groupBy("k").count()
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert re.search(rf"hashpartitioning\(k#\d+L, {cpus}\), ENSURE_REQUIREMENTS", plan), plan
+
+
+def test_alerts_stream_width_independent_and_restart_parity(
+    spark, windowed_stage_dir, tmp_path
+):
+    """The flagship baseline -> alert query emits the same alerts at 1
+    and 4 state partitions. A checkpoint started at 4 partitions, stopped
+    and restarted under the default session over more input keeps its 4
+    partitions (Spark reads the width from the checkpoint) and emits
+    exactly an uninterrupted run's alerts: no duplicates, no gaps."""
+    from flink_cookbook_spark.streaming.recipes import alerts_stream
+
+    win = spark.read.parquet(windowed_stage_dir)
+    rows = win.orderBy("window_start", "user_id").collect()
+    split = rows[len(rows) // 2].window_start
+
+    def run(src, name):
+        out, ckpt = str(tmp_path / name), str(tmp_path / f"{name}_ckpt")
+        q = (
+            alerts_stream(spark.readStream.schema(win.schema).parquet(src))
+            .writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        width = q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+        return sorted(tuple(r) for r in spark.read.parquet(out).collect()), width
+
+    want, width = run(windowed_stage_dir, "one")
+    assert width == 1
+    assert len({r[0] for r in want}) > 1  # alerts from several keys
+    with _state_partitions(spark, 4):
+        got, width = run(windowed_stage_dir, "four")
+    assert width == 4
+    assert got == want
+
+    # restart: first half at 4 partitions, the rest under the default
+    src = str(tmp_path / "src")
+    win.where(F.col("window_start") < split).coalesce(1).write.parquet(src)
+    with _state_partitions(spark, 4):
+        first, _ = run(src, "restart")
+    assert 0 < len(first) < len(want)
+    win.where(F.col("window_start") >= split).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    got, width = run(src, "restart")
+    assert width == 4
+    keys = [(r[0], r[1]) for r in got]
+    assert len(keys) == len(set(keys))
+    assert got == want
 
 
 def test_synthetic_generator_value_model(spark):
@@ -1317,17 +1407,21 @@ def test_streaming_page_hinkley_restart_parity_1000_keys(
 
     def run_phase():
         stream = spark.readStream.schema(schema).parquet(data_dir)
-        q = (
-            page_hinkley_streaming(stream)
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        # 4 state-store partitions, not the session's default 1, so keys
+        # really hash across partitions
+        with _state_partitions(spark, 4):
+            q = (
+                page_hinkley_streaming(stream)
+                .writeStream.format("parquet")
+                .outputMode("append")
+                .option("path", out_dir)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
         q.processAllAvailable()
         q.stop()
+        assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 4
 
     run_phase()
     ev.where(F.col("t") > split_t).coalesce(1).write.parquet(
