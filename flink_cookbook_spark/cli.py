@@ -16,8 +16,10 @@ from pyspark.sql import functions as F
 from flink_cookbook_spark.functions.time import epoch_seconds
 
 
-def _comma_int_list(expected: int):
-    """Validator twin of _comma_int_list (flinkarima.py:479-485)."""
+def _comma_int_list(expected: int, implemented: tuple[int, ...]):
+    """Validator twin of _comma_int_list (flinkarima.py:479-485). The
+    engine implements one model order, so leading fields other than
+    ``implemented`` are rejected rather than silently ignored."""
 
     def parse(value: str) -> tuple[int, ...]:
         parts = [p.strip() for p in value.split(",")]
@@ -25,7 +27,12 @@ def _comma_int_list(expected: int):
             raise argparse.ArgumentTypeError(
                 f"expected {expected} comma-separated ints, got {value!r}"
             )
-        return tuple(int(p) for p in parts)
+        ints = tuple(int(p) for p in parts)
+        if ints[: len(implemented)] != implemented:
+            raise argparse.ArgumentTypeError(
+                f"only {','.join(map(str, implemented))} is implemented, got {value!r}"
+            )
+        return ints
 
     return parse
 
@@ -59,9 +66,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--max-history", type=int, default=1440)
     p.add_argument("--min-history", type=int, default=288)
     p.add_argument("--emit-every-n", type=int, default=5)
-    p.add_argument("--order", type=_comma_int_list(3), default=(1, 1, 1))
-    p.add_argument("--seasonal-order", type=_comma_int_list(4), default=(0, 1, 1, 288))
-    p.add_argument("--forecast-steps", type=int, default=1)
+    # the model is SARIMA(1,1,1)x(0,1,1,s) with a one-step forecast; the
+    # flags stay for launch-line parity and reject any other order
+    p.add_argument("--order", type=_comma_int_list(3, (1, 1, 1)), default=(1, 1, 1))
+    p.add_argument("--seasonal-order", type=_comma_int_list(4, (0, 1, 1)),
+                   default=(0, 1, 1, 288), help="P,D,Q,s; only s is free")
+    p.add_argument("--forecast-steps", type=int, choices=[1], default=1)
     # alert thresholds (flinkarima.py:516-533)
     p.add_argument("--z-threshold", type=float, default=3.0)
     p.add_argument("--pct-threshold", type=float, default=50.0)
@@ -85,9 +95,6 @@ def config_from_args(args: argparse.Namespace):
         min_history=args.min_history,
         emit_every_n=args.emit_every_n,
         season=args.seasonal_order[3],
-        order=tuple(args.order),
-        seasonal_order=tuple(args.seasonal_order[:3]),
-        forecast_steps=args.forecast_steps,
     )
 
 

@@ -35,8 +35,11 @@ from pyspark.sql.streaming import StreamingQuery
 from flink_cookbook_spark.functions.time import epoch_seconds
 from flink_cookbook_spark.streaming.sarimax import (
     FIXTURE_CONFIG,
+    STATE_SCHEMA,
     BaselineConfig,
+    _KeyState,
     baseline_streaming,
+    replay_key,
 )
 
 #: reference alert thresholds (flinkarima.py:516-533)
@@ -281,14 +284,13 @@ def stream_stream_left_outer_join(
     )
 
 
-#: cogrouped state-fold output: one 'state' row per key + 'emit' rows
-_FOLD_SCHEMA = (
-    "user_id long, kind string, count long, mean double, m2 double, "
-    "counter int, scaled array<double>, raw array<double>, "
-    "window_start long, baseline double, running_std double"
-)
-_STATE_COLS = ["user_id", "count", "mean", "m2", "counter", "scaled", "raw"]
-_LATEST_COLS = ["user_id", "window_start", "baseline", "running_std"]
+#: the latest-baseline table: each key's newest emission
+_LATEST_SCHEMA = "user_id long, window_start long, baseline double, running_std double"
+_LATEST_COLS = [c.split()[0] for c in _LATEST_SCHEMA.split(", ")]
+_STATE_COLS = ["user_id", *_KeyState.__slots__]
+#: cogrouped fold output, one row per key: its newest emission of the
+#: batch (null when none) and its model state
+_FOLD_SCHEMA = f"{_LATEST_SCHEMA}, {STATE_SCHEMA}"
 
 
 def continuous_alerts_foreach_batch(
@@ -338,8 +340,6 @@ def continuous_alerts_foreach_batch(
 
     from pyspark.sql import functions as FF
 
-    from flink_cookbook_spark.streaming.sarimax import _KeyState, _process_sample
-
     root = state_root or tempfile.mkdtemp(prefix=f"fcs_{baseline_table}_")
 
     def _fs_and_path(spark: SparkSession, base: str):
@@ -364,38 +364,16 @@ def continuous_alerts_foreach_batch(
 
     def _fold(key, state_pdf: pd.DataFrame, samples_pdf: pd.DataFrame):
         (uid,) = key
-        if len(state_pdf):
-            s = state_pdf.iloc[0]
-            ks = _KeyState(
-                int(s["count"]), float(s["mean"]), float(s["m2"]),
-                int(s["counter"]), list(s["scaled"]), list(s["raw"]),
-            )
-        else:
-            ks = _KeyState()
-        newest = None  # (window_start, baseline, running_std)
-        for r in samples_pdf.sort_values("window_start").itertuples(index=False):
-            rec = _process_sample(ks, float(r.avg_value), cfg)
-            if rec is not None:
-                newest = (int(r.window_start), rec["baseline"], rec["running_std"])
-        rows = [
-            {
-                "user_id": int(uid), "kind": "state", "count": ks.count,
-                "mean": ks.mean, "m2": ks.m2, "counter": ks.counter,
-                "scaled": ks.scaled, "raw": ks.raw,
-                "window_start": None, "baseline": None, "running_std": None,
-            }
-        ]
-        if newest is not None:
-            rows.append(
-                {
-                    "user_id": int(uid), "kind": "emit", "count": None,
-                    "mean": None, "m2": None, "counter": None,
-                    "scaled": None, "raw": None,
-                    "window_start": newest[0], "baseline": newest[1],
-                    "running_std": newest[2],
-                }
-            )
-        return pd.DataFrame(rows)
+        ks = (
+            _KeyState.from_state(state_pdf.iloc[0][_STATE_COLS[1:]])
+            if len(state_pdf)
+            else _KeyState()
+        )
+        recs = replay_key(ks, uid, samples_pdf, cfg)
+        newest = recs[-1] if recs else {}
+        row = dict(zip(_STATE_COLS, (int(uid), *ks.to_state())))
+        row.update({c: newest.get(c) for c in _LATEST_COLS[1:]})
+        return pd.DataFrame([row])
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -405,17 +383,12 @@ def continuous_alerts_foreach_batch(
         latest_df = (
             spark.read.parquet(prev_latest)
             if prev_latest
-            else spark.createDataFrame([], ", ".join(f"{c} {t}" for c, t in zip(
-                _LATEST_COLS, ["long", "long", "double", "double"])))
+            else spark.createDataFrame([], _LATEST_SCHEMA)
         )
         state_df = (
             spark.read.parquet(prev_state)
             if prev_state
-            else spark.createDataFrame(
-                [],
-                "user_id long, count long, mean double, m2 double, counter int, "
-                "scaled array<double>, raw array<double>",
-            )
+            else spark.createDataFrame([], f"user_id long, {STATE_SCHEMA}")
         )
         # 1. score this batch against the previous epoch's latest
         #    baselines: broadcast join + pure column exprs (J2), fully
@@ -467,11 +440,11 @@ def continuous_alerts_foreach_batch(
             .applyInPandas(_fold, schema=_FOLD_SCHEMA)
         )
         folded.persist()
-        folded.where(FF.col("kind") == "state").select(*_STATE_COLS).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(root, "state", f"epoch={epoch_id}"))
+        folded.select(*_STATE_COLS).write.mode("overwrite").parquet(
+            os.path.join(root, "state", f"epoch={epoch_id}")
+        )
         # upsert: newest emission per key wins over the previous table
-        emits = folded.where(FF.col("kind") == "emit").select(*_LATEST_COLS)
+        emits = folded.where(FF.col("window_start").isNotNull()).select(*_LATEST_COLS)
         merged = (
             emits.withColumn("gen", FF.lit(1))
             .unionByName(latest_df.withColumn("gen", FF.lit(0)))

@@ -8,21 +8,23 @@ inverse-scales, and emits a 9-field baseline record
 
 Spark-first design (SURVEY.md section 4.2): the model is the one operator
 Catalyst cannot express, so it lives behind a pandas-UDF boundary —
-``applyInPandas`` per key in batch (each group processed as one ordered
-pandas frame), ``applyInPandasWithState`` in streaming (Arrow-batched
-state, vs the reference's per-record pickling). Everything around it
-(window agg, enrichment join, alert filter) stays relational.
+``mapInPandas`` over key-clustered partitions in batch,
+``applyInPandasWithState`` in streaming (Arrow-batched state, vs the
+reference's per-record pickling). Everything around it (window agg,
+enrichment join, alert filter) stays relational.
 
-Three forecasters behind one switch (``BaselineConfig.method``): the
-exact statsmodels SARIMAX (used automatically when importable), a
-VENDORED CSS fit of the same ARIMA(1,1,1)x(0,1,1,s) model
-(streaming/seasonal_arima.py — no statsmodels needed, pytest-verified
-against simulated data and, env-gated, against statsmodels itself), and
-a closed-form numpy fallback (seasonal-naive level + EWMA of the
-seasonally differenced series ~ SARIMA(0,0,0)(0,1,1)s) whose math is
-hash-checked end-to-end by ``baseline_fallback_oracle``. ``auto``
-resolves statsmodels -> fallback, keeping the registered fixture
-queries on the fast closed-form path.
+Two forecasters (``BaselineConfig.method``): ``ewma``, a closed-form
+numpy fallback (seasonal-naive level + EWMA of the seasonally
+differenced series ~ SARIMA(0,0,0)(0,1,1)s) whose math is hash-checked
+end-to-end by ``baseline_fallback_oracle``; and ``css``, a VENDORED CSS
+fit of the reference's ARIMA(1,1,1)x(0,1,1,s) model
+(streaming/seasonal_arima.py — pytest-verified against simulated data
+and, where statsmodels is installed, against statsmodels itself).
+
+One per-sample step, ``_process_sample``, and two replays of it:
+``replay_key`` steps one key's ordered frame (streaming state and the
+foreachBatch fold), ``_vectorized_runner`` steps every key of a batch
+partition at once (``baseline_batch``). Both produce the same bits.
 
 State-update order replicated exactly (flinkarima.py:191-239):
 scale with PRE-update mean/std -> append + trim history -> Welford update
@@ -37,6 +39,7 @@ the emit cadence bounds model-fit cost to 1 fit per key per N windows.
 
 from __future__ import annotations
 
+import logging
 import math
 from collections.abc import Iterator
 from dataclasses import dataclass
@@ -49,40 +52,38 @@ from pyspark.sql import functions as F
 
 from flink_cookbook_spark.registry import register, rnd
 
-try:  # pragma: no cover - not installed in this container
-    from statsmodels.tsa.statespace.sarimax import SARIMAX  # type: ignore
+_log = logging.getLogger(__name__)
 
-    HAVE_STATSMODELS = True
-except ImportError:
-    HAVE_STATSMODELS = False
+#: ``BaselineConfig.method`` -> the per-record ``model`` tag
+MODEL_NAMES = {"ewma": "ewma_fallback", "css": "sarimax_css"}
 
 
 @dataclass(frozen=True)
 class BaselineConfig:
     """Reference defaults from run_job.sh:11-28 / flinkarima.py:498-515,
-    scaled down for the fixture cadence by the registered queries.
+    scaled down for the fixture cadence by the registered queries. The
+    model order is fixed at the reference's (1,1,1)x(0,1,1,season) with
+    a one-step forecast; the CLI rejects any other.
 
     ``method`` selects the forecaster:
-    - ``"auto"``: statsmodels SARIMAX when importable, else the EWMA
-      fallback (the fast closed-form path the registered fixture
-      queries use — its math is hash-checked end-to-end by
-      ``baseline_fallback_oracle``).
-    - ``"sarimax"``: force the exact statsmodels fit (raises if absent).
+    - ``"ewma"`` (default): the closed-form fallback — the fast path the
+      registered fixture queries use, its math hash-checked end-to-end
+      by ``baseline_fallback_oracle``.
     - ``"css"``: the vendored seasonal-ARIMA(1,1,1)x(0,1,1,s) CSS fit
-      (streaming/seasonal_arima.py) — the reference MODEL without the
-      statsmodels dependency; per-fit cost is a real optimizer run, so
-      use it at the reference's fit cadence, not in bulk bench paths.
-    - ``"ewma"``: force the closed-form fallback.
+      (streaming/seasonal_arima.py) — the reference MODEL; per-fit cost
+      is a real optimizer run, so use it at the reference's fit cadence,
+      not in bulk bench paths.
     """
 
     max_history: int = 1440
     min_history: int = 288
     emit_every_n: int = 5
     season: int = 288
-    order: tuple[int, int, int] = (1, 1, 1)
-    seasonal_order: tuple[int, int, int] = (0, 1, 1)
-    forecast_steps: int = 1
-    method: str = "auto"
+    method: str = "ewma"
+
+    def __post_init__(self) -> None:
+        if self.method not in MODEL_NAMES:
+            raise ValueError(f"unknown forecast method {self.method!r}")
 
 
 #: fixture-scale config: 5-min windows over ~2 weeks of events, 12
@@ -94,60 +95,62 @@ BASELINE_SCHEMA = (
     "history_size int, running_mean double, running_std double, "
     "trend_latest double, trend_5season double, model string"
 )
+BASELINE_COLS = [c.split()[0] for c in BASELINE_SCHEMA.split(", ")]
 
-def resolve_method(cfg: BaselineConfig) -> str:
-    """Concrete forecaster for a config: auto -> sarimax|ewma."""
-    if cfg.method == "auto":
-        return "sarimax" if HAVE_STATSMODELS else "ewma"
-    return cfg.method
+#: per-key model state between micro-batches, in ``_KeyState.__slots__``
+#: order
+STATE_SCHEMA = (
+    "count long, mean double, m2 double, counter int, "
+    "scaled array<double>, raw array<double>"
+)
+
+#: EWMA smoothing constant of the closed-form forecaster
+FALLBACK_ALPHA = 0.3
 
 
 def model_name(cfg: BaselineConfig) -> str:
     """Per-record ``model`` tag so consumers can tell which forecaster
-    produced a baseline (exact statsmodels fit, vendored CSS fit of the
-    same model, or the closed-form fallback)."""
-    return {"sarimax": "sarimax", "css": "sarimax_css", "ewma": "ewma_fallback"}[
-        resolve_method(cfg)
-    ]
+    produced a baseline (vendored CSS fit or the closed-form fallback)."""
+    return MODEL_NAMES[cfg.method]
 
 
 def forecast_next(history: np.ndarray, cfg: BaselineConfig) -> float:
     """One-step forecast of the scaled series.
 
-    sarimax: the reference's exact statsmodels fit (flinkarima.py:226-235).
-    css: the vendored CSS fit of the SAME ARIMA(1,1,1)x(0,1,1,s) model
-    (streaming/seasonal_arima.py) — no statsmodels required.
+    css: the vendored CSS fit of the reference's ARIMA(1,1,1)x(0,1,1,s)
+    model (streaming/seasonal_arima.py; reference fit at
+    flinkarima.py:226-235).
     ewma: seasonal-naive + EWMA of the seasonally differenced series —
     EWMA(alpha) is the closed form of the (0,1,1) MA-smoothing the
     reference's seasonal component applies.
     """
     z = np.asarray(history, dtype=np.float64)
-    method = resolve_method(cfg)
-    if method == "sarimax":  # pragma: no cover - statsmodels absent here
-        model = SARIMAX(
-            z,
-            order=cfg.order,
-            seasonal_order=(*cfg.seasonal_order, cfg.season),
-            enforce_stationarity=False,
-            enforce_invertibility=False,
-        )
-        fitted = model.fit(disp=False)
-        return float(fitted.forecast(cfg.forecast_steps)[-1])
-    if method == "css":
+    if cfg.method == "css":
         from flink_cookbook_spark.streaming.seasonal_arima import forecast_one_step
 
         return forecast_one_step(z, cfg.season)
-    if method != "ewma":
-        raise ValueError(f"unknown forecast method {cfg.method!r}")
     s = cfg.season
     if len(z) < s + 1:
         return float(z[-1]) if len(z) else 0.0
     diffs = z[s:] - z[:-s]
-    alpha = 0.3
+    alpha = FALLBACK_ALPHA
     level = diffs[0]
     for d in diffs[1:]:
         level = alpha * d + (1 - alpha) * level
     return float(z[len(z) - s] + level)
+
+
+def _forecast(history: np.ndarray, cfg: BaselineConfig) -> float | None:
+    """``forecast_next`` under the reference's per-key failure policy
+    (SURVEY A5: errors logged and swallowed per key): a fit that raises
+    is logged and drops its one record, while the key's state and the
+    stream carry on. Both replays call this, so they drop the same
+    records."""
+    try:
+        return forecast_next(history, cfg)
+    except Exception:  # a fit failure of one key must not stop the stream
+        _log.warning("baseline forecast failed, record dropped", exc_info=True)
+        return None
 
 
 def _trend_metrics(
@@ -173,17 +176,27 @@ def _trend_metrics(
 
 class _KeyState:
     """Per-key mutable state, mirroring the reference's Flink state cells
-    (flinkarima.py:171-189)."""
+    (flinkarima.py:171-189). Stored by Spark as a ``STATE_SCHEMA`` row."""
 
     __slots__ = ("count", "mean", "m2", "counter", "scaled", "raw")
 
-    def __init__(self, count=0, mean=0.0, m2=0.0, counter=0, scaled=None, raw=None):
+    def __init__(self, count=0, mean=0.0, m2=0.0, counter=0, scaled=(), raw=()):
         self.count = count
         self.mean = mean
         self.m2 = m2
         self.counter = counter
-        self.scaled = list(scaled) if scaled else []
-        self.raw = list(raw) if raw else []
+        self.scaled = list(scaled)
+        self.raw = list(raw)
+
+    @classmethod
+    def from_state(cls, row) -> _KeyState:
+        """From a stored ``STATE_SCHEMA`` row (a tuple, Row or Series)."""
+        count, mean, m2, counter, scaled, raw = row
+        return cls(int(count), float(mean), float(m2), int(counter), scaled, raw)
+
+    def to_state(self) -> tuple:
+        """To a ``STATE_SCHEMA`` row."""
+        return (self.count, self.mean, self.m2, self.counter, self.scaled, self.raw)
 
     def std(self) -> float:
         if self.count > 1:
@@ -215,10 +228,9 @@ def _process_sample(
     if state.counter != 0 or len(state.scaled) < cfg.min_history:
         return None
     # 5. fit + forecast on scaled history (flinkarima.py:226-235)
-    try:
-        scaled_fc = forecast_next(np.array(state.scaled), cfg)
-    except Exception:
-        return None  # reference logs & swallows per key
+    scaled_fc = _forecast(np.array(state.scaled), cfg)
+    if scaled_fc is None:
+        return None
     # 6. inverse scale with POST-update moments, clamp (flinkarima.py:236-248)
     post_std = state.std()
     baseline = scaled_fc * post_std + state.mean if post_std > 0 else state.mean
@@ -236,12 +248,28 @@ def _process_sample(
     }
 
 
-def _ewma_vectorized_runner(cfg: BaselineConfig, cols: list[str]):
-    """mapInPandas runner for the EWMA forecaster that replays the state
-    loop vectorized ACROSS KEYS: instead of one Python `_process_sample`
-    call per row, a step loop advances every key's state one sample at a
-    time with NumPy elementwise ops (guide section 4.2 — hand whole
-    batches to vectorized native code).
+def replay_key(
+    state: _KeyState, user_id: int, samples: pd.DataFrame, cfg: BaselineConfig
+) -> list[dict]:
+    """Step one key's ``(window_start, avg_value)`` samples through
+    ``_process_sample`` in window order, advancing ``state``; returns the
+    emitted baseline records (``BASELINE_COLS`` dicts)."""
+    out = []
+    for row in samples.sort_values("window_start").itertuples(index=False):
+        rec = _process_sample(state, float(row.avg_value), cfg)
+        if rec is not None:
+            rec["user_id"] = int(user_id)
+            rec["window_start"] = int(row.window_start)
+            out.append(rec)
+    return out
+
+
+def _vectorized_runner(cfg: BaselineConfig):
+    """mapInPandas runner that replays the state loop vectorized ACROSS
+    KEYS: instead of one Python `_process_sample` call per row, a step
+    loop advances every key's state one sample at a time with NumPy
+    elementwise ops (guide section 4.2 — hand whole batches to
+    vectorized native code).
 
     Bit-identity argument: per key, the SEQUENCE of floating-point
     operations is exactly `_process_sample`'s — same pre-update scaling,
@@ -254,16 +282,25 @@ def _ewma_vectorized_runner(cfg: BaselineConfig, cols: list[str]):
     tests/test_sarimax.py::test_vectorized_runner_equals_scalar_loop.
 
     Emit-row forecasts group keys by history LENGTH (keys whose buffers
-    grew together share a length), so the per-emit fold/trend loops are
-    O(history) NumPy vector ops per group, not per key. The scalar
-    runner remains the css/statsmodels path (a real optimizer fit per
-    emit cannot vectorize) and the reference for the equality pin.
+    grew together share a length), so the ewma fold and the trend sums
+    are O(history) NumPy vector ops per group, not per key. A css fit is
+    an optimizer run per emitting key and cannot vectorize; it goes
+    through ``_forecast`` one key at a time, as in ``_process_sample``.
+
+    Why streaming keeps ``replay_key``: a streaming group holds ONE key,
+    and one key is the worst case of this runner, which pays its
+    per-step NumPy overhead for a single row. CLI config (history
+    1440/288, emit every 5, season 288), best of 3 on a 4-core Xeon,
+    ``replay_key`` vs this runner: 1 key x 300 samples 2.1 ms vs 27 ms;
+    1 key x 1445 samples 56 ms vs 0.95 s; 50 keys x 300 called per key
+    72 ms vs 1.28 s — but the same 50 keys in one frame 72 ms vs 29 ms.
     """
     H, N, MIN, s = cfg.max_history, cfg.emit_every_n, cfg.min_history, cfg.season
     season = max(1, s)
     trim_len = season * max(5, H // season)
     alpha = FALLBACK_ALPHA
     mname = model_name(cfg)
+    css = cfg.method == "css"
 
     def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # uid -> (count, mean, m2, counter, histlen, scaled_row, raw_row)
@@ -342,12 +379,18 @@ def _ewma_vectorized_runner(cfg: BaselineConfig, cols: list[str]):
                     post_std[psel] = np.sqrt(m2[pi] / (count[pi] - 1))
                 # 5+6. forecast + inverse-scale, per history-length group
                 fc = np.empty(len(eact), np.float64)
+                fitted = np.ones(len(eact), bool)
                 tr_latest = np.empty(len(eact), np.float64)
                 tr_5 = np.empty(len(eact), np.float64)
                 for L in np.unique(histlen[eact]):
                     g = np.flatnonzero(histlen[eact] == L)
                     Z = hist_s[eact[g], :L]
-                    if L < s + 1:
+                    if css:
+                        for i, z in zip(g, Z):
+                            f = _forecast(z, cfg)
+                            fitted[i] = f is not None
+                            fc[i] = f if f is not None else 0.0
+                    elif L < s + 1:
                         fc[g] = Z[:, L - 1]
                     else:
                         diffs = Z[:, s:] - Z[:, :-s]
@@ -370,7 +413,8 @@ def _ewma_vectorized_runner(cfg: BaselineConfig, cols: list[str]):
                     post_std > 0, fc * post_std + mean[eact], mean[eact]
                 )
                 baseline = np.maximum(0.0, baseline)
-                for i, j in enumerate(eact):
+                for i in np.flatnonzero(fitted):
+                    j = eact[i]
                     out.append(
                         (
                             int(j),
@@ -395,9 +439,9 @@ def _ewma_vectorized_runner(cfg: BaselineConfig, cols: list[str]):
                     hist_s[j].copy(), hist_r[j].copy(),
                 )
             if out:
-                # scalar-runner row order: per key segment, then per step
+                # replay_key's row order: per key segment, then per step
                 out.sort(key=lambda r: (r[0], r[1]))
-                yield pd.DataFrame([r[2] for r in out], columns=cols)
+                yield pd.DataFrame([r[2] for r in out], columns=BASELINE_COLS)
 
     return run_partition
 
@@ -413,11 +457,11 @@ def baseline_batch(
 
     Physical shape: hash-repartition on the key, sort within partitions
     by (key, window_start) — both JVM-side — then ONE mapInPandas pass
-    whose per-key state dict survives Arrow-batch boundaries. Compared
-    to applyInPandas-per-group this amortizes the Python/pandas overhead
-    across whole record batches (thousands of tiny keys per batch, the
-    100 TB cardinality shape) while computing the identical sequence of
-    per-sample operations.
+    (``_vectorized_runner``) whose per-key state survives Arrow-batch
+    boundaries. Compared to applyInPandas-per-group this amortizes the
+    Python/pandas overhead across whole record batches (thousands of
+    tiny keys per batch, the 100 TB cardinality shape) while computing
+    the identical sequence of per-sample operations.
 
     ``input_copartitioned=True`` skips the repartition: callers feeding
     the memoized windowed aggregate (already materialized hash-
@@ -428,146 +472,34 @@ def baseline_batch(
     so the co-location survives it. Only pass True when the input
     demonstrably clusters keys (the memo, or a filter/projection of it);
     a mis-declared input would split a key's state across partitions."""
-
-    cols = [
-        "user_id", "window_start", "observed", "baseline", "history_size",
-        "running_mean", "running_std", "trend_latest", "trend_5season", "model",
-    ]
-
-    def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[int, _KeyState] = {}
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                st = states.setdefault(row.user_id, _KeyState())
-                rec = _process_sample(st, float(row.avg_value), cfg)
-                if rec is not None:
-                    rec["user_id"] = int(row.user_id)
-                    rec["window_start"] = int(row.window_start)
-                    out.append(rec)
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-
-    # the closed-form EWMA forecaster needs no per-emit optimizer run, so
-    # its replay vectorizes across keys (bit-identical — see the runner's
-    # docstring); css/statsmodels fits stay on the scalar reference loop
-    if resolve_method(cfg) == "ewma":
-        run_partition = _ewma_vectorized_runner(cfg, cols)
-
     clustered = windowed if input_copartitioned else windowed.repartition("user_id")
     return clustered.sortWithinPartitions("user_id", "window_start").mapInPandas(
-        run_partition, schema=BASELINE_SCHEMA
+        _vectorized_runner(cfg), schema=BASELINE_SCHEMA
     )
 
 
 def baseline_streaming(
     windowed_stream: DataFrame, cfg: BaselineConfig = FIXTURE_CONFIG
 ) -> DataFrame:
-    """Streaming form: applyInPandasWithState keeps (count, mean, m2,
-    counter, scaled, raw) per key across micro-batches — co-partitioned
-    on the key, so no broadcast is ever needed (SURVEY.md J1 note)."""
+    """Streaming form: applyInPandasWithState keeps a ``STATE_SCHEMA``
+    row per key across micro-batches — co-partitioned on the key, so no
+    broadcast is ever needed (SURVEY.md J1 note)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    state_schema = (
-        "count long, mean double, m2 double, counter int, "
-        "scaled array<double>, raw array<double>"
-    )
-
     def run(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            count, mean, m2, counter, scaled, raw = state.get
-            ks = _KeyState(count, mean, m2, counter, scaled, raw)
-        else:
-            ks = _KeyState()
-        out = []
+        ks = _KeyState.from_state(state.get) if state.exists else _KeyState()
         # a key's rows can span multiple Arrow chunks in shuffle order —
         # concatenate BEFORE sorting or samples process out of window order
-        chunks = [pdf for pdf in pdf_iter]
-        if chunks:
-            whole = pd.concat(chunks, ignore_index=True).sort_values("window_start")
-            for row in whole.itertuples(index=False):
-                rec = _process_sample(ks, float(row.avg_value), cfg)
-                if rec is not None:
-                    rec["user_id"] = int(user_id)
-                    rec["window_start"] = int(row.window_start)
-                    out.append(rec)
-        state.update((ks.count, ks.mean, ks.m2, ks.counter, ks.scaled, ks.raw))
-        cols = [
-            "user_id", "window_start", "observed", "baseline", "history_size",
-            "running_mean", "running_std", "trend_latest", "trend_5season", "model",
-        ]
-        yield pd.DataFrame(out, columns=cols)
+        recs = replay_key(ks, key[0], pd.concat(pdf_iter, ignore_index=True), cfg)
+        state.update(ks.to_state())
+        yield pd.DataFrame(recs, columns=BASELINE_COLS)
 
     return windowed_stream.groupBy("user_id").applyInPandasWithState(
         run,
         outputStructType=BASELINE_SCHEMA,
-        stateStructType=state_schema,
+        stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def baseline_streaming_tws(
-    windowed_stream: DataFrame, cfg: BaselineConfig = FIXTURE_CONFIG
-) -> DataFrame:
-    """Modern-API variant: the same operator on Spark 4's
-    transformWithStateInPandas (StatefulProcessor + typed value state,
-    RocksDB-backed — the state store one would run at 100 TB key
-    cardinality). Semantics identical to baseline_streaming; equality is
-    pinned in tests/test_streaming.py (skipped in containers lacking
-    protobuf, which this API's state-server protocol requires)."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql import types as T
-
-    state_schema = T.StructType(
-        [
-            T.StructField("count", T.LongType()),
-            T.StructField("mean", T.DoubleType()),
-            T.StructField("m2", T.DoubleType()),
-            T.StructField("counter", T.IntegerType()),
-            T.StructField("scaled", T.ArrayType(T.DoubleType())),
-            T.StructField("raw", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    cols = [
-        "user_id", "window_start", "observed", "baseline", "history_size",
-        "running_mean", "running_std", "trend_latest", "trend_5season", "model",
-    ]
-
-    class BaselineProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("baseline_state", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            if self._state.exists():
-                count, mean, m2, counter, scaled, raw = self._state.get()
-                ks = _KeyState(count, mean, m2, counter, list(scaled), list(raw))
-            else:
-                ks = _KeyState()
-            (user_id,) = key
-            out = []
-            chunks = [pdf for pdf in rows]  # sort the WHOLE group, not per chunk
-            if chunks:
-                whole = pd.concat(chunks, ignore_index=True).sort_values("window_start")
-                for row in whole.itertuples(index=False):
-                    rec = _process_sample(ks, float(row.avg_value), cfg)
-                    if rec is not None:
-                        rec["user_id"] = int(user_id)
-                        rec["window_start"] = int(row.window_start)
-                        out.append(rec)
-            self._state.update((ks.count, ks.mean, ks.m2, ks.counter, ks.scaled, ks.raw))
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-
-        def close(self) -> None:
-            pass
-
-    return windowed_stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=BaselineProcessor(),
-        outputStructType=BASELINE_SCHEMA,
-        outputMode="append",
-        timeMode="none",
     )
 
 
@@ -588,10 +520,6 @@ def sarimax_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
 register("sarimax_baseline", oracle=None, tags=("model", "A5", "A8", "stateful"))(
     sarimax_baseline
 )
-
-
-#: EWMA smoothing constant of the numpy fallback (forecast_next above).
-FALLBACK_ALPHA = 0.3
 
 
 def _fallback_scored(
@@ -1027,25 +955,22 @@ DISPATCH_KEYS = 3
 def baseline_method_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-dispatch proof as a HASH-CHECKED query (round-6 verdict #5):
     run the REAL stateful baseline loop (``baseline_batch``) under each
-    forced method — ``auto`` (resolves statsmodels -> EWMA fallback in
-    this container), ``css`` (the vendored seasonal-ARIMA optimizer,
-    executing a genuine fit per emitted record), ``ewma`` — over a small
-    key subset, and emit (method_requested, model, n_records).
+    method — ``css`` (the vendored seasonal-ARIMA optimizer, executing a
+    genuine fit per emitted record) and ``ewma`` — over a small key
+    subset, and emit (method_requested, model, n_records).
 
     What the oracle pins: (a) the dispatch mapping itself — each leg's
-    ``model`` tag, with the ``auto`` expectation computed AT
-    REGISTRATION TIME via ``model_name`` so the oracle stays correct in
-    an environment where statsmodels exists; (b) that the emit cadence
-    is METHOD-INVARIANT and matches the closed-form count DuckDB derives
-    from the windowed series (``rn % N = 0 AND min(rn, H) >= MIN``) —
-    i.e. no forecaster silently swallows records on the fixture."""
+    ``model`` tag; (b) that the emit cadence is METHOD-INVARIANT and
+    matches the closed-form count DuckDB derives from the windowed
+    series (``rn % N = 0 AND min(rn, H) >= MIN``) — i.e. no forecaster
+    silently swallows records on the fixture."""
     import dataclasses
 
     from flink_cookbook_spark.operators.metrics import _windowed
 
     win = _windowed(spark, sf_dir).where(F.col("user_id") < DISPATCH_KEYS)
     legs = []
-    for m in ("auto", "css", "ewma"):
+    for m in ("css", "ewma"):
         cfg = dataclasses.replace(FIXTURE_CONFIG, method=m)
         legs.append(
             baseline_batch(win, cfg, input_copartitioned=True)
@@ -1055,19 +980,13 @@ def baseline_method_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(F.lit(m).alias("method_requested"), "model", "n_records")
         )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
+    return legs[0].unionByName(legs[1])
 
 
 def _dispatch_oracle_sql() -> str:
-    import dataclasses
-
     from flink_cookbook_spark.operators.metrics import _WINDOWED_CTE
 
     cfg = FIXTURE_CONFIG
-    auto_model = model_name(dataclasses.replace(cfg, method="auto"))
     return f"""
 WITH {_WINDOWED_CTE.strip()},
 seq AS (
@@ -1081,7 +1000,6 @@ emitted AS (
 ),
 methods AS (
   SELECT * FROM (VALUES
-    ('auto', '{auto_model}'),
     ('css', 'sarimax_css'),
     ('ewma', 'ewma_fallback')) AS t(method_requested, model))
 SELECT m.method_requested, m.model, e.n_records

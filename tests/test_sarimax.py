@@ -8,12 +8,15 @@ import pandas as pd
 import pytest
 
 from flink_cookbook_spark.streaming.sarimax import (
+    BASELINE_COLS,
     FIXTURE_CONFIG,
     BaselineConfig,
     _KeyState,
     _process_sample,
     baseline_batch,
     forecast_next,
+    model_name,
+    replay_key,
 )
 
 
@@ -116,99 +119,126 @@ def test_batch_twin_equals_plain_python(spark, sf_dir):
     assert got and all(got[k] == pytest.approx(want[k], abs=1e-9) for k in want)
 
 
-def test_vectorized_runner_equals_scalar_loop():
-    """The across-keys NumPy replay (round-14, guide section 4.2) must be
-    BIT-IDENTICAL to the scalar `_process_sample` loop — same float-op
-    sequence per key — including across Arrow-batch boundaries and
-    through the history-buffer trim (series longer than max_history)."""
-    from flink_cookbook_spark.streaming.sarimax import _ewma_vectorized_runner
+#: per method, a config and a key count for the runner-equality pin: the
+#: css config stays small (a real optimizer fit per emitted record)
+_RUNNER_CASES = {
+    "ewma": (FIXTURE_CONFIG, 13),
+    "css": (BaselineConfig(max_history=48, min_history=24, emit_every_n=12, season=12,
+                           method="css"), 4),
+}
 
-    cfg = FIXTURE_CONFIG
-    cols = [
-        "user_id", "window_start", "observed", "baseline", "history_size",
-        "running_mean", "running_std", "trend_latest", "trend_5season", "model",
-    ]
+
+def _runner_input(n_keys: int, max_len: int) -> pd.DataFrame:
     rng = np.random.default_rng(7)
     rows = []
-    for uid in range(13):
-        n = int(rng.integers(5, 230))  # some series trim (> max_history=96)
+    for uid in range(n_keys):
+        n = int(rng.integers(5, max_len))
         for t in range(n):
             rows.append((uid, 1000 + 300 * t, float(round(rng.normal(40, 5), 4))))
     pdf = pd.DataFrame(rows, columns=["user_id", "window_start", "avg_value"])
-    pdf = pdf.sort_values(["user_id", "window_start"]).reset_index(drop=True)
+    return pdf.sort_values(["user_id", "window_start"]).reset_index(drop=True)
+
+
+def _replay_all(pdf: pd.DataFrame, cfg: BaselineConfig) -> pd.DataFrame:
+    """The scalar reference: ``replay_key`` per key, in key order."""
+    recs = [
+        r for uid, g in pdf.groupby("user_id") for r in replay_key(_KeyState(), uid, g, cfg)
+    ]
+    return pd.DataFrame(recs, columns=BASELINE_COLS)
+
+
+@pytest.mark.parametrize("method", ["ewma", "css"])
+def test_vectorized_runner_equals_scalar_loop(method):
+    """The across-keys NumPy replay (round-14, guide section 4.2) must be
+    BIT-IDENTICAL to the scalar `_process_sample` loop — same float-op
+    sequence per key, and for css the same fit input — including across
+    Arrow-batch boundaries and through the history-buffer trim (series
+    longer than max_history)."""
+    from flink_cookbook_spark.streaming.sarimax import _vectorized_runner
+
+    cfg, n_keys = _RUNNER_CASES[method]
+    pdf = _runner_input(n_keys, 2 * cfg.max_history + 40)  # some series trim
     # uneven batch splits (mid-segment) exercise the cross-batch carry
-    batches = [pdf.iloc[0:137], pdf.iloc[137:1000], pdf.iloc[1000:]]
+    cuts = [0, len(pdf) // 9, len(pdf) // 2, len(pdf)]
+    batches = [pdf.iloc[a:b] for a, b in zip(cuts, cuts[1:])]
 
-    vec_frames = list(_ewma_vectorized_runner(cfg, cols)(iter(b.copy() for b in batches)))
-    got = pd.concat(vec_frames, ignore_index=True)
-
-    states: dict[int, _KeyState] = {}
-    want_rows = []
-    for b in batches:
-        for row in b.itertuples(index=False):
-            st = states.setdefault(row.user_id, _KeyState())
-            rec = _process_sample(st, float(row.avg_value), cfg)
-            if rec is not None:
-                rec["user_id"] = int(row.user_id)
-                rec["window_start"] = int(row.window_start)
-                want_rows.append(rec)
-    want = pd.DataFrame(want_rows, columns=cols)
+    got = pd.concat(list(_vectorized_runner(cfg)(iter(batches))), ignore_index=True)
+    want = _replay_all(pdf, cfg)
 
     assert len(got) == len(want) > 0
-    for c in cols:
+    assert set(want["model"]) == {model_name(cfg)}
+    for c in BASELINE_COLS:
         gv, wv = got[c].tolist(), want[c].tolist()
         assert gv == wv, f"column {c} diverged (first mismatch: " + str(
             next((i, a, b) for i, (a, b) in enumerate(zip(gv, wv)) if a != b)
         )
 
 
+def test_fit_failure_drops_one_record_in_both_runners(monkeypatch, caplog):
+    """A forecaster that raises drops exactly its own record, in both
+    replays, and is logged once (the reference logs and swallows fit
+    errors per key); every other record is unchanged."""
+    import logging
+
+    import flink_cookbook_spark.streaming.sarimax as sx
+
+    cfg = BaselineConfig(max_history=40, min_history=10, emit_every_n=5, season=4,
+                         method="css")
+    pdf = _runner_input(3, 40)
+    real = sx.forecast_next
+    fit_inputs = []
+    monkeypatch.setattr(sx, "forecast_next",
+                        lambda h, c: fit_inputs.append(tuple(h)) or real(h, c))
+    want = _replay_all(pdf, cfg)
+    assert len(want) == len(fit_inputs) > 3
+    bad = fit_inputs[2]  # the fit input of the third record
+
+    def failing(h, c):
+        if tuple(h) == bad:
+            raise FloatingPointError("fit diverged")
+        return real(h, c)
+
+    monkeypatch.setattr(sx, "forecast_next", failing)
+    caplog.set_level(logging.WARNING, logger=sx.__name__)
+    expect = want.drop(index=2).reset_index(drop=True)
+    runners = {
+        "replay_key": lambda: _replay_all(pdf, cfg),
+        "vectorized": lambda: pd.concat(
+            list(sx._vectorized_runner(cfg)(iter([pdf]))), ignore_index=True
+        ),
+    }
+    for name, run in runners.items():
+        caplog.clear()
+        pd.testing.assert_frame_equal(run(), expect, check_exact=True, obj=name)
+        assert [r.getMessage() for r in caplog.records] == [
+            "baseline forecast failed, record dropped"
+        ], name
+        assert "fit diverged" in caplog.text, name
+
+
 def test_model_column_names_active_forecaster():
     """Every baseline record carries which forecaster produced it, so
-    consumers can tell exact SARIMAX output from the vendored CSS fit
-    from the numpy fallback (statsmodels is absent in this container ->
-    auto resolves to ewma_fallback here)."""
-    from flink_cookbook_spark.streaming.sarimax import (
-        HAVE_STATSMODELS,
-        BASELINE_SCHEMA,
-        model_name,
-    )
+    consumers can tell the vendored CSS fit from the numpy fallback
+    (the default)."""
+    from flink_cookbook_spark.streaming.sarimax import BASELINE_SCHEMA
 
     assert "model string" in BASELINE_SCHEMA
-    expect = "sarimax" if HAVE_STATSMODELS else "ewma_fallback"
-    assert model_name(FIXTURE_CONFIG) == expect
+    assert model_name(FIXTURE_CONFIG) == "ewma_fallback"
     assert model_name(BaselineConfig(method="css")) == "sarimax_css"
     cfg = BaselineConfig(max_history=50, min_history=10, emit_every_n=5, season=5)
     st = _KeyState()
     recs = [r for x in range(60) if (r := _process_sample(st, float(x), cfg))]
-    assert recs and all(r["model"] == expect for r in recs)
+    assert recs and all(r["model"] == "ewma_fallback" for r in recs)
 
 
-def test_resolve_method_covers_all_branches(monkeypatch):
-    """Dispatch-table completeness (round-6 verdict #6): every branch of
-    ``resolve_method`` is asserted, INCLUDING the statsmodels arm, which
-    is foreign-env-only — statsmodels is not installable in this
-    container, so the `auto -> sarimax` resolution is pinned here by
-    flipping the availability flag rather than by executing a fit (the
-    literal ``forecast_next`` sarimax branch runs only where statsmodels
-    exists; COVERAGE.md documents the gate)."""
-    import flink_cookbook_spark.streaming.sarimax as sx
-
-    # auto: availability-dependent, both directions
-    monkeypatch.setattr(sx, "HAVE_STATSMODELS", False)
-    assert sx.resolve_method(BaselineConfig(method="auto")) == "ewma"
-    assert sx.model_name(BaselineConfig(method="auto")) == "ewma_fallback"
-    monkeypatch.setattr(sx, "HAVE_STATSMODELS", True)
-    assert sx.resolve_method(BaselineConfig(method="auto")) == "sarimax"
-    assert sx.model_name(BaselineConfig(method="auto")) == "sarimax"
-    # explicit methods pass through untouched regardless of availability
-    for m in ("sarimax", "css", "ewma"):
-        assert sx.resolve_method(BaselineConfig(method=m)) == m
-    monkeypatch.setattr(sx, "HAVE_STATSMODELS", False)
-    for m in ("sarimax", "css", "ewma"):
-        assert sx.resolve_method(BaselineConfig(method=m)) == m
-    # unknown method is a loud error, not a silent fallback
+def test_resolve_method_covers_all_branches():
+    """Dispatch-table completeness (round-6 verdict #6): each method maps
+    to its model tag, and an unknown method is a loud error, not a
+    silent fallback."""
+    assert model_name(BaselineConfig(method="ewma")) == "ewma_fallback"
+    assert model_name(BaselineConfig(method="css")) == "sarimax_css"
     with pytest.raises(ValueError, match="unknown forecast method"):
-        sx.forecast_next(np.arange(30.0), BaselineConfig(method="bogus"))
+        BaselineConfig(method="bogus")
 
 
 def test_trend_window_matches_reference_days_rule():
@@ -236,13 +266,9 @@ def test_fallback_oracle_equals_stateful_loop(spark, sf_dir):
     driver's Spark==DuckDB check this closes the loop: stateful loop ==
     Spark SQL == DuckDB SQL for the numpy-fallback path."""
     from flink_cookbook_spark.streaming.sarimax import (
-        HAVE_STATSMODELS,
         baseline_fallback_oracle,
         sarimax_baseline,
     )
-
-    if HAVE_STATSMODELS:  # pragma: no cover - container has no statsmodels
-        pytest.skip("stateful loop would use exact SARIMAX, not the EWMA fallback")
 
     sql_rows = {
         (r.user_id, r.window_start): r
@@ -272,13 +298,10 @@ def test_alert_oracle_coheres_with_stateful_pipeline(spark, sf_dir):
     divergence is only possible for alerts sitting exactly on a
     threshold boundary within rounding quantum."""
     from flink_cookbook_spark.streaming.sarimax import (
-        HAVE_STATSMODELS,
         pipeline_alerts_end_to_end,
         pipeline_alerts_fallback_oracle,
     )
 
-    if HAVE_STATSMODELS:  # pragma: no cover
-        pytest.skip("loop pipeline would use exact SARIMAX")
     loop_keys = {
         (r.user_id, r.window_start)
         for r in pipeline_alerts_end_to_end(spark, sf_dir).collect()
@@ -404,11 +427,7 @@ def test_css_matches_statsmodels_when_available():
     the vendored CSS forecast agrees with the statespace SARIMAX forecast
     on a well-behaved seasonal series (loose tolerance: CSS conditions on
     pre-sample zeros, ML uses the exact likelihood)."""
-    from flink_cookbook_spark.streaming.sarimax import HAVE_STATSMODELS
-
-    if not HAVE_STATSMODELS:
-        pytest.skip("statsmodels not installed in this container")
-    from statsmodels.tsa.statespace.sarimax import SARIMAX  # type: ignore
+    SARIMAX = pytest.importorskip("statsmodels.tsa.statespace.sarimax").SARIMAX
 
     from flink_cookbook_spark.streaming.seasonal_arima import forecast_one_step
 

@@ -147,24 +147,15 @@ def windowed_stage_dir(spark, events_stream_dir, tmp_path_factory):
 
 def test_streaming_baseline_equals_batch_twin(spark, windowed_stage_dir):
     """M3: applyInPandasWithState over the streamed window series emits
-    exactly the applyInPandas batch twin's records on the same input."""
+    exactly the batch twin's records on the same input, every column
+    equal: both replay the same per-sample step."""
     from flink_cookbook_spark.streaming.sarimax import baseline_batch, baseline_streaming
 
     win_stream = _read_stream(spark, windowed_stage_dir)
     _run_to_memory(baseline_streaming(win_stream), "baselines_s")
-    got = {
-        (r.user_id, r.window_start): (r.baseline, r.history_size)
-        for r in spark.sql("SELECT * FROM baselines_s").collect()
-    }
-    want = {
-        (r.user_id, r.window_start): (r.baseline, r.history_size)
-        for r in baseline_batch(spark.read.parquet(windowed_stage_dir)).collect()
-    }
-    assert set(got) == set(want)
-    assert got
-    for k in want:
-        assert got[k][0] == pytest.approx(want[k][0], abs=1e-9)
-        assert got[k][1] == want[k][1]
+    got = sorted(spark.sql("SELECT * FROM baselines_s").collect())
+    want = sorted(baseline_batch(spark.read.parquet(windowed_stage_dir)).collect())
+    assert got and got == want
 
 
 def test_streaming_alerts_pipeline(spark, windowed_stage_dir):
@@ -331,10 +322,20 @@ def test_cli_batch_mode_runs(spark, capsys):
 def test_cli_validator_rejects_bad_order():
     import pytest
 
-    from flink_cookbook_spark.cli import build_parser
+    from flink_cookbook_spark.cli import build_parser, config_from_args
 
-    with pytest.raises(SystemExit):
-        build_parser().parse_args(["--order", "1,2"])
+    # malformed, or an order the engine does not implement (it would be
+    # silently ignored): (1,1,1)x(0,1,1,s) with a one-step forecast only
+    for argv in (
+        ["--order", "1,2"],
+        ["--order", "2,1,1"],
+        ["--seasonal-order", "1,1,1,288"],
+        ["--forecast-steps", "2"],
+    ):
+        with pytest.raises(SystemExit):
+            build_parser().parse_args(argv)
+    args = build_parser().parse_args(["--seasonal-order", "0,1,1,12"])
+    assert config_from_args(args).season == 12
 
 
 def test_stream_stream_join(spark, events_stream_dir):
@@ -373,42 +374,6 @@ def test_stream_stream_join(spark, events_stream_dir):
     # else must be present (joined rows are a subset of the batch join)
     assert got <= want
     assert got >= int(want * 0.9), (got, want)
-
-
-def test_transform_with_state_equals_batch_twin(spark, windowed_stage_dir):
-    """Modern-API variant (transformWithStateInPandas + RocksDB state
-    store) emits exactly the batch twin's records. Requires protobuf
-    (not in this container) — skipped when absent, runs on real clusters."""
-    pytest.importorskip("google.protobuf")
-    from flink_cookbook_spark.streaming.sarimax import (
-        baseline_batch,
-        baseline_streaming_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        win_stream = _read_stream(spark, windowed_stage_dir)
-        _run_to_memory(baseline_streaming_tws(win_stream), "baselines_tws")
-        got = {
-            (r.user_id, r.window_start): (r.baseline, r.history_size)
-            for r in spark.sql("SELECT * FROM baselines_tws").collect()
-        }
-        want = {
-            (r.user_id, r.window_start): (r.baseline, r.history_size)
-            for r in baseline_batch(spark.read.parquet(windowed_stage_dir)).collect()
-        }
-        assert set(got) == set(want) and got
-        for k in want:
-            assert got[k][0] == pytest.approx(want[k][0], abs=1e-9)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_dedup_within_watermark(spark, events_stream_dir):
@@ -457,17 +422,9 @@ def test_multi_batch_state_continuity(spark, windowed_stage_dir, tmp_path):
         q_alerts.processAllAvailable(); q_base.processAllAvailable()
     q_alerts.stop(); q_base.stop()
 
-    got = {
-        (r.user_id, r.window_start): (r.baseline, r.history_size)
-        for r in spark.sql("SELECT * FROM baselines_mb").collect()
-    }
-    want = {
-        (r.user_id, r.window_start): (r.baseline, r.history_size)
-        for r in baseline_batch(spark.read.parquet(windowed_stage_dir)).collect()
-    }
-    assert set(got) == set(want) and got, (len(got), len(want))
-    for k in want:
-        assert got[k][0] == pytest.approx(want[k][0], abs=1e-9)
+    got = sorted(spark.sql("SELECT * FROM baselines_mb").collect())
+    want = sorted(baseline_batch(spark.read.parquet(windowed_stage_dir)).collect())
+    assert got and got == want, (len(got), len(want))
     # foreachBatch variant: model state survived batches => alerts fired
     # on post-warmup batches too (not only the first)
     assert sink, "continuous alerts must fire across micro-batches"
