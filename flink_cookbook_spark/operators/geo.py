@@ -1,11 +1,9 @@
-"""Eighteenth round-7 batch: the geospatial family.
+"""Geospatial operators: the three canonical ones a warehouse needs.
 
-Same deferred-registration contract as ``prepared.py``.  The cohort had
-no spatial operators at all; this batch adds the three canonical ones a
-warehouse needs — a grid-bucketed radius join (the spatial analogue of
-the banded LSH / bucketed range-join pattern used everywhere else in
-the repo), nearest-neighbor assignment derived from the same candidate
-set, and a bounded-vocabulary grid density rollup.
+A grid-bucketed radius join (the spatial analogue of the banded LSH /
+bucketed range-join pattern used everywhere else in the repo),
+nearest-neighbor assignment derived from the same candidate set, and a
+bounded-vocabulary grid density rollup.
 
 The fixture tables carry no coordinates, so each entity's position is a
 deterministic md5-PRF coin (the exact pattern of
@@ -40,7 +38,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
+
 
 #: box origin / extent (degrees) and the md5-coin resolution.
 GEO_LAT0 = 40.0
@@ -183,6 +182,19 @@ def _geo_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _geo_radius_oracle() -> str:
+    return f"""
+WITH {_geo_pairs_cte()}
+SELECT c_custkey, s_suppkey, round(d + 1e-6, 4) AS dist_km
+FROM pairs WHERE d <= {GEO_RADIUS_KM}
+"""
+
+
+@register(
+    "geo_radius_join",
+    oracle=_geo_radius_oracle(),
+    tags=("prepared-r8",),
+)
 def geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPATIAL RADIUS JOIN: every (customer, supplier) pair within 25 km
     great-circle distance, via 3x3 grid-cell probing — the spatial
@@ -200,14 +212,24 @@ def geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _geo_radius_oracle() -> str:
+def _geo_nearest_oracle() -> str:
     return f"""
-WITH {_geo_pairs_cte()}
+WITH {_geo_pairs_cte()},
+ranked AS (
+  SELECT c_custkey, s_suppkey, d,
+         row_number() OVER (PARTITION BY c_custkey ORDER BY d, s_suppkey) AS rn
+  FROM pairs WHERE d <= {GEO_RADIUS_KM}
+)
 SELECT c_custkey, s_suppkey, round(d + 1e-6, 4) AS dist_km
-FROM pairs WHERE d <= {GEO_RADIUS_KM}
+FROM ranked WHERE rn = 1
 """
 
 
+@register(
+    "geo_nearest_supplier",
+    oracle=_geo_nearest_oracle(),
+    tags=("prepared-r8",),
+)
 def geo_nearest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAREST-NEIGHBOR ASSIGNMENT within the service radius: each
     customer's closest supplier among those <= 25 km away (suppkey
@@ -232,19 +254,41 @@ def geo_nearest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _geo_nearest_oracle() -> str:
+def _geo_density_oracle() -> str:
+    coin_lat = (
+        "(CAST('0x' || substr(md5('geo-lat:u:' || CAST(user_id AS VARCHAR)), 1, 15)"
+        f" AS BIGINT) % {GEO_COIN_MOD})"
+    )
+    coin_lon = (
+        "(CAST('0x' || substr(md5('geo-lon:u:' || CAST(user_id AS VARCHAR)), 1, 15)"
+        f" AS BIGINT) % {GEO_COIN_MOD})"
+    )
     return f"""
-WITH {_geo_pairs_cte()},
-ranked AS (
-  SELECT c_custkey, s_suppkey, d,
-         row_number() OVER (PARTITION BY c_custkey ORDER BY d, s_suppkey) AS rn
-  FROM pairs WHERE d <= {GEO_RADIUS_KM}
+WITH located AS (
+  SELECT event_id, user_id, value,
+         {GEO_LAT0} + {coin_lat} * {GEO_SPAN_DEG / GEO_COIN_MOD} AS lat,
+         {coin_lon} * {GEO_SPAN_DEG / GEO_COIN_MOD} AS lon
+  FROM events
+),
+cells AS (
+  SELECT event_id, user_id, value,
+         CAST(floor((lon * {GEO_LON_KM}) / {GEO_CELL_KM}) AS INTEGER) AS cell_x,
+         CAST(floor(((lat - {GEO_LAT0}) * {GEO_LAT_KM}) / {GEO_CELL_KM}) AS INTEGER) AS cell_y
+  FROM located
 )
-SELECT c_custkey, s_suppkey, round(d + 1e-6, 4) AS dist_km
-FROM ranked WHERE rn = 1
+SELECT cell_x, cell_y, count(*) AS n_events,
+       count(DISTINCT user_id) AS n_users,
+       round(CAST(sum(CAST(value AS DECIMAL(14,2))) AS DOUBLE) / count(*)
+             + 1e-6, 6) AS avg_value
+FROM cells GROUP BY cell_x, cell_y
 """
 
 
+@register(
+    "geo_grid_density",
+    oracle=_geo_density_oracle(),
+    tags=("prepared-r8",),
+)
 def geo_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPATIAL GRID DENSITY rollup (the heatmap layer): events mapped
     to their user's deterministic location, aggregated per 30 km grid
@@ -289,41 +333,3 @@ def geo_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("avg_value"),
         )
     )
-
-
-def _geo_density_oracle() -> str:
-    coin_lat = (
-        "(CAST('0x' || substr(md5('geo-lat:u:' || CAST(user_id AS VARCHAR)), 1, 15)"
-        f" AS BIGINT) % {GEO_COIN_MOD})"
-    )
-    coin_lon = (
-        "(CAST('0x' || substr(md5('geo-lon:u:' || CAST(user_id AS VARCHAR)), 1, 15)"
-        f" AS BIGINT) % {GEO_COIN_MOD})"
-    )
-    return f"""
-WITH located AS (
-  SELECT event_id, user_id, value,
-         {GEO_LAT0} + {coin_lat} * {GEO_SPAN_DEG / GEO_COIN_MOD} AS lat,
-         {coin_lon} * {GEO_SPAN_DEG / GEO_COIN_MOD} AS lon
-  FROM events
-),
-cells AS (
-  SELECT event_id, user_id, value,
-         CAST(floor((lon * {GEO_LON_KM}) / {GEO_CELL_KM}) AS INTEGER) AS cell_x,
-         CAST(floor(((lat - {GEO_LAT0}) * {GEO_LAT_KM}) / {GEO_CELL_KM}) AS INTEGER) AS cell_y
-  FROM located
-)
-SELECT cell_x, cell_y, count(*) AS n_events,
-       count(DISTINCT user_id) AS n_users,
-       round(CAST(sum(CAST(value AS DECIMAL(14,2))) AS DOUBLE) / count(*)
-             + 1e-6, 6) AS avg_value
-FROM cells GROUP BY cell_x, cell_y
-"""
-
-
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH18 = {
-    "geo_radius_join": (geo_radius_join, _geo_radius_oracle()),
-    "geo_nearest_supplier": (geo_nearest_supplier, _geo_nearest_oracle()),
-    "geo_grid_density": (geo_grid_density, _geo_density_oracle()),
-}

@@ -755,3 +755,82 @@ FROM ad a JOIN mad USING (user_id)
 """,
     tags=("agg", "robust-statistics", "A2-variant"),
 )(mad_outlier_flags)
+
+
+# --------------------------------------------------------------------------
+# as-of join with freshness tolerance
+# --------------------------------------------------------------------------
+
+#: maximum allowed staleness (seconds) of the matched right row.
+ASOF_TOLERANCE_S = 3600
+
+
+_ASOF_TOLERANCE_ORACLE = f"""
+WITH p AS (
+  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS t, value
+  FROM events WHERE event_type = 'purchase'
+),
+v AS (
+  SELECT user_id, vt, max(view_value) AS view_value FROM (
+    SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS vt,
+           value AS view_value
+    FROM events WHERE event_type = 'view'
+  ) GROUP BY user_id, vt
+),
+j AS (
+  SELECT p.user_id, p.event_id, p.t, p.value, v.vt, v.view_value
+  FROM p ASOF LEFT JOIN v
+    ON p.user_id = v.user_id AND p.t >= v.vt
+)
+SELECT user_id, event_id, t,
+       round(value + 1e-6, 4) AS value,
+       CASE WHEN t - vt <= {ASOF_TOLERANCE_S} THEN vt END AS view_t_fresh,
+       round(CASE WHEN t - vt <= {ASOF_TOLERANCE_S} THEN view_value END
+             + 1e-6, 4) AS view_value_fresh,
+       coalesce(t - vt <= {ASOF_TOLERANCE_S}, false) AS fresh
+FROM j
+"""
+
+
+@register(
+    "asof_tolerance_join",
+    oracle=_ASOF_TOLERANCE_ORACLE,
+    tags=("prepared-r8",),
+)
+def asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join WITH A FRESHNESS TOLERANCE: each purchase is enriched
+    with the user's latest prior-or-equal view ONLY when that view is at
+    most ``ASOF_TOLERANCE_S`` old — an as-of match staler than the
+    tolerance is reported as no-match (NULLs + fresh=false), the
+    standard guard against attributing to long-dead context. Same
+    single-shuffle union+sweep machinery as ``latest_baseline_join``
+    (never a range join); the tolerance is a post-sweep projection, so
+    the plan cost is identical to the untolerated join."""
+    ev = load(spark, sf_dir, "events")
+    sec = F.floor(F.col("ts").cast("double")).cast("long")
+    purchases = ev.where(F.col("event_type") == "purchase").select(
+        "user_id", "event_id", sec.alias("t"), "value"
+    )
+    views = (
+        ev.where(F.col("event_type") == "view")
+        .select("user_id", sec.alias("vt"), F.col("value").alias("view_value"))
+        # dedupe exact-tie timestamps keeping MAX value, mirroring the
+        # sweep's deterministic value-ordered tie-break
+        .groupBy("user_id", "vt")
+        .agg(F.max("view_value").alias("view_value"))
+    )
+    j = asof_join(
+        purchases, views,
+        key="user_id", left_ts="t", right_ts="vt",
+        value_cols=["view_value"], how="left",
+    )
+    fresh = F.col("t") - F.col("vt_asof") <= ASOF_TOLERANCE_S
+    return j.select(
+        "user_id",
+        "event_id",
+        "t",
+        rnd("value", 4).alias("value"),
+        F.when(fresh, F.col("vt_asof")).alias("view_t_fresh"),
+        rnd(F.when(fresh, F.col("view_value_asof")), 4).alias("view_value_fresh"),
+        F.coalesce(fresh, F.lit(False)).alias("fresh"),
+    )

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from flink_cookbook_spark.catalog import load
 from flink_cookbook_spark.registry import register, rnd
 from flink_cookbook_spark.functions.time import epoch_seconds
+from flink_cookbook_spark.pipeline.dedup import _SQL_HASH, _portable_hash
 
 
 # --------------------------------------------------------------------------
@@ -1979,3 +1980,981 @@ JOIN LATERAL (
 """,
     tags=("join", "lateral", "correlated", "topk"),
 )(lateral_topn_per_nation)
+
+
+# --------------------------------------------------------------------------
+# approx-percentile accuracy contract
+# --------------------------------------------------------------------------
+
+#: Spark approx_percentile accuracy parameter: rank error <= n/accuracy.
+APPROX_PCT_ACCURACY = 1000
+
+
+_APPROX_PCT_ORACLE = """
+SELECT event_type,
+       count(*) AS n,
+       round(quantile_cont(value, 0.5) + 1e-6, 4) AS exact_p50,
+       round(quantile_cont(value, 0.95) + 1e-6, 4) AS exact_p95,
+       true AS p50_within_bound,
+       true AS p95_within_bound
+FROM events
+GROUP BY event_type
+"""
+
+
+@register(
+    "approx_percentile_accuracy",
+    oracle=_APPROX_PCT_ORACLE,
+    tags=("prepared-r8",),
+)
+def approx_percentile_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Accuracy CONTRACT for the approximate percentile sketch (the
+    ``agg_approx_distinct`` pattern applied to quantiles): per event
+    type, the exact p50/p95 next to booleans asserting that Spark's
+    ``approx_percentile`` landed within its documented rank-error bound
+    (<= n/accuracy, +1 for interpolation slack). The sketch value itself
+    is implementation-defined and CANNOT be replayed by another engine —
+    what IS cross-engine checkable is the exact percentiles and that the
+    bound HELD, which is precisely the property production code relies
+    on. Two aggregates over the same exchange: sketch + exact, then one
+    rank-counting join of the 4-row result against the corpus."""
+    ev = load(spark, sf_dir, "events").select("event_type", "value")
+    g = ev.groupBy("event_type").agg(
+        F.percentile_approx("value", [0.5, 0.95], APPROX_PCT_ACCURACY).alias("ap"),
+        F.expr("percentile(value, array(0.5, 0.95))").alias("ex"),
+        F.count("*").alias("n"),
+    ).select(
+        "event_type", "n",
+        F.col("ap")[0].alias("a50"), F.col("ap")[1].alias("a95"),
+        F.col("ex")[0].alias("e50"), F.col("ex")[1].alias("e95"),
+    )
+    ranks = (
+        ev.join(F.broadcast(g), "event_type")
+        .groupBy("event_type")
+        .agg(
+            F.sum((F.col("value") <= F.col("a50")).cast("long")).alias("r50"),
+            F.sum((F.col("value") <= F.col("a95")).cast("long")).alias("r95"),
+        )
+    )
+    out = g.join(ranks, "event_type")
+    slack = F.col("n") / F.lit(APPROX_PCT_ACCURACY) + F.lit(1.0)
+    return out.select(
+        "event_type",
+        "n",
+        rnd("e50", 4).alias("exact_p50"),
+        rnd("e95", 4).alias("exact_p95"),
+        (F.abs(F.col("r50") - 0.5 * F.col("n")) <= slack).alias("p50_within_bound"),
+        (F.abs(F.col("r95") - 0.95 * F.col("n")) <= slack).alias("p95_within_bound"),
+    )
+
+
+# --------------------------------------------------------------------------
+# join-size estimator (optimizer-statistics audit, no join executed)
+# --------------------------------------------------------------------------
+
+_JOIN_SIZE_ORACLE = """
+WITH clicks AS (
+  SELECT user_id, count(*) AS c1 FROM events
+  WHERE event_type = 'click' GROUP BY user_id
+),
+purch AS (
+  SELECT user_id, count(*) AS c2 FROM events
+  WHERE event_type = 'purchase' GROUP BY user_id
+),
+exact AS (
+  SELECT CAST(coalesce(sum(c1 * c2), 0) AS BIGINT) AS exact_pairs
+  FROM clicks JOIN purch USING (user_id)
+),
+ls AS (SELECT CAST(sum(c1) AS BIGINT) AS n_left, count(*) AS ndv_left FROM clicks),
+rs AS (SELECT CAST(sum(c2) AS BIGINT) AS n_right, count(*) AS ndv_right FROM purch)
+SELECT n_left, n_right, ndv_left, ndv_right, exact_pairs,
+       round(n_left * n_right / CAST(greatest(ndv_left, ndv_right) AS DOUBLE)
+             + 1e-6, 2) AS est_independent,
+       round(exact_pairs
+             / (n_left * n_right / CAST(greatest(ndv_left, ndv_right) AS DOUBLE))
+             + 1e-6, 4) AS skew_factor
+FROM ls CROSS JOIN rs CROSS JOIN exact
+"""
+
+
+@register(
+    "join_size_estimator",
+    oracle=_JOIN_SIZE_ORACLE,
+    tags=("prepared-r8",),
+)
+def join_size_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Join-cardinality estimation audit: the EXACT output size of the
+    many-to-many click⋈purchase join on user_id (Σ c₁ᵤ·c₂ᵤ, computed
+    from the two per-key count aggregates WITHOUT materializing a
+    single joined row) next to the System-R independence estimate
+    |L|·|R|/max(ndv_L, ndv_R), and their ratio — the skew factor that
+    says how badly a cost-based optimizer would misplan this join.
+    Two keyed aggs + one bounded-by-users equi-join of 2-column
+    aggregates + a 1-row final agg; nothing here scales with the join
+    OUTPUT, which is the point."""
+    ev = load(spark, sf_dir, "events")
+    clicks = ev.where(F.col("event_type") == "click").groupBy("user_id").agg(
+        F.count("*").alias("c1")
+    )
+    purch = ev.where(F.col("event_type") == "purchase").groupBy("user_id").agg(
+        F.count("*").alias("c2")
+    )
+    joined = clicks.join(purch, "user_id")
+    exact = joined.agg(
+        F.sum(F.col("c1") * F.col("c2")).alias("exact_pairs")
+    )
+    lstats = clicks.agg(
+        F.sum("c1").alias("n_left"), F.count("*").alias("ndv_left")
+    )
+    rstats = purch.agg(
+        F.sum("c2").alias("n_right"), F.count("*").alias("ndv_right")
+    )
+    est = (
+        F.col("n_left")
+        * F.col("n_right")
+        / F.greatest("ndv_left", "ndv_right").cast("double")
+    )
+    return (
+        lstats.crossJoin(F.broadcast(rstats))
+        .crossJoin(F.broadcast(exact))
+        .select(
+            "n_left", "n_right", "ndv_left", "ndv_right",
+            F.coalesce("exact_pairs", F.lit(0)).alias("exact_pairs"),
+            rnd(est, 2).alias("est_independent"),
+            rnd(F.coalesce("exact_pairs", F.lit(0)) / est, 4).alias(
+                "skew_factor"
+            ),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# mergeable moments sketch (skewness/kurtosis without raw rescan)
+# --------------------------------------------------------------------------
+
+_MOMENTS_ORACLE = """
+WITH partial AS (
+  SELECT event_type, CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hr,
+         count(*) AS n,
+         sum(value) AS s1,
+         sum(value * value) AS s2,
+         sum(value * value * value) AS s3,
+         sum(value * value * value * value) AS s4
+  FROM events GROUP BY 1, 2
+),
+merged AS (
+  SELECT event_type, count(*) AS n_partials,
+         CAST(sum(n) AS BIGINT) AS n,
+         sum(s1) AS s1, sum(s2) AS s2, sum(s3) AS s3, sum(s4) AS s4
+  FROM partial GROUP BY event_type
+),
+m AS (
+  SELECT event_type, n_partials, n,
+         s1 / n AS mu,
+         s2 / n - (s1 / n) * (s1 / n) AS m2,
+         s3 / n - 3.0 * (s1 / n) * (s2 / n)
+           + 2.0 * (s1 / n) * (s1 / n) * (s1 / n) AS m3,
+         s4 / n - 4.0 * (s1 / n) * (s3 / n)
+           + 6.0 * (s1 / n) * (s1 / n) * (s2 / n)
+           - 3.0 * (s1 / n) * (s1 / n) * (s1 / n) * (s1 / n) AS m4
+  FROM merged
+)
+SELECT event_type, n_partials, n,
+       round(mu + 1e-6, 4) AS mean,
+       round(sqrt(m2) + 1e-6, 4) AS std,
+       round(m3 / pow(m2, 1.5) + 1e-6, 4) AS skewness,
+       round(m4 / (m2 * m2) - 3.0 + 1e-6, 4) AS kurtosis_excess
+FROM m
+"""
+
+
+@register(
+    "moments_sketch_rollup",
+    oracle=_MOMENTS_ORACLE,
+    tags=("prepared-r8",),
+)
+def moments_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mergeable moments sketch over event values: hourly partials of
+    the raw power sums (n, Σx, Σx², Σx³, Σx⁴) merged per event type
+    into mean/std/skewness/excess-kurtosis — the higher-moment member
+    of the HLL/KMV/bitmap/count-min mergeable-sketch family
+    (cf. the moments-sketch literature), giving distribution-shape
+    monitoring from partials alone, no raw rescan at merge time.
+    Two stacked hash aggregates; the merge input is |types|×|hours|
+    rows however large the raw stream is."""
+    ev = load(spark, sf_dir, "events")
+    hr = F.floor(F.col("ts").cast("double") / 3600).alias("hr")
+    v = F.col("value")
+    partial = ev.groupBy("event_type", hr).agg(
+        F.count("*").alias("n"),
+        F.sum(v).alias("s1"),
+        F.sum(v * v).alias("s2"),
+        F.sum(v * v * v).alias("s3"),
+        F.sum(v * v * v * v).alias("s4"),
+    )
+    merged = partial.groupBy("event_type").agg(
+        F.count("*").alias("n_partials"),
+        F.sum("n").alias("n"),
+        F.sum("s1").alias("s1"),
+        F.sum("s2").alias("s2"),
+        F.sum("s3").alias("s3"),
+        F.sum("s4").alias("s4"),
+    )
+    n = F.col("n").cast("double")
+    mu = F.col("s1") / n
+    m2 = F.col("s2") / n - mu * mu
+    m3 = F.col("s3") / n - 3.0 * mu * (F.col("s2") / n) + 2.0 * mu * mu * mu
+    m4 = (
+        F.col("s4") / n
+        - 4.0 * mu * (F.col("s3") / n)
+        + 6.0 * mu * mu * (F.col("s2") / n)
+        - 3.0 * mu * mu * mu * mu
+    )
+    return merged.select(
+        "event_type", "n_partials", "n",
+        rnd(mu, 4).alias("mean"),
+        rnd(F.sqrt(m2), 4).alias("std"),
+        rnd(m3 / F.pow(m2, 1.5), 4).alias("skewness"),
+        rnd(m4 / (m2 * m2) - 3.0, 4).alias("kurtosis_excess"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Bloom-filter false-positive-rate calibration
+# --------------------------------------------------------------------------
+
+#: (bits m, hash count k) configurations swept by the calibration.
+BLOOM_CONFIGS = ((1024, 2), (1024, 4), (4096, 2), (4096, 4))
+
+#: maximum hash functions across the swept configs.
+_BLOOM_MAX_K = max(k for _, k in BLOOM_CONFIGS)
+
+#: membership predicate epoch boundary: customers with an order before
+#: 1996 are the filter's member set; the rest probe as non-members.
+BLOOM_MEMBER_BEFORE = "1996-01-01"
+
+
+def _bloom_positions(keys: DataFrame, key_col: str) -> DataFrame:
+    """(key, i, h) for i in 0..max_k-1, h = portable 60-bit md5 hash of
+    'key:i' — config positions are h % m, so one hash pass serves every
+    (m, k) in the sweep."""
+    hashes = F.array(
+        *[
+            _portable_hash(
+                F.concat(
+                    F.col(key_col).cast("string"), F.lit(":"), F.lit(str(i))
+                )
+            )
+            for i in range(_BLOOM_MAX_K)
+        ]
+    )
+    return keys.select(
+        F.col(key_col).alias("key"), F.posexplode(hashes).alias("i", "h")
+    )
+
+
+def _bloom_oracle() -> str:
+    key_expr = _SQL_HASH.format(
+        x="CAST(ckey AS VARCHAR) || ':' || CAST(i AS VARCHAR)"
+    )
+    ivals = ", ".join(f"({i})" for i in range(_BLOOM_MAX_K))
+    arms = []
+    for m, k in BLOOM_CONFIGS:
+        arms.append(f"""
+SELECT {m} AS m_bits, {k} AS k_hashes,
+       (SELECT count(*) FROM members) AS n_members,
+       (SELECT count(DISTINCT h % {m}) FROM mpos WHERE i < {k}) AS n_bits_set,
+       (SELECT count(*) FROM probes) AS n_probes,
+       (SELECT count(*) FROM (
+          SELECT p.key
+          FROM ppos p LEFT JOIN
+               (SELECT DISTINCT h % {m} AS pos FROM mpos WHERE i < {k}) b
+               ON p.h % {m} = b.pos
+          WHERE p.i < {k}
+          GROUP BY p.key
+          HAVING count(*) = {k}
+             AND count(*) = CAST(sum(CASE WHEN b.pos IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+       )) AS n_false_hits,
+       round((SELECT count(*) FROM (
+          SELECT p.key
+          FROM ppos p LEFT JOIN
+               (SELECT DISTINCT h % {m} AS pos FROM mpos WHERE i < {k}) b
+               ON p.h % {m} = b.pos
+          WHERE p.i < {k}
+          GROUP BY p.key
+          HAVING count(*) = {k}
+             AND count(*) = CAST(sum(CASE WHEN b.pos IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+       )) / CAST((SELECT count(*) FROM probes) AS DOUBLE) + 1e-6, 6)
+         AS fpr_actual,
+       round(pow(1.0 - pow(1.0 - 1.0 / {m},
+                           {k} * (SELECT count(*) FROM members)), {float(k)})
+             + 1e-6, 6) AS fpr_expected""")
+    arms_sql = "\nUNION ALL\n".join(arms)
+    return f"""
+WITH members AS (
+  SELECT DISTINCT o_custkey AS ckey FROM orders
+  WHERE o_orderdate < DATE '{BLOOM_MEMBER_BEFORE}'
+),
+probes AS (
+  SELECT c_custkey AS ckey FROM customer
+  WHERE c_custkey NOT IN (SELECT ckey FROM members)
+),
+mpos AS (
+  SELECT ckey AS key, t.i, {key_expr} AS h
+  FROM members CROSS JOIN (VALUES {ivals}) t(i)
+),
+ppos AS (
+  SELECT ckey AS key, t.i, {key_expr} AS h
+  FROM probes CROSS JOIN (VALUES {ivals}) t(i)
+)
+{arms_sql}
+"""
+
+
+@register(
+    "bloom_fpr_calibration",
+    oracle=_bloom_oracle(),
+    tags=("prepared-r8",),
+)
+def bloom_fpr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BLOOM-FILTER SIZING CALIBRATION: simulate the filter bit-for-bit
+    (portable md5 positions) for a sweep of (m bits, k hashes) configs —
+    members are customers with a pre-1996 order, probes are the
+    remaining customers — and report the MEASURED false-positive rate
+    next to the analytic expectation ``(1 - (1 - 1/m)^(k*n))^k``. This
+    is the evidence behind choosing ``bloom_prefilter_join``'s sizing:
+    a measured FPR far off the formula means the hash family or the
+    member-set estimate is wrong BEFORE the filter ships into a join.
+
+    Scale shape: positions are generated once at the finest k (one
+    narrow explode, k rows per key); each config's bit set is a
+    bounded-by-m distinct aggregate, and the probe check is an
+    equi-join on bit position (never key x key). Per-config outputs
+    union over a constant, in-plan config list."""
+    orders = load(spark, sf_dir, "orders")
+    cust = load(spark, sf_dir, "customer")
+    members = (
+        orders.where(F.col("o_orderdate") < BLOOM_MEMBER_BEFORE)
+        .select(F.col("o_custkey").alias("ckey"))
+        .distinct()
+    )
+    probes = cust.select(F.col("c_custkey").alias("ckey")).join(
+        members, "ckey", "left_anti"
+    )
+    mpos = _bloom_positions(members, "ckey")
+    ppos = _bloom_positions(probes, "ckey")
+    n_members = members.agg(F.count("*").alias("n_members"))
+    n_probes = probes.agg(F.count("*").alias("n_probes"))
+
+    parts = []
+    for m, k in BLOOM_CONFIGS:
+        bits = (
+            mpos.where(F.col("i") < k)
+            .select((F.col("h") % m).alias("pos"))
+            .distinct()
+        )
+        probe_rows = (
+            ppos.where(F.col("i") < k)
+            .select("key", (F.col("h") % m).alias("pos"))
+            .join(bits.withColumn("hit", F.lit(1)), "pos", "left")
+        )
+        per_key = probe_rows.groupBy("key").agg(
+            (F.sum(F.coalesce(F.col("hit"), F.lit(0))) == k).alias("fp")
+        )
+        row = (
+            per_key.agg(F.sum(F.col("fp").cast("long")).alias("n_false_hits"))
+            .crossJoin(F.broadcast(bits.agg(F.count("*").alias("n_bits_set"))))
+            .crossJoin(F.broadcast(n_members))
+            .crossJoin(F.broadcast(n_probes))
+            .select(
+                F.lit(m).alias("m_bits"),
+                F.lit(k).alias("k_hashes"),
+                "n_members",
+                "n_bits_set",
+                "n_probes",
+                "n_false_hits",
+                rnd(F.col("n_false_hits") / F.col("n_probes"), 6).alias(
+                    "fpr_actual"
+                ),
+                rnd(
+                    F.pow(
+                        1.0
+                        - F.pow(
+                            F.lit(1.0 - 1.0 / m), k * F.col("n_members")
+                        ),
+                        float(k),
+                    ),
+                    6,
+                ).alias("fpr_expected"),
+            )
+        )
+        parts.append(row)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionAll(p)
+    return out
+
+
+# --------------------------------------------------------------------------
+# referential-integrity audit across the star schema
+# --------------------------------------------------------------------------
+
+#: (edge name, child table, fk col, parent table, pk col)
+FK_EDGES = (
+    ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
+    ("lineitem.l_partkey->part", "lineitem", "l_partkey", "part", "p_partkey"),
+    ("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
+    ("orders.o_custkey->customer", "orders", "o_custkey", "customer", "c_custkey"),
+    ("customer.c_nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
+)
+
+
+def _fk_oracle() -> str:
+    arms = []
+    for edge, child_t, fk, parent_t, pk in FK_EDGES:
+        arms.append(f"""
+SELECT '{edge}' AS edge,
+       count(*) AS n_rows,
+       CAST(sum(CASE WHEN c.{fk} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_null_fk,
+       CAST(sum(CASE WHEN c.{fk} IS NOT NULL AND p.hit IS NULL
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans,
+       round((count(*)
+              - sum(CASE WHEN c.{fk} IS NULL THEN 1 ELSE 0 END)
+              - sum(CASE WHEN c.{fk} IS NOT NULL AND p.hit IS NULL
+                         THEN 1 ELSE 0 END))
+             / CAST(count(*) AS DOUBLE) + 1e-6, 6) AS match_rate
+FROM {child_t} c
+LEFT JOIN (SELECT DISTINCT {pk} AS k, 1 AS hit FROM {parent_t}) p
+  ON c.{fk} = p.k""")
+    return "\nUNION ALL\n".join(arms)
+
+
+@register("fk_integrity_audit", oracle=_fk_oracle(), tags=("prepared-r8",))
+def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REFERENTIAL-INTEGRITY AUDIT over every FK edge of the star
+    schema: per edge, child row count, NULL foreign keys, orphans
+    (non-NULL FK with no parent row), and the match rate — the
+    cross-table complement of the single-table ``expectation_checks``,
+    and the first report a 100 TB ingest runs after landing a batch
+    (an orphan spike means a late or dropped dimension load).
+
+    Scale shape: edges are grouped BY CHILD TABLE so each child is
+    scanned once — every parent's DISTINCT key left-joins onto the same
+    pass (parents are deduplicated, so the joins preserve row
+    multiplicity and the per-edge counts are unchanged), and one
+    combinable aggregate emits every edge's counters from that single
+    scan (lineitem's three FK edges ride one scan instead of three).
+    Dimension-sized build sides broadcast under AQE; the five 1-row
+    results union in-plan with no driver-side collection."""
+    by_child: dict[str, list[tuple[str, str, str, str]]] = {}
+    for edge, child_t, fk, parent_t, pk in FK_EDGES:
+        by_child.setdefault(child_t, []).append((edge, fk, parent_t, pk))
+    parts = []
+    for child_t, edges in by_child.items():
+        child = load(spark, sf_dir, child_t).select(
+            *[F.col(fk).alias(f"k{i}") for i, (_, fk, _, _) in enumerate(edges)]
+        )
+        joined = child
+        for i, (_, _, parent_t, pk) in enumerate(edges):
+            parent = (
+                load(spark, sf_dir, parent_t)
+                .select(F.col(pk).alias(f"k{i}"))
+                .distinct()
+                .withColumn(f"hit{i}", F.lit(1))
+            )
+            joined = joined.join(parent, f"k{i}", "left")
+        agg_cols = [F.count("*").alias("n_rows")]
+        for i in range(len(edges)):
+            k, hit = F.col(f"k{i}"), F.col(f"hit{i}")
+            agg_cols.append(F.sum(k.isNull().cast("long")).alias(f"n_null_fk{i}"))
+            agg_cols.append(
+                F.sum((k.isNotNull() & hit.isNull()).cast("long")).alias(
+                    f"n_orphans{i}"
+                )
+            )
+        agg = joined.agg(*agg_cols)
+        # unstack the one aggregate row to per-edge rows via explode —
+        # NOT one union branch per edge, which would re-derive the whole
+        # scan+join+aggregate subtree once per edge in the plan tree
+        stacked = agg.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(edge).alias("edge"),
+                            F.col("n_rows").alias("n_rows"),
+                            F.col(f"n_null_fk{i}").alias("n_null_fk"),
+                            F.col(f"n_orphans{i}").alias("n_orphans"),
+                        )
+                        for i, (edge, _, _, _) in enumerate(edges)
+                    ]
+                )
+            ).alias("e")
+        ).select("e.*")
+        parts.append(
+            stacked.select(
+                "edge",
+                "n_rows",
+                "n_null_fk",
+                "n_orphans",
+                rnd(
+                    (
+                        F.col("n_rows")
+                        - F.col("n_null_fk")
+                        - F.col("n_orphans")
+                    )
+                    / F.col("n_rows"),
+                    6,
+                ).alias("match_rate"),
+            )
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionAll(p)
+    return out
+
+
+# --------------------------------------------------------------------------
+# KMV Jaccard overlap of two behavioral audiences
+# --------------------------------------------------------------------------
+
+#: sketch size (minimum hash values kept per set).
+KMV_J_K = 64
+
+
+def _kmvj_oracle() -> str:
+    h = _SQL_HASH.format(x="'kmvj:' || CAST(user_id AS VARCHAR)")
+    return f"""
+WITH flags AS (
+  SELECT user_id,
+         max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS in_a,
+         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS in_b
+  FROM events GROUP BY user_id
+),
+hashed AS (
+  SELECT in_a, in_b, {h} AS h FROM flags
+),
+sa AS (
+  SELECT h, 1 AS a FROM (
+    SELECT h, row_number() OVER (ORDER BY h) AS rk
+    FROM hashed WHERE in_a = 1
+  ) WHERE rk <= {KMV_J_K}
+),
+sb AS (
+  SELECT h, 1 AS b FROM (
+    SELECT h, row_number() OVER (ORDER BY h) AS rk
+    FROM hashed WHERE in_b = 1
+  ) WHERE rk <= {KMV_J_K}
+),
+merged AS (
+  SELECT COALESCE(sa.h, sb.h) AS h,
+         COALESCE(sa.a, 0) AS a, COALESCE(sb.b, 0) AS b
+  FROM sa FULL OUTER JOIN sb ON sa.h = sb.h
+),
+unionk AS (
+  SELECT * FROM (
+    SELECT h, a, b, row_number() OVER (ORDER BY h) AS rk FROM merged
+  ) WHERE rk <= {KMV_J_K}
+),
+est AS (
+  SELECT count(*) AS k_used, CAST(sum(a * b) AS BIGINT) AS n_both
+  FROM unionk
+),
+exact AS (
+  SELECT CAST(sum(in_a) AS BIGINT) AS n_a,
+         CAST(sum(in_b) AS BIGINT) AS n_b,
+         CAST(sum(in_a * in_b) AS BIGINT) AS n_inter,
+         CAST(sum(greatest(in_a, in_b)) AS BIGINT) AS n_union
+  FROM flags
+)
+SELECT {KMV_J_K} AS k, e.n_a, e.n_b, e.n_inter, e.n_union,
+       round(e.n_inter / CAST(e.n_union AS DOUBLE) + 1e-6, 6)
+         AS exact_jaccard,
+       round(s.n_both / CAST(s.k_used AS DOUBLE) + 1e-6, 6) AS kmv_jaccard,
+       round(abs(s.n_both / CAST(s.k_used AS DOUBLE)
+                 - e.n_inter / CAST(e.n_union AS DOUBLE)) + 1e-6, 6)
+         AS abs_error
+FROM est s CROSS JOIN exact e
+"""
+
+
+@register("kmv_jaccard_overlap", oracle=_kmvj_oracle(), tags=("prepared-r8",))
+def kmv_jaccard_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KMV SET-OVERLAP SKETCH: estimate the Jaccard similarity of two
+    audiences (users who click vs users who purchase) from their
+    k-minimum-values sketches — take the k smallest portable-md5
+    hashes of the UNION of the two sketches and count how many live in
+    BOTH (the classic KMV Jaccard estimator) — next to the exact
+    Jaccard and the absolute error, so the sketch's accuracy contract
+    is itself hash-checked (the ``kmv_distinct_estimate`` discipline,
+    lifted from cardinalities to set algebra). At 100 TB the two
+    audiences never co-shuffle: each side reduces to a k-row sketch
+    that ships to one place.
+
+    Scale shape: per-side sketches are rank-limited windows
+    (WindowGroupLimit) over per-user hashes; the estimator runs on
+    <= 3k rows of sketch; the exact check is one per-user flag
+    aggregate (kept for the oracle contract — a production deployment
+    drops it)."""
+    ev = load(spark, sf_dir, "events")
+    flags = ev.groupBy("user_id").agg(
+        F.max((F.col("event_type") == "click").cast("int")).alias("in_a"),
+        F.max((F.col("event_type") == "purchase").cast("int")).alias("in_b"),
+    )
+    h = _portable_hash(F.concat(F.lit("kmvj:"), F.col("user_id").cast("string")))
+    hashed = flags.select("in_a", "in_b", h.alias("h"))
+
+    def sketch(side: str) -> DataFrame:
+        # k smallest hashes via orderBy().limit() — TakeOrderedAndProject
+        # (per-partition heaps), not a global ranking window (r9: the
+        # count_min_heavy_hitters tightening applied here too)
+        return hashed.where(F.col(side) == 1).select("h").orderBy("h").limit(KMV_J_K)
+
+    sa = sketch("in_a").withColumn("a", F.lit(1))
+    sb = sketch("in_b").withColumn("b", F.lit(1))
+    merged = (
+        sa.join(sb, "h", "full_outer")
+        .select(
+            "h",
+            F.coalesce("a", F.lit(0)).alias("a"),
+            F.coalesce("b", F.lit(0)).alias("b"),
+        )
+    )
+    wu = Window.orderBy("h")
+    unionk = merged.withColumn("rk", F.row_number().over(wu)).where(
+        F.col("rk") <= KMV_J_K
+    )
+    est = unionk.agg(
+        F.count("*").alias("k_used"),
+        F.sum((F.col("a") * F.col("b")).cast("long")).alias("n_both"),
+    )
+    exact = flags.agg(
+        F.sum("in_a").cast("long").alias("n_a"),
+        F.sum("in_b").cast("long").alias("n_b"),
+        F.sum((F.col("in_a") * F.col("in_b")).cast("long")).alias("n_inter"),
+        F.sum(
+            F.greatest(F.col("in_a"), F.col("in_b")).cast("long")
+        ).alias("n_union"),
+    )
+    j_exact = F.col("n_inter") / F.col("n_union").cast("double")
+    j_kmv = F.col("n_both") / F.col("k_used").cast("double")
+    return est.crossJoin(F.broadcast(exact)).select(
+        F.lit(KMV_J_K).alias("k"),
+        "n_a",
+        "n_b",
+        "n_inter",
+        "n_union",
+        rnd(j_exact, 6).alias("exact_jaccard"),
+        rnd(j_kmv, 6).alias("kmv_jaccard"),
+        rnd(F.abs(j_kmv - j_exact), 6).alias("abs_error"),
+    )
+
+
+# --------------------------------------------------------------------------
+# sliding-window distinct via mergeable KMV partials
+# --------------------------------------------------------------------------
+
+KMV_W_K = 32  #: sketch size per day
+KMV_W_DAYS = 7  #: trailing window width (days)
+
+
+def _kmvw_oracle() -> str:
+    h = _SQL_HASH.format(x="'kmvw:' || CAST(user_id AS VARCHAR)")
+    scale = float(2**60)
+    return f"""
+WITH uday AS (
+  SELECT DISTINCT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day, {h} AS h
+  FROM events
+),
+daily AS (
+  SELECT day, h FROM (
+    SELECT day, h, row_number() OVER (PARTITION BY day ORDER BY h) AS rk
+    FROM uday
+  ) WHERE rk <= {KMV_W_K}
+),
+fanned AS (
+  SELECT DISTINCT d.h, d.day + t.o AS wend
+  FROM daily d CROSS JOIN
+       (SELECT unnest(range(0, {KMV_W_DAYS})) AS o) t
+),
+merged AS (
+  SELECT wend, h, rk FROM (
+    SELECT wend, h, row_number() OVER (PARTITION BY wend ORDER BY h) AS rk
+    FROM fanned
+  ) WHERE rk <= {KMV_W_K}
+),
+est AS (
+  SELECT wend, count(*) AS k_used,
+         max(CASE WHEN rk = {KMV_W_K} THEN h END) AS hk
+  FROM merged GROUP BY wend
+),
+exact AS (
+  SELECT u.day + t.o AS wend, count(DISTINCT u.h) AS n_exact
+  FROM uday u CROSS JOIN (SELECT unnest(range(0, {KMV_W_DAYS})) AS o) t
+  GROUP BY 1
+),
+valid AS (SELECT min(day) AS d0, max(day) AS d1 FROM uday)
+SELECT e.wend AS window_end_day,
+       CAST(x.n_exact AS BIGINT) AS n_exact,
+       round(CASE WHEN e.hk IS NOT NULL
+                  THEN ({KMV_W_K} - 1) / (CAST(e.hk AS DOUBLE) / {scale!r})
+                  ELSE CAST(e.k_used AS DOUBLE) END + 1e-6, 2)
+         AS kmv_estimate,
+       round(abs(CASE WHEN e.hk IS NOT NULL
+                      THEN ({KMV_W_K} - 1) / (CAST(e.hk AS DOUBLE) / {scale!r})
+                      ELSE CAST(e.k_used AS DOUBLE) END - x.n_exact)
+             / CAST(x.n_exact AS DOUBLE) + 1e-6, 4) AS rel_error
+FROM est e JOIN exact x ON e.wend = x.wend CROSS JOIN valid v
+WHERE e.wend >= v.d0 + {KMV_W_DAYS - 1} AND e.wend <= v.d1
+"""
+
+
+@register("sliding_kmv_distinct", oracle=_kmvw_oracle(), tags=("prepared-r8",))
+def sliding_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SLIDING DISTINCT USERS from MERGED DAILY KMV SKETCHES: each day
+    keeps its K smallest user hashes; a day's trailing-7 estimate
+    re-merges the 7 daily sketches (union, re-take K smallest,
+    estimate (K-1)/h_K) — the mergeable-sketch answer to the sliding
+    COUNT DISTINCT that ``rolling_active_users`` computes exactly via
+    the users x days x width fan-out. Daily partials are computed ONCE
+    and reused by every window that covers them (the hourly->daily
+    rollup discipline of ``kmv_merge_rollup``, applied to overlapping
+    windows); the exact value and relative error ride along so the
+    sketch's accuracy contract is itself hash-checked.
+
+    Scale shape: daily sketches are rank-limited windows over per-day
+    distinct hashes; the window merge fans out K x width SKETCH ROWS
+    per day (constant, independent of corpus), and the exact side
+    reuses the bounded user-day fan-out. At production cardinality the
+    exact columns are dropped and only the constant-size sketch path
+    runs."""
+    ev = load(spark, sf_dir, "events")
+    day = F.floor(F.col("ts").cast("double") / 86400).cast("long")
+    h = _portable_hash(
+        F.concat(F.lit("kmvw:"), F.col("user_id").cast("string"))
+    )
+    uday = ev.select(day.alias("day"), h.alias("h")).distinct()
+    wd = Window.partitionBy("day").orderBy("h")
+    daily = uday.withColumn("rk", F.row_number().over(wd)).where(
+        F.col("rk") <= KMV_W_K
+    )
+    # each daily sketch row serves the KMV_W_DAYS window-end days it
+    # falls into (bounded fan-out of SKETCH rows, not user rows)
+    fanned = daily.select(
+        "h",
+        F.explode(
+            F.sequence(
+                F.col("day"), F.col("day") + (KMV_W_DAYS - 1)
+            )
+        ).alias("wend"),
+        F.col("day").alias("src_day"),
+    )
+    ww = Window.partitionBy("wend").orderBy("h")
+    merged = (
+        fanned.select("wend", "h")
+        .distinct()
+        .withColumn("rk", F.row_number().over(ww))
+        .where(F.col("rk") <= KMV_W_K)
+    )
+    est = merged.groupBy("wend").agg(
+        F.count("*").alias("k_used"),
+        F.max(F.when(F.col("rk") == KMV_W_K, F.col("h"))).alias("hk"),
+    )
+    scale = float(2**60)
+    kmv = F.when(
+        F.col("hk").isNotNull(),
+        (KMV_W_K - 1) / (F.col("hk").cast("double") / scale),
+    ).otherwise(F.col("k_used").cast("double"))
+    # exact truth via the bounded user-day fan-out
+    exact = (
+        uday.select(
+            "h",
+            F.explode(
+                F.sequence(F.col("day"), F.col("day") + (KMV_W_DAYS - 1))
+            ).alias("wend"),
+        )
+        .groupBy("wend")
+        .agg(F.countDistinct("h").alias("n_exact"))
+    )
+    valid_days = uday.agg(
+        F.min("day").alias("d0"), F.max("day").alias("d1")
+    )
+    out = (
+        est.join(exact, "wend")
+        .crossJoin(F.broadcast(valid_days))
+        .where(
+            (F.col("wend") >= F.col("d0") + (KMV_W_DAYS - 1))
+            & (F.col("wend") <= F.col("d1"))
+        )
+    )
+    return out.select(
+        F.col("wend").alias("window_end_day"),
+        "n_exact",
+        rnd(kmv, 2).alias("kmv_estimate"),
+        rnd(
+            F.abs(kmv - F.col("n_exact")) / F.col("n_exact").cast("double"),
+            4,
+        ).alias("rel_error"),
+    )
+
+
+# --------------------------------------------------------------------------
+# column-similarity schema matching
+# --------------------------------------------------------------------------
+
+#: sketch size for the per-column KMV value sketches.
+COLSIM_K = 64
+
+#: (table, column) pairs profiled for domain overlap.
+COLSIM_COLUMNS = (
+    ("orders", "o_orderkey"),
+    ("orders", "o_custkey"),
+    ("lineitem", "l_orderkey"),
+    ("lineitem", "l_partkey"),
+    ("customer", "c_custkey"),
+    ("part", "p_partkey"),
+)
+
+
+def _colsim_oracle() -> str:
+    sk_ctes = []
+    for table, col in COLSIM_COLUMNS:
+        h = _SQL_HASH.format(x=f"'colsim:' || CAST({col} AS VARCHAR)")
+        nm = f"{table}.{col}".replace(".", "_")
+        sk_ctes.append(f"""sk_{nm} AS (
+  SELECT h FROM (
+    SELECT h, row_number() OVER (ORDER BY h) AS rk
+    FROM (SELECT DISTINCT {h} AS h FROM {table})
+  ) WHERE rk <= {COLSIM_K}
+)""")
+    names = [f"{t}.{c}" for t, c in COLSIM_COLUMNS]
+    arms = []
+    for i, na in enumerate(names):
+        for nb in names[i + 1:]:
+            sa = "sk_" + na.replace(".", "_")
+            sb = "sk_" + nb.replace(".", "_")
+            arms.append(f"""
+SELECT '{na}' AS col_a, '{nb}' AS col_b,
+       round(n_both / CAST(k_used AS DOUBLE) + 1e-6, 6) AS est_jaccard,
+       n_both / CAST(k_used AS DOUBLE) > 0.5 AS same_domain_candidate
+FROM (
+  SELECT count(*) AS k_used, CAST(sum(a * b) AS BIGINT) AS n_both
+  FROM (
+    SELECT h, a, b, row_number() OVER (ORDER BY h) AS rk
+    FROM (
+      SELECT COALESCE(x.h, y.h) AS h,
+             CASE WHEN x.h IS NULL THEN 0 ELSE 1 END AS a,
+             CASE WHEN y.h IS NULL THEN 0 ELSE 1 END AS b
+      FROM {sa} x FULL OUTER JOIN {sb} y ON x.h = y.h
+    )
+  ) WHERE rk <= {COLSIM_K}
+)""")
+    return (
+        "WITH " + ",\n".join(sk_ctes) + "\n" + "\nUNION ALL\n".join(arms)
+    )
+
+
+@register(
+    "column_similarity_matching",
+    oracle=_colsim_oracle(),
+    tags=("prepared-r8",),
+)
+def column_similarity_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SCHEMA DISCOVERY BY VALUE OVERLAP: sketch each profiled column's
+    value set with KMV, estimate pairwise Jaccard from the merged
+    sketches (the ``kmv_jaccard_overlap`` estimator applied all-pairs),
+    and emit the candidate join-key / shared-domain pairs a data
+    catalog surfaces without any metadata — o_orderkey~l_orderkey and
+    o_custkey~c_custkey should score high, disjoint-domain pairs near
+    zero. Values hash as strings, so the technique is type-agnostic.
+
+    Scale shape: each column reduces to a K-row sketch (rank-limited
+    window over per-column distinct hashes) regardless of table size;
+    the all-pairs comparison runs over bounded sketch unions (pairs x
+    K rows). Adding a column costs one scan of ITS table only — and
+    only ONE: the sketch union is memoized (round-9 tier-2 bench
+    finding: each of the P*(P-1)/2 pair arms filters the union, and
+    left lazy, Catalyst re-scanned all P source tables per arm —
+    O(P^3) scans for a table whose physical size is P x K rows)."""
+    from flink_cookbook_spark.pipeline._cache import memo_persist
+
+    def _build_sketches() -> DataFrame:
+        sketches = []
+        for table, col in COLSIM_COLUMNS:
+            t = load(spark, sf_dir, table)
+            h = _portable_hash(
+                F.concat(F.lit("colsim:"), F.col(col).cast("string"))
+            )
+            # k smallest distinct hashes via orderBy().limit() —
+            # TakeOrderedAndProject, never a global ranking window over
+            # the column's distinct cardinality (billions at 100 TB)
+            sketches.append(
+                t.select(h.alias("h"))
+                .distinct()
+                .orderBy("h")
+                .limit(COLSIM_K)
+                .select(
+                    F.lit(f"{table}.{col}").alias("col_name"), "h"
+                )
+            )
+        out = sketches[0]
+        for s in sketches[1:]:
+            out = out.unionAll(s)
+        return out
+
+    allsk = memo_persist(spark, "colsim_sketches", sf_dir, _build_sketches)
+    # for each unordered column pair: re-take K smallest of the union,
+    # count sketch members present on both sides (the KMV Jaccard
+    # estimator of ``kmv_jaccard_overlap``, applied all-pairs). ONE
+    # plan for every pair (round-9: the per-pair full-outer-join arms
+    # ran 3 tiny stages each — P*(P-1)/2 * 3 stages of scheduling
+    # overhead): the 15-row pair list broadcast-joins the persisted
+    # sketch union twice (once per side), membership is a (pair, h)
+    # groupBy, the re-take-K is a window PARTITIONED by pair, and the
+    # estimate is one grouped aggregate.
+    names = [f"{t}.{c}" for t, c in COLSIM_COLUMNS]
+    pairs = spark.createDataFrame(
+        [
+            (na, nb)
+            for i, na in enumerate(names)
+            for nb in names[i + 1:]
+        ],
+        "col_a string, col_b string",
+    )
+    sides = (
+        F.broadcast(pairs)
+        .join(allsk, F.col("col_name") == F.col("col_a"))
+        .select("col_a", "col_b", "h", F.lit(1).alias("a"), F.lit(0).alias("b"))
+        .unionAll(
+            F.broadcast(pairs)
+            .join(allsk, F.col("col_name") == F.col("col_b"))
+            .select(
+                "col_a", "col_b", "h", F.lit(0).alias("a"), F.lit(1).alias("b")
+            )
+        )
+    )
+    members = sides.groupBy("col_a", "col_b", "h").agg(
+        F.max("a").alias("a"), F.max("b").alias("b")
+    )
+    wu = Window.partitionBy("col_a", "col_b").orderBy("h")
+    unionk = members.withColumn("rk", F.row_number().over(wu)).where(
+        F.col("rk") <= COLSIM_K
+    )
+    return (
+        unionk.groupBy("col_a", "col_b")
+        .agg(
+            F.count("*").alias("k_used"),
+            F.sum((F.col("a") * F.col("b")).cast("long")).alias("n_both"),
+        )
+        .select(
+            "col_a",
+            "col_b",
+            rnd(F.col("n_both") / F.col("k_used").cast("double"), 6).alias(
+                "est_jaccard"
+            ),
+            (
+                F.col("n_both") / F.col("k_used").cast("double") > 0.5
+            ).alias("same_domain_candidate"),
+        )
+    )

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from flink_cookbook_spark.pipeline.dedup import _SQL_HASH, _portable_hash
 
 
 def salted_join(
@@ -240,3 +241,98 @@ FROM two_stage t JOIN direct d
 """,
     tags=("skew", "aggregation", "salting"),
 )(two_stage_skew_agg)
+
+
+# --------------------------------------------------------------------------
+# hash-partition skew report
+# --------------------------------------------------------------------------
+
+#: candidate partition counts; divisors of the finest level so coarser
+#: bucket counts derive EXACTLY from the finest histogram (x mod 8 =
+#: (x mod 128) mod 8 whenever 8 | 128 — one scan serves all three).
+SKEW_PARTITION_COUNTS = (8, 32, 128)
+
+
+_SKEW_ORACLE = f"""
+WITH b128 AS (
+  SELECT {_SQL_HASH.format(x="CAST(l_orderkey AS VARCHAR)")} % 128 AS b,
+         count(*) AS n
+  FROM lineitem GROUP BY 1
+),
+fanned AS (
+  SELECT b, n, t.n_partitions
+  FROM b128 CROSS JOIN (VALUES {", ".join(f"({c})" for c in SKEW_PARTITION_COUNTS)})
+       t(n_partitions)
+),
+per_part AS (
+  SELECT n_partitions, b % n_partitions AS p, CAST(sum(n) AS BIGINT) AS pn
+  FROM fanned GROUP BY 1, 2
+),
+stats AS (
+  SELECT n_partitions,
+         CAST(sum(pn) AS BIGINT) AS n_rows,
+         count(*) AS nonempty_partitions,
+         CAST(max(pn) AS BIGINT) AS max_rows,
+         CAST(sum(pn * pn) AS DOUBLE) AS ss
+  FROM per_part GROUP BY 1
+)
+SELECT n_partitions, n_rows, nonempty_partitions, max_rows,
+       round(CAST(n_rows AS DOUBLE) / n_partitions + 1e-6, 4) AS avg_rows,
+       round(max_rows / (CAST(n_rows AS DOUBLE) / n_partitions) + 1e-6, 4)
+         AS skew_ratio,
+       round(sqrt(greatest(ss / n_partitions
+                           - (CAST(n_rows AS DOUBLE) / n_partitions)
+                             * (CAST(n_rows AS DOUBLE) / n_partitions), 0.0))
+             / (CAST(n_rows AS DOUBLE) / n_partitions) + 1e-6, 6) AS cv
+FROM stats
+"""
+
+
+@register("partition_skew_report", oracle=_SKEW_ORACLE, tags=("prepared-r8",))
+def partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HASH-PARTITION SKEW under candidate ``shuffle.partitions``
+    settings: bucket lineitem's join key with the portable md5 hash at
+    the finest candidate (128), then report — for 8/32/128 partitions —
+    the max/mean partition ratio and the coefficient of variation,
+    i.e. exactly the numbers that decide whether a key needs salting
+    before its next shuffle. CV near sqrt((N-1)/rows-ish) noise means
+    a healthy key; skew_ratio >> 1 means a hot key.
+
+    Scale shape: ONE combinable hash aggregate reduces the corpus to a
+    <=128-row bucket histogram; the coarser partition counts derive
+    from that histogram arithmetically (divisor property above), so
+    sweeping the knob costs zero extra scans. Variance uses the
+    sum-of-squares identity with the FULL partition count in the
+    denominator (empty partitions count as zero)."""
+    li = load(spark, sf_dir, "lineitem")
+    finest = SKEW_PARTITION_COUNTS[-1]
+    b128 = li.groupBy(
+        (_portable_hash(F.col("l_orderkey").cast("string")) % finest).alias("b")
+    ).agg(F.count("*").alias("n"))
+    fanned = b128.select(
+        "b",
+        "n",
+        F.explode(
+            F.array(*[F.lit(c) for c in SKEW_PARTITION_COUNTS])
+        ).alias("n_partitions"),
+    )
+    per_part = fanned.groupBy(
+        "n_partitions", (F.col("b") % F.col("n_partitions")).alias("p")
+    ).agg(F.sum("n").alias("pn"))
+    stats = per_part.groupBy("n_partitions").agg(
+        F.sum("pn").alias("n_rows"),
+        F.count("*").alias("nonempty_partitions"),
+        F.max("pn").alias("max_rows"),
+        F.sum(F.col("pn").cast("double") * F.col("pn")).alias("ss"),
+    )
+    mean = F.col("n_rows") / F.col("n_partitions")
+    var = F.col("ss") / F.col("n_partitions") - mean * mean
+    return stats.select(
+        "n_partitions",
+        "n_rows",
+        "nonempty_partitions",
+        "max_rows",
+        rnd(mean, 4).alias("avg_rows"),
+        rnd(F.col("max_rows") / mean, 4).alias("skew_ratio"),
+        rnd(F.sqrt(F.greatest(var, F.lit(0.0))) / mean, 6).alias("cv"),
+    ).orderBy("n_partitions")

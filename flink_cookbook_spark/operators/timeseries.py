@@ -19,10 +19,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
+from flink_cookbook_spark.operators.stats import SPLIT_EPOCH_S
 from flink_cookbook_spark.registry import register, rnd
 from flink_cookbook_spark.functions.time import epoch_seconds
 
@@ -1783,3 +1786,810 @@ FROM (
 """,
     tags=("profiling", "histogram", "drift"),
 )(value_histogram)
+
+
+# --------------------------------------------------------------------------
+# burstiness (Fano factor) per user
+# --------------------------------------------------------------------------
+
+_BURSTINESS_ORACLE = """
+WITH hourly AS (
+  SELECT user_id,
+         CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS hr,
+         count(*) AS n
+  FROM events GROUP BY 1, 2
+)
+SELECT user_id,
+       count(*) AS n_hours,
+       round(avg(n) + 1e-6, 4) AS mean_hourly,
+       round(var_samp(n) / avg(n) + 1e-6, 4) AS fano
+FROM hourly GROUP BY user_id
+"""
+
+
+@register("burstiness_fano", oracle=_BURSTINESS_ORACLE, tags=("prepared-r8",))
+def burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user BURSTINESS via the Fano factor of hourly event counts
+    (variance / mean over the user's OBSERVED hours): ~1 = Poisson-like
+    traffic, >>1 = bursty sessions, <1 = regular/heartbeat — the
+    behavioral fingerprint feeding bot detection and sampling-rate
+    decisions. Two stacked hash aggregates (user x hour counts, then
+    per-user moments); NULL below two observed hours (variance
+    undefined), both engines via NULL propagation."""
+    ev = load(spark, sf_dir, "events")
+    hour = (F.floor(F.col("ts").cast("double") / 3600) * 3600).cast("long")
+    hourly = ev.groupBy("user_id", hour.alias("hr")).agg(
+        F.count("*").alias("n")
+    )
+    return hourly.groupBy("user_id").agg(
+        F.count("*").alias("n_hours"),
+        rnd(F.avg("n"), 4).alias("mean_hourly"),
+        rnd(F.var_samp("n") / F.avg("n"), 4).alias("fano"),
+    )
+
+
+# --------------------------------------------------------------------------
+# per-event-type arrival rate profile (capacity planning)
+# --------------------------------------------------------------------------
+
+_EVENT_RATE_ORACLE = """
+WITH per_min AS (
+  SELECT event_type,
+         CAST(floor(epoch(ts) / 60) * 60 AS BIGINT) AS mn,
+         count(*) AS n
+  FROM events GROUP BY 1, 2
+)
+SELECT event_type,
+       count(*) AS n_minutes,
+       CAST(sum(n) AS BIGINT) AS n_events,
+       round(avg(n) + 1e-6, 4) AS mean_per_min,
+       round(quantile_cont(n, 0.95) + 1e-6, 4) AS p95_per_min,
+       max(n) AS peak_per_min,
+       round(max(n) / avg(n) + 1e-6, 4) AS peak_to_mean
+FROM per_min GROUP BY event_type
+"""
+
+
+@register(
+    "event_rate_profile",
+    oracle=_EVENT_RATE_ORACLE,
+    tags=("prepared-r8",),
+)
+def event_rate_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ARRIVAL-RATE PROFILE per event type: events-per-minute mean, p95,
+    peak, and the peak-to-mean ratio — the table stream capacity
+    (shuffle partitions, state-store sizing, maxOffsetsPerTrigger) is
+    provisioned from, and the per-type complement of the per-user
+    ``burstiness_fano``. Two stacked hash aggregates: (type, minute)
+    counts, then per-type moments over the minute series."""
+    ev = load(spark, sf_dir, "events")
+    minute = (F.floor(F.col("ts").cast("double") / 60) * 60).cast("long")
+    per_min = ev.groupBy("event_type", minute.alias("mn")).agg(
+        F.count("*").alias("n")
+    )
+    return per_min.groupBy("event_type").agg(
+        F.count("*").alias("n_minutes"),
+        F.sum("n").alias("n_events"),
+        rnd(F.avg("n"), 4).alias("mean_per_min"),
+        rnd(F.expr("percentile(n, 0.95)"), 4).alias("p95_per_min"),
+        F.max("n").alias("peak_per_min"),
+        rnd(F.max("n") / F.avg("n"), 4).alias("peak_to_mean"),
+    )
+
+
+# --------------------------------------------------------------------------
+# event trigram motifs (sequential pattern mining, order 3)
+# --------------------------------------------------------------------------
+
+#: how many global trigrams the motif report keeps.
+TRIGRAM_TOP_N = 20
+
+
+_TRIGRAM_ORACLE = f"""
+WITH seq AS (
+  SELECT user_id, event_type AS t1,
+         lead(event_type, 1) OVER w AS t2,
+         lead(event_type, 2) OVER w AS t3
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+),
+counts AS (
+  SELECT t1 || '>' || t2 || '>' || t3 AS trigram, count(*) AS support
+  FROM seq WHERE t3 IS NOT NULL GROUP BY 1
+),
+ranked AS (
+  SELECT trigram, support,
+         sum(support) OVER () AS tot,
+         row_number() OVER (ORDER BY support DESC, trigram ASC) AS rk
+  FROM counts
+)
+SELECT trigram, support, round(support * 1.0 / tot + 1e-6, 6) AS share
+FROM ranked WHERE rk <= {TRIGRAM_TOP_N}
+"""
+
+
+@register(
+    "event_trigram_motifs",
+    oracle=_TRIGRAM_ORACLE,
+    tags=("prepared-r8",),
+)
+def event_trigram_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top event-type trigrams across per-user journeys — order-3
+    sequential patterns, one step beyond ``event_transition_matrix``'s
+    bigrams and the cheap PrefixSpan stand-in for "what three-step
+    habits exist?".  Per-user ordered lead() window (state bounded by
+    2 lookahead rows per user), then a hash agg over the trigram
+    vocabulary (≤ |types|³, a constant), then a global top-N on that
+    bounded aggregate."""
+    ev = load(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    tri = ev.select(
+        "user_id",
+        F.col("event_type").alias("t1"),
+        F.lead("event_type", 1).over(w).alias("t2"),
+        F.lead("event_type", 2).over(w).alias("t3"),
+    ).where(F.col("t3").isNotNull())
+    counts = tri.groupBy("t1", "t2", "t3").agg(F.count("*").alias("support"))
+    total = counts.agg(F.sum("support").alias("tot"))
+    w_rank = Window.orderBy(F.col("support").desc(), F.col("trigram").asc())
+    return (
+        counts.select(
+            F.concat_ws(">", "t1", "t2", "t3").alias("trigram"), "support"
+        )
+        .crossJoin(F.broadcast(total))
+        .withColumn("rk", F.row_number().over(w_rank))
+        .where(F.col("rk") <= TRIGRAM_TOP_N)
+        .select(
+            "trigram", "support",
+            rnd(F.col("support") / F.col("tot"), 6).alias("share"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# Markov stationary distribution (unrolled power iteration)
+# --------------------------------------------------------------------------
+
+#: power-iteration steps; the 5-state chain converges to 6dp well within.
+MARKOV_ITERS = 12
+
+
+def _markov_oracle() -> str:
+    steps = []
+    for k in range(1, MARKOV_ITERS + 1):
+        steps.append(
+            f"it{k} AS (\n"
+            f"  SELECT t.to_type AS state, sum(prev.p * t.p) AS p\n"
+            f"  FROM it{k - 1} prev JOIN trans t ON prev.state = t.from_type\n"
+            f"  GROUP BY t.to_type\n)"
+        )
+    return f"""
+WITH pairs AS (
+  SELECT lag(event_type) OVER (PARTITION BY user_id
+           ORDER BY ts, event_id) AS from_type,
+         event_type AS to_type
+  FROM events
+),
+counts AS (
+  SELECT from_type, to_type, count(*) AS n
+  FROM pairs WHERE from_type IS NOT NULL GROUP BY 1, 2
+),
+trans AS (
+  SELECT from_type, to_type,
+         n * 1.0 / sum(n) OVER (PARTITION BY from_type) AS p
+  FROM counts
+),
+states AS (SELECT DISTINCT event_type AS state FROM events),
+it0 AS (SELECT state, 1.0 / (SELECT count(*) FROM states) AS p FROM states),
+{", ".join(steps)}
+SELECT state,
+       round(p / sum(p) OVER () + 1e-6, 6) AS stationary_p
+FROM it{MARKOV_ITERS}
+"""
+
+
+@register(
+    "markov_stationary_distribution",
+    oracle=_markov_oracle(),
+    tags=("prepared-r8",),
+)
+def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stationary distribution π = πP of the per-user event-type Markov
+    chain — the long-run behavioral mix ``event_transition_matrix``'s
+    one-step probabilities imply, via MARKOV_ITERS unrolled power-
+    iteration steps from a uniform start, renormalized at the end so
+    any mass lost to outgoing-edge-free states cancels.
+
+    The iteration state is the |types|-row π vector — a BOUNDED
+    aggregate (event-type domain, not data volume), so each unrolled
+    step is a tiny broadcast join + 5-row agg and the whole chain stays
+    lazy inside one plan: the PageRank pattern on a closed-form-sized
+    matrix, no driver loop, no collect."""
+    ev = load(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc()
+    )
+    pairs = ev.select(
+        F.lag("event_type", 1).over(w).alias("from_type"),
+        F.col("event_type").alias("to_type"),
+    ).where(F.col("from_type").isNotNull())
+    counts = pairs.groupBy("from_type", "to_type").agg(F.count("*").alias("n"))
+    wf = Window.partitionBy("from_type")
+    trans = counts.select(
+        "from_type", "to_type",
+        (F.col("n") / F.sum("n").over(wf)).alias("tp"),
+    )
+    wall = Window.partitionBy()
+    pi = (
+        ev.select(F.col("event_type").alias("state"))
+        .distinct()
+        .select("state", (F.lit(1.0) / F.count("*").over(wall)).alias("p"))
+    )
+    for _ in range(MARKOV_ITERS):
+        pi = (
+            pi.join(F.broadcast(trans), F.col("state") == F.col("from_type"))
+            .groupBy(F.col("to_type").alias("state"))
+            .agg(F.sum(F.col("p") * F.col("tp")).alias("p"))
+        )
+    return pi.select(
+        "state",
+        rnd(F.col("p") / F.sum("p").over(wall), 6).alias("stationary_p"),
+    )
+
+
+# --------------------------------------------------------------------------
+# weekday × hour activity heatmap
+# --------------------------------------------------------------------------
+
+_HEATMAP_ORACLE = """
+WITH cell AS (
+  SELECT CAST((CAST(floor(epoch(ts) / 86400) AS BIGINT) + 4) % 7 AS INTEGER)
+           AS dow,
+         CAST(CAST(floor(epoch(ts) / 3600) AS BIGINT) % 24 AS INTEGER)
+           AS hour,
+         count(*) AS n_events
+  FROM events GROUP BY 1, 2
+)
+SELECT dow, hour, n_events,
+       round(n_events * 1.0 / sum(n_events) OVER (PARTITION BY dow)
+             + 1e-6, 6) AS dow_share,
+       n_events = max(n_events) OVER (PARTITION BY dow) AS is_peak_hour
+FROM cell
+"""
+
+
+@register(
+    "weekday_hour_heatmap",
+    oracle=_HEATMAP_ORACLE,
+    tags=("prepared-r8",),
+)
+def weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-of-week × hour-of-day activity heatmap with row-normalized
+    shares and a per-day peak-hour flag — the 2-D upgrade of
+    ``hourly_seasonal_profile`` and the table capacity planning and
+    anomaly baselines read.  Day-of-week is computed as
+    (epoch_days + 4) mod 7 (Sunday = 0) on BOTH engines, sidestepping
+    the Spark-dayofweek-is-1-based vs DuckDB-dow-is-0-based trap.
+    One 168-key hash agg + windows over the bounded result."""
+    ev = load(spark, sf_dir, "events")
+    sec = F.col("ts").cast("double")
+    dow = ((F.floor(sec / 86400) + 4) % 7).cast("int")
+    hour = (F.floor(sec / 3600) % 24).cast("int")
+    cell = ev.groupBy(dow.alias("dow"), hour.alias("hour")).agg(
+        F.count("*").alias("n_events")
+    )
+    wd = Window.partitionBy("dow")
+    return cell.select(
+        "dow", "hour", "n_events",
+        rnd(F.col("n_events") / F.sum("n_events").over(wd), 6).alias(
+            "dow_share"
+        ),
+        (F.col("n_events") == F.max("n_events").over(wd)).alias(
+            "is_peak_hour"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# inter-arrival time profile per event type
+# --------------------------------------------------------------------------
+
+_INTERARRIVAL_ORACLE = """
+WITH g AS (
+  SELECT event_type,
+         epoch(ts) - lag(epoch(ts)) OVER (
+           PARTITION BY event_type, CAST(floor(epoch(ts) / 86400) AS BIGINT)
+           ORDER BY epoch(ts), event_id) AS gap
+  FROM events
+)
+SELECT event_type, count(*) AS n_gaps,
+       round(avg(gap) + 1e-6, 4) AS mean_gap_s,
+       round(quantile_cont(gap, 0.5) + 1e-6, 4) AS p50_gap_s,
+       round(quantile_cont(gap, 0.9) + 1e-6, 4) AS p90_gap_s,
+       round(quantile_cont(gap, 0.99) + 1e-6, 4) AS p99_gap_s,
+       round(stddev_pop(gap) / avg(gap) + 1e-6, 4) AS cv
+FROM g WHERE gap IS NOT NULL GROUP BY event_type
+"""
+
+
+@register(
+    "interarrival_profile",
+    oracle=_INTERARRIVAL_ORACLE,
+    tags=("prepared-r8",),
+)
+def interarrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inter-arrival gap distribution per event type: p50/p90/p99 gap
+    seconds, mean, and the coefficient of variation (CV > 1 = burstier
+    than Poisson) — the jitter profile behind trigger-interval and
+    timeout tuning, complementing ``event_rate_profile`` (rates) and
+    ``burstiness_fano`` (per-user dispersion).
+
+    Scale shape: the lag() window partitions on (event_type, DAY) so no
+    partition outgrows a day's volume — a plain per-type partition would
+    funnel N/|types| rows through one task at 100 TB.  The day-boundary
+    gap (≤1 per type per day) is deliberately excluded and that census
+    choice is mirrored in the oracle."""
+    ev = load(spark, sf_dir, "events")
+    sec = F.col("ts").cast("double")
+    day = F.floor(sec / 86400)
+    w = Window.partitionBy("event_type", day.alias("day")).orderBy(
+        sec.asc(), F.col("event_id").asc()
+    )
+    gaps = ev.select(
+        "event_type",
+        (sec - F.lag(sec, 1).over(w)).alias("gap"),
+    ).where(F.col("gap").isNotNull())
+    return gaps.groupBy("event_type").agg(
+        F.count("*").alias("n_gaps"),
+        rnd(F.avg("gap"), 4).alias("mean_gap_s"),
+        rnd(F.expr("percentile(gap, 0.5)"), 4).alias("p50_gap_s"),
+        rnd(F.expr("percentile(gap, 0.9)"), 4).alias("p90_gap_s"),
+        rnd(F.expr("percentile(gap, 0.99)"), 4).alias("p99_gap_s"),
+        rnd(F.stddev_pop("gap") / F.avg("gap"), 4).alias("cv"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Markov transition perplexity on a held-out time split
+# --------------------------------------------------------------------------
+
+_PERPLEXITY_ORACLE = f"""
+WITH bigrams AS (
+  SELECT lag(event_type) OVER (PARTITION BY user_id
+                               ORDER BY ts, event_id) AS prev,
+         event_type AS cur,
+         epoch(ts) >= {SPLIT_EPOCH_S} AS is_eval
+  FROM events
+),
+big AS (SELECT * FROM bigrams WHERE prev IS NOT NULL),
+c2 AS (
+  SELECT prev, cur, count(*) AS c2 FROM big WHERE NOT is_eval GROUP BY 1, 2
+),
+c1 AS (
+  SELECT prev, count(*) AS c1 FROM big WHERE NOT is_eval GROUP BY 1
+),
+vocab AS (
+  SELECT count(DISTINCT cur) AS v FROM big WHERE NOT is_eval
+),
+scored AS (
+  SELECT b.prev,
+         ln((COALESCE(c2.c2, 0) + 1.0)
+            / (COALESCE(c1.c1, 0) + vocab.v)) AS logp
+  FROM big b
+  LEFT JOIN c2 ON b.prev = c2.prev AND b.cur = c2.cur
+  LEFT JOIN c1 ON b.prev = c1.prev
+  CROSS JOIN vocab
+  WHERE b.is_eval
+)
+SELECT prev, count(*) AS n_eval,
+       round(avg(logp) + 1e-6, 6) AS avg_logp,
+       round(exp(-avg(logp)) + 1e-6, 4) AS perplexity
+FROM scored GROUP BY prev
+"""
+
+
+@register(
+    "transition_perplexity",
+    oracle=_PERPLEXITY_ORACLE,
+    tags=("prepared-r8",),
+)
+def transition_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HELD-OUT PERPLEXITY of the first-order event-transition model:
+    train Laplace-smoothed transition probabilities on first-half
+    bigrams (per user, event-time order), score second-half bigrams,
+    and report per previous-state the average log-loss and perplexity
+    — the LM-evaluation loop in miniature, and the honest version of
+    ``event_transition_matrix`` (which describes the whole corpus;
+    this one must PREDICT unseen data, unseen transitions priced by
+    the smoothing). High perplexity for a state means its future is
+    genuinely uncertain — sessionization and prefetch logic read this.
+
+    Scale shape: bigrams are one per-user window pass; train counts
+    are two bounded hash aggs (state-vocabulary-sized); scoring is two
+    unhinted joins against those bounded aggregates + one final agg."""
+    ev = load(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    bigrams = ev.select(
+        F.lag("event_type").over(w).alias("prev"),
+        F.col("event_type").alias("cur"),
+        (F.col("ts").cast("double") >= SPLIT_EPOCH_S).alias("is_eval"),
+    ).where(F.col("prev").isNotNull())
+    train = bigrams.where(~F.col("is_eval"))
+    c2 = train.groupBy("prev", "cur").agg(F.count("*").alias("c2"))
+    c1 = train.groupBy("prev").agg(F.count("*").alias("c1"))
+    vocab = train.agg(
+        F.size(F.collect_set("cur")).cast("long").alias("v")
+    )
+    ev_big = (
+        bigrams.where(F.col("is_eval"))
+        .join(c2, ["prev", "cur"], "left")
+        .join(c1, "prev", "left")
+        .crossJoin(F.broadcast(vocab))
+        .select(
+            "prev",
+            F.log(
+                (F.coalesce(F.col("c2"), F.lit(0)) + 1.0)
+                / (F.coalesce(F.col("c1"), F.lit(0)) + F.col("v"))
+            ).alias("logp"),
+        )
+    )
+    return ev_big.groupBy("prev").agg(
+        F.count("*").alias("n_eval"),
+        rnd(F.avg("logp"), 6).alias("avg_logp"),
+        rnd(F.exp(-F.avg("logp")), 4).alias("perplexity"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Markov entropy rate of the event stream
+# --------------------------------------------------------------------------
+
+_ENTROPY_ORACLE = """
+WITH bigrams AS (
+  SELECT prev, cur FROM (
+    SELECT lag(event_type) OVER (PARTITION BY user_id
+                                 ORDER BY ts, event_id) AS prev,
+           event_type AS cur
+    FROM events
+  ) WHERE prev IS NOT NULL
+),
+c2 AS (
+  SELECT prev, cur, count(*) AS c2 FROM bigrams GROUP BY 1, 2
+),
+terms AS (
+  SELECT CAST(c2 AS DOUBLE) AS c2d,
+         CAST(sum(c2) OVER (PARTITION BY prev) AS DOUBLE) AS c1d,
+         CAST(sum(c2) OVER () AS DOUBLE) AS tot
+  FROM c2
+),
+hr AS (
+  SELECT CAST(sum(c2d) AS BIGINT) AS n_bigrams,
+         sum(-(c2d / tot) * ln(c2d / c1d)) AS h_rate_raw
+  FROM terms
+),
+mterms AS (
+  SELECT CAST(c AS DOUBLE) AS cd, CAST(sum(c) OVER () AS DOUBLE) AS tot
+  FROM (SELECT cur, count(*) AS c FROM bigrams GROUP BY cur)
+),
+hm AS (
+  SELECT sum(-(cd / tot) * ln(cd / tot)) AS h_marg_raw FROM mterms
+)
+SELECT hr.n_bigrams,
+       round(hm.h_marg_raw + 1e-6, 6) AS h_marginal_nats,
+       round(hr.h_rate_raw + 1e-6, 6) AS h_rate_nats,
+       round(hm.h_marg_raw - hr.h_rate_raw + 1e-6, 6)
+         AS predictability_gain_nats
+FROM hr CROSS JOIN hm
+"""
+
+
+@register("markov_entropy_rate", oracle=_ENTROPY_ORACLE, tags=("prepared-r8",))
+def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ENTROPY RATE of the event stream under the first-order Markov
+    model: H(X_t | X_{t-1}) = -sum p(prev,cur) ln p(cur|prev), next to
+    the marginal entropy H(X_t) and the predictability gain (their
+    difference, = the mutual information between consecutive events) —
+    the single-number summary of ``event_transition_matrix``: how much
+    does knowing the previous event tell you about the next one? Gain
+    near zero means the stream is memoryless and any sequence model is
+    wasted capacity.
+
+    Scale shape: bigrams are one per-user window pass; both entropies
+    reduce over the bounded transition-cell table (state-vocabulary
+    squared). Only observed cells contribute (0 ln 0 = 0 by
+    convention, and absent cells are absent on both engines)."""
+    ev = load(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    bigrams = ev.select(
+        F.lag("event_type").over(w).alias("prev"),
+        F.col("event_type").alias("cur"),
+    ).where(F.col("prev").isNotNull())
+    c2 = bigrams.groupBy("prev", "cur").agg(F.count("*").alias("c2"))
+    wt = Window.partitionBy()
+    wp = Window.partitionBy("prev")
+    terms = c2.select(
+        "cur",
+        F.col("c2").cast("double").alias("c2d"),
+        F.sum("c2").over(wp).cast("double").alias("c1d"),
+        F.sum("c2").over(wt).cast("double").alias("tot"),
+    )
+    h_rate = terms.agg(
+        F.sum("c2d").cast("long").alias("n_bigrams"),
+        F.sum(
+            -(F.col("c2d") / F.col("tot"))
+            * F.log(F.col("c2d") / F.col("c1d"))
+        ).alias("h_rate_raw"),
+    )
+    marg = (
+        bigrams.groupBy("cur")
+        .agg(F.count("*").alias("c"))
+        .select(
+            F.col("c").cast("double").alias("cd"),
+            F.sum("c").over(wt).cast("double").alias("tot"),
+        )
+        .agg(
+            F.sum(
+                -(F.col("cd") / F.col("tot"))
+                * F.log(F.col("cd") / F.col("tot"))
+            ).alias("h_marg_raw")
+        )
+    )
+    return h_rate.crossJoin(F.broadcast(marg)).select(
+        "n_bigrams",
+        rnd("h_marg_raw", 6).alias("h_marginal_nats"),
+        rnd("h_rate_raw", 6).alias("h_rate_nats"),
+        rnd(F.col("h_marg_raw") - F.col("h_rate_raw"), 6).alias(
+            "predictability_gain_nats"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# token-bucket rate-limit replay
+# --------------------------------------------------------------------------
+
+RL_BURST = 3.0  #: bucket capacity (tokens)
+RL_REFILL_S = 60.0  #: seconds to refill one token
+
+
+def _rl_oracle() -> str:
+    b, r = RL_BURST, RL_REFILL_S
+    tok_after = f"least({b}, tok + (tv[i + 1] - last) / {r})"
+    return f"""
+WITH RECURSIVE series AS (
+  SELECT user_id, CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
+         list(epoch(ts) ORDER BY epoch(ts)) AS tv
+  FROM events GROUP BY 1, 2
+),
+steps AS (
+  SELECT user_id, day, tv, 1 AS i,
+         CAST({b - 1.0} AS DOUBLE) AS tok,
+         CAST(tv[1] AS DOUBLE) AS last,
+         CAST(0 AS BIGINT) AS thr
+  FROM series
+  UNION ALL
+  SELECT user_id, day, tv, i + 1,
+         CASE WHEN {tok_after} >= 1.0 THEN {tok_after} - 1.0
+              ELSE {tok_after} END,
+         tv[i + 1],
+         thr + CASE WHEN {tok_after} >= 1.0 THEN 0 ELSE 1 END
+  FROM steps WHERE i < len(tv)
+)
+SELECT user_id, day,
+       CAST(len(tv) AS INTEGER) AS n_requests,
+       thr AS n_throttled,
+       round(thr / CAST(len(tv) AS DOUBLE) + 1e-6, 4) AS throttle_share
+FROM steps WHERE i = len(tv)
+"""
+
+
+@register("rate_limit_simulation", oracle=_rl_oracle(), tags=("prepared-r8",))
+def rate_limit_simulation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TOKEN-BUCKET RATE-LIMIT REPLAY: run each user-day's event
+    sequence through a token bucket (capacity ``RL_BURST``, one token
+    per ``RL_REFILL_S`` seconds) and report how many requests the
+    policy WOULD have throttled — the offline audit every admission-
+    control change runs against real traffic before shipping. Emits
+    only user-days the policy touches plus a deterministic sample of
+    clean days (none at the shipped sizes — the aggregate keeps all
+    days so zero-throttle days still appear).
+
+    Scale shape: per-(user, day) event times collect into a bounded
+    in-day array (the A3 bounded-state contract) and fold through the
+    bucket recurrence in a codegen'd ``aggregate``; the DuckDB twin
+    replays the identical fold with a RECURSIVE CTE (the
+    ``holt_linear_forecast`` discipline — never list_reduce)."""
+    ev = load(spark, sf_dir, "events")
+    sec = F.col("ts").cast("double")
+    day = F.floor(sec / 86400).cast("long")
+    series = (
+        ev.select("user_id", day.alias("day"), sec.alias("t"))
+        .groupBy("user_id", "day")
+        .agg(F.array_sort(F.collect_list("t")).alias("tv"))
+    )
+    b, r = RL_BURST, RL_REFILL_S
+    # acc: (tok, last, thr); refill then admit-or-throttle
+    tok_after = (
+        f"least({b}D, acc.tok + (x - acc.last) / {r}D)"
+    )
+    fold = (
+        f"aggregate(slice(tv, 2, size(tv) - 1), "
+        f"named_struct('tok', {b - 1.0}D, 'last', element_at(tv, 1), "
+        f"'thr', 0L), "
+        f"(acc, x) -> named_struct("
+        f"'tok', CASE WHEN {tok_after} >= 1.0D THEN {tok_after} - 1.0D "
+        f"ELSE {tok_after} END, "
+        f"'last', x, "
+        f"'thr', acc.thr + CASE WHEN {tok_after} >= 1.0D THEN 0L ELSE 1L END))"
+    )
+    return (
+        series.withColumn("st", F.expr(fold))
+        .select(
+            "user_id",
+            "day",
+            F.size("tv").alias("n_requests"),
+            F.col("st.thr").alias("n_throttled"),
+            rnd(F.col("st.thr") / F.size("tv").cast("double"), 4).alias(
+                "throttle_share"
+            ),
+        )
+    )
+
+
+#: attribution channels (bit order fixed, alphabetical).
+SHAPLEY_CHANNELS = ("click", "error", "signup", "view")
+
+
+# --------------------------------------------------------------------------
+# exact Shapley channel attribution
+# --------------------------------------------------------------------------
+
+def _shapley_terms() -> list[tuple[str, int, int, float]]:
+    """(channel, mask_without, mask_with, weight) for every channel i
+    and every coalition S not containing i: weight = |S|!(n-1-|S|)!/n!.
+    16 masks x 4 channels / 2 = 32 terms, a pure literal table."""
+    n = len(SHAPLEY_CHANNELS)
+    out = []
+    for i, ch in enumerate(SHAPLEY_CHANNELS):
+        bit = 1 << i
+        for mask in range(1 << n):
+            if mask & bit:
+                continue
+            s = bin(mask).count("1")
+            w = (
+                math.factorial(s)
+                * math.factorial(n - 1 - s)
+                / math.factorial(n)
+            )
+            out.append((ch, mask, mask | bit, w))
+    return out
+
+
+def _shapley_oracle() -> str:
+    terms_rows = ", ".join(
+        f"('{ch}', {mwo}, {mw}, {w!r})" for ch, mwo, mw, w in _shapley_terms()
+    )
+    bits = " + ".join(
+        f"max(CASE WHEN event_type = '{ch}' THEN {1 << i} ELSE 0 END)"
+        for i, ch in enumerate(SHAPLEY_CHANNELS)
+    )
+    chans = ", ".join(f"'{c}'" for c in SHAPLEY_CHANNELS)
+    return f"""
+WITH first_p AS (
+  SELECT user_id, min(epoch(ts)) AS t_conv
+  FROM events WHERE event_type = 'purchase' GROUP BY user_id
+),
+touches AS (
+  SELECT e.user_id, e.event_type, f.t_conv
+  FROM events e LEFT JOIN first_p f ON e.user_id = f.user_id
+  WHERE e.event_type IN ({chans})
+    AND (f.t_conv IS NULL OR epoch(e.ts) < f.t_conv)
+),
+per_user AS (
+  SELECT user_id, {bits} AS mask,
+         max(CASE WHEN t_conv IS NOT NULL THEN 1 ELSE 0 END) AS conv
+  FROM touches GROUP BY user_id
+),
+coalitions AS (
+  SELECT mask, count(*) AS n_users, avg(conv) AS v
+  FROM per_user GROUP BY mask
+),
+terms AS (
+  SELECT * FROM (VALUES {terms_rows}) t(channel, m_wo, m_w, w)
+),
+shap AS (
+  SELECT t.channel,
+         sum(t.w * (COALESCE(cw.v, 0.0) - COALESCE(cwo.v, 0.0))) AS shap_raw
+  FROM terms t
+  LEFT JOIN coalitions cw ON cw.mask = t.m_w
+  LEFT JOIN coalitions cwo ON cwo.mask = t.m_wo
+  GROUP BY t.channel
+),
+totals AS (
+  SELECT CAST(sum(n_users) AS BIGINT) AS n_users_total,
+         max(CASE WHEN mask = 0 THEN v END) AS v_empty
+  FROM coalitions
+)
+SELECT s.channel,
+       round(s.shap_raw + 1e-6, 6) AS shapley_value,
+       t.n_users_total,
+       round(COALESCE(t.v_empty, 0.0) + 1e-6, 6) AS v_empty_set
+FROM shap s CROSS JOIN totals t
+"""
+
+
+@register(
+    "shapley_attribution",
+    oracle=_shapley_oracle(),
+    tags=("prepared-r8",),
+)
+def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT SHAPLEY ATTRIBUTION over touch channels: each user's
+    exposure coalition is the set of channel types seen before their
+    first purchase (all their touches, for non-converters); the
+    characteristic function v(S) is the conversion rate of users with
+    EXACTLY that coalition (unobserved coalitions contribute v=0, the
+    standard data-driven convention); each channel's Shapley value is
+    its average marginal contribution across all coalitions. Unlike
+    last-touch or time-decay heuristics this is the unique credit
+    split satisfying efficiency/symmetry/null-player — and it is
+    EXACT, not sampled, because the coalition lattice is 2^4.
+
+    Scale shape: users reduce to a 16-row coalition table in one keyed
+    agg + one mask agg; the Shapley sum is a literal 32-term table
+    joined against those 16 rows. Channel count, not user count,
+    bounds everything downstream of the first reduce."""
+    ev = load(spark, sf_dir, "events")
+    sec = F.col("ts").cast("double")
+    first_p = ev.where(F.col("event_type") == "purchase").groupBy(
+        "user_id"
+    ).agg(F.min(sec).alias("t_conv"))
+    touches = ev.join(first_p, "user_id", "left").where(
+        F.col("event_type").isin(*SHAPLEY_CHANNELS)
+        & (F.col("t_conv").isNull() | (sec < F.col("t_conv")))
+    )
+    per_user = touches.groupBy("user_id").agg(
+        *[
+            F.max(
+                F.when(F.col("event_type") == ch, 1 << i).otherwise(0)
+            ).alias(f"b{i}")
+            for i, ch in enumerate(SHAPLEY_CHANNELS)
+        ],
+        F.max(F.col("t_conv").isNotNull().cast("int")).alias("conv"),
+    )
+    mask = sum(F.col(f"b{i}") for i in range(len(SHAPLEY_CHANNELS)))
+    coalitions = per_user.groupBy(mask.alias("mask")).agg(
+        F.count("*").alias("n_users"),
+        F.avg("conv").alias("v"),
+    )
+    terms = spark.createDataFrame(
+        _shapley_terms(), "channel string, m_wo int, m_w int, w double"
+    )
+    jw = coalitions.select(F.col("mask").alias("m_w"), F.col("v").alias("v_w"))
+    jwo = coalitions.select(
+        F.col("mask").alias("m_wo"), F.col("v").alias("v_wo")
+    )
+    shap = (
+        terms.join(jw, "m_w", "left")
+        .join(jwo, "m_wo", "left")
+        .groupBy("channel")
+        .agg(
+            F.sum(
+                F.col("w")
+                * (
+                    F.coalesce("v_w", F.lit(0.0))
+                    - F.coalesce("v_wo", F.lit(0.0))
+                )
+            ).alias("shap_raw")
+        )
+    )
+    totals = coalitions.agg(
+        F.sum("n_users").alias("n_users_total"),
+        F.max(F.when(F.col("mask") == 0, F.col("v"))).alias("v_empty"),
+    )
+    return shap.crossJoin(F.broadcast(totals)).select(
+        "channel",
+        rnd("shap_raw", 6).alias("shapley_value"),
+        "n_users_total",
+        rnd(F.coalesce("v_empty", F.lit(0.0)), 6).alias("v_empty_set"),
+    )

@@ -11,11 +11,11 @@ TakeOrderedAndProject (no global sort).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import register, rnd
+from flink_cookbook_spark.registry import NUDGE, register, rnd
 
 # ---------------------------------------------------------------------------
 # Money discipline (100 TB): the fixture's money columns are exact 2-dp
@@ -1118,3 +1118,1084 @@ GROUP BY s_name
 """,
     tags=("tpch", "bench"),
 )(q21_waiting_suppliers)
+
+
+# --------------------------------------------------------------------------
+# revenue concentration (Gini + top-decile share) per nation
+# --------------------------------------------------------------------------
+
+_GINI_ORACLE = """
+WITH rev AS (
+  SELECT o_custkey, sum(o_totalprice) AS rev,
+         sum(CAST(o_totalprice AS DECIMAL(14,2))) AS rev_d
+  FROM orders GROUP BY o_custkey
+),
+pc AS (
+  SELECT n.n_name, c.c_custkey, rev.rev, rev.rev_d
+  FROM rev JOIN customer c ON rev.o_custkey = c.c_custkey
+  JOIN nation n ON c.c_nationkey = n.n_nationkey
+),
+ranked AS (
+  SELECT n_name, rev, rev_d,
+         CAST(row_number() OVER (PARTITION BY n_name
+              ORDER BY rev ASC, c_custkey ASC) AS BIGINT) AS i,
+         count(*) OVER (PARTITION BY n_name) AS n
+  FROM pc
+),
+agg AS (
+  SELECT n_name,
+         max(n) AS n_customers,
+         sum(rev_d) AS total_rev_d,
+         sum(i * rev) AS irev,
+         sum(CASE WHEN i > n - CAST(floor((n + 9) / 10) AS BIGINT)
+                  THEN rev_d END) AS top_rev_d
+  FROM ranked GROUP BY n_name
+)
+SELECT n_name, CAST(n_customers AS BIGINT) AS n_customers,
+       CAST(round(total_rev_d, 2) AS DOUBLE) AS total_rev,
+       round(2.0 * irev / (n_customers * CAST(total_rev_d AS DOUBLE))
+             - (n_customers + 1.0) / n_customers + 1e-6, 6) AS gini,
+       round(CAST(top_rev_d AS DOUBLE) / CAST(total_rev_d AS DOUBLE)
+             + 1e-6, 6) AS top_decile_share
+FROM agg
+"""
+
+
+@register(
+    "revenue_concentration_gini",
+    oracle=_GINI_ORACLE,
+    tags=("prepared-r8",),
+)
+def revenue_concentration_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-nation customer-revenue concentration: Gini coefficient (via
+    the rank formula G = 2·Σi·xᵢ/(n·Σx) − (n+1)/n over ascending
+    revenue) and the revenue share of the top decile of customers.
+    The whale-vs-long-tail diagnostic a mixture/quota policy is tuned
+    against.  One shuffle to per-customer revenue, per-nation windows
+    (25 bounded partitions at TPC-H shape), one final agg.
+
+    Money discipline (caught by the 100x heavy-table sweep): the
+    per-nation revenue totals sum ~60k customers' money values each and
+    the double sum flipped a cent at 1.4e11 units — total/top-decile
+    revenue run in DECIMAL (operators/tpch.py discipline). The
+    per-CUSTOMER double stays as the ranking quantity, and the
+    rank-weighted irev stays double: gini is a ratio, whose relative
+    error the 6-dp rounding absorbs."""
+    orders = load(spark, sf_dir, "orders")
+    cust = load(spark, sf_dir, "customer")
+    nation = load(spark, sf_dir, "nation")
+    rev = orders.groupBy("o_custkey").agg(
+        F.sum("o_totalprice").alias("rev"),
+        F.sum(F.col("o_totalprice").cast("decimal(14,2)")).alias("rev_d"),
+    )
+    per_cust = (
+        rev.join(cust, rev.o_custkey == cust.c_custkey)
+        .join(F.broadcast(nation), cust.c_nationkey == F.col("n_nationkey"))
+        .select("n_name", "c_custkey", "rev", "rev_d")
+    )
+    w = Window.partitionBy("n_name").orderBy(
+        F.col("rev").asc(), F.col("c_custkey").asc()
+    )
+    wn = Window.partitionBy("n_name")
+    ranked = per_cust.select(
+        "n_name", "rev", "rev_d",
+        F.row_number().over(w).cast("long").alias("i"),
+        F.count("*").over(wn).alias("n"),
+    )
+    ntop = F.floor((F.col("n") + 9) / 10)
+    agg = ranked.groupBy("n_name").agg(
+        F.max("n").alias("n_customers"),
+        F.sum("rev_d").alias("total_rev_d"),
+        F.sum(F.col("i") * F.col("rev")).alias("irev"),
+        # no otherwise: sum skips NULLs, mirroring CASE WHEN with no ELSE
+        F.sum(
+            F.when(F.col("i") > F.col("n") - ntop, F.col("rev_d"))
+        ).alias("top_rev_d"),
+    )
+    total_dbl = F.col("total_rev_d").cast("double")
+    gini = (
+        2.0 * F.col("irev") / (F.col("n_customers") * total_dbl)
+        - (F.col("n_customers") + 1.0) / F.col("n_customers")
+    )
+    return agg.select(
+        "n_name",
+        "n_customers",
+        F.round(F.col("total_rev_d"), 2).cast("double").alias("total_rev"),
+        rnd(gini, 6).alias("gini"),
+        rnd(F.col("top_rev_d").cast("double") / total_dbl, 6).alias(
+            "top_decile_share"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# open-order backlog profile (interval stabbing via +1/-1 deltas)
+# --------------------------------------------------------------------------
+
+_BACKLOG_ORACLE = """
+WITH last_ship AS (
+  SELECT l_orderkey, max(l_shipdate) AS last_ship
+  FROM lineitem GROUP BY l_orderkey
+),
+spans AS (
+  SELECT CAST(o.o_orderdate AS DATE) AS open_day,
+         coalesce(CAST(ls.last_ship AS DATE),
+                  CAST(o.o_orderdate AS DATE)) + 1 AS close_day
+  FROM orders o LEFT JOIN last_ship ls ON o.o_orderkey = ls.l_orderkey
+),
+deltas AS (
+  SELECT open_day AS day, 1 AS delta, 1 AS opened, 0 AS closed FROM spans
+  UNION ALL
+  SELECT close_day AS day, -1 AS delta, 0 AS opened, 1 AS closed FROM spans
+),
+daily AS (
+  SELECT day, CAST(sum(delta) AS BIGINT) AS delta,
+         CAST(sum(opened) AS BIGINT) AS n_opened,
+         CAST(sum(closed) AS BIGINT) AS n_closed
+  FROM deltas GROUP BY day
+)
+SELECT day, n_opened, n_closed,
+       CAST(sum(delta) OVER (ORDER BY day
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+         AS backlog
+FROM daily
+"""
+
+
+@register(
+    "order_backlog_profile",
+    oracle=_BACKLOG_ORACLE,
+    tags=("prepared-r8",),
+)
+def order_backlog_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily open-order backlog: each order opens at o_orderdate and
+    closes the day after its last lineitem ships (same-day close for
+    orders with no lineitems), and the backlog on a day is the count of
+    open intervals covering it — the interval-stabbing query behind
+    "how much WIP does the warehouse carry?".
+
+    The classic scalable shape: intervals → ±1 boundary deltas → one
+    hash agg on day → one cumulative window over the DISTINCT-day
+    series, which is calendar-bounded however many orders exist.  No
+    join ever expands rows beyond 2 per order."""
+    orders = load(spark, sf_dir, "orders")
+    li = load(spark, sf_dir, "lineitem")
+    last_ship = li.groupBy("l_orderkey").agg(
+        F.max("l_shipdate").alias("last_ship")
+    )
+    spans = (
+        orders.join(last_ship, orders.o_orderkey == last_ship.l_orderkey, "left")
+        .select(
+            F.to_date("o_orderdate").alias("open_day"),
+            F.date_add(
+                F.coalesce(F.to_date("last_ship"), F.to_date("o_orderdate")), 1
+            ).alias("close_day"),
+        )
+    )
+    opens = spans.select(
+        F.col("open_day").alias("day"),
+        F.lit(1).alias("delta"),
+        F.lit(1).alias("opened"),
+        F.lit(0).alias("closed"),
+    )
+    closes = spans.select(
+        F.col("close_day").alias("day"),
+        F.lit(-1).alias("delta"),
+        F.lit(0).alias("opened"),
+        F.lit(1).alias("closed"),
+    )
+    daily = (
+        opens.unionByName(closes)
+        .groupBy("day")
+        .agg(
+            F.sum("delta").alias("delta"),
+            F.sum("opened").alias("n_opened"),
+            F.sum("closed").alias("n_closed"),
+        )
+    )
+    w = Window.orderBy("day").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return daily.select(
+        "day", "n_opened", "n_closed",
+        F.sum("delta").over(w).alias("backlog"),
+    )
+
+
+# --------------------------------------------------------------------------
+# customer-revenue decile lift table (broadcast quantile boundaries)
+# --------------------------------------------------------------------------
+
+_DECILE_ORACLE = """
+WITH rev AS (
+  SELECT o_custkey,
+         sum(CAST(o_totalprice AS DECIMAL(14,2))) AS rev_d
+  FROM orders GROUP BY o_custkey
+),
+bounds AS (
+  SELECT quantile_disc(rev_d, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9])
+           AS bs
+  FROM rev
+),
+assigned AS (
+  SELECT rev_d,
+         1 + list_sum([CASE WHEN rev_d > b THEN 1 ELSE 0 END for b in bs])
+           AS decile
+  FROM rev CROSS JOIN bounds
+),
+per AS (
+  SELECT decile, count(*) AS n_customers, sum(rev_d) AS decile_rev_d
+  FROM assigned GROUP BY decile
+),
+shared AS (
+  SELECT CAST(decile AS INTEGER) AS decile, n_customers, decile_rev_d,
+         CAST(decile_rev_d AS DOUBLE) /
+           CAST(sum(decile_rev_d) OVER () AS DOUBLE) AS share
+  FROM per
+)
+SELECT decile, n_customers,
+       CAST(round(decile_rev_d, 2) AS DOUBLE) AS decile_rev,
+       round(share + 1e-6, 6) AS rev_share,
+       round(sum(share) OVER (ORDER BY decile DESC
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1e-6, 6)
+         AS cum_share_from_top,
+       round(share * 10.0 + 1e-6, 4) AS lift
+FROM shared
+"""
+
+
+@register("decile_lift_table", oracle=_DECILE_ORACLE, tags=("prepared-r8",))
+def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue decile lift table over customers — per value-decile:
+    customer count, revenue share, cumulative share, and lift vs a
+    uniform 10% — the marketing/finance view whose 80/20 shape
+    ``revenue_concentration_gini`` compresses to one number.
+
+    Scale design (the reason this is NOT a global ntile): decile
+    BOUNDARIES come from one exact-percentile aggregate (a 1-row,
+    9-value result, broadcast), and assignment is a map-only comparison
+    against that array — no global sort, no single-partition ranking
+    window, ties assigned by value identically on both engines.  The
+    only windows run over the ≤10-row decile aggregate.  Boundaries are
+    DISCRETE percentiles (actual revenue values) rather than
+    interpolated ones: an interpolated boundary differs between engines
+    in the last ulp and, when duplicate revenues sit at a decile edge,
+    reclassifies a whole duplicate run (caught by the 10x probe —
+    Spark/DuckDB disagreed on 10 replicated customers); a discrete
+    boundary is the same stored double on both sides.
+
+    Money discipline (caught by the 100x probe, twice): EVERY revenue
+    here is the exact DECIMAL sum (operators/tpch.py discipline). The
+    per-decile totals flipped a cent in double at 4.6e11 money units —
+    and after that first conversion the re-probe caught the subtler
+    layer: the per-CUSTOMER double sum (then still the boundary /
+    assignment quantity) differs between engines by an ulp at scale, so
+    customers tied AT a decile boundary flipped sides (14 of 1.5M).
+    Discrete boundaries only help when the quantity they slice is
+    itself engine-identical — so ordering, boundaries, and assignment
+    all run on the exact decimal as well."""
+    orders = load(spark, sf_dir, "orders")
+    rev = orders.groupBy("o_custkey").agg(
+        F.sum(F.col("o_totalprice").cast("decimal(14,2)")).alias("rev_d"),
+    )
+    rev.createOrReplaceTempView("_fcs_decile_rev")
+    qs = [i / 10.0 for i in range(1, 10)]
+    bounds = spark.sql(
+        "SELECT array("
+        + ", ".join(
+            f"percentile_disc({q}) WITHIN GROUP (ORDER BY rev_d)" for q in qs
+        )
+        + ") AS bounds FROM _fcs_decile_rev"
+    )
+    assigned = (
+        rev.crossJoin(F.broadcast(bounds))
+        .select(
+            "rev_d",
+            (
+                1
+                + F.aggregate(
+                    F.transform(
+                        "bounds",
+                        lambda b: (F.col("rev_d") > b).cast("int"),
+                    ),
+                    F.lit(0),
+                    lambda acc, x: acc + x,
+                )
+            ).alias("decile"),
+        )
+    )
+    per = assigned.groupBy("decile").agg(
+        F.count("*").alias("n_customers"),
+        F.sum("rev_d").alias("decile_rev_d"),
+    )
+    wall = Window.partitionBy()
+    w_cum = Window.orderBy(F.col("decile").desc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    # exact decimal -> double: the same stored double on both engines
+    # (unscaled sums sit orders below the 2^53 cast boundary)
+    rev_dbl = F.col("decile_rev_d").cast("double")
+    share = rev_dbl / F.sum("decile_rev_d").over(wall).cast("double")
+    return per.select(
+        "decile",
+        "n_customers",
+        F.round(F.col("decile_rev_d"), 2).cast("double").alias("decile_rev"),
+        rnd(share, 6).alias("rev_share"),
+        rnd(F.sum(share).over(w_cum), 6).alias("cum_share_from_top"),
+        rnd(share * 10.0, 4).alias("lift"),
+    )
+
+
+# --------------------------------------------------------------------------
+# percent-of-parent revenue hierarchy
+# --------------------------------------------------------------------------
+
+_HIERARCHY_ORACLE = """
+WITH rev AS (
+  SELECT r.r_name AS region, n.n_name AS nation,
+         sum(CAST(l.l_extendedprice AS DECIMAL(14,2))
+             * (1 - CAST(l.l_discount AS DECIMAL(4,2)))) AS rev_dec
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN nation n ON c.c_nationkey = n.n_nationkey
+  JOIN region r ON n.n_regionkey = r.r_regionkey
+  GROUP BY 1, 2
+)
+SELECT region, nation,
+       round(CAST(rev_dec AS DOUBLE) + 1e-6, 2) AS revenue,
+       round(CAST(rev_dec AS DOUBLE)
+             / CAST(sum(rev_dec) OVER (PARTITION BY region) AS DOUBLE)
+             + 1e-6, 6) AS share_of_region,
+       round(CAST(sum(rev_dec) OVER (PARTITION BY region) AS DOUBLE)
+             / CAST(sum(rev_dec) OVER () AS DOUBLE) + 1e-6, 6)
+         AS region_share_of_global
+FROM rev
+"""
+
+
+@register(
+    "revenue_share_hierarchy",
+    oracle=_HIERARCHY_ORACLE,
+    tags=("prepared-r8",),
+)
+def revenue_share_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PERCENT-OF-PARENT REVENUE HIERARCHY: per nation, its revenue
+    (sum of discounted extended price through orders -> customer),
+    its share of the owning region, and the region's share of global —
+    the drill-down contribution table every revenue dashboard opens
+    with, expressed as windows over the bounded nation-grain aggregate
+    rather than three separate rollup scans.
+
+    Scale shape: one join pipeline down to nation grain (dimension
+    joins broadcast under AQE), ONE hash aggregate, and two window
+    passes over the <=25-row result."""
+    li = load(spark, sf_dir, "lineitem")
+    orders = load(spark, sf_dir, "orders")
+    cust = load(spark, sf_dir, "customer")
+    nation = load(spark, sf_dir, "nation")
+    region = load(spark, sf_dir, "region")
+    rev = (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
+        .groupBy(
+            F.col("r_name").alias("region"), F.col("n_name").alias("nation")
+        )
+        .agg(
+            # round-13: per-nation revenue sums the WHOLE lineitem
+            # corpus into <=25 groups — extensive; the raw-double form
+            # flipped cents at ~1.17e12 in the 1000x sweep (16/25
+            # rows). DECIMAL discipline: exact decimal sum, cast to
+            # double only at the end; the window sums below stay
+            # decimal (exact) so both share ratios divide identical
+            # doubles in both engines at any scale.
+            F.sum(
+                F.col("l_extendedprice").cast("decimal(14,2)")
+                * (
+                    F.lit(1).cast("decimal(3,2)")
+                    - F.col("l_discount").cast("decimal(4,2)")
+                )
+            ).alias("rev_dec")
+        )
+    )
+    wr = Window.partitionBy("region")
+    wg = Window.partitionBy()
+    rev_d = F.col("rev_dec").cast("double")
+    region_d = F.sum("rev_dec").over(wr).cast("double")
+    global_d = F.sum("rev_dec").over(wg).cast("double")
+    return rev.select(
+        "region",
+        "nation",
+        rnd(rev_d, 2).alias("revenue"),
+        rnd(rev_d / region_d, 6).alias("share_of_region"),
+        rnd(region_d / global_d, 6).alias("region_share_of_global"),
+    )
+
+
+# --------------------------------------------------------------------------
+# discount elasticity (log-log OLS per brand)
+# --------------------------------------------------------------------------
+
+_ELASTICITY_ORACLE = """
+WITH cells AS (
+  SELECT p.p_brand AS brand, round(l.l_discount, 2) AS disc,
+         avg(l.l_quantity) AS q
+  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+  WHERE l.l_discount > 0
+  GROUP BY 1, 2
+),
+fit AS (
+  SELECT brand,
+         CAST(count(*) AS DOUBLE) AS m,
+         sum(ln(disc)) AS sx, sum(ln(q)) AS sy,
+         sum(ln(disc) * ln(q)) AS sxy,
+         sum(ln(disc) * ln(disc)) AS sxx,
+         sum(ln(q) * ln(q)) AS syy
+  FROM cells GROUP BY brand
+)
+SELECT brand,
+       CAST(m AS BIGINT) AS n_levels,
+       round(CASE WHEN m * sxx - sx * sx > 0
+                  THEN (m * sxy - sx * sy) / (m * sxx - sx * sx) END
+             + 1e-6, 6) AS elasticity,
+       round(CASE WHEN m * sxx - sx * sx > 0 AND m * syy - sy * sy > 0
+                  THEN (m * sxy - sx * sy) * (m * sxy - sx * sy)
+                       / ((m * sxx - sx * sx) * (m * syy - sy * sy)) END
+             + 1e-6, 6) AS r2
+FROM fit
+"""
+
+
+@register(
+    "discount_elasticity",
+    oracle=_ELASTICITY_ORACLE,
+    tags=("prepared-r8",),
+)
+def discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DISCOUNT ELASTICITY per part brand: OLS slope of ln(mean
+    quantity at a discount level) on ln(discount) over the observed
+    nonzero discount levels — the log-log regression whose slope reads
+    directly as "a 1% deeper discount moves quantity by slope%". The
+    econometrics twin of ``per_key_linear_trend`` (time there, price
+    here), with the fit quality (r2) reported so flat or noisy brands
+    are not over-read.
+
+    Scale shape: one combinable hash agg to (brand, discount-level)
+    means — the regression then runs over <=11 points per brand in a
+    second bounded agg; nothing scales with the lineitem count after
+    the first reduce."""
+    li = load(spark, sf_dir, "lineitem")
+    part = load(spark, sf_dir, "part")
+    cells = (
+        li.join(part, li.l_partkey == part.p_partkey)
+        .where(F.col("l_discount") > 0)
+        .groupBy(
+            F.col("p_brand").alias("brand"),
+            # stabilize the float level key on both engines
+            F.round(F.col("l_discount"), 2).alias("disc"),
+        )
+        .agg(F.avg("l_quantity").alias("q"))
+    )
+    x = F.log(F.col("disc"))
+    y = F.log(F.col("q"))
+    fit = cells.groupBy("brand").agg(
+        F.count("*").cast("double").alias("m"),
+        F.sum(x).alias("sx"),
+        F.sum(y).alias("sy"),
+        F.sum(x * y).alias("sxy"),
+        F.sum(x * x).alias("sxx"),
+        F.sum(y * y).alias("syy"),
+    )
+    vx = F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")
+    vy = F.col("m") * F.col("syy") - F.col("sy") * F.col("sy")
+    cov = F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy")
+    slope = F.when(vx > 0, cov / vx)
+    r2 = F.when((vx > 0) & (vy > 0), cov * cov / (vx * vy))
+    return fit.select(
+        "brand",
+        F.col("m").cast("long").alias("n_levels"),
+        rnd(slope, 6).alias("elasticity"),
+        rnd(r2, 6).alias("r2"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Laspeyres price index over ship years
+# --------------------------------------------------------------------------
+
+#: base year for the fixed basket.
+LASPEYRES_BASE_YEAR = 1995
+
+
+_LASPEYRES_ORACLE = f"""
+WITH py AS (
+  SELECT l_partkey AS pk, extract(year FROM l_shipdate) AS y,
+         sum(l_extendedprice) / sum(l_quantity) AS p,
+         sum(l_quantity) AS q
+  FROM lineitem GROUP BY 1, 2
+),
+base AS (
+  SELECT pk, p AS p0, q AS q0 FROM py WHERE y = {LASPEYRES_BASE_YEAR}
+)
+SELECT CAST(py.y AS INTEGER) AS ship_year,
+       count(*) AS n_common_parts,
+       round(sum(py.p * b.q0) / sum(b.p0 * b.q0) + 1e-6, 6)
+         AS laspeyres_index
+FROM py JOIN base b ON py.pk = b.pk
+GROUP BY py.y
+"""
+
+
+@register(
+    "laspeyres_price_index",
+    oracle=_LASPEYRES_ORACLE,
+    tags=("prepared-r8",),
+)
+def laspeyres_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LASPEYRES PRICE INDEX per ship year: average unit price per
+    (part, year), base-year quantities as the fixed basket, index(y) =
+    sum(p_y * q_base) / sum(p_base * q_base) over parts traded in BOTH
+    years — the index-number answer to "how much did prices move?"
+    that raw revenue growth (``yoy_segment_growth``) conflates with
+    volume shifts. Base year's own row emits at exactly 1.
+
+    Scale shape: one (part, year) hash agg; the base basket joins back
+    keyed on part; per-year sums reduce the bounded joined table."""
+    li = load(spark, sf_dir, "lineitem")
+    yr = F.year("l_shipdate")
+    py = li.groupBy(F.col("l_partkey").alias("pk"), yr.alias("y")).agg(
+        (F.sum("l_extendedprice") / F.sum("l_quantity")).alias("p"),
+        F.sum("l_quantity").alias("q"),
+    )
+    base = py.where(F.col("y") == LASPEYRES_BASE_YEAR).select(
+        "pk", F.col("p").alias("p0"), F.col("q").alias("q0")
+    )
+    joined = py.join(base, "pk")
+    return (
+        joined.groupBy("y")
+        .agg(
+            F.count("*").alias("n_common_parts"),
+            (
+                F.sum(F.col("p") * F.col("q0"))
+                / F.sum(F.col("p0") * F.col("q0"))
+            ).alias("idx_raw"),
+        )
+        .select(
+            F.col("y").alias("ship_year"),
+            "n_common_parts",
+            rnd("idx_raw", 6).alias("laspeyres_index"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# value-at-risk / conditional VaR of daily revenue changes
+# --------------------------------------------------------------------------
+
+#: VaR confidence level (share of days the loss should NOT exceed VaR).
+VAR_LEVEL = 0.95
+
+
+_VAR_ORACLE = f"""
+WITH daily AS (
+  SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
+         sum(CAST(value AS DECIMAL(14,2))) AS rev
+  FROM events WHERE event_type = 'purchase' GROUP BY 1
+),
+diffs AS (
+  SELECT chg FROM (
+    SELECT CAST(rev - lag(rev) OVER (ORDER BY day) AS DOUBLE) AS chg
+    FROM daily
+  ) WHERE chg IS NOT NULL
+),
+ranked AS (
+  SELECT chg, row_number() OVER (ORDER BY chg) AS rn, count(*) OVER () AS n
+  FROM diffs
+),
+var_row AS (
+  SELECT chg AS var_raw, n FROM ranked
+  WHERE rn = greatest(1, CAST(ceil((1.0 - {VAR_LEVEL}) * n) AS BIGINT))
+),
+cvar AS (
+  SELECT avg(r.chg) AS cvar_raw, count(*) AS n_tail
+  FROM ranked r CROSS JOIN var_row v
+  WHERE r.chg <= v.var_raw
+)
+SELECT v.n AS n_days,
+       round({VAR_LEVEL} + 1e-6, 2) AS level,
+       round(v.var_raw + 1e-6, 2) AS var_daily_change,
+       round(c.cvar_raw + 1e-6, 2) AS cvar_daily_change,
+       c.n_tail
+FROM var_row v CROSS JOIN cvar c
+"""
+
+
+@register("value_at_risk", oracle=_VAR_ORACLE, tags=("prepared-r8",))
+def value_at_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """VALUE-AT-RISK of the daily purchase-revenue CHANGE: the
+    5th-percentile daily drop (discrete order statistic — the
+    cross-engine percentile discipline) and the conditional VaR (mean
+    of the drops at or beyond VaR) — the tail-risk pair that mean-and-
+    sigma monitoring cannot see (a fat lower tail hides inside a calm
+    sigma). One row, in revenue units.
+
+    Scale shape: the corpus reduces to one row per day, diffs are one
+    lag window over the bounded daily series, and the discrete
+    order-statistic pick is a rank-limited window."""
+    ev = load(spark, sf_dir, "events")
+    day = F.floor(F.col("ts").cast("double") / 86400).cast("long")
+    # round-12: daily revenue is an extensive money sum (whole corpus
+    # into ~a-month of days) — DECIMAL discipline; the day-over-day
+    # diff is exact decimal subtraction cast to double (exact below
+    # 2^53), so the order statistic ranks identical values in both
+    # engines at any scale
+    daily = (
+        ev.where(F.col("event_type") == "purchase")
+        .groupBy(day.alias("day"))
+        .agg(F.sum(F.col("value").cast("decimal(14,2)")).alias("rev"))
+    )
+    wd = Window.orderBy("day")
+    diffs = daily.select(
+        (F.col("rev") - F.lag("rev").over(wd)).cast("double").alias("chg")
+    ).where(F.col("chg").isNotNull())
+    wrank = Window.orderBy("chg")
+    wt = Window.partitionBy()
+    ranked = diffs.select(
+        "chg",
+        F.row_number().over(wrank).alias("rn"),
+        F.count("*").over(wt).alias("n"),
+    )
+    # discrete index: ceil((1 - level) * n) >= 1
+    idx = F.greatest(
+        F.lit(1), F.ceil((1.0 - VAR_LEVEL) * F.col("n"))
+    )
+    var_row = ranked.where(F.col("rn") == idx).select(
+        F.col("chg").alias("var_raw"), "n"
+    )
+    cvar = (
+        ranked.join(F.broadcast(var_row.select("var_raw")), how="cross")
+        .where(F.col("chg") <= F.col("var_raw"))
+        .agg(F.avg("chg").alias("cvar_raw"), F.count("*").alias("n_tail"))
+    )
+    return var_row.crossJoin(F.broadcast(cvar)).select(
+        F.col("n").alias("n_days"),
+        rnd(F.lit(VAR_LEVEL), 2).alias("level"),
+        rnd("var_raw", 2).alias("var_daily_change"),
+        rnd("cvar_raw", 2).alias("cvar_daily_change"),
+        "n_tail",
+    )
+
+
+# --------------------------------------------------------------------------
+# ABC / XYZ inventory classification grid
+# --------------------------------------------------------------------------
+
+ABC_P_A = 0.8  #: revenue-percentile floor for class A
+ABC_P_B = 0.5  #: revenue-percentile floor for class B
+XYZ_CV_X = 0.5  #: demand-CV ceiling for class X
+XYZ_CV_Y = 1.0  #: demand-CV ceiling for class Y
+
+
+_ABC_ORACLE = f"""
+WITH rev AS (
+  SELECT l_partkey,
+         CAST(sum(CAST(l_extendedprice AS DECIMAL(14,2))
+                  * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE)
+           AS rev
+  FROM lineitem GROUP BY 1
+),
+cuts AS (
+  SELECT quantile_cont(rev, {ABC_P_A}) AS cut_a,
+         quantile_cont(rev, {ABC_P_B}) AS cut_b
+  FROM rev
+),
+monthly AS (
+  SELECT l_partkey,
+         (CAST(floor(epoch(l_shipdate)) AS BIGINT) // 86400) // 30
+           AS month_idx,
+         sum(l_quantity) AS q
+  FROM lineitem GROUP BY 1, 2
+),
+dem AS (
+  SELECT l_partkey, count(*) AS n_months,
+         sum(q) AS sq, sum(q * q) AS sqq
+  FROM monthly GROUP BY 1
+),
+classed AS (
+  SELECT r.l_partkey, r.rev,
+         CASE WHEN r.rev >= c.cut_a THEN 'A'
+              WHEN r.rev >= c.cut_b THEN 'B' ELSE 'C' END AS class_abc,
+         CASE WHEN cv < {XYZ_CV_X} THEN 'X'
+              WHEN cv < {XYZ_CV_Y} THEN 'Y' ELSE 'Z' END AS class_xyz,
+         cv AS cv_u
+  FROM (
+    SELECT d.l_partkey, d.n_months, d.sq, d.sqq,
+           sqrt(greatest(CASE WHEN d.n_months > 1
+             THEN (d.sqq - d.n_months * (d.sq / d.n_months)
+                   * (d.sq / d.n_months)) / (d.n_months - 1)
+             ELSE 0.0 END, 0.0)) / (d.sq / d.n_months) AS cv
+    FROM dem d) x
+  JOIN rev r ON x.l_partkey = r.l_partkey
+  CROSS JOIN cuts c
+),
+tot AS (SELECT sum(rev) AS rev_total FROM classed)
+SELECT class_abc, class_xyz, count(*) AS n_parts,
+       round(sum(rev) / t.rev_total + {NUDGE}, 6) AS revenue_share,
+       round(avg(cv_u) + {NUDGE}, 6) AS avg_demand_cv
+FROM classed CROSS JOIN tot t
+GROUP BY class_abc, class_xyz, t.rev_total
+"""
+
+
+@register("abc_xyz_classification", oracle=_ABC_ORACLE, tags=("prepared-r10",))
+def abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ABC/XYZ CLASSIFICATION GRID: every part classed by revenue
+    (A/B/C — percentile-of-part-revenue cutpoints, the
+    bucket-granularity form that broadcasts two scalars instead of
+    running a cumulative-share sort over the full part catalog; the
+    deviation from textbook cumulative-ABC is deliberate and
+    documented here) crossed with demand variability (X/Y/Z —
+    coefficient of variation of MONTHLY shipped quantity), summarized
+    to the bounded class grid with part counts and revenue shares —
+    the standard inventory-policy segmentation. Part revenues are
+    EXACT decimal sums (round-13; the old 4-dp pre-round of a raw
+    double sum still let summation order move a revenue across a
+    class boundary at scale — the exact scale-4 decimal removes the
+    tie entirely). Monthly quantity sums are integer-valued, so the
+    CV side is exact without rounding.
+
+    Scale shape: two combinable per-part aggregates (revenue; monthly
+    demand then its moments), TWO broadcast percentile scalars, one
+    bounded-grid rollup. No ranking window at part cardinality."""
+    li = load(spark, sf_dir, "lineitem")
+    # round-13: per-part revenue — parts are FIXED dims, so per-group
+    # row count grows with the corpus (the q1/q6 cent-flip class, and
+    # the class boundary must not move with summation order). DECIMAL
+    # discipline: the scale-4 decimal sum is EXACT (no rounding or tie
+    # nudge needed at all) and its double cast is exactly representable
+    # orders past the 1000x rung, so cutpoints compare identical
+    # doubles in both engines.
+    rev = (
+        li.groupBy("l_partkey")
+        .agg(
+            F.sum(
+                F.col("l_extendedprice").cast("decimal(14,2)")
+                * (
+                    F.lit(1).cast("decimal(3,2)")
+                    - F.col("l_discount").cast("decimal(4,2)")
+                )
+            ).alias("rev_dec")
+        )
+        .select("l_partkey", F.col("rev_dec").cast("double").alias("rev"))
+    )
+    # distributed-exact percentile cutpoints (grouped_exact_percentiles):
+    # part revenues are ~all-distinct, so Spark's value-buffering exact
+    # ``percentile`` would grow its aggregation state with the part
+    # catalog — the class of state that killed the 30x-probe JVM on
+    # lineitem prices (PERF.md round-10/11)
+    from flink_cookbook_spark.functions.collections import (
+        grouped_exact_percentiles,
+    )
+
+    cuts = grouped_exact_percentiles(
+        rev, [], "rev", {"cut_a": ABC_P_A, "cut_b": ABC_P_B}
+    )
+    monthly = (
+        li.select(
+            "l_partkey",
+            (
+                F.floor(
+                    F.floor(F.col("l_shipdate").cast("double") / 86400)
+                    / 30
+                )
+            )
+            .cast("long")
+            .alias("month_idx"),
+            "l_quantity",
+        )
+        .groupBy("l_partkey", "month_idx")
+        .agg(F.sum("l_quantity").alias("q"))
+    )
+    dem = monthly.groupBy("l_partkey").agg(
+        F.count("*").alias("n_months"),
+        F.sum("q").alias("sq"),
+        F.sum(F.col("q") * F.col("q")).alias("sqq"),
+    )
+    n = F.col("n_months").cast("double")
+    mean_q = F.col("sq") / n
+    var_q = F.when(
+        F.col("n_months") > 1,
+        (F.col("sqq") - n * mean_q * mean_q) / (n - 1),
+    ).otherwise(F.lit(0.0))
+    cv = F.sqrt(F.greatest(var_q, F.lit(0.0))) / mean_q
+    classed = (
+        rev.join(dem, "l_partkey")
+        .crossJoin(F.broadcast(cuts))
+        .select(
+            "l_partkey",
+            "rev",
+            F.when(F.col("rev") >= F.col("cut_a"), F.lit("A"))
+            .when(F.col("rev") >= F.col("cut_b"), F.lit("B"))
+            .otherwise(F.lit("C"))
+            .alias("class_abc"),
+            F.when(cv < XYZ_CV_X, F.lit("X"))
+            .when(cv < XYZ_CV_Y, F.lit("Y"))
+            .otherwise(F.lit("Z"))
+            .alias("class_xyz"),
+            cv.alias("cv_u"),
+        )
+    )
+    tot = classed.agg(F.sum("rev").alias("rev_total"))
+    return (
+        classed.groupBy("class_abc", "class_xyz")
+        .agg(
+            F.count("*").alias("n_parts"),
+            F.sum("rev").alias("rev_sum"),
+            F.avg("cv_u").alias("cv_avg"),
+        )
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "class_abc",
+            "class_xyz",
+            "n_parts",
+            rnd(F.col("rev_sum") / F.col("rev_total"), 6).alias(
+                "revenue_share"
+            ),
+            rnd("cv_avg", 6).alias("avg_demand_cv"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# order-to-ship lead-time profile
+# --------------------------------------------------------------------------
+
+LATE_DAYS = 90  #: lead-time SLA bound (days)
+
+
+_LEAD_ORACLE = f"""
+WITH j AS (
+  SELECT o.o_orderpriority,
+         (CAST(floor(epoch(l.l_shipdate)) AS BIGINT) // 86400)
+         - (CAST(floor(epoch(o.o_orderdate)) AS BIGINT) // 86400)
+           AS lead_days
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+)
+SELECT o_orderpriority, count(*) AS n_lines,
+       round(avg(lead_days) + {NUDGE}, 4) AS mean_lead_days,
+       round(quantile_cont(lead_days, 0.5) + {NUDGE}, 4) AS p50,
+       round(quantile_cont(lead_days, 0.9) + {NUDGE}, 4) AS p90,
+       round(quantile_cont(lead_days, 0.99) + {NUDGE}, 4) AS p99,
+       round(sum(CASE WHEN lead_days > {LATE_DAYS} THEN 1.0
+                 ELSE 0.0 END) / count(*) + {NUDGE}, 6) AS late_share
+FROM j GROUP BY 1
+"""
+
+
+@register(
+    "ship_lead_time_profile",
+    oracle=_LEAD_ORACLE,
+    tags=("prepared-r10",),
+)
+def ship_lead_time_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ORDER-TO-SHIP LEAD TIME per order priority: exact p50/p90/p99,
+    mean, and the share of line items beyond the LATE_DAYS SLA — the
+    fulfillment-latency profile that `order_backlog_profile` (queue
+    depth) and `q4_order_priority` (late-commit counts in the
+    reference adaptation) don't give: the full latency DISTRIBUTION
+    conditioned on promised priority. Lead time is computed on
+    INTEGER epoch-day indexes, so every percentile interpolates
+    between exact integers identically in both engines.
+
+    Scale shape: one orderkey equi-join (fact-to-fact, AQE-planned),
+    then ONE combinable aggregate per priority (exact percentiles over
+    the priority-bounded groups)."""
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        F.floor(F.col("l_shipdate").cast("double") / 86400)
+        .cast("long")
+        .alias("ship_day"),
+    )
+    orders = load(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderpriority",
+        F.floor(F.col("o_orderdate").cast("double") / 86400)
+        .cast("long")
+        .alias("order_day"),
+    )
+    j = li.join(
+        orders, li.l_orderkey == orders.o_orderkey
+    ).select(
+        "o_orderpriority",
+        (F.col("ship_day") - F.col("order_day")).alias("lead_days"),
+    )
+    return j.groupBy("o_orderpriority").agg(
+        F.count("*").alias("n_lines"),
+        rnd(F.avg("lead_days"), 4).alias("mean_lead_days"),
+        rnd(F.expr("percentile(lead_days, 0.5)"), 4).alias("p50"),
+        rnd(F.expr("percentile(lead_days, 0.9)"), 4).alias("p90"),
+        rnd(F.expr("percentile(lead_days, 0.99)"), 4).alias("p99"),
+        rnd(
+            F.sum((F.col("lead_days") > LATE_DAYS).cast("double"))
+            / F.count("*"),
+            6,
+        ).alias("late_share"),
+    )
+
+
+# --------------------------------------------------------------------------
+# supplier concentration per part (sourcing risk)
+# --------------------------------------------------------------------------
+
+_SUPCON_ORACLE = f"""
+WITH ps AS (
+  SELECT l_partkey, l_suppkey, sum(l_quantity) AS q
+  FROM lineitem GROUP BY 1, 2
+),
+per_part AS (
+  SELECT l_partkey, count(*) AS n_suppliers,
+         sum(q) AS qt, sum(q * q) AS qsq
+  FROM ps GROUP BY 1
+),
+hhi AS (
+  SELECT l_partkey, n_suppliers, qsq / (qt * qt) AS hhi_u
+  FROM per_part
+),
+tot AS (
+  SELECT count(*) AS n_parts_total,
+         CAST(sum(CASE WHEN n_suppliers = 1 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_single
+  FROM hhi
+)
+SELECT h.n_suppliers, count(*) AS n_parts,
+       round(avg(h.hhi_u) + {NUDGE}, 6) AS avg_hhi,
+       round(CAST(t.n_single AS DOUBLE) / t.n_parts_total + {NUDGE}, 6)
+         AS single_source_share
+FROM hhi h CROSS JOIN tot t
+GROUP BY h.n_suppliers, t.n_single, t.n_parts_total
+"""
+
+
+@register(
+    "supplier_concentration_by_part",
+    oracle=_SUPCON_ORACLE,
+    tags=("prepared-r10",),
+)
+def supplier_concentration_by_part(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """SOURCING-RISK PROFILE: per part, the supplier count and the HHI
+    of quantity share across its suppliers, summarized by supplier-
+    count bucket with the single-source share riding along — the
+    supply-chain mirror of `source_concentration_hhi` (which scores
+    the document corpus): how much of the catalog depends on one
+    supplier? Quantity sums are integer-valued doubles, so the HHI is
+    exact without rounding tricks.
+
+    Scale shape: one (part, supplier) combinable aggregate, one
+    per-part rollup, one bounded bucket rollup — three shuffles total,
+    all on shrinking keys."""
+    li = load(spark, sf_dir, "lineitem")
+    ps = li.groupBy("l_partkey", "l_suppkey").agg(
+        F.sum("l_quantity").alias("q")
+    )
+    per_part = ps.groupBy("l_partkey").agg(
+        F.count("*").alias("n_suppliers"),
+        F.sum("q").alias("qt"),
+        F.sum(F.col("q") * F.col("q")).alias("qsq"),
+    )
+    hhi = per_part.select(
+        "l_partkey",
+        "n_suppliers",
+        (F.col("qsq") / (F.col("qt") * F.col("qt"))).alias("hhi_u"),
+    )
+    tot = hhi.agg(
+        F.count("*").alias("n_parts_total"),
+        F.sum((F.col("n_suppliers") == 1).cast("long")).alias("n_single"),
+    )
+    return (
+        hhi.groupBy("n_suppliers")
+        .agg(F.count("*").alias("n_parts"), F.avg("hhi_u").alias("hhi_avg"))
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "n_suppliers",
+            "n_parts",
+            rnd("hhi_avg", 6).alias("avg_hhi"),
+            rnd(
+                F.col("n_single").cast("double") / F.col("n_parts_total"),
+                6,
+            ).alias("single_source_share"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# unit-price dispersion audit
+# --------------------------------------------------------------------------
+
+UPD_CV_FLAG = 0.25  #: dispersion flag threshold on the ROUNDED CV
+
+
+_UPD_ORACLE = f"""
+WITH up AS (
+  SELECT l_partkey, l_extendedprice / l_quantity AS u FROM lineitem
+),
+g AS (
+  SELECT l_partkey, count(*) AS n_lines,
+         sum(u) AS su, sum(u * u) AS suu
+  FROM up GROUP BY 1
+),
+eff AS (
+  SELECT l_partkey, n_lines,
+         round(su / n_lines + {NUDGE}, 4) AS mean_unit_price,
+         round(sqrt(CASE WHEN n_lines > 1
+                    THEN greatest((suu - n_lines * (su / n_lines)
+                                   * (su / n_lines)) / (n_lines - 1), 0.0)
+                    ELSE 0.0 END) / (su / n_lines) + {NUDGE}, 6)
+           AS price_cv
+  FROM g
+)
+SELECT *, price_cv > {UPD_CV_FLAG} AS dispersed FROM eff
+"""
+
+
+@register("unit_price_dispersion", oracle=_UPD_ORACLE, tags=("prepared-r10",))
+def unit_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UNIT-PRICE DISPERSION per part: coefficient of variation of the
+    realized unit price (extendedprice/quantity) across a part's line
+    items — the pricing-integrity audit behind "is this part sold at
+    wildly inconsistent prices" (a data-quality smell or a
+    discounting-policy breach; `expectation_checks` validates schema
+    ranges, this validates pricing CONSISTENCY). The flag reads the
+    ROUNDED CV, per the cohort discipline.
+
+    Scale shape: one map-only unit-price projection + ONE combinable
+    per-part moment aggregate — a single shuffle on the part key."""
+    li = load(spark, sf_dir, "lineitem")
+    up = li.select(
+        "l_partkey",
+        (F.col("l_extendedprice") / F.col("l_quantity")).alias("u"),
+    )
+    g = up.groupBy("l_partkey").agg(
+        F.count("*").alias("n_lines"),
+        F.sum("u").alias("su"),
+        F.sum(F.col("u") * F.col("u")).alias("suu"),
+    )
+    n = F.col("n_lines").cast("double")
+    mean_u = F.col("su") / n
+    var_u = F.when(
+        F.col("n_lines") > 1,
+        F.greatest(
+            (F.col("suu") - n * mean_u * mean_u) / (n - 1), F.lit(0.0)
+        ),
+    ).otherwise(F.lit(0.0))
+    cv_r = rnd(F.sqrt(var_u) / mean_u, 6)
+    return g.select(
+        "l_partkey",
+        "n_lines",
+        rnd(mean_u, 4).alias("mean_unit_price"),
+        cv_r.alias("price_cv"),
+        (cv_r > UPD_CV_FLAG).alias("dispersed"),
+    )

@@ -662,3 +662,320 @@ GROUP BY c_mktsegment, quartile
 """,
     tags=("window", "ntile", "banding"),
 )(ntile_segment_quartiles)
+
+
+# --------------------------------------------------------------------------
+# session-gap threshold calibration
+# --------------------------------------------------------------------------
+
+#: candidate inactivity gaps (seconds) swept by the calibration.
+SESSION_GAP_CANDIDATES = (300, 600, 900, 1800, 3600)
+
+
+_SESSION_GAP_ORACLE = f"""
+WITH g AS (
+  SELECT user_id,
+         epoch(ts) - lag(epoch(ts)) OVER (PARTITION BY user_id ORDER BY ts) AS gap
+  FROM events
+),
+base AS (
+  SELECT count(*) AS n_events, count(DISTINCT user_id) AS n_users FROM g
+),
+th AS (SELECT unnest([{", ".join(str(g) for g in SESSION_GAP_CANDIDATES)}]) AS gap_threshold_s)
+SELECT th.gap_threshold_s,
+       CAST(coalesce(sum(CASE WHEN g.gap > th.gap_threshold_s THEN 1 ELSE 0 END), 0)
+            AS BIGINT) AS n_breaks,
+       CAST(coalesce(sum(CASE WHEN g.gap > th.gap_threshold_s THEN 1 ELSE 0 END), 0)
+            + max(b.n_users) AS BIGINT) AS n_sessions,
+       round(max(b.n_events) * 1.0
+             / greatest(coalesce(sum(CASE WHEN g.gap > th.gap_threshold_s
+                                          THEN 1 ELSE 0 END), 0) + max(b.n_users), 1)
+             + 1e-6, 4) AS avg_session_events
+FROM th CROSS JOIN base b LEFT JOIN g ON true
+GROUP BY th.gap_threshold_s
+"""
+
+
+@register(
+    "session_gap_calibration",
+    oracle=_SESSION_GAP_ORACLE,
+    tags=("prepared-r8",),
+)
+def session_gap_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SESSIONIZATION GAP CALIBRATION (the session sibling of
+    ``similarity_threshold_curve``): sweep candidate inactivity
+    thresholds over the per-user inter-event gap distribution and
+    report, per candidate, how many session breaks it would cut and the
+    resulting session count / mean session length — the elbow picks the
+    production gap (the fixed 30-min default is a guess until this
+    table exists). One keyed window pass computes every gap; the sweep
+    is conditional aggregation (one combinable row, then an explode),
+    so all candidates always emit."""
+    ev = load(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts")
+    t = F.col("ts").cast("double")
+    gaps = ev.select(
+        "user_id",
+        (t - F.lag(t).over(w)).alias("gap"),
+    )
+    base = gaps.agg(
+        F.count("*").alias("n_events"),
+        F.count_distinct("user_id").alias("n_users"),
+        *[
+            F.coalesce(
+                F.sum((F.col("gap") > F.lit(float(g))).cast("long")), F.lit(0)
+            ).alias(f"b{i}")
+            for i, g in enumerate(SESSION_GAP_CANDIDATES)
+        ],
+    )
+    swept = base.select(
+        "n_events",
+        "n_users",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(g).alias("g"), F.col(f"b{i}").alias("nb")
+                    )
+                    for i, g in enumerate(SESSION_GAP_CANDIDATES)
+                ]
+            )
+        ).alias("s"),
+    )
+    n_sessions = F.col("s.nb") + F.col("n_users")
+    return swept.select(
+        F.col("s.g").alias("gap_threshold_s"),
+        F.col("s.nb").alias("n_breaks"),
+        n_sessions.alias("n_sessions"),
+        rnd(
+            F.col("n_events") / F.greatest(n_sessions, F.lit(1)).cast("double"), 4
+        ).alias("avg_session_events"),
+    )
+
+
+# --------------------------------------------------------------------------
+# cohort LTV accumulation curve
+# --------------------------------------------------------------------------
+
+_LTV_ORACLE = """
+WITH first_seen AS (
+  SELECT user_id,
+         min(CAST(floor(epoch(ts) / 604800) AS BIGINT)) AS cohort_wk
+  FROM events GROUP BY user_id
+),
+sizes AS (
+  SELECT cohort_wk, count(*) AS n_users FROM first_seen GROUP BY cohort_wk
+),
+purchases AS (
+  SELECT f.cohort_wk,
+         CAST(floor(epoch(e.ts) / 604800) AS BIGINT) - f.cohort_wk AS age_wk,
+         sum(CAST(e.value AS DECIMAL(14,2))) AS rev
+  FROM events e JOIN first_seen f ON e.user_id = f.user_id
+  WHERE e.event_type = 'purchase'
+  GROUP BY 1, 2
+)
+SELECT p.cohort_wk, p.age_wk, s.n_users,
+       round(CAST(p.rev AS DOUBLE) + 1e-6, 2) AS revenue,
+       round(CAST(sum(p.rev) OVER (PARTITION BY p.cohort_wk
+                                   ORDER BY p.age_wk
+                                   ROWS UNBOUNDED PRECEDING) AS DOUBLE)
+             / s.n_users + 1e-6, 4) AS cum_ltv_per_user
+FROM purchases p JOIN sizes s ON p.cohort_wk = s.cohort_wk
+"""
+
+
+@register("cohort_ltv_curve", oracle=_LTV_ORACLE, tags=("prepared-r8",))
+def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """COHORT LTV CURVE: users grouped by first-seen week, purchase
+    revenue accumulated per cohort age (weeks since first seen), and
+    cumulative revenue-per-cohort-member — the table whose flattening
+    point answers "when has a cohort paid back its acquisition cost?".
+    The revenue companion of ``cohort_retention`` (presence there,
+    value here).
+
+    Scale shape: first-seen week is one keyed aggregate over users;
+    the curve is a (cohort, age) hash agg joined to the bounded cohort-
+    size table, with the cumulative sum a window over the bounded
+    (cohort x age) grid."""
+    ev = load(spark, sf_dir, "events")
+    wk = (F.floor(F.col("ts").cast("double") / 604800)).cast("long")
+    first = ev.groupBy("user_id").agg(F.min(wk).alias("cohort_wk"))
+    sizes = first.groupBy("cohort_wk").agg(F.count("*").alias("n_users"))
+    # round-12: the per-cell revenue is a money sum whose cell row count
+    # grows with the corpus — DECIMAL discipline (operators/tpch.py), so
+    # the sum (and the cumulative window over it) is exact and
+    # engine-identical at any scale; the cast back to double is correctly
+    # rounded well below the 2^53 boundary (probe_decimal53.py).
+    # round-13: widened 12,2 -> 14,2 to match the package-wide money
+    # width — on per-value overflow Spark (non-ANSI) yields NULL while
+    # DuckDB errors, so a narrower width makes the engines fail
+    # DIFFERENTLY at extreme values; one width keeps failure modes
+    # aligned. Values are unchanged (no overflow at either width).
+    purchases = (
+        ev.where(F.col("event_type") == "purchase")
+        .select("user_id", wk.alias("wk"), "value")
+        .join(first, "user_id")
+        .groupBy("cohort_wk", (F.col("wk") - F.col("cohort_wk")).alias("age_wk"))
+        .agg(F.sum(F.col("value").cast("decimal(14,2)")).alias("rev"))
+    )
+    wcum = (
+        Window.partitionBy("cohort_wk")
+        .orderBy("age_wk")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return purchases.join(sizes, "cohort_wk").select(
+        "cohort_wk",
+        "age_wk",
+        "n_users",
+        rnd(F.col("rev").cast("double"), 2).alias("revenue"),
+        rnd(
+            F.sum("rev").over(wcum).cast("double") / F.col("n_users"), 4
+        ).alias("cum_ltv_per_user"),
+    )
+
+
+# --------------------------------------------------------------------------
+# concurrent-sessions profile (sweep line, per-day partitioned)
+# --------------------------------------------------------------------------
+
+#: session inactivity gap (seconds), matching the sessionize operator.
+CONC_GAP_S = 1800
+
+
+_CONC_ORACLE = f"""
+WITH marked AS (
+  SELECT user_id, epoch(ts) AS t,
+         CASE WHEN lag(epoch(ts)) OVER w IS NULL
+                   OR epoch(ts) - lag(epoch(ts)) OVER w > {CONC_GAP_S}
+              THEN 1 ELSE 0 END AS new_s
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+),
+sess AS (
+  SELECT user_id, sid, min(t) AS s_start, max(t) AS s_end
+  FROM (
+    SELECT user_id, t,
+           sum(new_s) OVER (PARTITION BY user_id ORDER BY t
+                            ROWS UNBOUNDED PRECEDING) AS sid
+    FROM marked
+  ) GROUP BY 1, 2
+),
+deltas AS (
+  SELECT s_start AS t, 1 AS d, CAST(floor(s_start / 86400) AS BIGINT) AS day
+  FROM sess
+  UNION ALL
+  SELECT s_end, -1, CAST(floor(s_end / 86400) AS BIGINT) FROM sess
+),
+day_sum AS (
+  SELECT day, CAST(sum(d) AS BIGINT) AS dsum FROM deltas GROUP BY day
+),
+base AS (
+  SELECT day,
+         COALESCE(sum(dsum) OVER (ORDER BY day
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           AS carry_in
+  FROM day_sum
+),
+running AS (
+  SELECT d.day, d.t,
+         b.carry_in + sum(d.d) OVER (PARTITION BY d.day ORDER BY d.t, d.d DESC
+                                     ROWS UNBOUNDED PRECEDING) AS conc
+  FROM deltas d JOIN base b ON d.day = b.day
+)
+SELECT r.day,
+       CAST(greatest(r.conc, b.carry_in) AS BIGINT) AS peak_concurrent,
+       CASE WHEN r.conc >= b.carry_in
+            THEN CAST(floor((r.t % 86400) / 3600) AS INTEGER)
+            ELSE 0 END AS peak_hour_utc
+FROM (
+  SELECT *, row_number() OVER (PARTITION BY day
+                               ORDER BY conc DESC, t ASC) AS rk
+  FROM running
+) r JOIN base b ON r.day = b.day
+WHERE r.rk = 1
+"""
+
+
+@register(
+    "concurrent_sessions_profile",
+    oracle=_CONC_ORACLE,
+    tags=("prepared-r8",),
+)
+def concurrent_sessions_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PEAK CONCURRENT SESSIONS per day via the classic sweep line:
+    sessionize each user's events (gap > ``CONC_GAP_S`` starts a new
+    session), emit +1/-1 deltas at session starts/ends (STARTS first
+    on ties, so instantaneous single-event sessions still count and
+    two sessions touching at an instant read as concurrent — the
+    closed-interval convention), and report each day's
+    peak and the time it occurred — the capacity-planning number
+    behind connection pools and state-store sizing.
+
+    Scale shape: the sweep is inherently sequential, so it is
+    PARTITIONED BY DAY with a carried-in baseline: per-day delta sums
+    cumulate over the bounded day spine (one tiny window), and each
+    day's in-day running sum adds its carried baseline — N parallel
+    bounded sorts instead of one global single-task sort (the
+    ``streaming/twins.py`` watermark discipline applied to interval
+    concurrency)."""
+    ev = load(spark, sf_dir, "events")
+    sec = F.col("ts").cast("double")
+    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    marked = ev.select(
+        "user_id",
+        sec.alias("t"),
+        (
+            F.lag(sec).over(wu).isNull()
+            | ((sec - F.lag(sec).over(wu)) > CONC_GAP_S)
+        ).cast("int").alias("new_s"),
+    )
+    sess = marked.select(
+        "user_id", "t", F.sum("new_s").over(
+            Window.partitionBy("user_id").orderBy("t").rowsBetween(
+                Window.unboundedPreceding, 0
+            )
+        ).alias("sid"),
+    ).groupBy("user_id", "sid").agg(
+        F.min("t").alias("s_start"), F.max("t").alias("s_end")
+    )
+    deltas = sess.select(
+        F.col("s_start").alias("t"), F.lit(1).alias("d")
+    ).unionAll(
+        sess.select(F.col("s_end").alias("t"), F.lit(-1).alias("d"))
+    ).withColumn("day", F.floor(F.col("t") / 86400).cast("long"))
+    day_sum = deltas.groupBy("day").agg(F.sum("d").alias("dsum"))
+    wdays = Window.orderBy("day").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    base = day_sum.select(
+        "day",
+        F.coalesce(F.sum("dsum").over(wdays), F.lit(0)).alias("carry_in"),
+    )
+    win_day = Window.partitionBy("day").orderBy(
+        "t", F.col("d").desc()
+    ).rowsBetween(Window.unboundedPreceding, 0)
+    running = deltas.join(base, "day").select(
+        "day",
+        "t",
+        (F.col("carry_in") + F.sum("d").over(win_day)).alias("conc"),
+    )
+    wpick = Window.partitionBy("day").orderBy(
+        F.col("conc").desc(), F.col("t").asc()
+    )
+    best = (
+        running.withColumn("rk", F.row_number().over(wpick))
+        .where(F.col("rk") == 1)
+        .join(base, "day")
+    )
+    # a day whose first delta is an END carries its true peak in from
+    # midnight: the open-session baseline is a candidate peak at hour 0
+    at_run = F.col("conc") >= F.col("carry_in")
+    return best.select(
+        "day",
+        F.greatest(F.col("conc"), F.col("carry_in")).cast("long").alias(
+            "peak_concurrent"
+        ),
+        F.when(
+            at_run, F.floor((F.col("t") % 86400) / 3600).cast("int")
+        ).otherwise(F.lit(0)).alias("peak_hour_utc"),
+    )

@@ -962,3 +962,212 @@ GROUP BY g.doc_id
 """,
     tags=("curation", "llm-pipeline", "novelty", "dedup"),
 )(doc_novelty_score)
+
+
+# --------------------------------------------------------------------------
+# sequence-packing efficiency sweep
+# --------------------------------------------------------------------------
+
+#: candidate max sequence lengths for the packing decision table.
+PACKING_LENGTHS = (512, 1024, 2048, 4096)
+
+
+_PACKING_ORACLE = f"""
+WITH scored AS (
+  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+  FROM documents
+),
+lens AS (SELECT unnest([{", ".join(str(l) for l in PACKING_LENGTHS)}]) AS max_len),
+per AS (
+  SELECT max_len, count(*) AS n_docs,
+         CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+         CAST(sum((n_tokens + max_len - 1) // max_len) AS BIGINT)
+           AS naive_seqs
+  FROM scored CROSS JOIN lens GROUP BY max_len
+)
+SELECT CAST(max_len AS BIGINT) AS max_len, n_docs, total_tokens, naive_seqs,
+       CAST((total_tokens + max_len - 1) // max_len AS BIGINT)
+         AS packed_lower_bound,
+       round(total_tokens / CAST(naive_seqs * max_len AS DOUBLE) + 1e-6, 6)
+         AS naive_utilization,
+       round(naive_seqs
+             / CAST((total_tokens + max_len - 1) // max_len AS DOUBLE)
+             + 1e-6, 4) AS max_compaction
+FROM per
+"""
+
+
+@register(
+    "packing_efficiency_report",
+    oracle=_PACKING_ORACLE,
+    tags=("prepared-r8",),
+)
+def packing_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Packing decision table: for each candidate max sequence length,
+    the naive sequence count (one padded sequence per document chunk,
+    Σ ceil(tokᵢ/L)), the bin-packing lower bound (ceil(Σtok/L)), the
+    naive padding utilization, and the maximum compaction a perfect
+    packer could reach — the numbers that choose L before running the
+    actual ``sequence_packing``.  Always-emits every candidate via a
+    4-row broadcast + conditional agg; integer ceil-div on both engines
+    so floats never touch the counts."""
+    docs = load(spark, sf_dir, "documents")
+    scored = docs.select(
+        F.size(F.split("text", " ")).cast("long").alias("n_tokens")
+    )
+    lens = spark.createDataFrame(
+        [(l,) for l in PACKING_LENGTHS], "max_len bigint"
+    )
+    per = (
+        scored.crossJoin(F.broadcast(lens))
+        .groupBy("max_len")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_tokens").alias("total_tokens"),
+            F.sum(
+                F.expr("(n_tokens + max_len - 1) div max_len")
+            ).alias("naive_seqs"),
+        )
+    )
+    lb = F.expr("(total_tokens + max_len - 1) div max_len")
+    return per.select(
+        "max_len", "n_docs", "total_tokens", "naive_seqs",
+        lb.alias("packed_lower_bound"),
+        rnd(
+            F.col("total_tokens")
+            / (F.col("naive_seqs") * F.col("max_len")).cast("double"),
+            6,
+        ).alias("naive_utilization"),
+        rnd(F.col("naive_seqs") / lb.cast("double"), 4).alias(
+            "max_compaction"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# differential-privacy noise calibration table
+# --------------------------------------------------------------------------
+
+#: epsilon grid for the calibration table.
+DP_EPSILONS = (0.1, 1.0, 10.0)
+
+
+def _dp_oracle() -> str:
+    evals = ", ".join(f"(CAST({float(e)!r} AS DOUBLE))" for e in DP_EPSILONS)
+    return f"""
+WITH counts AS (
+  SELECT event_type, count(*) AS n FROM events GROUP BY event_type
+),
+fanned AS (
+  SELECT c.event_type, c.n, t.epsilon
+  FROM counts c CROSS JOIN (VALUES {evals}) t(epsilon)
+)
+SELECT event_type, n,
+       round(epsilon + 1e-6, 2) AS epsilon,
+       round(1.0 / epsilon + 1e-6, 4) AS laplace_scale,
+       round(1.0 / epsilon / n + 1e-6, 6) AS expected_rel_error,
+       1.0 / epsilon / n < 0.01 AS usable_at_1pct
+FROM fanned
+"""
+
+
+@register("dp_noise_calibration", oracle=_dp_oracle(), tags=("prepared-r8",))
+def dp_noise_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DIFFERENTIAL-PRIVACY NOISE CALIBRATION for the per-event-type
+    count release: for each epsilon in ``DP_EPSILONS``, the Laplace
+    scale (sensitivity 1 / epsilon), the expected absolute noise
+    (= the scale, for Laplace), and the expected RELATIVE error
+    against each type's actual count — the governance table that says
+    which epsilon budgets keep which aggregates usable BEFORE any
+    noisy release. Purely analytic: no noise is sampled, so the
+    operator is deterministic and oracle-checkable.
+
+    Scale shape: one hash agg to the released-statistic grain, fanned
+    over the constant epsilon grid."""
+    ev = load(spark, sf_dir, "events")
+    counts = ev.groupBy("event_type").agg(F.count("*").alias("n"))
+    fanned = counts.select(
+        "event_type",
+        "n",
+        F.explode(
+            F.array(*[F.lit(float(e)) for e in DP_EPSILONS])
+        ).alias("epsilon"),
+    )
+    scale = 1.0 / F.col("epsilon")
+    return fanned.select(
+        "event_type",
+        "n",
+        rnd("epsilon", 2).alias("epsilon"),
+        rnd(scale, 4).alias("laplace_scale"),
+        rnd(scale / F.col("n"), 6).alias("expected_rel_error"),
+        (scale / F.col("n") < 0.01).alias("usable_at_1pct"),
+    )
+
+
+# --------------------------------------------------------------------------
+# k-anonymity report over quasi-identifiers
+# --------------------------------------------------------------------------
+
+#: groups smaller than this are re-identification risks.
+K_ANON = 5
+
+
+_KANON_ORACLE = f"""
+WITH bucketed AS (
+  SELECT lang, source,
+         ntile(4) OVER (ORDER BY n_chars, doc_id) AS len_quartile
+  FROM documents
+),
+classes AS (
+  SELECT lang, source, len_quartile, count(*) AS class_size
+  FROM bucketed GROUP BY 1, 2, 3
+)
+SELECT lang, source, CAST(len_quartile AS INTEGER) AS len_quartile,
+       class_size,
+       class_size >= {K_ANON} AS k_anonymous,
+       round(CAST(sum(CASE WHEN class_size < {K_ANON} THEN class_size
+                           ELSE 0 END) OVER () AS DOUBLE)
+             / sum(class_size) OVER () + 1e-6, 6) AS sub_k_doc_share,
+       CAST(min(class_size) OVER () AS BIGINT) AS min_class_size
+FROM classes
+"""
+
+
+@register("k_anonymity_report", oracle=_KANON_ORACLE, tags=("prepared-r8",))
+def k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """K-ANONYMITY AUDIT over the documents quasi-identifier tuple
+    (lang, source, length quartile): per equivalence class its size,
+    whether it meets k=``K_ANON``, and — constant columns — the share
+    of DOCUMENTS living in sub-k classes and the minimum class size,
+    i.e. exactly the numbers a release review asks for before
+    publishing "anonymized" metadata. Length is bucketed to its
+    quartile (discrete boundaries via ntile — identical on both
+    engines) because raw lengths are themselves identifying.
+
+    Scale shape: one ntile window for the length bucket, one hash agg
+    to equivalence classes, windows over the bounded class table."""
+    from pyspark.sql import Window as W
+
+    docs = load(spark, sf_dir, "documents")
+    q = F.ntile(4).over(W.orderBy("n_chars", "doc_id"))
+    bucketed = docs.select("lang", "source", q.alias("len_quartile"))
+    classes = bucketed.groupBy("lang", "source", "len_quartile").agg(
+        F.count("*").alias("class_size")
+    )
+    wt = W.partitionBy()
+    return classes.select(
+        "lang",
+        "source",
+        "len_quartile",
+        "class_size",
+        (F.col("class_size") >= K_ANON).alias("k_anonymous"),
+        rnd(
+            F.sum(
+                F.when(F.col("class_size") < K_ANON, F.col("class_size"))
+                .otherwise(0)
+            ).over(wt)
+            / F.sum("class_size").over(wt),
+            6,
+        ).alias("sub_k_doc_share"),
+        F.min("class_size").over(wt).alias("min_class_size"),
+    )

@@ -516,3 +516,59 @@ FROM frames WHERE frame_no % 4 = 0
 """,
     tags=("multimodal", "llm-pipeline"),
 )(frame_sample)
+
+
+# --------------------------------------------------------------------------
+# audio feature extraction (real vendored WAV decode)
+# --------------------------------------------------------------------------
+
+def _audio_oracle() -> str:
+    return f"""
+WITH a AS (
+  SELECT doc_id, 64 + doc_id % 128 AS n,
+         [(doc_id * 37 + i * 251) % 2003 - 1001
+          for i in range(0, 64 + doc_id % 128)] AS s
+  FROM documents WHERE doc_id % {WAV_EVERY} = 0
+),
+m AS (
+  SELECT doc_id, n,
+         list_sum([abs(x) for x in s]) AS sum_abs,
+         list_max([abs(x) for x in s]) AS peak,
+         list_sum([x * x for x in s]) AS sq,
+         len([i for i in range(2, n + 1)
+              if (s[i - 1] < 0) <> (s[i] < 0)]) AS zc
+  FROM a
+)
+SELECT doc_id,
+       CAST(n AS INTEGER) AS n_samples,
+       {WAV_RATE} AS sample_rate,
+       round(n / {WAV_RATE}.0 + 1e-6, 6) AS duration_s,
+       round(sum_abs * 1.0 / n + 1e-6, 4) AS mean_amp,
+       CAST(peak AS INTEGER) AS peak_amp,
+       round(sqrt(sq * 1.0 / n) + 1e-6, 4) AS rms,
+       CAST(zc AS INTEGER) AS zero_crossings
+FROM m
+"""
+
+
+@register("audio_features", oracle=_audio_oracle(), tags=("prepared-r8",))
+def audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Waveform statistics over binary WAV payloads — duration, mean/
+    peak amplitude, RMS, zero-crossing count — through the REAL vendored
+    RIFF/PCM parser (pipeline/multimodal.py: encode_wav/decode_wav),
+    the audio row of the multimodal matrix next to the BMP image path.
+    The fixture synthesizes deterministic int16 PCM per audio doc
+    (``wav_sample`` is a pure function of (doc_id, i)), so the DuckDB
+    oracle recomputes the decoded waveform in closed form and the hash
+    check verifies the container parse end-to-end.  Two Arrow-batched
+    mapInPandas stages; work is repartitioned by doc_id so decode
+    spreads evenly at any corpus size."""
+    feats = audio_features_df(spark, sf_dir)
+    return feats.select(
+        "doc_id", "n_samples", "sample_rate",
+        rnd("duration_s", 6).alias("duration_s"),
+        rnd("mean_amp", 4).alias("mean_amp"),
+        "peak_amp",
+        rnd("rms", 4).alias("rms"),
+        "zero_crossings",
+    )

@@ -292,3 +292,77 @@ FROM dcg JOIN idcg ON dcg.token = idcg.token
 """,
     tags=("retrieval", "llm-pipeline"),
 )(retrieval_ndcg_mrr)
+
+
+# --------------------------------------------------------------------------
+# precision / recall / F1 at k for the BM25 ranking
+# --------------------------------------------------------------------------
+
+def _pr_oracle() -> str:
+    return (
+        _BM25_CTES
+        + f"""
+, per AS (
+  SELECT token,
+         CAST(sum(CASE WHEN tf >= {REL_TF} THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_rel_total,
+         CAST(sum(CASE WHEN rank <= {TOP_K} AND tf >= {REL_TF}
+                       THEN 1 ELSE 0 END) AS BIGINT) AS n_rel_topk
+  FROM ranked GROUP BY token
+),
+calc AS (
+  SELECT *,
+         CAST(n_rel_topk AS DOUBLE) / {TOP_K} AS p,
+         CAST(n_rel_topk AS DOUBLE) / greatest(n_rel_total, 1) AS r
+  FROM per
+)
+SELECT token, n_rel_total, n_rel_topk,
+       round(p + {NUDGE}, 6) AS precision_at_k,
+       round(r + {NUDGE}, 6) AS recall_at_k,
+       round(CASE WHEN p + r > 0 THEN 2.0 * p * r / (p + r)
+                  ELSE 0.0 END + {NUDGE}, 6) AS f1_at_k
+FROM calc
+"""
+    )
+
+
+@register(
+    "retrieval_precision_recall_at_k",
+    oracle=_pr_oracle(),
+    tags=("prepared-r10",),
+)
+def retrieval_precision_recall_at_k(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """P@k / R@k / F1 for the BM25 ranking against the same binary
+    relevance bar as MRR (tf >= REL_TF) — the set-based IR metrics
+    next to ``retrieval_ndcg_mrr``'s rank-weighted ones: precision says
+    how clean the page is, recall how much of the relevant pool it
+    found, and the denominator of recall is the query's FULL relevant
+    count over all postings, not just the retrieved ones.
+
+    Scale shape: rides the shared BM25 scored-postings derivation
+    (broadcast bounded query set, inverted-postings equi-join,
+    per-token windows over that token's postings only); the metric
+    aggregation is one grouped pass over the scored postings."""
+    scored = _scored(spark, sf_dir)
+    rel = (F.col("tf") >= REL_TF).cast("int")
+    per = scored.groupBy("token").agg(
+        F.sum(rel).cast("long").alias("n_rel_total"),
+        F.sum(F.when(F.col("rank") <= TOP_K, rel).otherwise(F.lit(0)))
+        .cast("long")
+        .alias("n_rel_topk"),
+    )
+    p = F.col("n_rel_topk").cast("double") / TOP_K
+    r = F.col("n_rel_topk").cast("double") / F.greatest(
+        F.col("n_rel_total"), F.lit(1)
+    ).cast("double")
+    f1 = F.when(p + r > 0, 2.0 * p * r / (p + r)).otherwise(F.lit(0.0))
+    return per.select(
+        "token",
+        "n_rel_total",
+        "n_rel_topk",
+        rnd(p, 6).alias("precision_at_k"),
+        rnd(r, 6).alias("recall_at_k"),
+        rnd(f1, 6).alias("f1_at_k"),
+    )

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import register, rnd
+from flink_cookbook_spark.registry import NUDGE, register, rnd
 
 N_QUERIES = 5  # queries are vec_id < N_QUERIES
 TOP_K = 5
@@ -1527,3 +1527,1063 @@ register(
     oracle=_imi_oracle(),
     tags=("similarity", "llm-pipeline", "imi", "ann", "two-level"),
 )(imi_topk)
+
+
+# --------------------------------------------------------------------------
+# product-quantization reconstruction manifest (vector compression)
+# --------------------------------------------------------------------------
+
+def _pq_oracle() -> str:
+    """Reuses the IMI oracle's unrolled double-Lloyd chains verbatim
+    (everything through the ``cells`` CTE; the probe CTEs ride along
+    unused — DuckDB permits unreferenced CTEs), then reconstructs each
+    vector as half-centroid concatenation and replays the MSE."""
+    full = _imi_oracle()
+    prefix = full[: full.index(",\ngrid AS")]
+    fin = KMEANS_ITERS
+    return (
+        prefix
+        + f""",
+recon AS (
+  SELECT cl.vec_id, cl.ca, cl.cb, cx.c || cy.c AS rv
+  FROM cells cl
+  JOIN cx{fin} cx ON cx.cid = cl.ca
+  JOIN cy{fin} cy ON cy.cid = cl.cb
+)
+SELECT r.vec_id, r.ca, r.cb,
+       round(list_sum(list_transform(range(1, {DIM + 1}),
+             i -> (e.v[i] - r.rv[i]) * (e.v[i] - r.rv[i]))) / {DIM} + 1e-6, 8)
+         AS mse
+FROM recon r JOIN e ON e.vec_id = r.vec_id
+"""
+    )
+
+
+@register(
+    "pq_reconstruction_manifest",
+    oracle=_pq_oracle(),
+    tags=("prepared-r8",),
+)
+def pq_reconstruction_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PRODUCT QUANTIZATION compression manifest: each vector's PQ code
+    is its pair of IMI half-cell ids (ca, cb) — log2(k'^2) bits instead
+    of 64 floats — and the stored reconstruction is the concatenation of
+    the two half-centroids. Emits per vector the code and the
+    reconstruction MSE, i.e. the quality ledger a compressed vector
+    store ships alongside its codes (the same role int8 scales play in
+    ``embedding_index_manifest``, at a far higher compression ratio).
+
+    Scale shape: reuses the memoized IMI index (training cost already
+    paid; assignment map-only); reconstruction + MSE are zero-shuffle
+    array math against the broadcast centroid row."""
+    cents, cells = _imi_cells(spark, sf_dir)
+    ca, cb = cents
+    cdf = _imi_broadcast_row(spark, ca, cb)
+    rec_a = F.element_at(
+        F.filter(F.col("ca_cents"), lambda c: c.cid == F.col("ca")), 1
+    ).getField("cemb")
+    rec_b = F.element_at(
+        F.filter(F.col("cb_cents"), lambda c: c.cid == F.col("cb")), 1
+    ).getField("cemb")
+    recon = F.concat(rec_a, rec_b)
+    mse = (
+        F.aggregate(
+            F.zip_with(F.col("emb"), recon, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        / F.lit(float(DIM))
+    )
+    return (
+        cells.crossJoin(F.broadcast(cdf))
+        .select("vec_id", "ca", "cb", rnd(mse, 8).alias("mse"))
+    )
+
+
+# --------------------------------------------------------------------------
+# embedding centroid drift (distribution shift in vector space)
+# --------------------------------------------------------------------------
+
+_CENTROID_DRIFT_ORACLE = f"""
+WITH e AS (
+  SELECT label, vec_id % 2 = 0 AS even,
+         CAST(embedding AS DOUBLE[]) AS v
+  FROM embeddings
+),
+per_dim AS (
+  SELECT label, g.i AS pos,
+         avg(CASE WHEN even THEN v[g.i] END) AS ma,
+         avg(CASE WHEN NOT even THEN v[g.i] END) AS mb
+  FROM e CROSS JOIN generate_series(1, 64) AS g(i)
+  GROUP BY 1, 2
+),
+counts AS (
+  SELECT label,
+         CAST(sum(CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_even,
+         CAST(sum(CASE WHEN vec_id % 2 != 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_odd
+  FROM embeddings GROUP BY label
+),
+drift AS (
+  SELECT label,
+         sqrt(sum((ma - mb) * (ma - mb))) AS l2_u,
+         max(abs(ma - mb)) AS maxdim_u
+  FROM per_dim GROUP BY label
+)
+SELECT d.label, c.n_even, c.n_odd,
+       round(d.l2_u + 1e-6, 6) AS l2_shift,
+       round(d.maxdim_u + 1e-6, 6) AS max_dim_shift
+FROM drift d JOIN counts c ON d.label = c.label
+"""
+
+
+@register(
+    "embedding_centroid_drift",
+    oracle=_CENTROID_DRIFT_ORACLE,
+    tags=("prepared-r8",),
+)
+def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EMBEDDING-SPACE DRIFT monitor: per label, the L2 shift between
+    the class centroid computed on the even-id half of the corpus and
+    the odd-id half — the vector-space analogue of ``psi_value_drift``
+    (a healthy static corpus shows near-zero shift; a changed encoder
+    or data mix moves centroids). One posexplode + ONE hash aggregate
+    with conditional means per (label, dim) — map-side combinable,
+    shuffle volume labels x dims regardless of corpus size (the
+    ``label_centroids`` shape) — then a labels-sized rollup."""
+    emb = load(spark, sf_dir, "embeddings").select(
+        "label",
+        (F.col("vec_id") % 2 == 0).alias("even"),
+        F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val"),
+    )
+    per_dim = emb.groupBy("label", "pos").agg(
+        F.avg(F.when(F.col("even"), F.col("val"))).alias("ma"),
+        F.avg(F.when(~F.col("even"), F.col("val"))).alias("mb"),
+    )
+    counts = (
+        load(spark, sf_dir, "embeddings")
+        .groupBy("label")
+        .agg(
+            F.sum((F.col("vec_id") % 2 == 0).cast("long")).alias("n_even"),
+            F.sum((F.col("vec_id") % 2 != 0).cast("long")).alias("n_odd"),
+        )
+    )
+    drift = per_dim.groupBy("label").agg(
+        F.sqrt(F.sum(F.pow(F.col("ma") - F.col("mb"), F.lit(2.0)))).alias("l2_u"),
+        F.max(F.abs(F.col("ma") - F.col("mb"))).alias("maxdim_u"),
+    )
+    return drift.join(counts, "label").select(
+        "label", "n_even", "n_odd",
+        rnd("l2_u", 6).alias("l2_shift"),
+        rnd("maxdim_u", 6).alias("max_dim_shift"),
+    )
+
+
+# --------------------------------------------------------------------------
+# contrastive pair mining (hard positives / hard negatives)
+# --------------------------------------------------------------------------
+
+#: sample cap: the pair join is sample^2, so the cap bounds it at ~65k
+#: pairs no matter the corpus size (the MAX_TRAIN_VECTORS pattern).
+CONTRAST_MAX_VECTORS = 256
+
+
+_CONTRASTIVE_ORACLE = f"""
+WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+m AS (SELECT greatest(1, count(*) // {CONTRAST_MAX_VECTORS}) AS md FROM e),
+s AS (
+  SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm
+  FROM e, m
+  WHERE CAST('0x' || substr(md5('contrast:' || CAST(vec_id AS VARCHAR)), 1, 15)
+             AS BIGINT) % m.md = 0
+),
+p AS (
+  SELECT a.vec_id AS aid, a.label AS al, b.vec_id AS bid, b.label AS bl,
+         list_dot_product(a.v, b.v) / (a.nrm * b.nrm) AS cos
+  FROM s a JOIN s b ON a.vec_id != b.vec_id
+),
+neg AS (
+  SELECT aid, bid, cos,
+         row_number() OVER (PARTITION BY aid ORDER BY cos DESC, bid ASC) AS rk
+  FROM p WHERE al != bl
+),
+pos AS (
+  SELECT aid, bid, cos,
+         row_number() OVER (PARTITION BY aid ORDER BY cos ASC, bid ASC) AS rk
+  FROM p WHERE al = bl
+)
+SELECT s.vec_id, s.label,
+       pos.bid AS hard_pos_id, round(pos.cos + 1e-6, 6) AS hard_pos_cos,
+       neg.bid AS hard_neg_id, round(neg.cos + 1e-6, 6) AS hard_neg_cos
+FROM s
+LEFT JOIN (SELECT * FROM pos WHERE rk = 1) pos ON pos.aid = s.vec_id
+LEFT JOIN (SELECT * FROM neg WHERE rk = 1) neg ON neg.aid = s.vec_id
+"""
+
+
+@register(
+    "contrastive_pair_mining",
+    oracle=_CONTRASTIVE_ORACLE,
+    tags=("prepared-r8",),
+)
+def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CONTRASTIVE PAIR MINING over a capped md5 hash-sample of the
+    labeled embedding corpus: per sampled anchor, the HARD POSITIVE
+    (same label, LOWEST cosine — the pair a metric-learning loss gains
+    most from pulling together) and the HARD NEGATIVE (different label,
+    HIGHEST cosine — the pair it must push apart). Anchors whose label
+    has no second sampled member emit NULL positives (both engines by
+    NULL propagation). The pair join is sample x sample with the small
+    side broadcast — bounded by CONTRAST_MAX_VECTORS^2 by construction,
+    never corpus^2 (the ``similarity_threshold_curve`` fix, applied from
+    birth); ranking is two bounded window passes with (cosine, vec_id)
+    tie-breaks, and per-vector norms are hoisted above the join."""
+    emb = _emb_double(load(spark, sf_dir, "embeddings"))
+    n = emb.count()
+    mod = max(1, n // CONTRAST_MAX_VECTORS)
+    coin = F.conv(
+        F.substring(
+            F.md5(F.concat(F.lit("contrast:"), F.col("vec_id").cast("string"))),
+            1, 15,
+        ), 16, 10,
+    ).cast("long")
+    s = emb.where(coin % mod == 0).select(
+        "vec_id", "label", "emb", _norm(F.col("emb")).alias("nrm")
+    )
+    a = s.select(
+        F.col("vec_id").alias("aid"), F.col("label").alias("al"),
+        F.col("emb").alias("av"), F.col("nrm").alias("an"),
+    )
+    b = s.select(
+        F.col("vec_id").alias("bid"), F.col("label").alias("bl"),
+        F.col("emb").alias("bv"), F.col("nrm").alias("bn"),
+    )
+    pairs = (
+        a.crossJoin(F.broadcast(b))
+        .where(F.col("aid") != F.col("bid"))
+        .select(
+            "aid", "al", "bid", "bl",
+            (_dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn"))).alias("cos"),
+        )
+    )
+    w_neg = Window.partitionBy("aid").orderBy(
+        F.col("cos").desc(), F.col("bid").asc()
+    )
+    w_pos = Window.partitionBy("aid").orderBy(
+        F.col("cos").asc(), F.col("bid").asc()
+    )
+    neg = (
+        pairs.where(F.col("al") != F.col("bl"))
+        .withColumn("rk", F.row_number().over(w_neg))
+        .where(F.col("rk") == 1)
+        .select("aid", F.col("bid").alias("hard_neg_id"),
+                rnd("cos", 6).alias("hard_neg_cos"))
+    )
+    pos = (
+        pairs.where(F.col("al") == F.col("bl"))
+        .withColumn("rk", F.row_number().over(w_pos))
+        .where(F.col("rk") == 1)
+        .select("aid", F.col("bid").alias("hard_pos_id"),
+                rnd("cos", 6).alias("hard_pos_cos"))
+    )
+    return (
+        s.select(F.col("vec_id"), F.col("label"))
+        .join(pos, F.col("vec_id") == pos.aid, "left").drop("aid")
+        .join(neg, F.col("vec_id") == neg.aid, "left").drop("aid")
+    )
+
+
+# --------------------------------------------------------------------------
+# kNN label consistency (embedding-space label agreement)
+# --------------------------------------------------------------------------
+
+#: sample cap and neighborhood size for the kNN label audit.
+KNN_MAX_VECTORS = 300
+KNN_K = 5
+
+
+_KNN_ORACLE = f"""
+WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+m AS (SELECT greatest(1, count(*) // {KNN_MAX_VECTORS}) AS md FROM e),
+s AS (
+  SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm
+  FROM e, m
+  WHERE CAST('0x' || substr(md5('knn:' || CAST(vec_id AS VARCHAR)), 1, 15)
+             AS BIGINT) % m.md = 0
+),
+p AS (
+  SELECT a.vec_id AS aid, a.label AS al, b.vec_id AS bid, b.label AS bl,
+         list_dot_product(a.v, b.v) / (a.nrm * b.nrm) AS cos
+  FROM s a JOIN s b ON a.vec_id != b.vec_id
+),
+knn AS (
+  SELECT aid, al, bl,
+         row_number() OVER (PARTITION BY aid ORDER BY cos DESC, bid ASC) AS rk
+  FROM p
+),
+per_vec AS (
+  SELECT aid, al,
+         avg(CASE WHEN al = bl THEN 1.0 ELSE 0.0 END) AS consistency
+  FROM knn WHERE rk <= {KNN_K} GROUP BY aid, al
+)
+SELECT al AS label, count(*) AS n_vectors,
+       round(avg(consistency) + 1e-6, 6) AS mean_consistency,
+       round(min(consistency) + 1e-6, 6) AS min_consistency
+FROM per_vec GROUP BY al
+"""
+
+
+@register("knn_label_consistency", oracle=_KNN_ORACLE, tags=("prepared-r8",))
+def knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label kNN label-consistency audit: on a capped md5 sample of
+    the embedding corpus, the fraction of each vector's K=5 cosine
+    nearest neighbors that share its label, aggregated per label — the
+    standard embedding-quality / label-noise metric run before trusting
+    labels for stratified sampling or contrastive mining.
+
+    Scale: the sample is CAPPED at KNN_MAX_VECTORS by construction
+    (``mod = max(1, n // cap)``, the IVF-trainer pattern), so the
+    broadcast-nested-loop pair space is ≤ cap² ≈ 90k rows at any corpus
+    size, and the per-anchor top-K is one bounded window."""
+    emb = load(spark, sf_dir, "embeddings")
+    n = emb.count()
+    mod = max(1, n // KNN_MAX_VECTORS)
+    coin = F.conv(
+        F.substring(F.md5(F.concat(F.lit("knn:"), F.col("vec_id").cast("string"))), 1, 15),
+        16, 10,
+    ).cast("long")
+    s = emb.where(coin % mod == 0).select(
+        "vec_id", "label",
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    )
+    s = s.withColumn(
+        "nrm",
+        F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)),
+    )
+    a = s.select(
+        F.col("vec_id").alias("aid"), F.col("label").alias("al"),
+        F.col("v").alias("av"), F.col("nrm").alias("an"),
+    )
+    b = s.select(
+        F.col("vec_id").alias("bid"), F.col("label").alias("bl"),
+        F.col("v").alias("bv"), F.col("nrm").alias("bn"),
+    )
+    dot = F.aggregate(
+        F.zip_with("av", "bv", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+    pairs = (
+        a.crossJoin(F.broadcast(b))
+        .where(F.col("aid") != F.col("bid"))
+        .select(
+            "aid", "al", "bid", "bl",
+            (dot / (F.col("an") * F.col("bn"))).alias("cos"),
+        )
+    )
+    w = Window.partitionBy("aid").orderBy(F.col("cos").desc(), F.col("bid").asc())
+    knn = pairs.withColumn("rk", F.row_number().over(w)).where(
+        F.col("rk") <= KNN_K
+    )
+    per_vec = knn.groupBy("aid", "al").agg(
+        F.avg((F.col("al") == F.col("bl")).cast("double")).alias("consistency")
+    )
+    return per_vec.groupBy(F.col("al").alias("label")).agg(
+        F.count("*").alias("n_vectors"),
+        rnd(F.avg("consistency"), 6).alias("mean_consistency"),
+        rnd(F.min("consistency"), 6).alias("min_consistency"),
+    )
+
+
+# --------------------------------------------------------------------------
+# reciprocal-rank fusion of two vector rankings
+# --------------------------------------------------------------------------
+
+#: RRF smoothing constant (the standard k=60 from the original paper).
+RRF_K = 60
+
+#: fused results returned per query.
+RRF_TOP_K = 5
+
+
+def _rrf_oracle() -> str:
+    return f"""
+WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+scored AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
+         list_dot_product(q.e, c.e)
+           / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e)))
+           AS cos_raw,
+         list_sum(list_transform(range(1, len(q.e) + 1),
+                  i -> (q.e[i] - c.e[i]) * (q.e[i] - c.e[i]))) AS l2sq
+  FROM emb q JOIN emb c ON q.vec_id < {N_QUERIES} AND c.vec_id != q.vec_id
+),
+ranked AS (
+  SELECT query_id, cand_id,
+         CAST(row_number() OVER (PARTITION BY query_id
+              ORDER BY cos_raw DESC, cand_id ASC) AS INTEGER) AS rank_cos,
+         CAST(row_number() OVER (PARTITION BY query_id
+              ORDER BY l2sq ASC, cand_id ASC) AS INTEGER) AS rank_l2
+  FROM scored
+),
+fused AS (
+  SELECT query_id, cand_id, rank_cos, rank_l2,
+         1.0 / ({RRF_K} + rank_cos) + 1.0 / ({RRF_K} + rank_l2) AS rrf_raw
+  FROM ranked
+)
+SELECT query_id, cand_id, rank_cos, rank_l2,
+       round(rrf_raw + 1e-6, 8) AS rrf_score,
+       CAST(row_number() OVER (PARTITION BY query_id
+            ORDER BY rrf_raw DESC, cand_id ASC) AS INTEGER) AS fused_rank
+FROM fused
+QUALIFY fused_rank <= {RRF_TOP_K}
+"""
+
+
+@register("rank_fusion_topk", oracle=_rrf_oracle(), tags=("prepared-r8",))
+def rank_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RECIPROCAL-RANK FUSION of two retrieval rankings per query
+    vector: candidates are ranked independently by cosine similarity
+    and by L2 distance, then fused with ``sum(1 / (60 + rank))`` and
+    the top 5 fused results returned. RRF is the standard scorer-
+    agnostic way a retrieval stack merges rankers with incomparable
+    score scales (here: angle vs magnitude-sensitive distance — they
+    genuinely disagree when vector norms vary).
+
+    Scale shape: the bounded query set broadcasts (the ``cosine_topk``
+    pattern); both ranks come from the same scored pair set in one
+    window pass each; fusion is per-(query, candidate) arithmetic. At
+    production scale the candidate set comes from the IVF/IMI index
+    instead of the full corpus — the fusion stage is unchanged."""
+    emb = _emb_double(load(spark, sf_dir, "embeddings"))
+    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("emb").alias("qemb"),
+        _norm(F.col("emb")).alias("qn"),
+    )
+    corpus = emb.select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("emb").alias("cemb"),
+        _norm(F.col("emb")).alias("cn"),
+    )
+    l2sq = F.aggregate(
+        F.zip_with(
+            F.col("qemb"), F.col("cemb"), lambda x, y: (x - y) * (x - y)
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    scored = (
+        corpus.crossJoin(F.broadcast(queries))
+        .where(F.col("cand_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "cand_id",
+            (
+                _dot(F.col("qemb"), F.col("cemb"))
+                / (F.col("qn") * F.col("cn"))
+            ).alias("cos_raw"),
+            l2sq.alias("l2sq"),
+        )
+    )
+    w_cos = Window.partitionBy("query_id").orderBy(
+        F.col("cos_raw").desc(), F.col("cand_id").asc()
+    )
+    w_l2 = Window.partitionBy("query_id").orderBy(
+        F.col("l2sq").asc(), F.col("cand_id").asc()
+    )
+    ranked = scored.select(
+        "query_id",
+        "cand_id",
+        F.row_number().over(w_cos).alias("rank_cos"),
+        F.row_number().over(w_l2).alias("rank_l2"),
+    )
+    rrf = (
+        1.0 / (RRF_K + F.col("rank_cos")) + 1.0 / (RRF_K + F.col("rank_l2"))
+    )
+    w_f = Window.partitionBy("query_id").orderBy(
+        rrf.desc(), F.col("cand_id").asc()
+    )
+    return (
+        ranked.select(
+            "query_id",
+            "cand_id",
+            "rank_cos",
+            "rank_l2",
+            rnd(rrf, 8).alias("rrf_score"),
+            F.row_number().over(w_f).alias("fused_rank"),
+        )
+        .where(F.col("fused_rank") <= RRF_TOP_K)
+    )
+
+
+# --------------------------------------------------------------------------
+# matryoshka (prefix-dimension) recall vs the full-dimension ranking
+# --------------------------------------------------------------------------
+
+MAT_DIMS = (8, 16, 32)  #: prefix dimensionalities evaluated
+MAT_FULL_DIM = 64  #: ground-truth dimensionality (the fixture's)
+MAT_QUERIES = 8  #: deterministic query set: vec_id < MAT_QUERIES
+MAT_K = 10  #: ranking depth for truth and test lists
+
+
+_MAT_ORACLE = f"""
+WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+pairs AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS cand_id, d.dim,
+         list_dot_product(q.e[1:d.dim], c.e[1:d.dim])
+           / (sqrt(list_dot_product(q.e[1:d.dim], q.e[1:d.dim]))
+              * sqrt(list_dot_product(c.e[1:d.dim], c.e[1:d.dim])))
+           AS cosine_raw
+  FROM emb q
+  JOIN emb c ON q.vec_id < {MAT_QUERIES} AND c.vec_id != q.vec_id
+  CROSS JOIN (SELECT unnest([{", ".join(str(d) for d in list(MAT_DIMS) + [MAT_FULL_DIM])}]) AS dim) d
+),
+topk AS (
+  SELECT dim, query_id, cand_id FROM (
+    SELECT *, row_number() OVER (PARTITION BY dim, query_id
+                ORDER BY cosine_raw DESC, cand_id ASC) AS rk
+    FROM pairs
+  ) WHERE rk <= {MAT_K}
+),
+truth AS (
+  SELECT query_id, cand_id FROM topk WHERE dim = {MAT_FULL_DIM}
+),
+overlap AS (
+  SELECT t.dim, t.query_id, count(*) AS n_overlap
+  FROM topk t JOIN truth tr
+    ON t.query_id = tr.query_id AND t.cand_id = tr.cand_id
+  WHERE t.dim != {MAT_FULL_DIM}
+  GROUP BY t.dim, t.query_id
+),
+grid AS (
+  SELECT d.dim, q.vec_id AS query_id
+  FROM (SELECT unnest([{", ".join(str(d) for d in MAT_DIMS)}]) AS dim) d
+  CROSS JOIN (SELECT vec_id FROM emb WHERE vec_id < {MAT_QUERIES}) q
+)
+SELECT CAST(g.dim AS INTEGER) AS dim, g.query_id,
+       CAST(COALESCE(o.n_overlap, 0) AS BIGINT) AS n_overlap,
+       round(COALESCE(o.n_overlap, 0) / CAST({MAT_K} AS DOUBLE) + {NUDGE}, 4)
+         AS recall_at_k
+FROM grid g LEFT JOIN overlap o
+  ON g.dim = o.dim AND g.query_id = o.query_id
+"""
+
+
+@register("matryoshka_recall", oracle=_MAT_ORACLE, tags=("prepared-r10",))
+def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MATRYOSHKA TRUNCATION RECALL: for each prefix dimensionality d,
+    the recall@k of the top-k neighbor list computed on the FIRST d
+    embedding components against the full-dimension top-k — the
+    measurement behind every "can we store 8x fewer floats" truncation
+    decision on matryoshka-trained embeddings. Emitted per (d, query)
+    so the variance across queries is visible, not averaged away.
+
+    Scale shape: the ``cosine_topk`` contract — the bounded query set
+    is broadcast, the corpus side never moves, prefix dot products use
+    the same sequential fold as DuckDB's list_dot_product so ranking
+    ties cannot flip between engines; per-(d, query) top-k windows
+    partition on (dim, query). Brute force by design: this is the
+    small-query-set measurement tool, not the serving path (that is
+    ``ivf_topk``)."""
+    emb = load(spark, sf_dir, "embeddings").withColumn(
+        "emb", F.col("embedding").cast("array<double>")
+    )
+    dims = list(MAT_DIMS) + [MAT_FULL_DIM]
+
+    def _dot(a, b):
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: x * y),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    def _norm(a):
+        return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+    queries = emb.where(F.col("vec_id") < MAT_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
+    )
+    pairs = (
+        emb.select(F.col("vec_id").alias("cand_id"), F.col("emb").alias("cemb"))
+        .crossJoin(F.broadcast(queries))
+        .where(F.col("cand_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "cand_id",
+            F.explode(F.array(*[F.lit(d) for d in dims])).alias("dim"),
+            "qemb",
+            "cemb",
+        )
+        .select(
+            "query_id",
+            "cand_id",
+            "dim",
+            F.slice("qemb", 1, F.col("dim")).alias("q"),
+            F.slice("cemb", 1, F.col("dim")).alias("c"),
+        )
+        .select(
+            "query_id",
+            "cand_id",
+            "dim",
+            (
+                _dot(F.col("q"), F.col("c"))
+                / (_norm(F.col("q")) * _norm(F.col("c")))
+            ).alias("cosine_raw"),
+        )
+    )
+    w = Window.partitionBy("dim", "query_id").orderBy(
+        F.col("cosine_raw").desc(), F.col("cand_id").asc()
+    )
+    topk = (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= MAT_K)
+        .select("dim", "query_id", "cand_id")
+    )
+    truth = topk.where(F.col("dim") == MAT_FULL_DIM).select(
+        "query_id", "cand_id"
+    )
+    test = topk.where(F.col("dim") != MAT_FULL_DIM)
+    overlap = (
+        test.join(truth, ["query_id", "cand_id"], "left_semi")
+        .groupBy("dim", "query_id")
+        .agg(F.count("*").alias("n_overlap"))
+    )
+    grid = queries.select("query_id").crossJoin(
+        F.broadcast(spark.createDataFrame([(d,) for d in MAT_DIMS], "dim int"))
+    )
+    return (
+        grid.join(overlap, ["dim", "query_id"], "left")
+        .select(
+            "dim",
+            "query_id",
+            F.coalesce("n_overlap", F.lit(0)).cast("long").alias("n_overlap"),
+            rnd(
+                F.coalesce("n_overlap", F.lit(0)).cast("double") / MAT_K, 4
+            ).alias("recall_at_k"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# linear-time MMD drift between embedding halves
+# --------------------------------------------------------------------------
+
+MMD_SAMPLE = 256  #: per-group deterministic sample size (bounded)
+MMD_BW2 = 8.0  #: RBF kernel bandwidth^2 (fixed literal, both engines)
+
+
+def _mmd_oracle() -> str:
+    def gcte(name: str, par: int) -> str:
+        return f"""{name}_s AS (
+  SELECT vec_id, embedding::DOUBLE[] AS e
+  FROM embeddings WHERE vec_id % 2 = {par}
+  ORDER BY vec_id LIMIT {MMD_SAMPLE}
+),
+{name} AS (
+  SELECT e, list_dot_product(e, e) AS n2,
+         CAST((row_number() OVER (ORDER BY vec_id) - 1) // 2 AS BIGINT) AS p,
+         (row_number() OVER (ORDER BY vec_id) - 1) % 2 AS slot
+  FROM {name}_s
+)"""
+
+    def kk(x: str, y: str) -> str:
+        return (
+            f"exp(-({x}.n2 + {y}.n2 - 2.0 * list_dot_product({x}.e, {y}.e))"
+            f" / (2.0 * {MMD_BW2}))"
+        )
+
+    return f"""
+WITH {gcte("ga", 0)},
+{gcte("gb", 1)},
+quad AS (
+  SELECT a0.p,
+         a0.e AS ea0, a0.n2 AS na0, a1.e AS ea1, a1.n2 AS na1,
+         b0.e AS eb0, b0.n2 AS nb0, b1.e AS eb1, b1.n2 AS nb1
+  FROM (SELECT * FROM ga WHERE slot = 0) a0
+  JOIN (SELECT * FROM ga WHERE slot = 1) a1 ON a0.p = a1.p
+  JOIN (SELECT * FROM gb WHERE slot = 0) b0 ON a0.p = b0.p
+  JOIN (SELECT * FROM gb WHERE slot = 1) b1 ON a0.p = b1.p
+),
+kerns AS (
+  SELECT p,
+         exp(-(na0 + na1 - 2.0 * list_dot_product(ea0, ea1))
+             / (2.0 * {MMD_BW2})) AS kaa,
+         exp(-(nb0 + nb1 - 2.0 * list_dot_product(eb0, eb1))
+             / (2.0 * {MMD_BW2})) AS kbb,
+         exp(-(na0 + nb1 - 2.0 * list_dot_product(ea0, eb1))
+             / (2.0 * {MMD_BW2})) AS kab,
+         exp(-(na1 + nb0 - 2.0 * list_dot_product(ea1, eb0))
+             / (2.0 * {MMD_BW2})) AS kba
+  FROM quad
+)
+SELECT CAST(count(*) AS BIGINT) AS n_quadruples,
+       round(avg(kaa + kbb - kab - kba) + {NUDGE}, 6) AS mmd_linear,
+       round(avg(kaa) + {NUDGE}, 6) AS mean_k_within_a,
+       round(avg(kbb) + {NUDGE}, 6) AS mean_k_within_b,
+       round(avg(kab) + {NUDGE}, 6) AS mean_k_cross
+FROM kerns
+"""
+
+
+@register("mmd_linear_drift", oracle=_mmd_oracle(), tags=("prepared-r10",))
+def mmd_linear_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LINEAR-TIME MMD between the even- and odd-id halves of the
+    embedding corpus: the kernel two-sample test for DISTRIBUTION drift
+    in embedding space (``embedding_centroid_drift`` sees the mean
+    move; MMD with an RBF kernel sees shape changes the mean hides),
+    using Gretton's linear-time estimator — h(i) = k(a,a') + k(b,b')
+    - k(a,b') - k(a',b) averaged over disjoint quadruples — so the
+    kernel never touches sample^2 pairs.
+
+    Scale shape: each group reduces to a ``MMD_SAMPLE``-row
+    deterministic prefix sample via orderBy().limit()
+    (TakeOrderedAndProject — the IVF bounded-sample discipline);
+    pairing, the quadruple join, and the average run over those
+    bounded rows only. Squared distances expand to
+    |x|^2+|y|^2-2x.y over the same sequential-fold dot product DuckDB
+    uses, so kernel inputs are bit-identical."""
+    emb = load(spark, sf_dir, "embeddings").withColumn(
+        "emb", F.col("embedding").cast("array<double>")
+    )
+
+    def _dot(a, b):
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: x * y),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    def group(par: int) -> DataFrame:
+        g = (
+            emb.where(F.col("vec_id") % 2 == par)
+            .select("vec_id", "emb")
+            .orderBy("vec_id")
+            .limit(MMD_SAMPLE)
+        )
+        w = Window.orderBy("vec_id")  # bounded: MMD_SAMPLE rows
+        return g.select(
+            F.col("emb"),
+            _dot(F.col("emb"), F.col("emb")).alias("n2"),
+            F.row_number().over(w).alias("idx"),
+        ).select(
+            "emb",
+            "n2",
+            ((F.col("idx") - 1) / 2).cast("long").alias("p"),
+            ((F.col("idx") - 1) % 2).alias("slot"),
+        )
+
+    a, b = group(0), group(1)
+
+    def pick(df: DataFrame, slot: int, tag: str) -> DataFrame:
+        return df.where(F.col("slot") == slot).select(
+            "p",
+            F.col("emb").alias(f"e_{tag}"),
+            F.col("n2").alias(f"n2_{tag}"),
+        )
+
+    quad = (
+        pick(a, 0, "a0")
+        .join(pick(a, 1, "a1"), "p")
+        .join(pick(b, 0, "b0"), "p")
+        .join(pick(b, 1, "b1"), "p")
+    )
+
+    def k(x: str, y: str):
+        d2 = (
+            F.col(f"n2_{x}")
+            + F.col(f"n2_{y}")
+            - 2.0 * _dot(F.col(f"e_{x}"), F.col(f"e_{y}"))
+        )
+        return F.exp(-d2 / (2.0 * MMD_BW2))
+
+    h = k("a0", "a1") + k("b0", "b1") - k("a0", "b1") - k("a1", "b0")
+    return quad.agg(
+        F.count("*").alias("n_quadruples"),
+        rnd(F.avg(h), 6).alias("mmd_linear"),
+        rnd(F.avg(k("a0", "a1")), 6).alias("mean_k_within_a"),
+        rnd(F.avg(k("b0", "b1")), 6).alias("mean_k_within_b"),
+        rnd(F.avg(k("a0", "b1")), 6).alias("mean_k_cross"),
+    )
+
+
+# --------------------------------------------------------------------------
+# hubness of the ANN neighborhood graph
+# --------------------------------------------------------------------------
+
+HUB_QUERIES = 20  #: deterministic query set (vec_id < HUB_QUERIES)
+HUB_K = 5  #: neighbors per query
+
+
+_HUB_ORACLE = f"""
+WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+scored AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
+         list_dot_product(q.e, c.e)
+           / (sqrt(list_dot_product(q.e, q.e))
+              * sqrt(list_dot_product(c.e, c.e))) AS cosine_raw
+  FROM emb q JOIN emb c
+    ON q.vec_id < {HUB_QUERIES} AND c.vec_id != q.vec_id
+),
+topk AS (
+  SELECT query_id, cand_id FROM (
+    SELECT *, row_number() OVER (PARTITION BY query_id
+                 ORDER BY cosine_raw DESC, cand_id ASC) AS rk
+    FROM scored)
+  WHERE rk <= {HUB_K}
+),
+occ AS (
+  SELECT cand_id, count(*) AS k_occurrence FROM topk GROUP BY 1
+),
+ncorp AS (SELECT count(*) AS n_corpus FROM emb),
+moments AS (
+  SELECT count(*) AS n_appearing,
+         CAST(sum(k_occurrence) AS DOUBLE) AS s1,
+         sum(pow(k_occurrence, 2.0)) AS s2,
+         sum(pow(k_occurrence, 3.0)) AS s3
+  FROM occ
+),
+const AS (
+  SELECT n.n_corpus, m.n_appearing,
+         round((m.s3 / n.n_corpus
+                - 3 * (m.s1 / n.n_corpus) * (m.s2 / n.n_corpus)
+                + 2 * pow(m.s1 / n.n_corpus, 3.0))
+               / pow(m.s2 / n.n_corpus
+                     - pow(m.s1 / n.n_corpus, 2.0), 1.5)
+               + {NUDGE}, 4) AS hubness_skewness,
+         round((CAST(n.n_corpus AS DOUBLE) - m.n_appearing) / n.n_corpus
+               + {NUDGE}, 6) AS antihub_share
+  FROM moments m CROSS JOIN ncorp n
+)
+SELECT o.cand_id, o.k_occurrence, c.n_corpus, c.n_appearing,
+       c.hubness_skewness, c.antihub_share
+FROM occ o CROSS JOIN const c
+"""
+
+
+@register("hubness_score", oracle=_HUB_ORACLE, tags=("prepared-r10",))
+def hubness_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HUBNESS of the cosine neighborhood graph: how often each corpus
+    vector appears among the top-HUB_K neighbors of the deterministic
+    HUB_QUERIES query set (its k-OCCURRENCE), plus the corpus-wide
+    skewness of that distribution — the standard diagnostic for
+    high-dimensional "hub" vectors that dominate ANN result lists and
+    silently bias retrieval (high skew = a few vectors are everyone's
+    neighbor; `lsh_recall_estimate` measures recall, hubness explains
+    WHY it degrades). The skewness counts the (corpus - appearing)
+    zero-occurrence vectors EXACTLY via moment algebra — zeros
+    contribute nothing to the moment sums, so the full-corpus moments
+    come from the bounded appearing set plus the corpus count.
+
+    Scale shape: the scoring reuses the `cosine_topk` recipe — tiny
+    broadcast query side, corpus side never moves, per-query
+    WindowGroupLimit top-k; everything after runs on <=
+    HUB_QUERIES x HUB_K rows."""
+    emb = _emb_double(load(spark, sf_dir, "embeddings"))
+    queries = emb.where(F.col("vec_id") < HUB_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("emb").alias("qemb"),
+        _norm(F.col("emb")).alias("qn"),
+    )
+    corpus = emb.select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("emb").alias("cemb"),
+        _norm(F.col("emb")).alias("cn"),
+    )
+    scored = (
+        corpus.crossJoin(F.broadcast(queries))
+        .where(F.col("cand_id") != F.col("query_id"))
+        .withColumn(
+            "cosine_raw",
+            _dot(F.col("qemb"), F.col("cemb"))
+            / (F.col("qn") * F.col("cn")),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_raw").desc(), F.col("cand_id").asc()
+    )
+    topk = (
+        scored.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= HUB_K)
+        .select("query_id", "cand_id")
+    )
+    occ = topk.groupBy("cand_id").agg(F.count("*").alias("k_occurrence"))
+    ncorp = emb.agg(F.count("*").alias("n_corpus"))
+    moments = occ.agg(
+        F.count("*").alias("n_appearing"),
+        F.sum("k_occurrence").alias("s1"),
+        F.sum(F.pow("k_occurrence", F.lit(2.0))).alias("s2"),
+        F.sum(F.pow("k_occurrence", F.lit(3.0))).alias("s3"),
+    )
+    j = moments.crossJoin(F.broadcast(ncorp))
+    nd = F.col("n_corpus").cast("double")
+    m1 = F.col("s1") / nd
+    m2 = F.col("s2") / nd
+    m3 = F.col("s3") / nd
+    var = m2 - m1 * m1
+    skew = (m3 - 3 * m1 * m2 + 2 * m1 * m1 * m1) / F.pow(var, F.lit(1.5))
+    const = j.select(
+        "n_corpus",
+        "n_appearing",
+        rnd(skew, 4).alias("hubness_skewness"),
+        rnd((nd - F.col("n_appearing")) / nd, 6).alias("antihub_share"),
+    )
+    return occ.crossJoin(F.broadcast(const)).select(
+        "cand_id",
+        "k_occurrence",
+        "n_corpus",
+        "n_appearing",
+        "hubness_skewness",
+        "antihub_share",
+    )
+
+
+# --------------------------------------------------------------------------
+# Johnson-Lindenstrauss random-projection distortion audit
+# --------------------------------------------------------------------------
+
+JL_OUT_DIMS = 8  #: projected dimensionality
+JL_IN_DIMS = 64  #: fixture embedding dimensionality
+
+
+def _jl_signs() -> list[list[float]]:
+    """The +-1 projection matrix, derived from md5 hex parity at
+    BUILD time and embedded as float literals in BOTH engines' plans
+    — a literal cannot differ between libms."""
+    import hashlib
+
+    rows = []
+    for j in range(JL_OUT_DIMS):
+        row = []
+        for i in range(JL_IN_DIMS):
+            h = hashlib.md5(f"jl_{j}_{i}".encode()).hexdigest()
+            row.append(1.0 if int(h[0], 16) % 2 == 0 else -1.0)
+        rows.append(row)
+    return rows
+
+
+def _jl_oracle() -> str:
+    signs = _jl_signs()
+    proj_exprs = ", ".join(
+        "list_sum(list_transform(range(1, %d), i -> e[i] * ([%s])[i]))"
+        % (JL_IN_DIMS + 1, ", ".join(repr(v) for v in signs[j]))
+        for j in range(JL_OUT_DIMS)
+    )
+    return f"""
+WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+projected AS (
+  SELECT vec_id, e, [{proj_exprs}] AS proj
+  FROM emb
+),
+pairs AS (
+  SELECT a.vec_id AS pair_id,
+         list_sum(list_transform(range(1, {JL_IN_DIMS + 1}),
+                  i -> (a.e[i] - b.e[i]) * (a.e[i] - b.e[i])))
+           AS true_d2_u,
+         list_sum(list_transform(range(1, {JL_OUT_DIMS + 1}),
+                  i -> (a.proj[i] - b.proj[i])
+                       * (a.proj[i] - b.proj[i])))
+           / {float(JL_OUT_DIMS)} AS jl_est_u
+  FROM projected a JOIN projected b ON b.vec_id = a.vec_id + 1
+),
+scored AS (
+  SELECT pair_id, true_d2_u, jl_est_u,
+         jl_est_u / true_d2_u AS ratio_u
+  FROM pairs
+),
+const AS (
+  SELECT round(avg(ratio_u) + {NUDGE}, 6) AS mean_ratio,
+         round(max(abs(ratio_u - 1)) + {NUDGE}, 6) AS max_abs_dev
+  FROM scored
+)
+SELECT s.pair_id,
+       round(s.true_d2_u + {NUDGE}, 4) AS true_d2,
+       round(s.jl_est_u + {NUDGE}, 4) AS jl_estimate,
+       round(s.ratio_u + {NUDGE}, 6) AS distortion_ratio,
+       c.mean_ratio, c.max_abs_dev
+FROM scored s CROSS JOIN const c
+"""
+
+
+@register(
+    "random_projection_distortion",
+    oracle=_jl_oracle(),
+    tags=("prepared-r10",),
+)
+def random_projection_distortion(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """JOHNSON-LINDENSTRAUSS DISTORTION AUDIT: project every embedding
+    through a fixed +-1 sign matrix (md5-derived, embedded as
+    literals) down to JL_OUT_DIMS, then compare projected vs true
+    squared distances over the deterministic consecutive-id pair set.
+    For +-1 entries, E[(r_j . x)^2] = ||x||^2, so the mean of the
+    JL_OUT_DIMS squared components estimates the true distance — the
+    measured distortion ratio is the certificate behind using cheap
+    projected distances as an ANN prefilter (`lsh_bucket_assignment`
+    uses the SIGNS of these same projections; this op measures how
+    much metric the magnitudes preserve). Projection is LINEAR, so
+    projected differences are differences of projections — computed
+    once per vector, never per pair.
+
+    Scale shape: map-only projection per vector (8 sequential-fold
+    dot products against literal arrays — zero shuffle), one
+    consecutive-id equi-join for pairs, bounded constants."""
+    emb = _emb_double(load(spark, sf_dir, "embeddings"))
+    signs = _jl_signs()
+
+    def fold_dot(vec_col, lits):
+        arr = F.array(*[F.lit(v) for v in lits])
+        return F.aggregate(
+            F.zip_with(vec_col, arr, lambda x, s: x * s),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    projected = emb.select(
+        "vec_id",
+        "emb",
+        F.array(
+            *[fold_dot(F.col("emb"), signs[j]) for j in range(JL_OUT_DIMS)]
+        ).alias("proj"),
+    )
+    a = projected.select(
+        F.col("vec_id").alias("pair_id"),
+        F.col("emb").alias("e1"),
+        F.col("proj").alias("p1"),
+    )
+    b = projected.select(
+        (F.col("vec_id") - 1).alias("pair_id"),
+        F.col("emb").alias("e2"),
+        F.col("proj").alias("p2"),
+    )
+    true_d2 = F.aggregate(
+        F.zip_with(F.col("e1"), F.col("e2"), lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    proj_d2 = F.aggregate(
+        F.zip_with(F.col("p1"), F.col("p2"), lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    pairs = a.join(b, "pair_id").select(
+        "pair_id",
+        true_d2.alias("true_d2_u"),
+        (proj_d2 / F.lit(float(JL_OUT_DIMS))).alias("jl_est_u"),
+    )
+    scored = pairs.select(
+        "pair_id",
+        "true_d2_u",
+        "jl_est_u",
+        (F.col("jl_est_u") / F.col("true_d2_u")).alias("ratio_u"),
+    )
+    const = scored.agg(
+        rnd(F.avg("ratio_u"), 6).alias("mean_ratio"),
+        rnd(F.max(F.abs(F.col("ratio_u") - 1)), 6).alias("max_abs_dev"),
+    )
+    return scored.crossJoin(F.broadcast(const)).select(
+        "pair_id",
+        rnd("true_d2_u", 4).alias("true_d2"),
+        rnd("jl_est_u", 4).alias("jl_estimate"),
+        rnd("ratio_u", 6).alias("distortion_ratio"),
+        "mean_ratio",
+        "max_abs_dev",
+    )

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import register, rnd
+from flink_cookbook_spark.registry import NUDGE, register, rnd
 
 #: stopword markers per language for the ID heuristic (fixture vocab).
 STOPWORDS = ("the", "a")
@@ -393,9 +393,7 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-register(
-    "corpus_filter_pipeline",
-    oracle=f"""
+_CORPUS_FILTER_ORACLE = f"""
 WITH t AS (
   SELECT doc_id,
          string_split(text, ' ') AS ts,
@@ -432,7 +430,11 @@ SELECT doc_id, n_tokens, quality,
              WHEN marker_ratio < 0.05 THEN 'non_en'
              ELSE 'keep' END) = 'keep' AS keep
 FROM staged
-""",
+"""
+
+register(
+    "corpus_filter_pipeline",
+    oracle=_CORPUS_FILTER_ORACLE,
     tags=("text", "llm-pipeline", "filter", "bench"),
 )(corpus_filter_pipeline)
 
@@ -1186,3 +1188,1394 @@ LIMIT {BPE_TOP_PAIRS}
 """,
     tags=("text", "llm-pipeline", "tokenizer", "bpe"),
 )(bpe_merge_candidates)
+
+
+# --------------------------------------------------------------------------
+# language-ID confusion matrix
+# --------------------------------------------------------------------------
+
+def _lang_confusion_oracle() -> str:
+    stop_in = ", ".join(repr(s) for s in STOPWORDS)
+    return f"""
+WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS ts FROM documents),
+m AS (
+  SELECT lang AS declared_lang,
+         CASE WHEN CAST(len(list_filter(ts, x -> x IN ({stop_in}))) AS DOUBLE)
+                   / len(ts) >= 0.05
+              THEN 'en' ELSE 'other' END AS predicted_lang
+  FROM t
+),
+agg AS (
+  SELECT declared_lang, predicted_lang, count(*) AS n_docs
+  FROM m GROUP BY 1, 2
+)
+SELECT declared_lang, predicted_lang, n_docs,
+       round(n_docs * 1.0 / sum(n_docs) OVER (PARTITION BY declared_lang)
+             + 1e-6, 6) AS share_of_declared
+FROM agg
+"""
+
+
+@register(
+    "lang_confusion_matrix",
+    oracle=_lang_confusion_oracle(),
+    tags=("prepared-r8",),
+)
+def lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Declared-vs-predicted language CONFUSION MATRIX over the marker
+    language-ID heuristic (``lang_id_heuristic``): per (declared,
+    predicted) cell the document count and its share of the declared
+    class — the row-normalized matrix quality teams read before trusting
+    a classifier to gate a corpus. Composes the per-doc classifier with
+    one tiny aggregate + window."""
+    per_doc = lang_id_heuristic(spark, sf_dir)
+    agg = per_doc.groupBy("declared_lang", "predicted_lang").agg(
+        F.count("*").alias("n_docs")
+    )
+    w = Window.partitionBy("declared_lang")
+    return agg.select(
+        "declared_lang", "predicted_lang", "n_docs",
+        rnd(F.col("n_docs") / F.sum("n_docs").over(w), 6).alias("share_of_declared"),
+    )
+
+
+# --------------------------------------------------------------------------
+# out-of-vocabulary rate per source
+# --------------------------------------------------------------------------
+
+#: vocabulary = the top-N corpus tokens by frequency (ties: token asc).
+OOV_VOCAB_TOP = 500
+
+
+_OOV_ORACLE = f"""
+WITH tokens AS (
+  SELECT source, unnest(string_split(text, ' ')) AS token FROM documents
+),
+vocab AS (
+  SELECT token FROM (
+    SELECT token, count(*) AS n,
+           row_number() OVER (ORDER BY count(*) DESC, token) AS rk
+    FROM tokens GROUP BY token)
+  WHERE rk <= {OOV_VOCAB_TOP}
+)
+SELECT t.source,
+       count(*) AS n_tokens,
+       CAST(sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
+       round(sum(CASE WHEN v.token IS NULL THEN 1.0 ELSE 0.0 END) / count(*)
+             + 1e-6, 6) AS oov_share
+FROM tokens t LEFT JOIN vocab v ON t.token = v.token
+GROUP BY t.source
+"""
+
+
+@register("oov_rate", oracle=_OOV_ORACLE, tags=("prepared-r8",))
+def oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OUT-OF-VOCABULARY rate per source: build the corpus top-N token
+    vocabulary (frequency-ranked, deterministic tie-break), then report
+    per source what share of token OCCURRENCES falls outside it — the
+    coverage number that decides whether a tokenizer's vocab suits a
+    new source before training on it. The vocabulary join is
+    deliberately UNHINTED (top-N of a corpus-derived aggregate — the
+    repo's forced-broadcast policy): AQE broadcasts it at fixture scale
+    and keeps the shuffled join at high SF."""
+    docs = load(spark, sf_dir, "documents")
+    tokens = docs.select(
+        "source", F.explode(F.split("text", " ")).alias("token")
+    )
+    # top-N via orderBy().limit() — Spark plans TakeOrderedAndProject
+    # (per-partition top-N + k-row driver merge), never a
+    # single-partition ranking window over the whole vocabulary
+    vocab = (
+        tokens.groupBy("token").agg(F.count("*").alias("n"))
+        .orderBy(F.col("n").desc(), F.col("token").asc())
+        .limit(OOV_VOCAB_TOP)
+        .select("token")
+    )
+    joined = tokens.join(
+        vocab.withColumn("in_vocab", F.lit(1)), "token", "left"
+    )
+    return joined.groupBy("source").agg(
+        F.count("*").alias("n_tokens"),
+        F.sum(F.when(F.col("in_vocab").isNull(), 1).otherwise(0))
+        .cast("long")
+        .alias("n_oov"),
+        rnd(
+            F.sum(F.when(F.col("in_vocab").isNull(), 1.0).otherwise(0.0))
+            / F.count("*"),
+            6,
+        ).alias("oov_share"),
+    )
+
+
+# --------------------------------------------------------------------------
+# curation filter funnel report
+# --------------------------------------------------------------------------
+
+#: the pipeline's rule order (cheap dedup first), mirrored from
+#: ``corpus_filter_pipeline``'s first-failing-reason CASE.
+FUNNEL_STAGES = (
+    (1, "duplicate"),
+    (2, "too_short"),
+    (3, "low_quality"),
+    (4, "non_en"),
+)
+
+
+def _funnel_oracle() -> str:
+    inner = _CORPUS_FILTER_ORACLE
+    values = ", ".join(f"({i}, '{r}')" for i, r in FUNNEL_STAGES)
+    return f"""
+WITH v AS ({inner}),
+counts AS (
+  SELECT reason, count(*) AS n FROM v WHERE reason != 'keep' GROUP BY reason
+),
+total AS (SELECT count(*) AS n_total FROM v),
+stages AS (SELECT * FROM (VALUES {values}) s(stage, reason))
+SELECT CAST(s.stage AS INTEGER) AS stage, s.reason,
+       CAST(coalesce(c.n, 0) AS BIGINT) AS n_dropped,
+       CAST(t.n_total - sum(coalesce(c.n, 0)) OVER (ORDER BY s.stage)
+            AS BIGINT) AS n_remaining
+FROM stages s LEFT JOIN counts c USING (reason) CROSS JOIN total t
+"""
+
+
+@register(
+    "filter_funnel_report",
+    oracle=_funnel_oracle(),
+    tags=("prepared-r8",),
+)
+def filter_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CURATION FUNNEL: per filter stage, how many documents the rule
+    drops and how many survive after it — the stage-attribution view of
+    ``corpus_filter_pipeline``'s per-doc verdicts (a pipeline owner reads
+    this table, not 500k verdicts, to see which rule is doing the work).
+    Every stage ALWAYS emits (the threshold list is exploded from a
+    literal and left-joined to the drop counts — the
+    ``similarity_threshold_curve`` lesson), so a rule that drops nothing
+    shows a 0, never a missing row. Composes the registered one-shuffle
+    filter with two tiny aggregates over a 4-row result."""
+    verdicts = corpus_filter_pipeline(spark, sf_dir)
+    counts = (
+        verdicts.where(F.col("reason") != "keep")
+        .groupBy("reason")
+        .agg(F.count("*").alias("n_dropped_u"))
+    )
+    stages = verdicts.agg(F.count("*").alias("n_total")).select(
+        "n_total",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("stage"), F.lit(r).alias("reason")
+                    )
+                    for i, r in FUNNEL_STAGES
+                ]
+            )
+        ).alias("s"),
+    ).select("n_total", "s.stage", "s.reason")
+    w = Window.orderBy("stage").rowsBetween(Window.unboundedPreceding, 0)
+    joined = stages.join(counts, "reason", "left").select(
+        "stage",
+        "reason",
+        F.coalesce(F.col("n_dropped_u"), F.lit(0).cast("long")).alias("n_dropped"),
+        "n_total",
+    )
+    return joined.select(
+        "stage",
+        "reason",
+        "n_dropped",
+        (F.col("n_total") - F.sum("n_dropped").over(w)).alias("n_remaining"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Zipf rank-frequency fit per source (corpus health)
+# --------------------------------------------------------------------------
+
+#: ranks entering the log-log fit (the Zipf head; the tail is Heaps'-law
+#: territory covered by ``vocab_growth``).
+ZIPF_TOP_N = 100
+
+
+_ZIPF_ORACLE = f"""
+WITH counts AS (
+  SELECT source, t.tok, count(*) AS cnt
+  FROM documents, unnest(string_split(text, ' ')) AS t(tok)
+  GROUP BY source, t.tok
+),
+totals AS (
+  SELECT source, CAST(sum(cnt) AS BIGINT) AS total_tokens,
+         count(*) AS vocab_size
+  FROM counts GROUP BY source
+),
+head AS (
+  SELECT source, cnt,
+         row_number() OVER (PARTITION BY source
+                            ORDER BY cnt DESC, tok ASC) AS rk
+  FROM counts QUALIFY rk <= {ZIPF_TOP_N}
+),
+fit AS (
+  SELECT source, count(*) AS n_ranks,
+         round(regr_slope(ln(cnt), ln(rk)) + 1e-6, 6) AS zipf_slope,
+         round(regr_r2(ln(cnt), ln(rk)) + 1e-6, 6) AS fit_r2,
+         max(CASE WHEN rk = 1 THEN cnt END) AS top_cnt
+  FROM head GROUP BY source
+)
+SELECT f.source, t.vocab_size, f.n_ranks, f.zipf_slope, f.fit_r2,
+       round(f.top_cnt * 1.0 / t.total_tokens + 1e-6, 6) AS top_token_share
+FROM fit f JOIN totals t ON f.source = t.source
+"""
+
+
+@register("zipf_fit", oracle=_ZIPF_ORACLE, tags=("prepared-r8",))
+def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ZIPF'S-LAW FIT per source: the log-log slope of the token
+    rank-frequency head (natural text sits near -1; template/boilerplate
+    corpora flatten, spam steepens) plus fit r^2 and the top-token share
+    — a one-row-per-source corpus-health fingerprint. Token counts are
+    one hash aggregate; ranking is a top-N-per-group window the
+    optimizer runs as WindowGroupLimit (never a full vocab sort); the
+    regression consumes sources x ZIPF_TOP_N rows via the single-pass
+    regr_* moment aggregates (the ``per_key_linear_trend`` pattern)."""
+    docs = load(spark, sf_dir, "documents")
+    counts = (
+        docs.select("source", F.explode(F.split("text", " ")).alias("tok"))
+        .groupBy("source", "tok")
+        .agg(F.count("*").alias("cnt"))
+    )
+    totals = counts.groupBy("source").agg(
+        F.sum("cnt").alias("total_tokens"),
+        F.count("*").alias("vocab_size"),
+    )
+    w = Window.partitionBy("source").orderBy(
+        F.col("cnt").desc(), F.col("tok").asc()
+    )
+    head = counts.withColumn("rk", F.row_number().over(w)).where(
+        F.col("rk") <= ZIPF_TOP_N
+    )
+    fit = head.groupBy("source").agg(
+        F.count("*").alias("n_ranks"),
+        rnd(F.regr_slope(F.log("cnt"), F.log("rk")), 6).alias("zipf_slope"),
+        rnd(F.regr_r2(F.log("cnt"), F.log("rk")), 6).alias("fit_r2"),
+        F.max(F.when(F.col("rk") == 1, F.col("cnt"))).alias("top_cnt"),
+    )
+    return fit.join(totals, "source").select(
+        "source", "vocab_size", "n_ranks", "zipf_slope", "fit_r2",
+        rnd(F.col("top_cnt") / F.col("total_tokens"), 6).alias("top_token_share"),
+    )
+
+
+# --------------------------------------------------------------------------
+# within-document token entropy profile
+# --------------------------------------------------------------------------
+
+_TOKEN_ENTROPY_ORACLE = """
+WITH toks AS (
+  SELECT doc_id, source, unnest(string_split(text, ' ')) AS tok
+  FROM documents
+),
+cnt AS (
+  SELECT doc_id, source, tok, count(*) AS c
+  FROM toks GROUP BY 1, 2, 3
+),
+with_n AS (
+  SELECT doc_id, source, c,
+         sum(c) OVER (PARTITION BY doc_id) AS n
+  FROM cnt
+),
+per_doc AS (
+  SELECT doc_id, source, max(n) AS n_tokens,
+         sum(-(c * 1.0 / n) * log2(c * 1.0 / n)) AS h
+  FROM with_n GROUP BY 1, 2
+),
+scored AS (
+  SELECT source, h,
+         CASE WHEN n_tokens > 1 THEN h / log2(n_tokens) ELSE 0.0 END AS hn
+  FROM per_doc
+)
+SELECT source, count(*) AS n_docs,
+       round(avg(h) + 1e-6, 4) AS mean_entropy_bits,
+       round(avg(hn) + 1e-6, 4) AS mean_norm_entropy,
+       round(min(hn) + 1e-6, 4) AS min_norm_entropy,
+       CAST(sum(CASE WHEN hn < 0.5 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_low_entropy
+FROM scored GROUP BY source
+"""
+
+
+@register(
+    "token_entropy_profile",
+    oracle=_TOKEN_ENTROPY_ORACLE,
+    tags=("prepared-r8",),
+)
+def token_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source token-entropy profile: Shannon entropy of each
+    document's within-doc token distribution, normalized by log2(n) so
+    1.0 = maximally diverse and 0.0 = one token repeated — the
+    information-theoretic upgrade of ``quality_score``'s repetition
+    ratio (which cannot distinguish "one token 99×" from "99 distinct
+    tokens twice each").  Flags docs under 0.5 normalized entropy.
+
+    Shape: explode → (doc, token) counts → per-doc window total → per-doc
+    entropy agg → per-source agg.  Cost is linear in corpus tokens; the
+    widest exchange keys on doc_id, never on the vocabulary."""
+    docs = load(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id", "source",
+        F.explode(F.split("text", " ")).alias("tok"),
+    )
+    cnt = toks.groupBy("doc_id", "source", "tok").agg(
+        F.count("*").alias("c")
+    )
+    wd = Window.partitionBy("doc_id")
+    with_n = cnt.select(
+        "doc_id", "source", "c", F.sum("c").over(wd).alias("n")
+    )
+    p = F.col("c") / F.col("n")
+    per_doc = with_n.groupBy("doc_id", "source").agg(
+        F.max("n").alias("n_tokens"),
+        F.sum(-p * F.log2(p)).alias("h"),
+    )
+    h_norm = F.when(
+        F.col("n_tokens") > 1, F.col("h") / F.log2(F.col("n_tokens"))
+    ).otherwise(0.0)
+    scored = per_doc.select("source", "h", h_norm.alias("hn"))
+    return scored.groupBy("source").agg(
+        F.count("*").alias("n_docs"),
+        rnd(F.avg("h"), 4).alias("mean_entropy_bits"),
+        rnd(F.avg("hn"), 4).alias("mean_norm_entropy"),
+        rnd(F.min("hn"), 4).alias("min_norm_entropy"),
+        F.sum((F.col("hn") < 0.5).cast("long")).alias("n_low_entropy"),
+    )
+
+
+# --------------------------------------------------------------------------
+# quality-threshold sweep (filter calibration decision table)
+# --------------------------------------------------------------------------
+
+#: candidate quality cutoffs swept by the calibration report.
+QUALITY_THRESHOLDS = (0.0, 0.25, 0.5, 0.75, 0.9)
+
+_QUALITY_SWEEP_ORACLE = f"""
+WITH t AS (SELECT string_split(text, ' ') AS ts FROM documents),
+m AS (
+  SELECT len(ts) AS n,
+         CAST(len(list_filter(ts, x -> x IN
+           ({", ".join(repr(s) for s in STOPWORDS)}))) AS DOUBLE)
+           / len(ts) AS stop_ratio,
+         1.0 - CAST(len(list_distinct(ts)) AS DOUBLE) / len(ts) AS rep_ratio
+  FROM t
+),
+scored AS (
+  SELECT (CASE WHEN n < 10 THEN 0.0 ELSE 1.0 END)
+           * (1.0 - rep_ratio)
+           * (CASE WHEN stop_ratio > 0.5 THEN 0.5 ELSE 1.0 END) AS q,
+         CAST(n AS BIGINT) AS n_tokens
+  FROM m
+),
+thr AS (SELECT unnest([{", ".join(str(t) for t in QUALITY_THRESHOLDS)}]) AS threshold)
+SELECT threshold,
+       CAST(sum(CASE WHEN q >= threshold THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_docs_kept,
+       CAST(sum(CASE WHEN q >= threshold THEN n_tokens ELSE 0 END) AS BIGINT)
+         AS n_tokens_kept,
+       round(avg(CASE WHEN q >= threshold THEN 1.0 ELSE 0.0 END) + 1e-6, 6)
+         AS doc_share,
+       round(sum(CASE WHEN q >= threshold THEN n_tokens ELSE 0 END) * 1.0
+             / sum(n_tokens) + 1e-6, 6) AS token_share
+FROM scored CROSS JOIN thr GROUP BY threshold
+"""
+
+
+@register(
+    "quality_threshold_sweep",
+    oracle=_QUALITY_SWEEP_ORACLE,
+    tags=("prepared-r8",),
+)
+def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Decision table for the quality filter: for each candidate cutoff,
+    how many documents and tokens survive ``quality_score``'s composite
+    score ≥ cutoff — the same always-emit sweep pattern as
+    ``watermark_completeness_sweep``, applied to the curation knob that
+    governs corpus yield.  Every threshold always emits (conditional
+    aggregation over a 5-row broadcast), so the report cannot go vacuous
+    when a cutoff retains nothing.  One linear scan + one 5-key agg."""
+    docs = load(spark, sf_dir, "documents")
+    ts = F.split("text", " ")
+    n = F.size(ts)
+    stop_in = ", ".join(f"'{s}'" for s in STOPWORDS)
+    n_stop = F.size(F.expr(f"filter(split(text, ' '), t -> t IN ({stop_in}))"))
+    stop_ratio = n_stop.cast("double") / n
+    rep_ratio = 1.0 - F.size(F.array_distinct(ts)).cast("double") / n
+    score = (
+        F.when(n < 10, 0.0).otherwise(1.0)
+        * (1.0 - rep_ratio)
+        * F.when(stop_ratio > 0.5, 0.5).otherwise(1.0)
+    )
+    scored = docs.select(score.alias("q"), n.cast("long").alias("n_tokens"))
+    thr = spark.createDataFrame(
+        [(t,) for t in QUALITY_THRESHOLDS], "threshold double"
+    )
+    keep = F.col("q") >= F.col("threshold")
+    return (
+        scored.crossJoin(F.broadcast(thr))
+        .groupBy("threshold")
+        .agg(
+            F.sum(keep.cast("long")).alias("n_docs_kept"),
+            F.sum(F.when(keep, F.col("n_tokens")).otherwise(0)).alias(
+                "n_tokens_kept"
+            ),
+            rnd(F.avg(keep.cast("double")), 6).alias("doc_share"),
+            rnd(
+                F.sum(F.when(keep, F.col("n_tokens")).otherwise(0))
+                / F.sum("n_tokens"),
+                6,
+            ).alias("token_share"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# lexical diversity profile (TTR, hapax share, Yule's K)
+# --------------------------------------------------------------------------
+
+_LEXDIV_ORACLE = """
+WITH toks AS (
+  SELECT doc_id, t.tok
+  FROM documents, unnest(string_split(text, ' ')) AS t(tok)
+  WHERE t.tok != ''
+),
+counts AS (
+  SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY 1, 2
+),
+per_doc AS (
+  SELECT doc_id,
+         CAST(sum(c) AS BIGINT) AS n_tokens,
+         count(*) AS n_types,
+         CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
+         sum(CAST(c AS DOUBLE) * c) AS sum_c2
+  FROM counts GROUP BY doc_id
+)
+SELECT doc_id, n_tokens, n_types,
+       round(n_types / CAST(n_tokens AS DOUBLE) + 1e-6, 6) AS ttr,
+       round(n_hapax / CAST(n_types AS DOUBLE) + 1e-6, 6) AS hapax_share,
+       round(1e4 * (sum_c2 - n_tokens)
+             / (CAST(n_tokens AS DOUBLE) * n_tokens) + 1e-6, 4) AS yule_k
+FROM per_doc
+"""
+
+
+@register(
+    "lexical_diversity_profile",
+    oracle=_LEXDIV_ORACLE,
+    tags=("prepared-r8",),
+)
+def lexical_diversity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LEXICAL DIVERSITY per document: type-token ratio, hapax share
+    (tokens occurring once), and Yule's K — the length-robust
+    repetitiousness statistic ``10^4 * (sum_c(c^2 * V_c) - N) / N^2``
+    over the within-doc frequency spectrum. Low-K/high-TTR documents
+    read as varied prose; high-K documents are boilerplate/template —
+    a quality signal orthogonal to the corpus-level repetition filters
+    (``repeated_ngram_ratio`` counts adjacent repeats; K sees global
+    reuse).
+
+    Scale shape: explode to (doc, token) counts, then one per-doc
+    aggregate — two combinable hash aggregates keyed by doc, no
+    corpus-wide state. The empty token from the fixture's trailing
+    space is filtered identically on both engines."""
+    docs = load(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id",
+        F.explode(F.split("text", " ")).alias("tok"),
+    ).where(F.col("tok") != "")
+    counts = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
+    per_doc = counts.groupBy("doc_id").agg(
+        F.sum("c").alias("n_tokens"),
+        F.count("*").alias("n_types"),
+        F.sum((F.col("c") == 1).cast("long")).alias("n_hapax"),
+        F.sum(F.col("c").cast("double") * F.col("c")).alias("sum_c2"),
+    )
+    n = F.col("n_tokens").cast("double")
+    return per_doc.select(
+        "doc_id",
+        "n_tokens",
+        "n_types",
+        rnd(F.col("n_types") / n, 6).alias("ttr"),
+        rnd(F.col("n_hapax") / F.col("n_types"), 6).alias("hapax_share"),
+        rnd(1e4 * (F.col("sum_c2") - n) / (n * n), 4).alias("yule_k"),
+    )
+
+
+# --------------------------------------------------------------------------
+# vocabulary coverage curve (top-N token mass)
+# --------------------------------------------------------------------------
+
+#: top-N sizes swept by the coverage curve.
+COVERAGE_NS = (10, 100, 1000)
+
+
+_COVERAGE_ORACLE = f"""
+WITH toks AS (
+  SELECT t.tok
+  FROM documents, unnest(string_split(text, ' ')) AS t(tok)
+  WHERE t.tok != ''
+),
+counts AS (
+  SELECT tok, count(*) AS c FROM toks GROUP BY tok
+),
+total AS (
+  SELECT CAST(sum(c) AS BIGINT) AS total_tokens,
+         count(*) AS vocab_size
+  FROM counts
+),
+head AS (
+  SELECT c FROM counts ORDER BY c DESC, tok LIMIT {max(COVERAGE_NS)}
+),
+ranked AS (
+  SELECT c, row_number() OVER (ORDER BY c DESC) AS rn FROM head
+),
+cov AS (
+  SELECT t.n_top, CAST(sum(r.c) AS BIGINT) AS covered_tokens
+  FROM ranked r
+  JOIN (VALUES {", ".join(f"({n})" for n in COVERAGE_NS)}) t(n_top)
+    ON r.rn <= t.n_top
+  GROUP BY t.n_top
+)
+SELECT cov.n_top, cov.covered_tokens, tt.total_tokens, tt.vocab_size,
+       round(cov.covered_tokens / CAST(tt.total_tokens AS DOUBLE) + 1e-6, 6)
+         AS coverage_share
+FROM cov CROSS JOIN total tt
+"""
+
+
+@register(
+    "vocab_coverage_curve",
+    oracle=_COVERAGE_ORACLE,
+    tags=("prepared-r8",),
+)
+def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """VOCABULARY COVERAGE CURVE: share of the corpus's total token
+    occurrences covered by the top-N most frequent tokens, for N in
+    ``COVERAGE_NS`` — the tokenizer-budget decision table (where the
+    curve flattens is where growing the vocab stops paying; the
+    complement of ``oov_rate``'s fixed-vocab view and ``zipf_fit``'s
+    parametric fit). All N rows always emit.
+
+    Scale shape: token counts are a combinable hash agg; the top-N
+    head is a TakeOrdered (orderBy+limit — never a full sort) over the
+    bounded max(N); ranks and the sweep run over that constant-size
+    head with the 1-row total broadcast onto it."""
+    docs = load(spark, sf_dir, "documents")
+    toks = docs.select(
+        F.explode(F.split("text", " ")).alias("tok")
+    ).where(F.col("tok") != "")
+    counts = toks.groupBy("tok").agg(F.count("*").alias("c"))
+    total = counts.agg(
+        F.sum("c").alias("total_tokens"), F.count("*").alias("vocab_size")
+    )
+    head = counts.orderBy(F.col("c").desc(), F.col("tok")).limit(
+        max(COVERAGE_NS)
+    )
+    wr = Window.orderBy(F.col("c").desc(), F.col("tok"))
+    ranked = head.select("c", F.row_number().over(wr).alias("rn"))
+    fanned = ranked.select(
+        "c",
+        "rn",
+        F.explode(
+            F.array(*[F.lit(n) for n in COVERAGE_NS])
+        ).alias("n_top"),
+    ).where(F.col("rn") <= F.col("n_top"))
+    cov = fanned.groupBy("n_top").agg(
+        F.sum("c").alias("covered_tokens")
+    )
+    return cov.crossJoin(F.broadcast(total)).select(
+        "n_top",
+        "covered_tokens",
+        "total_tokens",
+        "vocab_size",
+        rnd(
+            F.col("covered_tokens") / F.col("total_tokens").cast("double"), 6
+        ).alias("coverage_share"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Cohen's kappa for the language-ID heuristic
+# --------------------------------------------------------------------------
+
+def _kappa_oracle() -> str:
+    stop_in = ", ".join(f"'{s}'" for s in STOPWORDS)
+    return f"""
+WITH per_doc AS (
+  SELECT CASE WHEN lang = 'en' THEN 'en' ELSE 'other' END AS a,
+         CASE WHEN len(list_filter(string_split(text, ' '),
+                                   t -> t IN ({stop_in})))
+                   / CAST(len(string_split(text, ' ')) AS DOUBLE) >= 0.05
+              THEN 'en' ELSE 'other' END AS b
+  FROM documents
+),
+agg AS (
+  SELECT count(*) AS n_docs,
+         CAST(sum(CASE WHEN a = b THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
+         CAST(sum(CASE WHEN a = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS a_en,
+         CAST(sum(CASE WHEN b = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS b_en
+  FROM per_doc
+)
+SELECT n_docs, n_agree,
+       round(n_agree / CAST(n_docs AS DOUBLE) + 1e-6, 6)
+         AS observed_agreement,
+       round((a_en / CAST(n_docs AS DOUBLE)) * (b_en / CAST(n_docs AS DOUBLE))
+             + (1.0 - a_en / CAST(n_docs AS DOUBLE))
+               * (1.0 - b_en / CAST(n_docs AS DOUBLE)) + 1e-6, 6)
+         AS chance_agreement,
+       round(CASE WHEN (a_en / CAST(n_docs AS DOUBLE))
+                       * (b_en / CAST(n_docs AS DOUBLE))
+                       + (1.0 - a_en / CAST(n_docs AS DOUBLE))
+                         * (1.0 - b_en / CAST(n_docs AS DOUBLE)) < 1.0
+                  THEN (n_agree / CAST(n_docs AS DOUBLE)
+                        - ((a_en / CAST(n_docs AS DOUBLE))
+                           * (b_en / CAST(n_docs AS DOUBLE))
+                           + (1.0 - a_en / CAST(n_docs AS DOUBLE))
+                             * (1.0 - b_en / CAST(n_docs AS DOUBLE))))
+                       / (1.0 - ((a_en / CAST(n_docs AS DOUBLE))
+                                 * (b_en / CAST(n_docs AS DOUBLE))
+                                 + (1.0 - a_en / CAST(n_docs AS DOUBLE))
+                                   * (1.0 - b_en / CAST(n_docs AS DOUBLE))))
+             END + 1e-6, 6) AS cohens_kappa
+FROM agg
+"""
+
+
+@register(
+    "lang_id_agreement_kappa",
+    oracle=_kappa_oracle(),
+    tags=("prepared-r8",),
+)
+def lang_id_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """COHEN'S KAPPA between the declared language (collapsed to the
+    classifier's {en, other} label space) and the marker-token
+    language-ID prediction — the chance-corrected scalar the
+    ``lang_confusion_matrix`` table rolls up to. Raw agreement flatters
+    a classifier when one class dominates; kappa subtracts exactly the
+    agreement the marginals would produce by luck.
+
+    Scale shape: composes the per-doc classifier (zero-shuffle
+    codegen) with one 1-row aggregate — marginal products come from
+    the same pass via conditional sums."""
+    per_doc = lang_id_heuristic(spark, sf_dir).select(
+        F.when(F.col("declared_lang") == "en", "en")
+        .otherwise("other")
+        .alias("a"),
+        F.col("predicted_lang").alias("b"),
+    )
+    agg = per_doc.agg(
+        F.count("*").alias("n_docs"),
+        F.sum((F.col("a") == F.col("b")).cast("long")).alias("n_agree"),
+        F.sum((F.col("a") == "en").cast("long")).alias("a_en"),
+        F.sum((F.col("b") == "en").cast("long")).alias("b_en"),
+    )
+    n = F.col("n_docs").cast("double")
+    po = F.col("n_agree") / n
+    pe = (F.col("a_en") / n) * (F.col("b_en") / n) + (
+        1.0 - F.col("a_en") / n
+    ) * (1.0 - F.col("b_en") / n)
+    kappa = F.when(pe < 1.0, (po - pe) / (1.0 - pe))
+    return agg.select(
+        "n_docs",
+        "n_agree",
+        rnd(po, 6).alias("observed_agreement"),
+        rnd(pe, 6).alias("chance_agreement"),
+        rnd(kappa, 6).alias("cohens_kappa"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Burrows' Delta stylometric distance between sources
+# --------------------------------------------------------------------------
+
+#: most-frequent-token vocabulary size for the style fingerprint.
+DELTA_TOP_N = 30
+
+
+_DELTA_ORACLE = f"""
+WITH toks AS (
+  SELECT source, t.tok
+  FROM documents, unnest(string_split(text, ' ')) AS t(tok)
+  WHERE t.tok != ''
+),
+top AS (
+  SELECT tok FROM (
+    SELECT tok, count(*) AS c FROM toks GROUP BY tok
+    ORDER BY c DESC, tok LIMIT {DELTA_TOP_N}
+  )
+),
+src_tot AS (
+  SELECT source, count(*) AS tot FROM toks GROUP BY source
+),
+src_tok AS (
+  SELECT s.source, s.tok, count(*) AS c
+  FROM toks s JOIN top ON s.tok = top.tok
+  GROUP BY 1, 2
+),
+spine AS (
+  SELECT st.source, st.tot, top.tok FROM src_tot st CROSS JOIN top
+),
+freqs AS (
+  SELECT sp.source, sp.tok,
+         COALESCE(sk.c, 0) / CAST(sp.tot AS DOUBLE) AS f
+  FROM spine sp LEFT JOIN src_tok sk
+    ON sp.source = sk.source AND sp.tok = sk.tok
+),
+z AS (
+  SELECT source, tok,
+         CASE WHEN stddev_samp(f) OVER (PARTITION BY tok) > 0
+              THEN (f - avg(f) OVER (PARTITION BY tok))
+                   / stddev_samp(f) OVER (PARTITION BY tok)
+              ELSE 0.0 END AS z
+  FROM freqs
+)
+SELECT a.source AS src_a, b.source AS src_b,
+       round(avg(abs(a.z - b.z)) + 1e-6, 6) AS burrows_delta
+FROM z a JOIN z b ON a.tok = b.tok AND a.source < b.source
+GROUP BY 1, 2
+"""
+
+
+@register("burrows_delta", oracle=_DELTA_ORACLE, tags=("prepared-r8",))
+def burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BURROWS' DELTA between corpus sources: take the corpus's top-N
+    most frequent tokens, compute each source's relative frequency per
+    token, z-score each token's frequencies ACROSS sources, and score
+    every source pair by the mean absolute z difference — the standard
+    stylometric distance (authorship forensics), repurposed as a
+    source-style drift monitor: a source whose Delta to every sibling
+    jumps has changed its generator/template. Emits all source pairs.
+
+    Scale shape: token counts are one combinable agg; the top-N head
+    is a TakeOrdered; per-source frequencies and cross-source z-scores
+    run over the bounded sources x N table; the pair scoring is a
+    bounded self-join on token."""
+    docs = load(spark, sf_dir, "documents")
+    toks = docs.select(
+        "source", F.explode(F.split("text", " ")).alias("tok")
+    ).where(F.col("tok") != "")
+    top = (
+        toks.groupBy("tok")
+        .agg(F.count("*").alias("c"))
+        .orderBy(F.col("c").desc(), F.col("tok"))
+        .limit(DELTA_TOP_N)
+        .select("tok")
+    )
+    src_tot = toks.groupBy("source").agg(F.count("*").alias("tot"))
+    src_tok = (
+        toks.join(top, "tok")
+        .groupBy("source", "tok")
+        .agg(F.count("*").alias("c"))
+    )
+    # every (source, top-token) cell must exist (zero counts included)
+    spine = src_tot.select("source", "tot").crossJoin(F.broadcast(top))
+    freqs = spine.join(src_tok, ["source", "tok"], "left").select(
+        "source",
+        "tok",
+        (F.coalesce("c", F.lit(0)) / F.col("tot").cast("double")).alias("f"),
+    )
+    wz = Window.partitionBy("tok")
+    z = freqs.select(
+        "source",
+        "tok",
+        F.when(
+            F.stddev_samp("f").over(wz) > 0,
+            (F.col("f") - F.avg("f").over(wz)) / F.stddev_samp("f").over(wz),
+        ).otherwise(0.0).alias("z"),
+    )
+    a = z.select(F.col("source").alias("src_a"), "tok", F.col("z").alias("za"))
+    b = z.select(F.col("source").alias("src_b"), "tok", F.col("z").alias("zb"))
+    return (
+        a.join(b, "tok")
+        .where(F.col("src_a") < F.col("src_b"))
+        .groupBy("src_a", "src_b")
+        .agg(rnd(F.avg(F.abs(F.col("za") - F.col("zb"))), 6).alias(
+            "burrows_delta"
+        ))
+    )
+
+
+# --------------------------------------------------------------------------
+# Chao1 unseen-vocabulary richness
+# --------------------------------------------------------------------------
+
+_CHAO1_ORACLE = """
+WITH toks AS (
+  SELECT source, t.tok
+  FROM documents, unnest(string_split(text, ' ')) AS t(tok)
+  WHERE t.tok != ''
+),
+counts AS (
+  SELECT source, tok, count(*) AS c FROM toks GROUP BY 1, 2
+),
+spec AS (
+  SELECT source, count(*) AS v_obs,
+         CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
+         CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2
+  FROM counts GROUP BY source
+)
+SELECT source, v_obs, f1, f2,
+       round(v_obs + CASE WHEN f2 > 0
+                          THEN CAST(f1 AS DOUBLE) * f1 / (2.0 * f2)
+                          ELSE CAST(f1 AS DOUBLE) * (f1 - 1.0) / 2.0 END
+             + 1e-6, 2) AS chao1_estimate,
+       round(1.0 - v_obs / (v_obs + CASE WHEN f2 > 0
+                          THEN CAST(f1 AS DOUBLE) * f1 / (2.0 * f2)
+                          ELSE CAST(f1 AS DOUBLE) * (f1 - 1.0) / 2.0 END)
+             + 1e-6, 6) AS unseen_share
+FROM spec
+"""
+
+
+@register(
+    "chao1_vocabulary_richness",
+    oracle=_CHAO1_ORACLE,
+    tags=("prepared-r8",),
+)
+def chao1_vocabulary_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CHAO1 RICHNESS per source: estimate the TRUE vocabulary size —
+    including tokens never observed — from the frequency spectrum's
+    rare end (``V + f1^2 / (2 f2)``; the bias-corrected
+    ``V + f1(f1-1)/2`` form when no doubletons exist), plus the
+    implied unseen share. The unseen-mass counterpart of
+    ``vocab_coverage_curve`` (how much of what we HAVE is covered) and
+    the corpus-side sibling of ``capture_recapture_estimate``: both
+    infer what sampling has not yet shown. A source with a high unseen
+    share needs more data before its token statistics stabilize.
+
+    Scale shape: two stacked combinable hash aggs ((source, token)
+    counts, then the per-source spectrum reduce)."""
+    docs = load(spark, sf_dir, "documents")
+    toks = docs.select(
+        "source", F.explode(F.split("text", " ")).alias("tok")
+    ).where(F.col("tok") != "")
+    counts = toks.groupBy("source", "tok").agg(F.count("*").alias("c"))
+    spec = counts.groupBy("source").agg(
+        F.count("*").alias("v_obs"),
+        F.sum((F.col("c") == 1).cast("long")).alias("f1"),
+        F.sum((F.col("c") == 2).cast("long")).alias("f2"),
+    )
+    f1 = F.col("f1").cast("double")
+    f2 = F.col("f2").cast("double")
+    chao = F.col("v_obs") + F.when(
+        F.col("f2") > 0, f1 * f1 / (2.0 * f2)
+    ).otherwise(f1 * (f1 - 1.0) / 2.0)
+    return spec.select(
+        "source",
+        "v_obs",
+        "f1",
+        "f2",
+        rnd(chao, 2).alias("chao1_estimate"),
+        rnd(1.0 - F.col("v_obs") / chao, 6).alias("unseen_share"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Theil inequality index with between/within decomposition
+# --------------------------------------------------------------------------
+
+_THEIL_ORACLE = f"""
+WITH per AS (
+  SELECT source, count(*) AS n_g, sum(x) AS s_g, sum(x * ln(x)) AS sxlx_g
+  FROM (
+    SELECT source,
+           CAST(len(string_split(text, ' ')) AS DOUBLE) AS x
+    FROM documents
+  ) WHERE x > 0
+  GROUP BY source
+),
+tot AS (
+  SELECT sum(n_g) AS n, sum(s_g) AS s, sum(sxlx_g) AS sxlx FROM per
+),
+j AS (
+  SELECT p.*, t.n, t.s, t.sxlx,
+         t.s / t.n AS mu, p.s_g / p.n_g AS mu_g,
+         (p.sxlx_g - ln(p.s_g / p.n_g) * p.s_g) / (p.n_g * (p.s_g / p.n_g))
+           AS t_g,
+         p.s_g / t.s AS share_g,
+         ln((p.s_g / p.n_g) / (t.s / t.n)) * (p.s_g / t.s) AS between_c,
+         (t.sxlx - ln(t.s / t.n) * t.s) / (t.n * (t.s / t.n)) AS total_t
+  FROM per p CROSS JOIN tot t
+)
+SELECT source,
+       CAST(n_g AS BIGINT) AS n_docs,
+       round(mu_g + {NUDGE}, 4) AS mean_tokens,
+       round(t_g + {NUDGE}, 6) AS theil_within_group,
+       round(share_g + {NUDGE}, 6) AS token_share,
+       round(between_c + {NUDGE}, 6) AS between_contrib,
+       round(total_t + {NUDGE}, 6) AS theil_total,
+       round(sum(between_c) OVER () + {NUDGE}, 6) AS theil_between,
+       round(sum(share_g * t_g) OVER () + {NUDGE}, 6) AS theil_within
+FROM j
+"""
+
+
+@register("theil_decomposition", oracle=_THEIL_ORACLE, tags=("prepared-r10",))
+def theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """THEIL-T INEQUALITY of document token counts, DECOMPOSED by
+    source: T = (1/N) sum (x/mu) ln(x/mu) splits EXACTLY into
+    between-group + within-group components — the property Gini lacks
+    (``revenue_concentration_gini`` compresses to one number; Theil
+    says how much inequality lives BETWEEN sources vs INSIDE them,
+    which is the actionable split for corpus balancing). The exact
+    additivity T = B + W is itself a pytest invariant.
+
+    Scale shape: ONE combinable per-source aggregate carrying
+    (n, sum x, sum x*ln x) — sufficient statistics for every component
+    — then pure algebra over the source-bounded rows. Per-source rows
+    emit group stats + contribution; the global T/B/W ride along as
+    constant columns."""
+    docs = load(spark, sf_dir, "documents")
+    x = F.size(F.split("text", " ")).cast("double")
+    per = (
+        docs.select("source", x.alias("x"))
+        .where(F.col("x") > 0)
+        .groupBy("source")
+        .agg(
+            F.count("*").alias("n_g"),
+            F.sum("x").alias("s_g"),
+            F.sum(F.col("x") * F.log("x")).alias("sxlx_g"),
+        )
+    )
+    tot = per.agg(
+        F.sum("n_g").alias("n"),
+        F.sum("s_g").alias("s"),
+        F.sum("sxlx_g").alias("sxlx"),
+    )
+    j = per.crossJoin(F.broadcast(tot))
+    mu = F.col("s") / F.col("n")
+    mu_g = F.col("s_g") / F.col("n_g")
+    # T_g = (1/(n_g*mu_g)) * (sxlx_g - ln(mu_g)*s_g)
+    t_g = (F.col("sxlx_g") - F.log(mu_g) * F.col("s_g")) / (
+        F.col("n_g") * mu_g
+    )
+    share_g = F.col("s_g") / F.col("s")  # = (n_g/N)(mu_g/mu)
+    between = F.log(mu_g / mu) * share_g  # summed over groups -> B
+    total_t = (F.col("sxlx") - F.log(mu) * F.col("s")) / (F.col("n") * mu)
+    wall = Window.partitionBy()
+    out = j.select(
+        "source",
+        F.col("n_g").alias("n_docs"),
+        rnd(mu_g, 4).alias("mean_tokens"),
+        rnd(t_g, 6).alias("theil_within_group"),
+        rnd(share_g, 6).alias("token_share"),
+        rnd(between, 6).alias("between_contrib"),
+        rnd(total_t, 6).alias("theil_total"),
+        rnd(F.sum(between).over(wall), 6).alias("theil_between"),
+        rnd(F.sum(share_g * t_g).over(wall), 6).alias("theil_within"),
+    )
+    return out
+
+
+# --------------------------------------------------------------------------
+# held-out unigram perplexity (train/eval split LM evaluation)
+# --------------------------------------------------------------------------
+
+PPL_TRAIN_MOD = 10  #: deterministic split modulus over doc_id
+PPL_TRAIN_LT = 8  #: doc_id % MOD < LT -> train (80/20 split)
+LN2 = 0.6931471805599453  #: math.log(2) as a shared Python-float literal
+
+
+_PPL_ORACLE = f"""
+WITH train_tok AS (
+  SELECT unnest(string_split(text, ' ')) AS token
+  FROM documents WHERE doc_id % {PPL_TRAIN_MOD} < {PPL_TRAIN_LT}
+),
+counts AS (SELECT token, count(*) AS c FROM train_tok GROUP BY 1),
+tot AS (
+  SELECT CAST(sum(c) AS BIGINT) AS n_train, count(*) AS v_train FROM counts
+),
+ev AS (
+  SELECT source, unnest(string_split(text, ' ')) AS token
+  FROM documents WHERE doc_id % {PPL_TRAIN_MOD} >= {PPL_TRAIN_LT}
+),
+j AS (
+  SELECT e.source, c.c, t.n_train, t.v_train
+  FROM ev e LEFT JOIN counts c ON e.token = c.token CROSS JOIN tot t
+),
+agg AS (
+  SELECT source, count(*) AS n_tokens,
+         CAST(sum(CASE WHEN c IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_oov,
+         avg(ln(CAST(coalesce(c, 0) + 1 AS DOUBLE)
+                / CAST(n_train + v_train + 1 AS DOUBLE))) AS mean_lp
+  FROM j GROUP BY 1
+)
+SELECT source, n_tokens, n_oov,
+       round(CAST(n_oov AS DOUBLE) / n_tokens + {NUDGE}, 6) AS oov_share,
+       round(-mean_lp / {LN2} + {NUDGE}, 6) AS cross_entropy_bits,
+       round(pow(2.0, round(-mean_lp / {LN2} + {NUDGE}, 6)) + {NUDGE}, 4)
+         AS perplexity
+FROM agg
+"""
+
+
+@register(
+    "unigram_perplexity_split",
+    oracle=_PPL_ORACLE,
+    tags=("prepared-r10",),
+)
+def unigram_perplexity_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HELD-OUT UNIGRAM PERPLEXITY per source: train an add-one-
+    smoothed unigram LM on the deterministic 80% doc_id split, then
+    score the held-out 20% — cross-entropy (bits/token), perplexity,
+    and OOV share per source. This is the classic cheap corpus-quality
+    / domain-shift probe a training-data pipeline runs before paying
+    for a real LM pass: a source whose held-out perplexity under the
+    corpus LM is an outlier is distributionally unlike the rest.
+    Perplexity is exponentiated from the ROUNDED cross-entropy so both
+    engines pow() identical doubles.
+
+    Scale shape: token explode -> one combinable count aggregate
+    (vocab-bounded), a 1-row totals broadcast, an eval-side
+    vocab-bounded left join, then one per-source aggregate. No windows,
+    no driver loops; everything map-side combinable."""
+    docs = load(spark, sf_dir, "documents")
+    train_tok = docs.where(
+        F.col("doc_id") % PPL_TRAIN_MOD < PPL_TRAIN_LT
+    ).select(F.explode(F.split("text", " ")).alias("token"))
+    counts = train_tok.groupBy("token").agg(F.count("*").alias("c"))
+    tot = counts.agg(
+        F.sum("c").alias("n_train"), F.count("*").alias("v_train")
+    )
+    ev = docs.where(F.col("doc_id") % PPL_TRAIN_MOD >= PPL_TRAIN_LT).select(
+        "source", F.explode(F.split("text", " ")).alias("token")
+    )
+    j = ev.join(counts, "token", "left").crossJoin(F.broadcast(tot))
+    denom = (F.col("n_train") + F.col("v_train") + 1).cast("double")
+    logp = F.log(
+        (F.coalesce(F.col("c"), F.lit(0)) + 1).cast("double") / denom
+    )
+    agg = j.groupBy("source").agg(
+        F.count("*").alias("n_tokens"),
+        F.sum(F.when(F.col("c").isNull(), 1).otherwise(0))
+        .cast("long")
+        .alias("n_oov"),
+        F.avg(logp).alias("mean_lp"),
+    )
+    h = rnd(-F.col("mean_lp") / F.lit(LN2), 6)
+    return agg.select(
+        "source",
+        "n_tokens",
+        "n_oov",
+        rnd(F.col("n_oov") / F.col("n_tokens"), 6).alias("oov_share"),
+        h.alias("cross_entropy_bits"),
+        rnd(F.pow(F.lit(2.0), h), 4).alias("perplexity"),
+    )
+
+
+# --------------------------------------------------------------------------
+# pairwise Jensen-Shannon divergence between source unigram mixes
+# --------------------------------------------------------------------------
+
+INV_LN2 = 1.4426950408889634  #: 1/ln(2) as a shared Python-float literal
+
+
+_JS_ORACLE = f"""
+WITH tok AS (
+  SELECT source, unnest(string_split(text, ' ')) AS token FROM documents
+),
+counts AS (
+  SELECT source, token, count(*) AS c FROM tok GROUP BY 1, 2
+),
+totals AS (SELECT source, count(*) AS n FROM tok GROUP BY 1),
+probs AS (
+  SELECT c.source, c.token, CAST(c.c AS DOUBLE) / t.n AS p
+  FROM counts c JOIN totals t ON c.source = t.source
+),
+pairs AS (
+  SELECT a.source AS source_a, b.source AS source_b,
+         a.p AS pa, b.p AS pb
+  FROM probs a JOIN probs b
+    ON a.token = b.token AND a.source < b.source
+),
+agg AS (
+  SELECT source_a, source_b, count(*) AS shared_vocab,
+         sum(pa) AS sa, sum(pb) AS sb,
+         sum(pa * ln(2.0 * pa / (pa + pb))
+             + pb * ln(2.0 * pb / (pa + pb))) AS common_nats
+  FROM pairs GROUP BY 1, 2
+)
+SELECT source_a, source_b, shared_vocab,
+       round(sa + {NUDGE}, 6) AS shared_mass_a,
+       round(sb + {NUDGE}, 6) AS shared_mass_b,
+       round(0.5 * common_nats * {INV_LN2}
+             + 0.5 * ((1 - sa) + (1 - sb)) + {NUDGE}, 6)
+         AS js_divergence_bits
+FROM agg
+"""
+
+
+@register(
+    "jensen_shannon_source_divergence",
+    oracle=_JS_ORACLE,
+    tags=("prepared-r10",),
+)
+def jensen_shannon_source_divergence(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PAIRWISE JENSEN-SHANNON DIVERGENCE (bits) between every source
+    pair's unigram distribution — the symmetric, bounded [0,1]
+    distance behind data-mixture design (KL is asymmetric and infinite
+    on disjoint support; JS is neither). Decomposed so only SHARED
+    tokens need the join: an exclusive token contributes exactly
+    p/2 bits, so JS = 0.5*sum_shared[p*log2(2p/(p+q)) +
+    q*log2(2q/(p+q))] + (1-shared_mass_a)/2 + (1-shared_mass_b)/2.
+    log2 is expressed as ln * INV_LN2 with the SAME literal on both
+    engines.
+
+    Scale shape: per-source token counts (combinable), a broadcast
+    totals join, then a self-equi-join ON TOKEN (each token expands to
+    at most sources^2 pairs — vocab x pairs rows, never corpus-
+    cardinality), one pair-bounded aggregate."""
+    docs = load(spark, sf_dir, "documents")
+    tok = docs.select(
+        "source", F.explode(F.split("text", " ")).alias("token")
+    )
+    counts = tok.groupBy("source", "token").agg(F.count("*").alias("c"))
+    totals = tok.groupBy("source").agg(F.count("*").alias("n"))
+    probs = counts.join(F.broadcast(totals), "source").select(
+        "source",
+        "token",
+        (F.col("c").cast("double") / F.col("n")).alias("p"),
+    )
+    a = probs.select(
+        F.col("source").alias("source_a"),
+        "token",
+        F.col("p").alias("pa"),
+    )
+    b = probs.select(
+        F.col("source").alias("source_b"),
+        "token",
+        F.col("p").alias("pb"),
+    )
+    pairs = a.join(b, "token").where(F.col("source_a") < F.col("source_b"))
+    term = F.col("pa") * F.log(
+        F.lit(2.0) * F.col("pa") / (F.col("pa") + F.col("pb"))
+    ) + F.col("pb") * F.log(
+        F.lit(2.0) * F.col("pb") / (F.col("pa") + F.col("pb"))
+    )
+    agg = pairs.groupBy("source_a", "source_b").agg(
+        F.count("*").alias("shared_vocab"),
+        F.sum("pa").alias("sa"),
+        F.sum("pb").alias("sb"),
+        F.sum(term).alias("common_nats"),
+    )
+    js = (
+        0.5 * F.col("common_nats") * F.lit(INV_LN2)
+        + 0.5 * ((1 - F.col("sa")) + (1 - F.col("sb")))
+    )
+    return agg.select(
+        "source_a",
+        "source_b",
+        "shared_vocab",
+        rnd("sa", 6).alias("shared_mass_a"),
+        rnd("sb", 6).alias("shared_mass_b"),
+        rnd(js, 6).alias("js_divergence_bits"),
+    )
+
+
+# --------------------------------------------------------------------------
+# readability scores (Flesch / Flesch-Kincaid heuristics)
+# --------------------------------------------------------------------------
+
+VOWEL_RE = "[aeiouy]+"  #: vowel-group syllable heuristic
+SENT_RE = "[.!?]+"  #: sentence-terminator runs
+
+
+_READ_ORACLE = f"""
+WITH per AS (
+  SELECT source,
+         CAST(len(string_split(text, ' ')) AS DOUBLE) AS w,
+         CAST(len(regexp_extract_all(lower(text), '{VOWEL_RE}'))
+              AS DOUBLE) AS s,
+         greatest(1.0,
+           CAST(len(regexp_extract_all(text, '[.!?]+')) AS DOUBLE)) AS st
+  FROM documents
+)
+SELECT source, count(*) AS n_docs,
+       round(avg(w) + {NUDGE}, 4) AS avg_words,
+       round(avg(s / w) + {NUDGE}, 6) AS avg_syllables_per_word,
+       round(avg(206.835 - 1.015 * w / st - 84.6 * s / w) + {NUDGE}, 4)
+         AS avg_flesch_reading_ease,
+       round(avg(0.39 * w / st + 11.8 * s / w - 15.59) + {NUDGE}, 4)
+         AS avg_fk_grade
+FROM per
+WHERE w > 0
+GROUP BY source
+"""
+
+
+@register("readability_scores", oracle=_READ_ORACLE, tags=("prepared-r10",))
+def readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """READABILITY PROFILE per source: Flesch reading ease and
+    Flesch-Kincaid grade from the classic word/sentence/syllable
+    counts, with syllables approximated by VOWEL-GROUP runs (the
+    standard dictionary-free heuristic) and sentence count floored at
+    1 (the synthetic corpus has no terminators — the formula then
+    degrades gracefully to the words-per-doc axis). Complements
+    `quality_score` (structural ratios) with the formula every corpus
+    datacard quotes.
+
+    Scale shape: three regexp counts per document — map-only,
+    whole-stage codegen, zero joins — then one per-source aggregate."""
+    docs = load(spark, sf_dir, "documents")
+    words = F.size(F.split("text", " ")).cast("double")
+    syll = F.size(
+        F.regexp_extract_all(F.lower(F.col("text")), F.lit(VOWEL_RE), 0)
+    ).cast("double")
+    sents = F.greatest(
+        F.lit(1.0),
+        F.size(F.regexp_extract_all("text", F.lit(SENT_RE), 0)).cast(
+            "double"
+        ),
+    )
+    per = docs.select(
+        "source",
+        words.alias("w"),
+        syll.alias("s"),
+        sents.alias("st"),
+    ).where(F.col("w") > 0)
+    scored = per.select(
+        "source",
+        "w",
+        "s",
+        "st",
+        (
+            F.lit(206.835)
+            - F.lit(1.015) * F.col("w") / F.col("st")
+            - F.lit(84.6) * F.col("s") / F.col("w")
+        ).alias("flesch"),
+        (
+            F.lit(0.39) * F.col("w") / F.col("st")
+            + F.lit(11.8) * F.col("s") / F.col("w")
+            - F.lit(15.59)
+        ).alias("fk"),
+    )
+    return scored.groupBy("source").agg(
+        F.count("*").alias("n_docs"),
+        rnd(F.avg("w"), 4).alias("avg_words"),
+        rnd(F.avg(F.col("s") / F.col("w")), 6).alias(
+            "avg_syllables_per_word"
+        ),
+        rnd(F.avg("flesch"), 4).alias("avg_flesch_reading_ease"),
+        rnd(F.avg("fk"), 4).alias("avg_fk_grade"),
+    )
+
+
+# --------------------------------------------------------------------------
+# eval-split bigram coverage by the train split
+# --------------------------------------------------------------------------
+
+_NGCOV_ORACLE = f"""
+WITH bi AS (
+  SELECT doc_id, source,
+         unnest(CASE WHEN len(string_split(text, ' ')) >= 2
+                THEN list_transform(
+                       range(1, len(string_split(text, ' '))),
+                       i -> string_split(text, ' ')[i] || ' '
+                            || string_split(text, ' ')[i + 1])
+                ELSE [] END) AS bigram
+  FROM documents
+),
+train_bi AS (
+  SELECT DISTINCT bigram, 1 AS seen
+  FROM bi WHERE doc_id % {PPL_TRAIN_MOD} < {PPL_TRAIN_LT}
+),
+ev AS (
+  SELECT source, bigram FROM bi
+  WHERE doc_id % {PPL_TRAIN_MOD} >= {PPL_TRAIN_LT}
+),
+j AS (
+  SELECT e.source, e.bigram, t.seen
+  FROM ev e LEFT JOIN train_bi t ON e.bigram = t.bigram
+),
+occ AS (
+  SELECT source, count(*) AS n_bigrams,
+         round(sum(CASE WHEN seen IS NOT NULL THEN 1.0 ELSE 0.0 END)
+               / count(*) + {NUDGE}, 6) AS occurrence_coverage
+  FROM j GROUP BY 1
+),
+dist AS (
+  SELECT source, count(*) AS n_distinct_bigrams,
+         round(sum(CASE WHEN seen IS NOT NULL THEN 1.0 ELSE 0.0 END)
+               / count(*) + {NUDGE}, 6) AS distinct_coverage
+  FROM (SELECT DISTINCT source, bigram, seen FROM j) GROUP BY 1
+)
+SELECT o.source, o.n_bigrams, o.occurrence_coverage,
+       d.n_distinct_bigrams, d.distinct_coverage
+FROM occ o JOIN dist d ON o.source = d.source
+"""
+
+
+@register(
+    "ngram_coverage_overlap",
+    oracle=_NGCOV_ORACLE,
+    tags=("prepared-r10",),
+)
+def ngram_coverage_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BIGRAM COVERAGE of the held-out split by the train split, per
+    source: what share of eval bigram OCCURRENCES (and of DISTINCT
+    eval bigrams) was seen in training — the order-2 companion of
+    `unigram_perplexity_split` (unigram OOV misses compositional
+    novelty; a source can share every word yet pair them in unseen
+    ways). Bigrams are built positionally on BOTH engines (explicit
+    index transform over the token array — 1-based, guarded for
+    single-token docs) so tokenization parity is exact.
+
+    Scale shape: bigram explode -> one distinct train set (equi-join
+    key), eval-side left join, one per-source aggregate. The join key
+    is the bigram string — vocab^2-bounded in principle, corpus-
+    bounded in practice, and an EQUI-join either way."""
+    docs = load(spark, sf_dir, "documents")
+    toks = F.split("text", " ")
+    n = F.size(toks)
+    bigrams = F.when(
+        n >= 2,
+        F.transform(
+            F.sequence(F.lit(1), n - 1),
+            lambda i: F.concat_ws(
+                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    train_bi = (
+        docs.where(F.col("doc_id") % PPL_TRAIN_MOD < PPL_TRAIN_LT)
+        .select(F.explode(bigrams).alias("bigram"))
+        .distinct()
+        .withColumn("seen", F.lit(1))
+    )
+    ev = docs.where(F.col("doc_id") % PPL_TRAIN_MOD >= PPL_TRAIN_LT).select(
+        "source", F.explode(bigrams).alias("bigram")
+    )
+    j = ev.join(train_bi, "bigram", "left")
+    occ = j.groupBy("source").agg(
+        F.count("*").alias("n_bigrams"),
+        rnd(
+            F.sum(F.when(F.col("seen").isNotNull(), 1.0).otherwise(0.0))
+            / F.count("*"),
+            6,
+        ).alias("occurrence_coverage"),
+    )
+    dist = (
+        j.select("source", "bigram", "seen")
+        .distinct()
+        .groupBy("source")
+        .agg(
+            F.count("*").alias("n_distinct_bigrams"),
+            rnd(
+                F.sum(
+                    F.when(F.col("seen").isNotNull(), 1.0).otherwise(0.0)
+                )
+                / F.count("*"),
+                6,
+            ).alias("distinct_coverage"),
+        )
+    )
+    return occ.join(dist, "source")

@@ -273,11 +273,16 @@ def register(
 
 def _ensure_loaded() -> None:
     """Import every operator module so registrations run."""
+    import flink_cookbook_spark.operators.drift  # noqa: F401
+    import flink_cookbook_spark.operators.experiments  # noqa: F401
+    import flink_cookbook_spark.operators.forecasting  # noqa: F401
+    import flink_cookbook_spark.operators.geo  # noqa: F401
     import flink_cookbook_spark.operators.graph  # noqa: F401
     import flink_cookbook_spark.operators.metrics  # noqa: F401
     import flink_cookbook_spark.operators.mleval  # noqa: F401
     import flink_cookbook_spark.operators.relational  # noqa: F401
     import flink_cookbook_spark.operators.skew  # noqa: F401
+    import flink_cookbook_spark.operators.stats  # noqa: F401
     import flink_cookbook_spark.operators.timeseries  # noqa: F401
     import flink_cookbook_spark.operators.tpch  # noqa: F401
     import flink_cookbook_spark.operators.windows  # noqa: F401
@@ -296,20 +301,6 @@ def _ensure_loaded() -> None:
     import flink_cookbook_spark.streaming.sarimax  # noqa: F401
     import flink_cookbook_spark.streaming.sources  # noqa: F401
     import flink_cookbook_spark.streaming.twins  # noqa: F401
-
-    # round-8 flip: the round-7 prepared cohort registers here (the
-    # call is idempotent — see pipeline/prepared.py docstring). The
-    # prepared module bootstraps composed oracles through get_query()
-    # during ITS import, which re-enters this function; skip while it
-    # is mid-import (no `activate` attribute yet) — the outer frame's
-    # import completes and activates.
-    import sys
-
-    _mod = sys.modules.get("flink_cookbook_spark.pipeline.prepared")
-    if _mod is None or hasattr(_mod, "activate"):
-        from flink_cookbook_spark.pipeline import prepared
-
-        prepared.activate()
 
 
 def get_query(name: str) -> QuerySpec:

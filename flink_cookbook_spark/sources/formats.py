@@ -634,3 +634,77 @@ FROM merged GROUP BY 1
 """,
     tags=("schema-evolution", "union", "surface"),
 )(union_by_name_evolution)
+
+
+# --------------------------------------------------------------------------
+# write-side file compaction plan
+# --------------------------------------------------------------------------
+
+#: target output file size in bytes. Fixture-scaled so the plan is
+#: non-trivial on the shipped corpus; a production deployment sets the
+#: usual 128 MB-class value — every downstream formula is size-relative.
+TARGET_FILE_BYTES = 16384
+
+
+_COMPACTION_ORACLE = f"""
+WITH cells AS (
+  SELECT source, lang, count(*) AS n_docs,
+         CAST(sum(n_chars) AS BIGINT) AS est_bytes
+  FROM documents GROUP BY 1, 2
+)
+SELECT source, lang, n_docs, est_bytes,
+       greatest(1, CAST(ceil(est_bytes / {float(TARGET_FILE_BYTES)}) AS BIGINT))
+         AS target_files,
+       CAST(ceil(n_docs / CAST(greatest(1,
+            CAST(ceil(est_bytes / {float(TARGET_FILE_BYTES)}) AS BIGINT))
+            AS DOUBLE)) AS BIGINT) AS docs_per_file,
+       round(est_bytes / CAST(greatest(1,
+            CAST(ceil(est_bytes / {float(TARGET_FILE_BYTES)}) AS BIGINT))
+            AS DOUBLE) + 1e-6, 2) AS avg_file_bytes,
+       est_bytes < {TARGET_FILE_BYTES / 2} AS coalesce_candidate
+FROM cells
+"""
+
+
+@register(
+    "file_compaction_plan",
+    oracle=_COMPACTION_ORACLE,
+    tags=("prepared-r8",),
+)
+def file_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WRITE-SIDE COMPACTION PLAN per (source, lang) output partition:
+    estimated partition bytes (n_chars as the serialized-size proxy),
+    the target file count at ``TARGET_FILE_BYTES``, docs per file, and
+    a coalesce flag for partitions under half a target file — the
+    planning table behind every small-file-problem cleanup. The writer
+    turns this directly into ``repartition(target_files)`` per
+    partition (or AQE coalesce for the flagged ones).
+
+    Scale shape: one combinable hash aggregate to the partition-cell
+    grain; all planning math is per-cell arithmetic. Ceil stays on
+    DOUBLE and is floor'd explicitly on both engines (the
+    cast-truncation-vs-round-half-even trap does not arise: ceil
+    results are exact integers in double)."""
+    docs = load(spark, sf_dir, "documents")
+    cells = docs.groupBy("source", "lang").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_chars").alias("est_bytes"),
+    )
+    target = F.greatest(
+        F.lit(1).cast("long"),
+        F.ceil(F.col("est_bytes") / float(TARGET_FILE_BYTES)),
+    )
+    return cells.select(
+        "source",
+        "lang",
+        "n_docs",
+        "est_bytes",
+        target.alias("target_files"),
+        F.ceil(F.col("n_docs") / target.cast("double")).alias("docs_per_file"),
+        rnd(F.col("est_bytes") / target.cast("double"), 2).alias(
+            "avg_file_bytes"
+        ),
+        (F.col("est_bytes") < TARGET_FILE_BYTES / 2).alias(
+            "coalesce_candidate"
+        ),
+    )

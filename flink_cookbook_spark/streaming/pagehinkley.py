@@ -12,7 +12,7 @@ windowed drift monitor (``streaming/driftmon.py``, a two-sample KS gap
 per window), PH is STRICTLY ONLINE: constant state per key — five
 scalars — no window buffer, no reference histogram; it is the
 streaming twin of the batch ``page_hinkley_drift`` replay
-(pipeline/prepared19.py), which applies the same recurrence to daily
+(operators/drift.py), which applies the same recurrence to daily
 means under a full DuckDB value-hash oracle.
 
 Scale shape: keys hash-partition across executors via the

@@ -1,7 +1,7 @@
 """Streaming token-bucket rate limiter: the admission-control operator
 in its native stateful-streaming form.
 
-The batch replay (``pipeline/prepared9.rate_limit_simulation``) proves
+The batch replay (``operators/timeseries.rate_limit_simulation``) proves
 the bucket recurrence against the DuckDB oracle per user-day; this is
 the operator a gateway actually runs — ``applyInPandasWithState``
 keyed by USER, so unlike the single-experiment streaming SPRT
@@ -29,7 +29,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from flink_cookbook_spark.pipeline.prepared9 import RL_BURST, RL_REFILL_S
+from flink_cookbook_spark.operators.timeseries import RL_BURST, RL_REFILL_S
 
 #: output: one cumulative row per user per micro-batch.
 RL_SCHEMA = (

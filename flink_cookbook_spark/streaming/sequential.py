@@ -1,7 +1,7 @@
 """Streaming SPRT: Wald's sequential probability-ratio test as a
 stateful Structured Streaming operator.
 
-The batch replay (``pipeline/prepared8.sprt_sequential_test``) proves
+The batch replay (``operators/experiments.sprt_sequential_test``) proves
 the DECISION MATH against the DuckDB oracle; this module is the form
 the operator actually ships in — a sequential test is intrinsically a
 streaming computation (observe, update the log-likelihood ratio,
@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.pipeline.prepared8 import (
+from flink_cookbook_spark.operators.experiments import (
     POWER_CONVERT_VALUE,
     SPRT_ALPHA,
     SPRT_BETA,

@@ -114,7 +114,7 @@ def main() -> None:
             flush=True,
         )
 
-        from flink_cookbook_spark.pipeline.prepared import (
+        from flink_cookbook_spark.pipeline.dedup import (
             minhash_band_sensitivity,
         )
 

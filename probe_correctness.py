@@ -150,26 +150,6 @@ def main() -> None:
                 open(os.path.join(out_dir, "_SCALED_OK"), "w").close()
         clear()
         specs = all_specs()
-        which = os.environ.get("SPARK_GRAFT_PROBE_PREPARED")
-        if which:
-            # also hold a prepared cohort to the gate at scale:
-            # "r10" = the round-9-built deferred cohort (prepared19),
-            # anything else = the live round-8 cohort
-            from flink_cookbook_spark.registry import QuerySpec
-
-            if which == "r10":
-                from flink_cookbook_spark.pipeline.prepared19 import (
-                    PREPARED_R10 as _cohort,
-                )
-            else:
-                from flink_cookbook_spark.pipeline.prepared import (
-                    PREPARED_R8 as _cohort,
-                )
-            specs = dict(specs)
-            for n, (fn, oracle) in _cohort.items():
-                specs[n] = QuerySpec(name=n, fn=fn, oracle=oracle)
-            if names == _DEFAULT:
-                names = tuple(_cohort)
         if names == ("ALL",):
             # whole-registry sweep: every registered query with an
             # oracle, alphabetically (rows-only queries report SKIP).

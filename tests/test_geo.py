@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.pipeline.prepared18 import (
+from flink_cookbook_spark.operators.geo import (
     GEO_CELL_KM,
     GEO_LAT_KM,
     GEO_LON_KM,

@@ -236,13 +236,47 @@ def test_registry_consistency():
     """The driver contract must expose the full registered surface."""
     import __spark_entry__ as e
 
+    from flink_cookbook_spark.registry import all_specs
+
     qs, os_ = e.queries(), e.oracle_sql()
-    assert len(qs) >= 75
+    assert len(qs) == 369
     assert set(os_) <= set(qs)
-    assert len(os_) >= 69
+    assert len(os_) == 367
     for flagship in ("zscore_flags", "pipeline_alerts_end_to_end", "minhash_lsh_pairs",
                      "cosine_topk", "sarimax_baseline", "dedup_clusters"):
         assert flagship in qs
+    tags = [t for spec in all_specs().values() for t in spec.tags]
+    assert tags.count("prepared-r8") == 103
+    assert tags.count("prepared-r10") == 38
+
+
+def test_no_module_binds_a_top_level_name_twice():
+    """A second top-level binding of one name (def, class, assignment or
+    import) silently shadows the first — a moved query or constant would
+    replace another with no error. Parsed, not imported: no Spark."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "flink_cookbook_spark"
+    twice = []
+    for path in sorted(pkg.rglob("*.py")):
+        seen: dict[str, int] = {}
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                names = [(a.asname or a.name).split(".")[0] for a in node.names]
+            else:
+                continue
+            for name in names:
+                if name in seen:
+                    twice.append(f"{path.relative_to(pkg)}:{node.lineno} {name} "
+                                 f"(first bound at line {seen[name]})")
+                seen.setdefault(name, node.lineno)
+    assert not twice, twice
 
 
 def test_dedup_clusters_bounded_caching(spark, sf_dir):

@@ -91,8 +91,10 @@ def test_asof_join_single_shuffle_per_side(spark, sf_dir):
       build's own two (round-14 rewrite).
     - the generic two-relation union sweep (asof_tolerance_join): one
       union, one key exchange, window sweep."""
-    from flink_cookbook_spark.operators.metrics import latest_baseline_join
-    from flink_cookbook_spark.pipeline.prepared import asof_tolerance_join
+    from flink_cookbook_spark.operators.metrics import (
+        asof_tolerance_join,
+        latest_baseline_join,
+    )
     from flink_cookbook_spark.plans.explain import formatted_plan
 
     # warm the windowed memo first: a cold cached relation reports
@@ -730,18 +732,19 @@ def test_ntile_is_single_exchange_per_segment(spark, sf_dir):
 
 
 def test_prepared_cohort_no_plain_cartesian(spark, sf_dir):
-    """Scale hygiene for the round-8-prepared cohort, pinned before
-    registration: no prepared plan may contain a plain CartesianProduct
-    (both sides unbounded, quadratic at 100 TB). BroadcastNestedLoop is
-    tolerated ONLY where the build side is bounded by construction —
-    the capped md5 samples and 1-row/constant-list broadcasts."""
-    from flink_cookbook_spark.pipeline.prepared import PREPARED_R8
+    """Scale hygiene for the queries tagged ``prepared-r8``: no plan may
+    contain a plain CartesianProduct (both sides unbounded, quadratic at
+    100 TB). BroadcastNestedLoop is tolerated ONLY where the build side
+    is bounded by construction — the capped md5 samples and
+    1-row/constant-list broadcasts."""
     from flink_cookbook_spark.plans.explain import formatted_plan
+    from flink_cookbook_spark.registry import all_specs
 
     offenders = []
-    for name in sorted(PREPARED_R8):
-        fn, _ = PREPARED_R8[name]
-        plan = formatted_plan(fn(spark, sf_dir))
+    for name, spec in sorted(all_specs().items()):
+        if "prepared-r8" not in spec.tags:
+            continue
+        plan = formatted_plan(spec.fn(spark, sf_dir))
         if "CartesianProduct" in plan:
             offenders.append(name)
     assert not offenders, offenders
@@ -751,7 +754,7 @@ def test_skew_report_scans_lineitem_once(spark, sf_dir):
     """partition_skew_report's docstring claims ONE scan serves every
     candidate partition count (the divisor-derivation design) — pin it:
     exactly one parquet scan of lineitem in the plan."""
-    from flink_cookbook_spark.pipeline.prepared3 import partition_skew_report
+    from flink_cookbook_spark.operators.skew import partition_skew_report
     from flink_cookbook_spark.plans.explain import formatted_plan
 
     import re
@@ -766,7 +769,7 @@ def test_ks_window_runs_over_bins_not_rows(spark, sf_dir):
     """ks_test_drift bins values BEFORE the ECDF window, so the window
     input must be the bin-grain aggregate (an Aggregate below the
     Window), never the raw scan — the bounded-sort-state design claim."""
-    from flink_cookbook_spark.pipeline.prepared2 import ks_test_drift
+    from flink_cookbook_spark.operators.drift import ks_test_drift
     from flink_cookbook_spark.plans.explain import formatted_plan
 
     plan = formatted_plan(ks_test_drift(spark, sf_dir))
@@ -786,7 +789,7 @@ def test_theil_sen_pairs_join_is_on_the_daily_grain(spark, sf_dir):
     both join inputs must sit above aggregates, and the raw events
     parquet is scanned exactly twice (once per self-join side), never
     joined raw-to-raw."""
-    from flink_cookbook_spark.pipeline.prepared5 import theil_sen_trend
+    from flink_cookbook_spark.operators.forecasting import theil_sen_trend
     from flink_cookbook_spark.plans.explain import formatted_plan
 
     plan = formatted_plan(theil_sen_trend(spark, sf_dir))
@@ -840,7 +843,7 @@ def test_hill_corpus_touch_is_take_ordered(spark, sf_dir):
     TakeOrderedAndProject (per-partition heaps) — and nothing in the
     plan may fall back to a single-partition exchange: the bounded
     201-row tail set reaches the windows without a global sort."""
-    from flink_cookbook_spark.pipeline.prepared19 import hill_tail_index
+    from flink_cookbook_spark.operators.stats import hill_tail_index
     from flink_cookbook_spark.plans.explain import formatted_plan
 
     plan = formatted_plan(hill_tail_index(spark, sf_dir))
@@ -852,7 +855,7 @@ def test_spearman_rank_windows_stay_partitioned(spark, sf_dir):
     """Every midrank window in the deferred Spearman lead-lag screen is
     partitioned per (pair, lag) — a lost partitioning would serialize
     the whole aligned table through one task."""
-    from flink_cookbook_spark.pipeline.prepared19 import spearman_lead_lag
+    from flink_cookbook_spark.operators.forecasting import spearman_lead_lag
     from flink_cookbook_spark.plans.explain import formatted_plan
 
     plan = formatted_plan(spearman_lead_lag(spark, sf_dir))
@@ -863,7 +866,7 @@ def test_mann_kendall_is_windowless_and_partitioned(spark, sf_dir):
     """The deferred Mann-Kendall test must stay pure join+aggregate —
     no ranking window anywhere (Sen's slope is an exact percentile
     AGGREGATE over bounded pairs), and no single-partition exchange."""
-    from flink_cookbook_spark.pipeline.prepared19 import mann_kendall_trend
+    from flink_cookbook_spark.operators.forecasting import mann_kendall_trend
     from flink_cookbook_spark.plans.explain import formatted_plan
 
     plan = formatted_plan(mann_kendall_trend(spark, sf_dir))
@@ -872,7 +875,7 @@ def test_mann_kendall_is_windowless_and_partitioned(spark, sf_dir):
 
 
 def test_ljung_box_lag_windows_stay_partitioned(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import ljung_box_test
+    from flink_cookbook_spark.operators.forecasting import ljung_box_test
     from flink_cookbook_spark.plans.explain import formatted_plan
 
     plan = formatted_plan(ljung_box_test(spark, sf_dir))

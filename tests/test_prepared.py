@@ -1,19 +1,23 @@
-"""Semantic property tests for the round-7-prepared operator cohort.
+"""Semantic property tests for the queries tagged ``prepared-r8``.
 
-The cohort has been REGISTERED since round 8 (registry._ensure_loaded
-calls prepared.activate()), so the driver-identical oracle comparison
-for every pair now runs through tests/test_oracle.py like any other
-registered query — duplicating it here would double the suite cost for
-103 queries. This module keeps the ground-truth property tests plus a
-registration-integrity check (every prepared pair live, with the SAME
-oracle string it was verified under)."""
+The driver-identical oracle comparison for every registered query runs
+in tests/test_oracle.py — duplicating it here would double the suite
+cost for 103 queries. This module keeps the ground-truth property tests
+plus cohort-wide lints (HUGEINT oracle columns, empty inputs, bounded
+broadcasts) over the tag."""
 
 from __future__ import annotations
 
 import pytest
 
-from flink_cookbook_spark.pipeline.prepared import PREPARED_R8
 from tests.oracle_harness import compare, duckdb_connection
+
+
+def _r8_specs() -> dict:
+    """The registered queries tagged ``prepared-r8``, by name."""
+    from flink_cookbook_spark.registry import all_specs
+
+    return {n: s for n, s in sorted(all_specs().items()) if "prepared-r8" in s.tags}
 
 
 @pytest.fixture(scope="module")
@@ -23,29 +27,10 @@ def con(sf_dir):
     c.close()
 
 
-def test_prepared_cohort_registered_verbatim():
-    """Every prepared pair must be live in the registry under its own
-    name with the exact oracle string it was harness-verified with —
-    a silent oracle drift between the prepared table and the registry
-    would invalidate the round-7 verification."""
-    from flink_cookbook_spark.registry import all_specs
-
-    specs = all_specs()
-    missing = set(PREPARED_R8) - set(specs)
-    assert not missing, f"prepared pairs not registered: {sorted(missing)}"
-    drift = [
-        name
-        for name, (fn, oracle) in PREPARED_R8.items()
-        if specs[name].oracle != oracle or specs[name].fn is not fn
-    ]
-    assert not drift, f"registered form differs from verified form: {drift}"
-    assert all("prepared-r8" in specs[n].tags for n in PREPARED_R8)
-
-
 def test_asof_tolerance_actually_filters(spark, sf_dir):
     """The tolerance must do work on the fixture: some purchases have a
     fresh view (non-null), some have only a stale or missing one."""
-    from flink_cookbook_spark.pipeline.prepared import asof_tolerance_join
+    from flink_cookbook_spark.operators.metrics import asof_tolerance_join
 
     rows = asof_tolerance_join(spark, sf_dir).collect()
     fresh = sum(1 for r in rows if r.fresh)
@@ -61,7 +46,9 @@ def test_split_is_total_and_stratified(spark, sf_dir):
     """Every document lands in exactly one split, and per-stratum shares
     sum to 1 with the train split dominating."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared import stratified_split_manifest
+    from flink_cookbook_spark.pipeline.sampling import (
+        stratified_split_manifest,
+    )
 
     rows = stratified_split_manifest(spark, sf_dir).collect()
     n_total = sum(r.n_docs for r in rows)
@@ -88,7 +75,9 @@ def test_split_is_total_and_stratified(spark, sf_dir):
 def test_pq_code_compresses_and_reconstructs(spark, sf_dir):
     """PQ codes must live in the trained code space and the
     reconstruction error must be finite and nonzero (lossy by nature)."""
-    from flink_cookbook_spark.pipeline.prepared import pq_reconstruction_manifest
+    from flink_cookbook_spark.pipeline.similarity import (
+        pq_reconstruction_manifest,
+    )
 
     rows = pq_reconstruction_manifest(spark, sf_dir).collect()
     assert rows
@@ -98,15 +87,14 @@ def test_pq_code_compresses_and_reconstructs(spark, sf_dir):
 
 
 def test_prepared_oracles_pass_hugeint_lint():
-    """Hold prepared oracles to the HUGEINT lint (same DESCRIBE check
-    the registry-wide lint enforces — kept here too so a future batch
-    added to PREPARED_R8 fails fast even before registration)."""
+    """Hold the prepared-r8 oracles to the HUGEINT lint (same DESCRIBE
+    check the registry-wide lint enforces)."""
     from tests.conftest import SF_DIR
 
     con = duckdb_connection(SF_DIR)
     offenders = []
-    for name, (_, oracle) in sorted(PREPARED_R8.items()):
-        for col, typ, *_ in con.execute("DESCRIBE " + oracle).fetchall():
+    for name, spec in _r8_specs().items():
+        for col, typ, *_ in con.execute("DESCRIBE " + spec.oracle).fetchall():
             if "HUGEINT" in typ.upper():
                 offenders.append(f"{name}.{col}: {typ}")
     con.close()
@@ -117,10 +105,11 @@ def test_funnel_always_emits_every_stage(spark, sf_dir):
     """All four stages must emit (zero drops included — the
     similarity_threshold_curve lesson), survivors must be monotonically
     non-increasing, and the final survivor count must equal the keeps."""
-    from flink_cookbook_spark.pipeline.prepared import (
-        FUNNEL_STAGES, filter_funnel_report,
+    from flink_cookbook_spark.pipeline.text import (
+        FUNNEL_STAGES,
+        corpus_filter_pipeline,
+        filter_funnel_report,
     )
-    from flink_cookbook_spark.pipeline.text import corpus_filter_pipeline
 
     rows = sorted(filter_funnel_report(spark, sf_dir).collect(),
                   key=lambda r: r.stage)
@@ -135,7 +124,9 @@ def test_temperature_flattens_the_mix(spark, sf_dir):
     """alpha < 1 must flatten: scaled shares sum to 1 and the boost is
     strictly decreasing in raw share (small sources get boosted up,
     big sources damped down)."""
-    from flink_cookbook_spark.pipeline.prepared import temperature_mixture_weights
+    from flink_cookbook_spark.pipeline.sampling import (
+        temperature_mixture_weights,
+    )
 
     rows = temperature_mixture_weights(spark, sf_dir).collect()
     assert abs(sum(r.temp_share for r in rows) - 1.0) < 1e-3
@@ -148,7 +139,9 @@ def test_contrastive_pairs_are_valid(spark, sf_dir):
     """Partners must differ from the anchor, cosines must be bounded,
     and the sampled corpus must yield at least one hard positive and
     hard negatives for every anchor (labels are diverse)."""
-    from flink_cookbook_spark.pipeline.prepared import contrastive_pair_mining
+    from flink_cookbook_spark.pipeline.similarity import (
+        contrastive_pair_mining,
+    )
 
     rows = contrastive_pair_mining(spark, sf_dir).collect()
     assert rows
@@ -168,7 +161,7 @@ def test_rate_profile_moment_ordering(spark, sf_dir):
     theorem — a near-constant rate with a thin upper tail (almost all
     minutes at 1 event, a few at 2) puts the mean strictly above p95,
     which the sf0.01 fixture legitimately produces."""
-    from flink_cookbook_spark.pipeline.prepared import event_rate_profile
+    from flink_cookbook_spark.operators.timeseries import event_rate_profile
 
     rows = event_rate_profile(spark, sf_dir).collect()
     assert rows
@@ -183,7 +176,7 @@ def test_rate_profile_moment_ordering(spark, sf_dir):
 def test_zipf_head_is_decreasing(spark, sf_dir):
     """Frequency is non-increasing in rank, so the fitted slope must be
     <= 0; r2 bounded; the head never exceeds ZIPF_TOP_N ranks."""
-    from flink_cookbook_spark.pipeline.prepared import ZIPF_TOP_N, zipf_fit
+    from flink_cookbook_spark.pipeline.text import ZIPF_TOP_N, zipf_fit
 
     rows = zipf_fit(spark, sf_dir).collect()
     assert rows
@@ -203,9 +196,7 @@ def test_new_prepared_survive_empty_tables(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from flink_cookbook_spark.pipeline._cache import clear
-    from flink_cookbook_spark.pipeline.prepared import (
-        PREPARED_R8, filter_funnel_report,
-    )
+    from flink_cookbook_spark.pipeline.text import filter_funnel_report
 
     pq.write_table(
         pa.table(
@@ -249,7 +240,7 @@ def test_new_prepared_survive_empty_tables(spark, tmp_path):
         "event_rate_profile",
         "zipf_fit",
     ):
-        fn, _ = PREPARED_R8[name]
+        fn = _r8_specs()[name].fn
         assert fn(spark, str(tmp_path)).count() == 0, name
     rows = filter_funnel_report(spark, str(tmp_path)).collect()
     assert len(rows) == 4
@@ -261,8 +252,9 @@ def test_watermark_sweep_is_monotone(spark, sf_dir):
     """Every candidate delay must emit; drops must be non-increasing and
     completeness non-decreasing in the delay; delay 0 must drop exactly
     the out-of-order events (lateness > 0)."""
-    from flink_cookbook_spark.pipeline.prepared import (
-        WATERMARK_CANDIDATES, watermark_completeness_sweep,
+    from flink_cookbook_spark.streaming.twins import (
+        WATERMARK_CANDIDATES,
+        watermark_completeness_sweep,
     )
 
     rows = sorted(watermark_completeness_sweep(spark, sf_dir).collect(),
@@ -278,7 +270,7 @@ def test_watermark_sweep_is_monotone(spark, sf_dir):
 def test_class_balance_shares_and_effective_classes(spark, sf_dir):
     """Shares sum to 1, the majority class has vs_majority == 1, and the
     effective class count lies in [1, n_labels]."""
-    from flink_cookbook_spark.pipeline.prepared import class_balance_report
+    from flink_cookbook_spark.pipeline.sampling import class_balance_report
 
     rows = class_balance_report(spark, sf_dir).collect()
     assert rows
@@ -292,7 +284,7 @@ def test_class_balance_shares_and_effective_classes(spark, sf_dir):
 def test_kaplan_meier_curve_shape(spark, sf_dir):
     """Survival starts at 1 - d1/n1, is strictly within (0, 1], and is
     non-increasing; risk sets shrink as t grows."""
-    from flink_cookbook_spark.pipeline.prepared import kaplan_meier_survival
+    from flink_cookbook_spark.operators.stats import kaplan_meier_survival
 
     rows = sorted(kaplan_meier_survival(spark, sf_dir).collect(),
                   key=lambda r: r.t_hours)
@@ -310,7 +302,7 @@ def test_kaplan_meier_curve_shape(spark, sf_dir):
 def test_gini_bounds_and_top_decile(spark, sf_dir):
     """Gini lies in [0, 1); the top decile's share is at least its
     population share (the decile holds the largest revenues)."""
-    from flink_cookbook_spark.pipeline.prepared import revenue_concentration_gini
+    from flink_cookbook_spark.operators.tpch import revenue_concentration_gini
 
     rows = revenue_concentration_gini(spark, sf_dir).collect()
     assert rows
@@ -324,8 +316,9 @@ def test_gini_bounds_and_top_decile(spark, sf_dir):
 def test_periodogram_one_dominant_per_type(spark, sf_dir):
     """Each event type gets all candidate periods, power in [0, 1], and
     at least one dominant row (ties can mark several, rounded compare)."""
-    from flink_cookbook_spark.pipeline.prepared import (
-        PERIODOGRAM_PERIODS, periodogram_peaks,
+    from flink_cookbook_spark.operators.forecasting import (
+        PERIODOGRAM_PERIODS,
+        periodogram_peaks,
     )
 
     rows = periodogram_peaks(spark, sf_dir).collect()
@@ -345,7 +338,7 @@ def test_changepoint_gain_is_the_max(spark, sf_dir):
     """The reported split must achieve the maximal gain over a manual
     recompute of every candidate split from the daily series."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared import best_split_changepoint
+    from flink_cookbook_spark.operators.drift import best_split_changepoint
     from pyspark.sql import functions as F
 
     daily = (
@@ -382,8 +375,9 @@ def test_knn_consistency_bounds(spark, sf_dir):
     """Per-label consistency lies in [0, 1] and the per-label vector
     counts sum to the capped sample size."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared import (
-        KNN_MAX_VECTORS, knn_label_consistency,
+    from flink_cookbook_spark.pipeline.similarity import (
+        KNN_MAX_VECTORS,
+        knn_label_consistency,
     )
 
     rows = knn_label_consistency(spark, sf_dir).collect()
@@ -400,7 +394,7 @@ def test_token_entropy_bounds(spark, sf_dir):
     """Normalized entropy lies in [0, 1]; per-source doc counts sum to
     the corpus size."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared import token_entropy_profile
+    from flink_cookbook_spark.pipeline.text import token_entropy_profile
 
     rows = token_entropy_profile(spark, sf_dir).collect()
     assert rows
@@ -414,7 +408,7 @@ def test_token_entropy_bounds(spark, sf_dir):
 def test_hhi_is_consistent_with_share_bounds(spark, sf_dir):
     """HHI lies in [1/n_sources, 1]; effective sources ≈ 1/HHI and never
     exceeds the actual source count; top share is the max share."""
-    from flink_cookbook_spark.pipeline.prepared import source_concentration_hhi
+    from flink_cookbook_spark.pipeline.sampling import source_concentration_hhi
 
     rows = source_concentration_hhi(spark, sf_dir).collect()
     assert rows
@@ -429,8 +423,9 @@ def test_hhi_is_consistent_with_share_bounds(spark, sf_dir):
 def test_trigram_motifs_top_n(spark, sf_dir):
     """At most TOP_N motifs, support non-increasing, shares in (0, 1],
     and each trigram is three '>'-joined known event types."""
-    from flink_cookbook_spark.pipeline.prepared import (
-        TRIGRAM_TOP_N, event_trigram_motifs,
+    from flink_cookbook_spark.operators.timeseries import (
+        TRIGRAM_TOP_N,
+        event_trigram_motifs,
     )
 
     rows = event_trigram_motifs(spark, sf_dir).collect()
@@ -449,7 +444,7 @@ def test_backlog_conserves_orders(spark, sf_dir):
     never goes negative, and total opens == total closes == order
     count."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared import order_backlog_profile
+    from flink_cookbook_spark.operators.tpch import order_backlog_profile
 
     rows = sorted(order_backlog_profile(spark, sf_dir).collect(),
                   key=lambda r: r.day)
@@ -465,8 +460,9 @@ def test_quality_sweep_monotone_and_total(spark, sf_dir):
     """All thresholds emit; kept counts are non-increasing in the
     cutoff; threshold 0.0 keeps everything."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared import (
-        QUALITY_THRESHOLDS, quality_threshold_sweep,
+    from flink_cookbook_spark.pipeline.text import (
+        QUALITY_THRESHOLDS,
+        quality_threshold_sweep,
     )
 
     rows = sorted(quality_threshold_sweep(spark, sf_dir).collect(),
@@ -485,7 +481,7 @@ def test_join_size_estimator_exactness(spark, sf_dir):
     """The 'exact_pairs' figure must equal the true materialized join
     cardinality, and the skew factor must tie the two columns."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared import join_size_estimator
+    from flink_cookbook_spark.operators.relational import join_size_estimator
     from pyspark.sql import functions as F
 
     row = join_size_estimator(spark, sf_dir).collect()[0]
@@ -503,7 +499,7 @@ def test_markov_stationary_is_fixed_point(spark, sf_dir):
     """π must be a probability vector and (approximately) invariant
     under one more application of the transition matrix."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared import (
+    from flink_cookbook_spark.operators.timeseries import (
         markov_stationary_distribution,
     )
     from pyspark.sql import functions as F
@@ -543,8 +539,9 @@ def test_negative_sampling_table_is_a_cdf(spark, sf_dir):
     """Probabilities sum to 1, cum_hi is the running total ending at
     1.0, ranks are 1..n in frequency order, and the 0.75 tempering
     flattens: low-frequency tokens gain share vs their raw frequency."""
-    from flink_cookbook_spark.pipeline.prepared import (
-        NEG_TABLE_N, negative_sampling_table,
+    from flink_cookbook_spark.pipeline.sampling import (
+        NEG_TABLE_N,
+        negative_sampling_table,
     )
 
     rows = sorted(negative_sampling_table(spark, sf_dir).collect(),
@@ -568,8 +565,9 @@ def test_negative_sampling_table_is_a_cdf(spark, sf_dir):
 def test_packing_report_bounds(spark, sf_dir):
     """Lower bound never exceeds the naive count; utilization and
     compaction are consistent; every candidate length emits."""
-    from flink_cookbook_spark.pipeline.prepared import (
-        PACKING_LENGTHS, packing_efficiency_report,
+    from flink_cookbook_spark.pipeline.curation import (
+        PACKING_LENGTHS,
+        packing_efficiency_report,
     )
 
     rows = sorted(packing_efficiency_report(spark, sf_dir).collect(),
@@ -585,7 +583,7 @@ def test_packing_report_bounds(spark, sf_dir):
 def test_heatmap_covers_week_and_normalizes(spark, sf_dir):
     """Cells stay in the 7 x 24 grid, per-dow shares sum to 1, and each
     dow flags at least one peak hour."""
-    from flink_cookbook_spark.pipeline.prepared import weekday_hour_heatmap
+    from flink_cookbook_spark.operators.timeseries import weekday_hour_heatmap
 
     rows = weekday_hour_heatmap(spark, sf_dir).collect()
     assert rows
@@ -633,9 +631,9 @@ def test_audio_features_match_direct_decode(spark, sf_dir):
     equals a driver-side decode of the same deterministic fixture."""
     from flink_cookbook_spark.catalog import load
     from flink_cookbook_spark.pipeline.multimodal import (
-        WAV_EVERY, WAV_RATE, decode_wav, encode_wav, wav_n_samples, wav_sample,
+        WAV_EVERY, WAV_RATE, audio_features, decode_wav, encode_wav,
+        wav_n_samples, wav_sample,
     )
-    from flink_cookbook_spark.pipeline.prepared import audio_features
 
     rows = {r.doc_id: r for r in audio_features(spark, sf_dir).collect()}
     doc_ids = [
@@ -664,7 +662,7 @@ def test_moments_sketch_matches_numpy(spark, sf_dir):
     import numpy as np
 
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared import moments_sketch_rollup
+    from flink_cookbook_spark.operators.relational import moments_sketch_rollup
 
     rows = {r.event_type: r for r in
             moments_sketch_rollup(spark, sf_dir).collect()}
@@ -756,8 +754,11 @@ def test_lsh_recall_consistency(spark, sf_dir):
     """Hits are bounded by both truth and candidates; recall/precision
     are consistent ratios in [0, 1]; the analytic s-curve constant is
     1-(1-0.5^r)^b for the shipped band config."""
-    from flink_cookbook_spark.pipeline.dedup import LSH_BANDS, LSH_ROWS
-    from flink_cookbook_spark.pipeline.prepared import lsh_recall_estimate
+    from flink_cookbook_spark.pipeline.dedup import (
+        LSH_BANDS,
+        LSH_ROWS,
+        lsh_recall_estimate,
+    )
 
     r = lsh_recall_estimate(spark, sf_dir).collect()[0]
     assert 0 <= r.n_hits <= min(r.n_true_pairs, r.n_candidates)
@@ -774,7 +775,7 @@ def test_interarrival_quantiles_ordered(spark, sf_dir):
     """Gap quantiles are ordered p50 <= p90 <= p99, all non-negative,
     and the per-type gap counts sum to n_events - (type, day) groups."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared import interarrival_profile
+    from flink_cookbook_spark.operators.timeseries import interarrival_profile
     from pyspark.sql import functions as F
 
     rows = interarrival_profile(spark, sf_dir).collect()
@@ -797,7 +798,7 @@ def test_decile_lift_partitions_customers(spark, sf_dir):
     lift increases with decile (value-ordered) and decile 10 has
     lift >= 1."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared import decile_lift_table
+    from flink_cookbook_spark.operators.tpch import decile_lift_table
 
     rows = sorted(decile_lift_table(spark, sf_dir).collect(),
                   key=lambda r: r.decile)
@@ -829,10 +830,10 @@ def test_prepared_broadcast_hints_are_bounded(spark, sf_dir):
     from tests.test_plans import _broadcast_hint_subtrees, _hint_is_bounded
 
     offenders = []
-    for name in sorted(PREPARED_R8):
+    for name, spec in _r8_specs().items():
         if name in capped:
             continue
-        fn, _ = PREPARED_R8[name]
+        fn = spec.fn
         try:
             src = inspect.getsource(fn)
         except (OSError, TypeError):
@@ -853,8 +854,9 @@ def test_water_filling_exhausts_budget(spark, sf_dir):
     whose fill ratio is 1, and boost small sources (higher fill ratio
     than the biggest source unless capped)."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared import (
-        WF_BUDGET_FRACTION, water_filling_allocation,
+    from flink_cookbook_spark.pipeline.sampling import (
+        WF_BUDGET_FRACTION,
+        water_filling_allocation,
     )
     from pyspark.sql import functions as F
 
@@ -887,7 +889,7 @@ def test_ensemble_consensus_ordering(spark, sf_dir):
     """Consensus counts are nested (3-of-3 <= 2-of-3 <= any single
     method's flags + the others), every count is bounded by n, and at
     least one method flags something somewhere on the fixture."""
-    from flink_cookbook_spark.pipeline.prepared import anomaly_ensemble_consensus
+    from flink_cookbook_spark.operators.drift import anomaly_ensemble_consensus
 
     rows = anomaly_ensemble_consensus(spark, sf_dir).collect()
     assert rows
@@ -899,47 +901,10 @@ def test_ensemble_consensus_ordering(spark, sf_dir):
     assert any(r.n_flag_z + r.n_flag_mad + r.n_flag_iqr > 0 for r in rows)
 
 
-def test_round8_activation_live_and_idempotent(sf_dir):
-    """The round-8 flip is live: a cold process exposes every prepared
-    pair through the driver contract (queries()/oracle_sql()), a second
-    explicit activate() is a no-op (idempotent — _ensure_loaded calls
-    it on every invocation), and a newly-activated query runs
-    end-to-end through queries()."""
-    import json
-    import subprocess
-    import sys
-
-    code = f"""
-import json, sys
-sys.path.insert(0, "/root/repo")
-import __spark_entry__ as e
-qs, os_ = e.queries(), e.oracle_sql()
-from flink_cookbook_spark.pipeline.prepared import PREPARED_R8, activate
-assert set(PREPARED_R8) <= set(qs), "prepared queries missing from queries()"
-assert set(PREPARED_R8) <= set(os_), "prepared oracles missing from oracle_sql()"
-from flink_cookbook_spark.registry import all_specs
-before = len(all_specs())
-activate()  # explicit second call must be a no-op
-after = len(all_specs())
-from flink_cookbook_spark.session import get_spark
-spark = get_spark()
-n = qs["kaplan_meier_survival"](spark, {sf_dir!r}).count()
-print(json.dumps({{"before": before, "after": after, "rows": n}}))
-"""
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True,
-        timeout=300,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    res = json.loads(out.stdout.strip().splitlines()[-1])
-    assert res["after"] == res["before"]
-    assert res["rows"] > 0
-
-
 def test_ks_statistic_is_a_valid_distance(spark, sf_dir):
     """D must be a [0,1] sup-distance and the verdict must equal the
     D-vs-critical comparison the row itself reports."""
-    from flink_cookbook_spark.pipeline.prepared2 import ks_test_drift
+    from flink_cookbook_spark.operators.drift import ks_test_drift
 
     rows = ks_test_drift(spark, sf_dir).collect()
     assert rows
@@ -954,7 +919,7 @@ def test_ks_statistic_is_a_valid_distance(spark, sf_dir):
 def test_contingency_measures_are_bounded(spark, sf_dir):
     """chi2 >= 0, Cramer's V in [0,1], MI >= 0 (within display
     rounding) — the textbook bounds for any contingency table."""
-    from flink_cookbook_spark.pipeline.prepared2 import contingency_association
+    from flink_cookbook_spark.operators.stats import contingency_association
 
     [r] = contingency_association(spark, sf_dir).collect()
     assert r.chi2 >= 0
@@ -970,7 +935,10 @@ def test_correlation_matrix_is_valid(spark, sf_dir):
     """All |r| <= 1 and all six unordered pairs present exactly once
     (the fixture's measures are synthesized independently, so no pair
     is asserted to correlate — only validity bounds)."""
-    from flink_cookbook_spark.pipeline.prepared2 import CORR_COLS, correlation_matrix
+    from flink_cookbook_spark.operators.stats import (
+        CORR_COLS,
+        correlation_matrix,
+    )
 
     rows = correlation_matrix(spark, sf_dir).collect()
     pairs = {(r.col_a, r.col_b) for r in rows}
@@ -985,7 +953,9 @@ def test_correlation_matrix_is_valid(spark, sf_dir):
 
 def test_crosscorr_windows_are_full_and_bounded(spark, sf_dir):
     """Only full 7-day windows emit, and every defined r is in [-1,1]."""
-    from flink_cookbook_spark.pipeline.prepared2 import crosscorr_daily_series
+    from flink_cookbook_spark.operators.forecasting import (
+        crosscorr_daily_series,
+    )
 
     rows = crosscorr_daily_series(spark, sf_dir).collect()
     assert rows
@@ -999,7 +969,7 @@ def test_ab_lift_internally_consistent(spark, sf_dir):
     """Rates must equal conversions/users, lift must equal the rate
     difference, and arm sizes must partition the user base."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared2 import ab_conversion_lift
+    from flink_cookbook_spark.operators.experiments import ab_conversion_lift
 
     [r] = ab_conversion_lift(spark, sf_dir).collect()
     assert r.n_a + r.n_b == (
@@ -1018,8 +988,9 @@ def test_skew_report_is_exactly_derived(spark, sf_dir):
     """Totals must equal the table row count at every partition count,
     max >= avg, and CV must be 0 exactly when every partition is equal."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared3 import (
-        SKEW_PARTITION_COUNTS, partition_skew_report,
+    from flink_cookbook_spark.operators.skew import (
+        SKEW_PARTITION_COUNTS,
+        partition_skew_report,
     )
 
     rows = {r.n_partitions: r for r in partition_skew_report(spark, sf_dir).collect()}
@@ -1037,8 +1008,9 @@ def test_compaction_plan_covers_corpus_and_respects_target(spark, sf_dir):
     """Each cell's files must be enough to hold its bytes at the target
     size, and the doc totals must cover the corpus exactly."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared3 import (
-        TARGET_FILE_BYTES, file_compaction_plan,
+    from flink_cookbook_spark.sources.formats import (
+        TARGET_FILE_BYTES,
+        file_compaction_plan,
     )
 
     rows = file_compaction_plan(spark, sf_dir).collect()
@@ -1056,7 +1028,7 @@ def test_bloom_fpr_tracks_the_analytic_formula(spark, sf_dir):
     """More bits must not raise the expected FPR at fixed k, and the
     measured rate must be a valid probability that broadly tracks the
     formula (within a loose factor given small probe counts)."""
-    from flink_cookbook_spark.pipeline.prepared3 import bloom_fpr_calibration
+    from flink_cookbook_spark.operators.relational import bloom_fpr_calibration
 
     rows = {(r.m_bits, r.k_hashes): r for r in bloom_fpr_calibration(spark, sf_dir).collect()}
     assert len(rows) == 4
@@ -1072,7 +1044,10 @@ def test_bloom_fpr_tracks_the_analytic_formula(spark, sf_dir):
 def test_fk_audit_covers_every_edge_cleanly(spark, sf_dir):
     """The shipped fixture is referentially intact: every edge must
     report zero orphans/NULLs and a match rate of 1."""
-    from flink_cookbook_spark.pipeline.prepared3 import FK_EDGES, fk_integrity_audit
+    from flink_cookbook_spark.operators.relational import (
+        FK_EDGES,
+        fk_integrity_audit,
+    )
 
     rows = {r.edge: r for r in fk_integrity_audit(spark, sf_dir).collect()}
     assert set(rows) == {e[0] for e in FK_EDGES}
@@ -1086,7 +1061,7 @@ def test_fk_audit_covers_every_edge_cleanly(spark, sf_dir):
 def test_lexical_diversity_bounds(spark, sf_dir):
     """TTR and hapax share are (0,1]; Yule's K is non-negative within
     display rounding; token counts reconcile with the corpus."""
-    from flink_cookbook_spark.pipeline.prepared4 import lexical_diversity_profile
+    from flink_cookbook_spark.pipeline.text import lexical_diversity_profile
 
     rows = lexical_diversity_profile(spark, sf_dir).collect()
     assert rows
@@ -1105,7 +1080,7 @@ def test_degree_distribution_sums_to_node_count(spark, sf_dir):
     only assert the constant-ness and finiteness)."""
     import math
 
-    from flink_cookbook_spark.pipeline.prepared4 import (
+    from flink_cookbook_spark.operators.graph import (
         copurchase_degree_distribution,
     )
 
@@ -1123,8 +1098,10 @@ def test_rank_fusion_is_a_valid_ranking(spark, sf_dir):
     """Each query must emit exactly RRF_TOP_K fused rows with distinct
     fused ranks 1..k; the RRF score must be consistent with the two
     input ranks; and the fused order must follow the score."""
-    from flink_cookbook_spark.pipeline.prepared4 import (
-        RRF_K, RRF_TOP_K, rank_fusion_topk,
+    from flink_cookbook_spark.pipeline.similarity import (
+        RRF_K,
+        RRF_TOP_K,
+        rank_fusion_topk,
     )
 
     rows = rank_fusion_topk(spark, sf_dir).collect()
@@ -1146,8 +1123,9 @@ def test_bootstrap_ci_brackets_the_sample_median(spark, sf_dir):
     """The bootstrap median band must be ordered (p05 <= p50 <= p95)
     and the full-sample median must fall inside the CI (it is the
     statistic being resampled)."""
-    from flink_cookbook_spark.pipeline.prepared4 import (
-        BOOT_RESAMPLES, bootstrap_median_ci,
+    from flink_cookbook_spark.operators.stats import (
+        BOOT_RESAMPLES,
+        bootstrap_median_ci,
     )
 
     [r] = bootstrap_median_ci(spark, sf_dir).collect()
@@ -1163,8 +1141,9 @@ def test_holt_winters_reduces_to_holt_when_unseasonal(spark, sf_dir):
     finite, and the forecast decomposes exactly as l + b + s_next."""
     import math
 
-    from flink_cookbook_spark.pipeline.prepared5 import (
-        HW_PERIOD, holt_winters_seasonal,
+    from flink_cookbook_spark.operators.forecasting import (
+        HW_PERIOD,
+        holt_winters_seasonal,
     )
 
     rows = holt_winters_seasonal(spark, sf_dir).collect()
@@ -1182,7 +1161,7 @@ def test_theil_sen_matches_numpy_reference(spark, sf_dir):
     import numpy as np
 
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared5 import theil_sen_trend
+    from flink_cookbook_spark.operators.forecasting import theil_sen_trend
     from pyspark.sql import functions as F
 
     got = {r.event_type: r for r in theil_sen_trend(spark, sf_dir).collect()}
@@ -1216,7 +1195,7 @@ def test_theil_sen_matches_numpy_reference(spark, sf_dir):
 def test_benford_emits_all_digits_and_valid_shares(spark, sf_dir):
     """All nine digits emit (zeros included), shares sum to 1 on both
     axes, and chi2 is a single non-negative constant."""
-    from flink_cookbook_spark.pipeline.prepared5 import benford_law_check
+    from flink_cookbook_spark.operators.stats import benford_law_check
 
     rows = benford_law_check(spark, sf_dir).collect()
     assert sorted(r.digit for r in rows) == list(range(1, 10))
@@ -1229,7 +1208,7 @@ def test_benford_emits_all_digits_and_valid_shares(spark, sf_dir):
 def test_runs_test_counts_reconcile(spark, sf_dir):
     """Above+below must equal the observation count and the run count
     must be between 1 and n_obs."""
-    from flink_cookbook_spark.pipeline.prepared5 import runs_test_randomness
+    from flink_cookbook_spark.operators.stats import runs_test_randomness
 
     rows = runs_test_randomness(spark, sf_dir).collect()
     assert rows
@@ -1241,8 +1220,9 @@ def test_runs_test_counts_reconcile(spark, sf_dir):
 
 def test_coverage_curve_is_monotone(spark, sf_dir):
     """Coverage must be non-decreasing in N and within (0, 1]."""
-    from flink_cookbook_spark.pipeline.prepared5 import (
-        COVERAGE_NS, vocab_coverage_curve,
+    from flink_cookbook_spark.pipeline.text import (
+        COVERAGE_NS,
+        vocab_coverage_curve,
     )
 
     rows = sorted(vocab_coverage_curve(spark, sf_dir).collect(),
@@ -1259,7 +1239,7 @@ def test_token_savings_reconcile_with_exact_dedup(spark, sf_dir):
     """Kept tokens never exceed total; savings in [0, 1); doc counts
     reconcile with the corpus."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared5 import dedup_token_savings
+    from flink_cookbook_spark.pipeline.dedup import dedup_token_savings
 
     rows = dedup_token_savings(spark, sf_dir).collect()
     assert rows
@@ -1274,7 +1254,7 @@ def test_perplexity_is_bounded_by_vocab(spark, sf_dir):
     """Laplace-smoothed perplexity over V outcomes is within [1, V+eps]
     only if transitions were uniform-ish; assert the hard bounds:
     perplexity >= 1 and avg_logp <= 0."""
-    from flink_cookbook_spark.pipeline.prepared6 import transition_perplexity
+    from flink_cookbook_spark.operators.timeseries import transition_perplexity
 
     rows = transition_perplexity(spark, sf_dir).collect()
     assert rows
@@ -1287,7 +1267,7 @@ def test_perplexity_is_bounded_by_vocab(spark, sf_dir):
 def test_backtest_scores_all_methods_on_same_set(spark, sf_dir):
     """Each key must carry all three methods with identical n_evals and
     exactly one winner (ties permitted only via exact mae equality)."""
-    from flink_cookbook_spark.pipeline.prepared6 import forecast_backtest
+    from flink_cookbook_spark.operators.forecasting import forecast_backtest
 
     rows = forecast_backtest(spark, sf_dir).collect()
     by_key: dict = {}
@@ -1306,7 +1286,7 @@ def test_backtest_scores_all_methods_on_same_set(spark, sf_dir):
 
 def test_mwu_u_is_in_valid_range(spark, sf_dir):
     """0 <= U <= n_a * n_b, and the expectation is exactly n_a*n_b/2."""
-    from flink_cookbook_spark.pipeline.prepared6 import mann_whitney_u
+    from flink_cookbook_spark.operators.stats import mann_whitney_u
 
     rows = mann_whitney_u(spark, sf_dir).collect()
     assert rows
@@ -1318,7 +1298,7 @@ def test_mwu_u_is_in_valid_range(spark, sf_dir):
 def test_revenue_hierarchy_shares_sum_to_one(spark, sf_dir):
     """Within each region the nation shares sum to 1; the region global
     shares (one distinct value per region) sum to 1 across regions."""
-    from flink_cookbook_spark.pipeline.prepared6 import revenue_share_hierarchy
+    from flink_cookbook_spark.operators.tpch import revenue_share_hierarchy
 
     rows = revenue_share_hierarchy(spark, sf_dir).collect()
     assert rows
@@ -1336,7 +1316,7 @@ def test_revenue_hierarchy_shares_sum_to_one(spark, sf_dir):
 def test_elasticity_fits_are_well_formed(spark, sf_dir):
     """r2 in [0,1]; level counts within the discount grid; slope defined
     whenever at least two levels exist."""
-    from flink_cookbook_spark.pipeline.prepared6 import discount_elasticity
+    from flink_cookbook_spark.operators.tpch import discount_elasticity
 
     rows = discount_elasticity(spark, sf_dir).collect()
     assert rows
@@ -1354,7 +1334,7 @@ def test_anova_decomposition_is_consistent(spark, sf_dir):
     (Round 12: the SS columns are per-observation — intensive — so the
     cross-engine hash survives extensive-sum double noise at scale.)"""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared7 import anova_oneway
+    from flink_cookbook_spark.operators.stats import anova_oneway
     from pyspark.sql import functions as F
 
     [r] = anova_oneway(spark, sf_dir).collect()
@@ -1374,7 +1354,10 @@ def test_kmv_jaccard_tracks_exact(spark, sf_dir):
     """The sketch estimate must be a valid probability and within the
     k-bounded error band of the exact Jaccard (3 standard deviations
     of the binomial at k draws)."""
-    from flink_cookbook_spark.pipeline.prepared7 import KMV_J_K, kmv_jaccard_overlap
+    from flink_cookbook_spark.operators.relational import (
+        KMV_J_K,
+        kmv_jaccard_overlap,
+    )
 
     [r] = kmv_jaccard_overlap(spark, sf_dir).collect()
     # display rounding adds the +1e-6 tie nudge, so 1.0 prints 1.000001
@@ -1391,7 +1374,7 @@ def test_entropy_rate_information_inequalities(spark, sf_dir):
     """0 <= H_rate <= H_marginal <= ln(V); gain = difference >= 0."""
     import math
 
-    from flink_cookbook_spark.pipeline.prepared7 import markov_entropy_rate
+    from flink_cookbook_spark.operators.timeseries import markov_entropy_rate
 
     [r] = markov_entropy_rate(spark, sf_dir).collect()
     assert -1e-6 <= r.h_rate_nats <= r.h_marginal_nats + 1e-6
@@ -1406,7 +1389,7 @@ def test_ltv_curve_is_monotone_per_cohort(spark, sf_dir):
     """Cumulative LTV never decreases with age within a cohort, and
     cohort sizes partition the user base."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared7 import cohort_ltv_curve
+    from flink_cookbook_spark.operators.windows import cohort_ltv_curve
 
     rows = cohort_ltv_curve(spark, sf_dir).collect()
     assert rows
@@ -1428,7 +1411,7 @@ def test_ltv_curve_is_monotone_per_cohort(spark, sf_dir):
 def test_power_table_is_monotone_in_mde(spark, sf_dir):
     """Bigger effects need fewer samples: n_required must be strictly
     decreasing in the MDE, and every row carries the same baseline."""
-    from flink_cookbook_spark.pipeline.prepared8 import ab_power_analysis
+    from flink_cookbook_spark.operators.experiments import ab_power_analysis
 
     rows = sorted(ab_power_analysis(spark, sf_dir).collect(),
                   key=lambda r: r.mde_abs)
@@ -1447,8 +1430,12 @@ def test_sprt_decision_is_consistent_with_llr_path(spark, sf_dir):
     import math
 
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared8 import (
-        POWER_CONVERT_VALUE, SPRT_ALPHA, SPRT_BETA, SPRT_P0, SPRT_P1,
+    from flink_cookbook_spark.operators.experiments import (
+        POWER_CONVERT_VALUE,
+        SPRT_ALPHA,
+        SPRT_BETA,
+        SPRT_P0,
+        SPRT_P1,
         sprt_sequential_test,
     )
     from pyspark.sql import functions as F
@@ -1486,7 +1473,7 @@ def test_chapman_estimate_is_at_least_the_union(spark, sf_dir):
     """The estimator must be >= the observed union of the two windows
     (it only ADDS unseen mass) and the recapture overlap is bounded by
     both window sizes."""
-    from flink_cookbook_spark.pipeline.prepared8 import capture_recapture_estimate
+    from flink_cookbook_spark.operators.stats import capture_recapture_estimate
 
     [r] = capture_recapture_estimate(spark, sf_dir).collect()
     union_observed = r.n1 + r.n2 - r.m_recaptured
@@ -1499,7 +1486,7 @@ def test_fdr_rejections_form_a_prefix_of_sorted_pvalues(spark, sf_dir):
     """BH rejections must be exactly the p-values at or below the
     largest p meeting its critical value — i.e. a prefix of the sorted
     p-value list — and every p is a valid probability."""
-    from flink_cookbook_spark.pipeline.prepared9 import fdr_segment_scan
+    from flink_cookbook_spark.operators.stats import fdr_segment_scan
 
     rows = sorted(fdr_segment_scan(spark, sf_dir).collect(),
                   key=lambda r: (r.p_value, r.event_type, r.dow))
@@ -1519,8 +1506,10 @@ def test_rate_limit_replay_matches_python(spark, sf_dir):
     recurrence on every user-day, and a burst of >RL_BURST events in
     quick succession must throttle."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared9 import (
-        RL_BURST, RL_REFILL_S, rate_limit_simulation,
+    from flink_cookbook_spark.operators.timeseries import (
+        RL_BURST,
+        RL_REFILL_S,
+        rate_limit_simulation,
     )
     from pyspark.sql import functions as F
 
@@ -1554,7 +1543,7 @@ def test_rate_limit_replay_matches_python(spark, sf_dir):
 def test_kappa_never_exceeds_raw_agreement(spark, sf_dir):
     """kappa <= observed agreement always (chance correction can only
     subtract), and both agreements are valid probabilities."""
-    from flink_cookbook_spark.pipeline.prepared9 import lang_id_agreement_kappa
+    from flink_cookbook_spark.pipeline.text import lang_id_agreement_kappa
 
     [r] = lang_id_agreement_kappa(spark, sf_dir).collect()
     assert 0 <= r.observed_agreement <= 1 + 2e-6
@@ -1567,7 +1556,9 @@ def test_kappa_never_exceeds_raw_agreement(spark, sf_dir):
 def test_return_levels_grow_with_period(spark, sf_dir):
     """The 365-day return level must exceed the 30-day level (strictly,
     when beta > 0), and both must exceed the Gumbel location mu."""
-    from flink_cookbook_spark.pipeline.prepared9 import extreme_value_return_levels
+    from flink_cookbook_spark.operators.stats import (
+        extreme_value_return_levels,
+    )
 
     rows = extreme_value_return_levels(spark, sf_dir).collect()
     by_key: dict = {}
@@ -1584,8 +1575,7 @@ def test_return_levels_grow_with_period(spark, sf_dir):
 def test_wasserstein_dominates_ks(spark, sf_dir):
     """For binned distributions on a shared axis, W1 (sum of CDF gaps)
     is >= the single largest gap (KS D) per key; both non-negative."""
-    from flink_cookbook_spark.pipeline.prepared2 import ks_test_drift
-    from flink_cookbook_spark.pipeline.prepared10 import wasserstein_drift
+    from flink_cookbook_spark.operators.drift import ks_test_drift, wasserstein_drift
 
     ks = {r.event_type: r for r in ks_test_drift(spark, sf_dir).collect()}
     w1 = {r.event_type: r for r in wasserstein_drift(spark, sf_dir).collect()}
@@ -1602,7 +1592,7 @@ def test_logistic_training_improves_over_chance(spark, sf_dir):
     generator, so require AUC > 0.5) and finite coefficients."""
     import math
 
-    from flink_cookbook_spark.pipeline.prepared10 import logistic_churn_baseline
+    from flink_cookbook_spark.operators.mleval import logistic_churn_baseline
 
     [r] = logistic_churn_baseline(spark, sf_dir).collect()
     assert r.n_users > 0 and 0 < r.n_pos < r.n_users
@@ -1615,8 +1605,9 @@ def test_smd_table_reports_every_feature(spark, sf_dir):
     """All three features emit; the imbalance flag matches the |smd|
     rule; parity arms on a uniform user grid should rarely flag, but
     only the flag-consistency is asserted."""
-    from flink_cookbook_spark.pipeline.prepared10 import (
-        SMD_FLAG, covariate_balance_smd,
+    from flink_cookbook_spark.operators.experiments import (
+        SMD_FLAG,
+        covariate_balance_smd,
     )
 
     rows = covariate_balance_smd(spark, sf_dir).collect()
@@ -1633,7 +1624,7 @@ def test_smd_table_reports_every_feature(spark, sf_dir):
 def test_assortativity_is_a_valid_correlation(spark, sf_dir):
     """|r| <= 1 and the directed edge count is exactly twice the
     undirected one (symmetrized scoring)."""
-    from flink_cookbook_spark.pipeline.prepared11 import graph_assortativity
+    from flink_cookbook_spark.operators.graph import graph_assortativity
 
     [r] = graph_assortativity(spark, sf_dir).collect()
     assert r.n_nodes > 0 and r.n_edges > 0
@@ -1646,7 +1637,9 @@ def test_concurrency_peaks_are_feasible(spark, sf_dir):
     users; the sweep's global invariant (total starts == total ends)
     forces every day's running count to stay non-negative."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared11 import concurrent_sessions_profile
+    from flink_cookbook_spark.operators.windows import (
+        concurrent_sessions_profile,
+    )
 
     rows = concurrent_sessions_profile(spark, sf_dir).collect()
     assert rows
@@ -1658,7 +1651,7 @@ def test_concurrency_peaks_are_feasible(spark, sf_dir):
 
 def test_burn_rate_matches_share(spark, sf_dir):
     """burn == (1 - share) / (1 - target) and the alarm flag matches."""
-    from flink_cookbook_spark.pipeline.prepared11 import SLO_TARGET, slo_burn_rate
+    from flink_cookbook_spark.operators.drift import SLO_TARGET, slo_burn_rate
 
     rows = slo_burn_rate(spark, sf_dir).collect()
     assert rows
@@ -1672,7 +1665,7 @@ def test_burn_rate_matches_share(spark, sf_dir):
 def test_nb_fit_recovers_moments(spark, sf_dir):
     """Where overdispersed, the NB parameters must reproduce the
     observed moments: mean = r(1-p)/p and var = mean/p."""
-    from flink_cookbook_spark.pipeline.prepared11 import negative_binomial_fit
+    from flink_cookbook_spark.operators.stats import negative_binomial_fit
 
     rows = negative_binomial_fit(spark, sf_dir).collect()
     assert rows
@@ -1693,8 +1686,9 @@ def test_sliding_kmv_tracks_exact_within_sketch_error(spark, sf_dir):
     """Every windowed estimate must be positive and within the coarse
     KMV error envelope (~3/sqrt(K) relative) of the exact distinct,
     and full windows only (no partial head days)."""
-    from flink_cookbook_spark.pipeline.prepared12 import (
-        KMV_W_K, sliding_kmv_distinct,
+    from flink_cookbook_spark.operators.relational import (
+        KMV_W_K,
+        sliding_kmv_distinct,
     )
 
     rows = sliding_kmv_distinct(spark, sf_dir).collect()
@@ -1719,7 +1713,7 @@ def test_cdc_chunks_are_stable_under_insertion(spark, sf_dir):
     from flink_cookbook_spark.pipeline.dedup import _portable_hash  # noqa: F401
     import hashlib
 
-    from flink_cookbook_spark.pipeline.prepared12 import CDC_MOD
+    from flink_cookbook_spark.pipeline.dedup import CDC_MOD
 
     def hash60(s: str) -> int:
         return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
@@ -1747,7 +1741,9 @@ def test_cdc_chunks_are_stable_under_insertion(spark, sf_dir):
 def test_column_matching_finds_the_fk_pairs(spark, sf_dir):
     """The known join keys must score as same-domain candidates; a
     cross-domain pair (orderkey vs partkey) must not."""
-    from flink_cookbook_spark.pipeline.prepared12 import column_similarity_matching
+    from flink_cookbook_spark.operators.relational import (
+        column_similarity_matching,
+    )
 
     rows = {
         (r.col_a, r.col_b): r
@@ -1763,8 +1759,9 @@ def test_column_matching_finds_the_fk_pairs(spark, sf_dir):
 def test_ucb_replay_accounting_is_consistent(spark, sf_dir):
     """Plays sum to matched steps; matched <= total steps; per-arm mean
     rewards are valid probabilities; every arm row emits."""
-    from flink_cookbook_spark.pipeline.prepared13 import (
-        BANDIT_ARMS, ucb_bandit_replay,
+    from flink_cookbook_spark.operators.experiments import (
+        BANDIT_ARMS,
+        ucb_bandit_replay,
     )
 
     rows = ucb_bandit_replay(spark, sf_dir).collect()
@@ -1781,7 +1778,9 @@ def test_ucb_replay_accounting_is_consistent(spark, sf_dir):
 def test_simpson_check_has_aggregate_row(spark, sf_dir):
     """The __all__ row exists, never reverses itself, and segment rows
     cover the observed first-event segments."""
-    from flink_cookbook_spark.pipeline.prepared13 import simpson_reversal_check
+    from flink_cookbook_spark.operators.experiments import (
+        simpson_reversal_check,
+    )
 
     rows = {r.segment: r for r in simpson_reversal_check(spark, sf_dir).collect()}
     assert "__all__" in rows
@@ -1793,7 +1792,7 @@ def test_simpson_check_has_aggregate_row(spark, sf_dir):
 def test_dp_table_scales_inversely_with_epsilon(spark, sf_dir):
     """Laplace scale must be exactly 1/eps and relative error must fall
     as epsilon rises for every statistic."""
-    from flink_cookbook_spark.pipeline.prepared13 import dp_noise_calibration
+    from flink_cookbook_spark.pipeline.curation import dp_noise_calibration
 
     rows = dp_noise_calibration(spark, sf_dir).collect()
     by_type: dict = {}
@@ -1810,7 +1809,10 @@ def test_k_anonymity_shares_reconcile(spark, sf_dir):
     """Class sizes sum to the corpus; the sub-k share equals the direct
     recomputation; min class size is the true minimum."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared13 import K_ANON, k_anonymity_report
+    from flink_cookbook_spark.pipeline.curation import (
+        K_ANON,
+        k_anonymity_report,
+    )
 
     rows = k_anonymity_report(spark, sf_dir).collect()
     n_docs = load(spark, sf_dir, "documents").count()
@@ -1827,8 +1829,9 @@ def test_shapley_efficiency_axiom(spark, sf_dir):
     v(empty) computed directly from the coalition table; every channel
     row must emit."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared14 import (
-        SHAPLEY_CHANNELS, shapley_attribution,
+    from flink_cookbook_spark.operators.timeseries import (
+        SHAPLEY_CHANNELS,
+        shapley_attribution,
     )
     from pyspark.sql import functions as F
 
@@ -1867,7 +1870,7 @@ def test_shapley_efficiency_axiom(spark, sf_dir):
 def test_burrows_delta_is_a_metricish_distance(spark, sf_dir):
     """Delta >= 0 for all pairs; all source pairs present exactly once;
     symmetric by construction (only a < b emitted)."""
-    from flink_cookbook_spark.pipeline.prepared14 import burrows_delta
+    from flink_cookbook_spark.pipeline.text import burrows_delta
 
     rows = burrows_delta(spark, sf_dir).collect()
     seen = set()
@@ -1883,8 +1886,9 @@ def test_burrows_delta_is_a_metricish_distance(spark, sf_dir):
 def test_laspeyres_base_year_is_unity(spark, sf_dir):
     """The base year's own index is exactly 1 and every index is
     positive with a non-trivial common basket."""
-    from flink_cookbook_spark.pipeline.prepared14 import (
-        LASPEYRES_BASE_YEAR, laspeyres_price_index,
+    from flink_cookbook_spark.operators.tpch import (
+        LASPEYRES_BASE_YEAR,
+        laspeyres_price_index,
     )
 
     rows = {r.ship_year: r for r in laspeyres_price_index(spark, sf_dir).collect()}
@@ -1898,7 +1902,7 @@ def test_laspeyres_base_year_is_unity(spark, sf_dir):
 def test_hurst_is_in_unit_interval(spark, sf_dir):
     """H estimates land in (0, 1) for any real series and the regime
     label matches the estimate's band."""
-    from flink_cookbook_spark.pipeline.prepared15 import hurst_exponent
+    from flink_cookbook_spark.operators.forecasting import hurst_exponent
 
     rows = hurst_exponent(spark, sf_dir).collect()
     assert rows
@@ -1916,7 +1920,7 @@ def test_hurst_is_in_unit_interval(spark, sf_dir):
 def test_western_electric_counts_are_bounded(spark, sf_dir):
     """Violation counts cannot exceed the hour count and the in-control
     share reconciles with them."""
-    from flink_cookbook_spark.pipeline.prepared15 import western_electric_rules
+    from flink_cookbook_spark.operators.drift import western_electric_rules
 
     rows = western_electric_rules(spark, sf_dir).collect()
     assert rows
@@ -1933,7 +1937,7 @@ def test_western_electric_counts_are_bounded(spark, sf_dir):
 def test_var_cvar_ordering(spark, sf_dir):
     """CVaR <= VaR always (the tail mean cannot beat its own
     threshold) and the tail count matches the level roughly."""
-    from flink_cookbook_spark.pipeline.prepared15 import value_at_risk
+    from flink_cookbook_spark.operators.tpch import value_at_risk
 
     [r] = value_at_risk(spark, sf_dir).collect()
     assert r.cvar_daily_change <= r.var_daily_change + 1e-6
@@ -1943,7 +1947,7 @@ def test_var_cvar_ordering(spark, sf_dir):
 def test_kendall_tau_bounds_and_reconciliation(spark, sf_dir):
     """|tau| <= 1 and concordant + discordant <= n_pairs (ties absorb
     the remainder)."""
-    from flink_cookbook_spark.pipeline.prepared15 import kendall_tau_daily
+    from flink_cookbook_spark.operators.forecasting import kendall_tau_daily
 
     [r] = kendall_tau_daily(spark, sf_dir).collect()
     assert abs(r.kendall_tau) <= 1 + 2e-6
@@ -1954,8 +1958,9 @@ def test_conformal_coverage_is_near_target(spark, sf_dir):
     """The split-conformal guarantee: empirical coverage should land
     near 1 - alpha (binomial noise bounds at the eval size) and never
     collapse; q_alpha must be a calibration score (non-negative)."""
-    from flink_cookbook_spark.pipeline.prepared16 import (
-        CONFORMAL_ALPHA, conformal_prediction_interval,
+    from flink_cookbook_spark.operators.forecasting import (
+        CONFORMAL_ALPHA,
+        conformal_prediction_interval,
     )
 
     rows = conformal_prediction_interval(spark, sf_dir).collect()
@@ -1973,7 +1978,7 @@ def test_conformal_coverage_is_near_target(spark, sf_dir):
 def test_chao1_never_below_observed(spark, sf_dir):
     """The richness estimate is >= the observed vocabulary and the
     unseen share is in [0, 1)."""
-    from flink_cookbook_spark.pipeline.prepared16 import chao1_vocabulary_richness
+    from flink_cookbook_spark.pipeline.text import chao1_vocabulary_richness
 
     rows = chao1_vocabulary_richness(spark, sf_dir).collect()
     assert rows
@@ -1986,7 +1991,9 @@ def test_chao1_never_below_observed(spark, sf_dir):
 def test_ess_never_exceeds_n(spark, sf_dir):
     """With the positive-rho convention, n_eff <= n always and the
     ratio is in (0, 1]."""
-    from flink_cookbook_spark.pipeline.prepared17 import effective_sample_size
+    from flink_cookbook_spark.operators.forecasting import (
+        effective_sample_size,
+    )
 
     rows = effective_sample_size(spark, sf_dir).collect()
     assert rows
@@ -1994,29 +2001,3 @@ def test_ess_never_exceeds_n(spark, sf_dir):
         assert r.n_effective <= r.n_obs + 1e-6
         assert 0 < r.ess_ratio <= 1 + 2e-6
         assert r.rho_sum_pos >= -1e-6
-
-
-def test_activate_raises_on_foreign_collision():
-    """activate() skips a name only when the registered fn IS the
-    prepared fn (idempotency); a FOREIGN registration colliding with a
-    prepared name must raise at activation time, not be silently
-    shadowed (round-8 ADVICE)."""
-    import pytest
-
-    from flink_cookbook_spark import registry
-    from flink_cookbook_spark.pipeline.prepared import PREPARED_R8, activate
-
-    registry._ensure_loaded()
-    name = sorted(PREPARED_R8)[0]
-    original = registry._REGISTRY[name]
-
-    def impostor(spark, sf_dir):  # pragma: no cover - never called
-        raise AssertionError
-
-    try:
-        registry._REGISTRY[name] = registry.QuerySpec(name=name, fn=impostor)
-        with pytest.raises(ValueError, match="foreign"):
-            activate()
-    finally:
-        registry._REGISTRY[name] = original
-    activate()  # restored state must activate cleanly again

@@ -1,40 +1,19 @@
-"""Round-9-prepared cohort (live since round 10): registration pin +
-semantic property tests.
+"""Semantic property tests for the queries tagged ``prepared-r10``.
 
-Every pair in PREPARED_R10 (batches 1-7: 7 + 5 + 6 + 6 + 6 + 4 + 4 =
-38) is registered since round 10 (the round-9 freeze drained the
-pending backlog first — r8 verdict ask #1), so the driver-identical
-oracle comparison now runs through the registry-wide replica in
-tests/test_oracle.py; this module pins the registration (exact fn +
-oracle identity) and keeps the cohort's semantic property tests."""
+The driver-identical oracle comparison for every registered query runs
+in tests/test_oracle.py; this module keeps the cohort's semantic
+property tests."""
 
 from __future__ import annotations
 
 import math
 
-from flink_cookbook_spark.pipeline.prepared19 import PREPARED_R10
-
-
-def test_r10_cohort_registered_verbatim():
-    """Round-10 flip: every cohort pair must be live in the registry as
-    THIS module's fn + oracle (a foreign registration shadowing a
-    harness-verified pair, or a silent drop, both fail here). The
-    oracle comparison itself runs in tests/test_oracle.py like every
-    other registered query."""
-    from flink_cookbook_spark.registry import all_specs
-
-    live = all_specs()
-    missing = sorted(set(PREPARED_R10) - set(live))
-    assert not missing, f"r10 cohort not registered: {missing}"
-    for name, (fn, oracle) in PREPARED_R10.items():
-        spec = live[name]
-        assert spec.fn is fn, name
-        assert spec.oracle == oracle, name
-        assert "prepared-r10" in spec.tags, name
-
 
 def test_welch_df_and_flag_are_consistent(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import WELCH_CRIT, welch_t_test
+    from flink_cookbook_spark.operators.experiments import (
+        WELCH_CRIT,
+        welch_t_test,
+    )
 
     rows = welch_t_test(spark, sf_dir).collect()
     assert rows
@@ -47,7 +26,7 @@ def test_welch_df_and_flag_are_consistent(spark, sf_dir):
 
 
 def test_pacf_lag1_equals_acf_and_bounded(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import pacf_durbin_levinson
+    from flink_cookbook_spark.operators.forecasting import pacf_durbin_levinson
 
     rows = {r.lag: r for r in pacf_durbin_levinson(spark, sf_dir).collect()}
     assert sorted(rows) == [1, 2, 3, 4]
@@ -62,8 +41,10 @@ def test_nelson_aalen_dominates_km_and_is_monotone(spark, sf_dir):
     """H(t) must be non-decreasing, and exp(-H) >= KM survival at every
     shared event time (-ln(1-x) >= x termwise), with equality only as
     d/n -> 0."""
-    from flink_cookbook_spark.pipeline.prepared import kaplan_meier_survival
-    from flink_cookbook_spark.pipeline.prepared19 import nelson_aalen_hazard
+    from flink_cookbook_spark.operators.stats import (
+        kaplan_meier_survival,
+        nelson_aalen_hazard,
+    )
 
     na = {
         r.t_hours: r for r in nelson_aalen_hazard(spark, sf_dir).collect()
@@ -83,8 +64,9 @@ def test_ewma_first_point_and_bounds(spark, sf_dir):
     """z_1 must equal lambda*x_1 + (1-lambda)*mu0 exactly (the closed
     form at t=1), and every z must sit inside the convex hull of the
     observed daily means and the anchor."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        EWMA_LAMBDA, ewma_control_chart,
+    from flink_cookbook_spark.operators.drift import (
+        EWMA_LAMBDA,
+        ewma_control_chart,
     )
 
     rows = ewma_control_chart(spark, sf_dir).collect()
@@ -107,8 +89,11 @@ def test_ewma_first_point_and_bounds(spark, sf_dir):
 
 
 def test_matryoshka_grid_complete_and_bounded(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        MAT_DIMS, MAT_K, MAT_QUERIES, matryoshka_recall,
+    from flink_cookbook_spark.pipeline.similarity import (
+        MAT_DIMS,
+        MAT_K,
+        MAT_QUERIES,
+        matryoshka_recall,
     )
 
     rows = matryoshka_recall(spark, sf_dir).collect()
@@ -122,7 +107,7 @@ def test_matryoshka_grid_complete_and_bounded(spark, sf_dir):
 
 
 def test_stump_has_one_best_and_nonneg_gains(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import decision_stump_split
+    from flink_cookbook_spark.operators.mleval import decision_stump_split
 
     rows = decision_stump_split(spark, sf_dir).collect()
     assert rows
@@ -140,10 +125,10 @@ def test_stump_has_one_best_and_nonneg_gains(spark, sf_dir):
 
 
 def test_precision_recall_identities(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import (
+    from flink_cookbook_spark.pipeline.retrieval import (
+        TOP_K,
         retrieval_precision_recall_at_k,
     )
-    from flink_cookbook_spark.pipeline.retrieval import TOP_K
 
     rows = retrieval_precision_recall_at_k(spark, sf_dir).collect()
     assert rows
@@ -160,8 +145,9 @@ def test_precision_recall_identities(spark, sf_dir):
 
 
 def test_page_hinkley_stat_nonneg_and_flag_consistent(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        PH_LAMBDA, page_hinkley_drift,
+    from flink_cookbook_spark.operators.drift import (
+        PH_LAMBDA,
+        page_hinkley_drift,
     )
 
     rows = page_hinkley_drift(spark, sf_dir).collect()
@@ -176,7 +162,7 @@ def test_theil_additivity_and_nonneg(spark, sf_dir):
     """The decomposition identity T = B + W must hold exactly (up to
     display rounding), and every component is non-negative up to the
     same rounding."""
-    from flink_cookbook_spark.pipeline.prepared19 import theil_decomposition
+    from flink_cookbook_spark.pipeline.text import theil_decomposition
 
     rows = theil_decomposition(spark, sf_dir).collect()
     assert rows
@@ -192,7 +178,7 @@ def test_theil_additivity_and_nonneg(spark, sf_dir):
 def test_kruskal_wallis_rank_identities(spark, sf_dir):
     """Weighted mean of the group mean ranks must equal the global mean
     rank (N+1)/2; H >= 0; tie-corrected H >= H."""
-    from flink_cookbook_spark.pipeline.prepared19 import kruskal_wallis_binned
+    from flink_cookbook_spark.operators.stats import kruskal_wallis_binned
 
     rows = kruskal_wallis_binned(spark, sf_dir).collect()
     assert rows
@@ -206,8 +192,9 @@ def test_kruskal_wallis_rank_identities(spark, sf_dir):
 
 
 def test_ks_separation_bounded_and_threshold(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        KSSEP_BINS, score_ks_separation,
+    from flink_cookbook_spark.operators.mleval import (
+        KSSEP_BINS,
+        score_ks_separation,
     )
 
     [r] = score_ks_separation(spark, sf_dir).collect()
@@ -220,7 +207,7 @@ def test_mmd_kernel_bounds_and_self_null(spark, sf_dir):
     """Kernel means live in (0, 1]; the linear MMD estimate of two
     halves of the SAME generator should be small (well under the
     within-group kernel mass), and |mmd| <= 2 trivially."""
-    from flink_cookbook_spark.pipeline.prepared19 import mmd_linear_drift
+    from flink_cookbook_spark.pipeline.similarity import mmd_linear_drift
 
     [r] = mmd_linear_drift(spark, sf_dir).collect()
     assert r.n_quadruples > 0
@@ -233,8 +220,9 @@ def test_mann_kendall_bounds_and_flag(spark, sf_dir):
     """|S| is bounded by the number of pairs; variance positive; the
     trend label must agree with the rounded Z against the critical
     value."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        MK_Z_CRIT, mann_kendall_trend,
+    from flink_cookbook_spark.operators.forecasting import (
+        MK_Z_CRIT,
+        mann_kendall_trend,
     )
 
     rows = mann_kendall_trend(spark, sf_dir).collect()
@@ -255,9 +243,7 @@ def test_perplexity_bounds(spark, sf_dir):
     """Cross-entropy of a proper (sub-unit) smoothed LM is positive, so
     perplexity > 1; OOV share lives in [0, 1]; perplexity must equal
     2^H for the emitted (rounded) H."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        unigram_perplexity_split,
-    )
+    from flink_cookbook_spark.pipeline.text import unigram_perplexity_split
 
     rows = unigram_perplexity_split(spark, sf_dir).collect()
     assert rows
@@ -273,7 +259,7 @@ def test_perplexity_bounds(spark, sf_dir):
 def test_js_divergence_bounds_and_pair_count(spark, sf_dir):
     """JS divergence in bits is bounded [0, 1]; shared masses are
     probabilities; pairs are emitted once with source_a < source_b."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
+    from flink_cookbook_spark.pipeline.text import (
         jensen_shannon_source_divergence,
     )
 
@@ -292,7 +278,7 @@ def test_js_divergence_bounds_and_pair_count(spark, sf_dir):
 def test_levene_identities(spark, sf_dir):
     """W >= 0; df1 = k - 1 with k the emitted group count; df2 = N - k
     with N the summed group sizes; the constant columns are constant."""
-    from flink_cookbook_spark.pipeline.prepared19 import levene_variance_test
+    from flink_cookbook_spark.operators.stats import levene_variance_test
 
     rows = levene_variance_test(spark, sf_dir).collect()
     assert rows
@@ -310,7 +296,7 @@ def test_friedman_rank_identities(spark, sf_dir):
     """Complete blocks: every treatment sees the same n_days; the mean
     of the per-treatment mean ranks is (k+1)/2; Q >= 0 (it is a sum of
     squared centred rank sums); df = k-1."""
-    from flink_cookbook_spark.pipeline.prepared19 import friedman_test
+    from flink_cookbook_spark.operators.stats import friedman_test
 
     rows = friedman_test(spark, sf_dir).collect()
     assert rows
@@ -324,7 +310,7 @@ def test_friedman_rank_identities(spark, sf_dir):
 
 
 def test_readability_components_positive(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import readability_scores
+    from flink_cookbook_spark.pipeline.text import readability_scores
 
     rows = readability_scores(spark, sf_dir).collect()
     assert rows
@@ -340,8 +326,9 @@ def test_readability_components_positive(spark, sf_dir):
 def test_spearman_bounds_and_symmetric_grid(spark, sf_dir):
     """rho in [-1, 1]; every (pair, lag) cell appears once; lag-0
     overlap must be the largest (shifting can only shrink it)."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        SPEARMAN_MAX_LAG, spearman_lead_lag,
+    from flink_cookbook_spark.operators.forecasting import (
+        SPEARMAN_MAX_LAG,
+        spearman_lead_lag,
     )
 
     rows = spearman_lead_lag(spark, sf_dir).collect()
@@ -359,8 +346,9 @@ def test_spearman_bounds_and_symmetric_grid(spark, sf_dir):
 
 
 def test_adf_flag_and_rho_identity(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        ADF_CRIT, adf_unit_root_proxy,
+    from flink_cookbook_spark.operators.forecasting import (
+        ADF_CRIT,
+        adf_unit_root_proxy,
     )
 
     rows = adf_unit_root_proxy(spark, sf_dir).collect()
@@ -374,9 +362,7 @@ def test_adf_flag_and_rho_identity(spark, sf_dir):
 def test_mutual_information_identities(spark, sf_dir):
     """MI >= 0; cell contributions must sum to the constant mi_bits;
     normalized MI in [0, 1]; joint probabilities sum to 1."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        mutual_information_profile,
-    )
+    from flink_cookbook_spark.operators.stats import mutual_information_profile
 
     rows = mutual_information_profile(spark, sf_dir).collect()
     assert rows
@@ -391,7 +377,7 @@ def test_mutual_information_identities(spark, sf_dir):
 def test_odds_ratio_identities(spark, sf_dir):
     """CI must bracket the point estimate; significance = CI excludes
     1; the 2x2 cells partition the type's events."""
-    from flink_cookbook_spark.pipeline.prepared19 import odds_ratio_table
+    from flink_cookbook_spark.operators.stats import odds_ratio_table
 
     rows = odds_ratio_table(spark, sf_dir).collect()
     assert rows
@@ -406,7 +392,7 @@ def test_odds_ratio_identities(spark, sf_dir):
 def test_cochran_q_identities(spark, sf_dir):
     """Q >= 0; df = k-1; every treatment sees the same complete-block
     count; column successes bounded by block count."""
-    from flink_cookbook_spark.pipeline.prepared19 import cochran_q_test
+    from flink_cookbook_spark.operators.stats import cochran_q_test
 
     rows = cochran_q_test(spark, sf_dir).collect()
     assert rows
@@ -419,7 +405,7 @@ def test_cochran_q_identities(spark, sf_dir):
 
 
 def test_seasonal_strengths_bounded(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import (
+    from flink_cookbook_spark.operators.forecasting import (
         seasonal_strength_profile,
     )
 
@@ -435,8 +421,10 @@ def test_seasonal_strengths_bounded(spark, sf_dir):
 def test_ljung_box_identities(spark, sf_dir):
     """Q >= 0 (sum of squares); every r_k bounded by 1; flag reads the
     rounded Q against the chi-square critical value."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        LB_CRIT, LB_LAGS, ljung_box_test,
+    from flink_cookbook_spark.operators.forecasting import (
+        LB_CRIT,
+        LB_LAGS,
+        ljung_box_test,
     )
 
     rows = ljung_box_test(spark, sf_dir).collect()
@@ -453,8 +441,9 @@ def test_ljung_box_identities(spark, sf_dir):
 def test_granger_grid_and_f_nonneg(spark, sf_dir):
     """Every ordered pair appears once; F >= 0 (adding a regressor
     cannot increase SSE); flag reads the rounded F."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        GRANGER_CRIT, granger_causality_proxy,
+    from flink_cookbook_spark.operators.forecasting import (
+        GRANGER_CRIT,
+        granger_causality_proxy,
     )
 
     rows = granger_causality_proxy(spark, sf_dir).collect()
@@ -471,9 +460,7 @@ def test_granger_grid_and_f_nonneg(spark, sf_dir):
 def test_poisson_rate_identities(spark, sf_dir):
     """CI must bracket the rate ratio; observed rates reproduce from
     counts and exposures; significance reads the rounded z."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        poisson_rate_ratio_test,
-    )
+    from flink_cookbook_spark.operators.stats import poisson_rate_ratio_test
 
     rows = poisson_rate_ratio_test(spark, sf_dir).collect()
     assert rows
@@ -487,9 +474,7 @@ def test_poisson_rate_identities(spark, sf_dir):
 
 
 def test_mcnemar_cells_and_flag(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        MCNEMAR_CRIT, mcnemar_test,
-    )
+    from flink_cookbook_spark.operators.stats import MCNEMAR_CRIT, mcnemar_test
 
     rows = mcnemar_test(spark, sf_dir).collect()
     assert rows
@@ -502,7 +487,7 @@ def test_mcnemar_cells_and_flag(spark, sf_dir):
 def test_isotonic_monotone_and_mass_preserving(spark, sf_dir):
     """The fitted rates must be non-decreasing in the score bin, sit in
     [0,1], and preserve the weighted total (the PAV invariant)."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
+    from flink_cookbook_spark.operators.mleval import (
         isotonic_calibration_binned,
     )
 
@@ -525,9 +510,7 @@ def test_isotonic_monotone_and_mass_preserving(spark, sf_dir):
 def test_hill_curve_shapes(spark, sf_dir):
     """One row per depth; H > 0; alpha = 1/H; thresholds decrease as k
     deepens (order statistics are sorted)."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        HILL_KS, hill_tail_index,
-    )
+    from flink_cookbook_spark.operators.stats import HILL_KS, hill_tail_index
 
     rows = {r.k: r for r in hill_tail_index(spark, sf_dir).collect()}
     assert sorted(rows) == sorted(HILL_KS)
@@ -545,8 +528,10 @@ def test_hubness_mass_conservation(spark, sf_dir):
     """Total k-occurrence mass must equal the number of emitted top-k
     slots (HUB_QUERIES * HUB_K when the corpus is large enough);
     antihub share consistent with appearing count."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        HUB_K, HUB_QUERIES, hubness_score,
+    from flink_cookbook_spark.pipeline.similarity import (
+        HUB_K,
+        HUB_QUERIES,
+        hubness_score,
     )
 
     rows = hubness_score(spark, sf_dir).collect()
@@ -566,9 +551,7 @@ def test_ngram_coverage_bounds(spark, sf_dir):
     """Coverages are probabilities; occurrence coverage >= distinct
     coverage is NOT an identity (frequent bigrams pull it up), but
     both must be positive on the repetitive synthetic corpus."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        ngram_coverage_overlap,
-    )
+    from flink_cookbook_spark.pipeline.text import ngram_coverage_overlap
 
     rows = ngram_coverage_overlap(spark, sf_dir).collect()
     assert rows
@@ -579,9 +562,7 @@ def test_ngram_coverage_bounds(spark, sf_dir):
 
 
 def test_boilerplate_clusters_are_plural(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        boilerplate_prefix_clusters,
-    )
+    from flink_cookbook_spark.pipeline.dedup import boilerplate_prefix_clusters
 
     rows = boilerplate_prefix_clusters(spark, sf_dir).collect()
     # the synthetic corpus draws from a small template pool, so some
@@ -597,7 +578,7 @@ def test_jl_distortion_concentrates(spark, sf_dir):
     """Every ratio is positive; the mean ratio must concentrate near 1
     (unbiasedness of the +-1 projection) within a loose JL-style
     band for 8 output dims."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
+    from flink_cookbook_spark.pipeline.similarity import (
         random_projection_distortion,
     )
 
@@ -617,7 +598,7 @@ def test_abc_xyz_grid_identities(spark, sf_dir):
     alphabets; A-class cells cannot be outnumbered by their revenue
     rank (A holds the top revenue percentile, so its per-part mean
     revenue share must exceed C's)."""
-    from flink_cookbook_spark.pipeline.prepared19 import abc_xyz_classification
+    from flink_cookbook_spark.operators.tpch import abc_xyz_classification
 
     rows = abc_xyz_classification(spark, sf_dir).collect()
     assert rows
@@ -639,7 +620,7 @@ def test_abc_xyz_grid_identities(spark, sf_dir):
 
 
 def test_lead_time_percentiles_ordered(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import ship_lead_time_profile
+    from flink_cookbook_spark.operators.tpch import ship_lead_time_profile
 
     rows = ship_lead_time_profile(spark, sf_dir).collect()
     assert rows
@@ -654,7 +635,7 @@ def test_supplier_concentration_identities(spark, sf_dir):
     """HHI of an n-supplier split lives in [1/n, 1]; the single-source
     bucket (n=1) must have HHI exactly 1; bucket part counts sum to the
     catalog size implied by the constant share."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
+    from flink_cookbook_spark.operators.tpch import (
         supplier_concentration_by_part,
     )
 
@@ -669,8 +650,9 @@ def test_supplier_concentration_identities(spark, sf_dir):
 
 
 def test_unit_price_dispersion_flags(spark, sf_dir):
-    from flink_cookbook_spark.pipeline.prepared19 import (
-        UPD_CV_FLAG, unit_price_dispersion,
+    from flink_cookbook_spark.operators.tpch import (
+        UPD_CV_FLAG,
+        unit_price_dispersion,
     )
 
     rows = unit_price_dispersion(spark, sf_dir).collect()
@@ -715,7 +697,7 @@ def test_mann_kendall_closed_form_on_constructed_series(
     constant series must give S = 0, slope 0, 'no_trend' (its
     variance degenerates under full tie correction and the z branch
     must return 0, not NaN)."""
-    from flink_cookbook_spark.pipeline.prepared19 import mann_kendall_trend
+    from flink_cookbook_spark.operators.forecasting import mann_kendall_trend
 
     base = str(tmp_path_factory.mktemp("mk_fx") / "lin")
     rows = []
@@ -744,7 +726,7 @@ def test_friedman_closed_form_on_constant_ordering(spark, tmp_path_factory):
     (1,2,3) in every block, so Q = 12/(n*k*(k+1)) * n^2*(1+4+9)
     - 3n(k+1) = 20 for n = 10 — checked against the hand computation,
     plus exact mean ranks."""
-    from flink_cookbook_spark.pipeline.prepared19 import friedman_test
+    from flink_cookbook_spark.operators.stats import friedman_test
 
     base = str(tmp_path_factory.mktemp("fr_fx") / "const")
     rows = []
@@ -772,7 +754,7 @@ def test_isotonic_matches_sequential_pav(spark, sf_dir):
     sequential pool-adjacent-violators algorithm run IN THE TEST on
     the operator's own (n, empirical_rate) bins — an independent
     implementation of the same optimization, no SQL involved."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
+    from flink_cookbook_spark.operators.mleval import (
         isotonic_calibration_binned,
     )
 
@@ -811,7 +793,7 @@ def test_granger_directionality_on_constructed_pair(
     aperiodic base series: the a -> b direction must show a (vastly)
     larger F than b -> a, and only a -> b may clear the causal flag —
     the directionality property that IS the point of the test."""
-    from flink_cookbook_spark.pipeline.prepared19 import (
+    from flink_cookbook_spark.operators.forecasting import (
         granger_causality_proxy,
     )
 
@@ -848,7 +830,7 @@ def test_page_hinkley_alarms_after_constructed_shift(
     the shift and MUST alarm within a few post-shift days (each
     post-shift day adds ~(20 - running-mean drift - delta) to the
     excursion, crossing lambda = 10 almost immediately)."""
-    from flink_cookbook_spark.pipeline.prepared19 import page_hinkley_drift
+    from flink_cookbook_spark.operators.drift import page_hinkley_drift
 
     base = str(tmp_path_factory.mktemp("ph_fx") / "shift")
     rows = []

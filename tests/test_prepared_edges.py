@@ -9,7 +9,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-HALF = 1705363200  # the shared first/second-half split epoch
+from flink_cookbook_spark.operators.stats import SPLIT_EPOCH_S
+
 MONTH_START = 1704067200
 
 
@@ -28,7 +29,7 @@ def mirrored_events_dir(spark, tmp_path_factory):
             et = ["click", "purchase", "view"][k % 3]
             rows.append((eid, t, u, et, v))
             eid += 1
-            rows.append((eid, t + (HALF - MONTH_START), u, et, v))
+            rows.append((eid, t + (SPLIT_EPOCH_S - MONTH_START), u, et, v))
             eid += 1
     df = spark.createDataFrame(
         rows, "event_id long, tsec long, user_id long, event_type string, value double"
@@ -45,8 +46,7 @@ def mirrored_events_dir(spark, tmp_path_factory):
 
 
 def test_ks_and_w1_are_exactly_zero_on_mirrored_halves(spark, mirrored_events_dir):
-    from flink_cookbook_spark.pipeline.prepared2 import ks_test_drift
-    from flink_cookbook_spark.pipeline.prepared10 import wasserstein_drift
+    from flink_cookbook_spark.operators.drift import ks_test_drift, wasserstein_drift
 
     for r in ks_test_drift(spark, mirrored_events_dir).collect():
         assert r.n_a == r.n_b
@@ -58,7 +58,7 @@ def test_ks_and_w1_are_exactly_zero_on_mirrored_halves(spark, mirrored_events_di
 
 def test_mwu_is_centered_on_mirrored_halves(spark, mirrored_events_dir):
     """Identical samples -> U equals its expectation exactly."""
-    from flink_cookbook_spark.pipeline.prepared6 import mann_whitney_u
+    from flink_cookbook_spark.operators.stats import mann_whitney_u
 
     for r in mann_whitney_u(spark, mirrored_events_dir).collect():
         assert r.n_a == r.n_b
@@ -92,7 +92,7 @@ def burst_events_dir(spark, tmp_path_factory):
 
 
 def test_token_bucket_throttles_the_burst_exactly(spark, burst_events_dir):
-    from flink_cookbook_spark.pipeline.prepared9 import rate_limit_simulation
+    from flink_cookbook_spark.operators.timeseries import rate_limit_simulation
 
     [r] = rate_limit_simulation(spark, burst_events_dir).collect()
     assert r.n_requests == 5
@@ -104,8 +104,12 @@ def test_sprt_accepts_h1_when_everyone_converts(spark, tmp_path_factory):
     and must cross the upper boundary at ceil(upper / ln(p1/p0))."""
     import math
 
-    from flink_cookbook_spark.pipeline.prepared8 import (
-        SPRT_ALPHA, SPRT_BETA, SPRT_P0, SPRT_P1, sprt_sequential_test,
+    from flink_cookbook_spark.operators.experiments import (
+        SPRT_ALPHA,
+        SPRT_BETA,
+        SPRT_P0,
+        SPRT_P1,
+        sprt_sequential_test,
     )
 
     base = str(tmp_path_factory.mktemp("edge_fx3") / "allconv")
@@ -134,7 +138,7 @@ def test_shapley_axioms_on_constructed_corpus(spark, tmp_path_factory):
     (unobserved coalition -> v=0) actually guarantees: symmetry for
     identically-absent channels, click as the strict maximum, and
     efficiency against the zero-filled lattice."""
-    from flink_cookbook_spark.pipeline.prepared14 import shapley_attribution
+    from flink_cookbook_spark.operators.timeseries import shapley_attribution
 
     base = str(tmp_path_factory.mktemp("edge_fx4") / "shap")
     rows = []

@@ -897,7 +897,7 @@ def test_streaming_minute_rate_feeds_rate_profile(spark, sf_dir, events_stream_d
     1-minute tumbling count (complete mode — finite input, every window
     emitted), and the profile derived from the streamed partials equals
     the batch operator exactly."""
-    from flink_cookbook_spark.pipeline.prepared import event_rate_profile
+    from flink_cookbook_spark.operators.timeseries import event_rate_profile
     from flink_cookbook_spark.registry import rnd
 
     stream = (
@@ -937,7 +937,7 @@ def test_streaming_sprt_equals_batch(spark, sf_dir, tmp_path_factory):
     across TWO micro-batch phases separated by a checkpointed restart,
     so cross-batch state persistence (not just single-pass folding) is
     what's being proved."""
-    from flink_cookbook_spark.pipeline.prepared8 import sprt_sequential_test
+    from flink_cookbook_spark.operators.experiments import sprt_sequential_test
     from flink_cookbook_spark.streaming.sequential import (
         sprt_observations, sprt_streaming,
     )
@@ -997,7 +997,7 @@ def test_streaming_rate_limiter_equals_replay(spark, sf_dir, tmp_path_factory):
     must equal a continuous Python replay of the same recurrence for
     EVERY user."""
     from flink_cookbook_spark.catalog import load
-    from flink_cookbook_spark.pipeline.prepared9 import RL_BURST, RL_REFILL_S
+    from flink_cookbook_spark.operators.timeseries import RL_BURST, RL_REFILL_S
     from flink_cookbook_spark.streaming.ratelimit import rate_limiter_streaming
 
     ev = load(spark, sf_dir, "events").select(
