@@ -7,19 +7,25 @@ time includes planning + execution, excluding JVM start.
 
 Regression gate: ``python bench.py --check`` additionally compares each
 per-query time against the committed budgets in ``perf_budgets.json``
-(sf0.1 only) and lists queries drifting >15% over budget on stderr,
+(sf0.1 only) and lists queries drifting >30% over budget on stderr,
 exiting 1 if any. ``--write-budgets`` refreshes the budget file with the
 per-query MEDIAN over three full sweeps (round-13 lesson: a single
 sweep's min-of-2 records lucky-fast floors that generate false DRIFT
 flags on unchanged plans for the rest of the round; medians over >=3
 sweeps are the committed policy). The printed JSON line is always the
 FIRST sweep — the driver contract is unchanged.
+
+Coverage tier (round-8 verdict #5): ``python bench.py --tier2`` times
+EVERY registered query once so no operator's cost is invisible to the
+bench, and writes ``perf_tier2.json``; with ``--check`` it gates against
+that snapshot (generous 2x bar) instead of writing.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -43,93 +49,6 @@ HEADLINE: tuple[str, ...] = (
     "sessionize",
 )
 
-
-def main() -> None:
-    from flink_cookbook_spark.registry import all_specs
-    from flink_cookbook_spark.session import get_spark
-
-    if "--tier2" in sys.argv:
-        sys.exit(_tier2())
-
-    spark = get_spark(app_name="fcs-bench")
-    specs = all_specs()
-    names = [n for n in HEADLINE if n in specs]
-    # also bench anything tagged "bench" that is not already headline
-    names += [n for n, s in sorted(specs.items()) if "bench" in s.tags and n not in names]
-
-    # warm up the JVM + parquet footer caches with a trivial action
-    spark.range(1).count()
-
-    # two iterations, keep the min: steady-state plan cost, not first-run
-    # codegen/JIT compilation noise.
-    timings: dict[str, float] = {}
-    for _ in range(2):
-        for name in names:
-            fn = specs[name].fn
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).count()
-            dt = round(time.perf_counter() - t0, 3)
-            timings[name] = min(timings.get(name, dt), dt)
-
-    # teardown: the memoized pipeline indexes are released in the
-    # finally below — AFTER --check's warm-confirm pass, which must see
-    # the same warm memo state the sweep ran under (minhash_lsh_pairs
-    # et al. would otherwise pay a full index rebuild and read as false
-    # regressions).
-    from flink_cookbook_spark.pipeline._cache import clear
-
-    try:
-        sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-        out = {
-            "metric": "headline_queries_total",
-            "value": round(sum(timings.values()), 3),
-            "unit": "sec",
-            "queries": timings,
-            "sf": float(sf) if sf.replace(".", "", 1).isdigit() else sf,
-        }
-        print(json.dumps(out))
-
-        budget_path = os.path.join(REPO_ROOT, "perf_budgets.json")
-        if "--write-budgets" in sys.argv:
-            # budgets are cross-sweep MEDIANS, never a single sweep's
-            # values: run two more full min-of-2 sweeps (same methodology
-            # as the printed one) and take the per-query median of the
-            # three, so one lucky-fast outlier cannot become a budget
-            # floor that flags unchanged plans for the rest of the round.
-            import statistics
-
-            sweeps = [timings]
-            for _ in range(2):
-                extra: dict[str, float] = {}
-                for _i in range(2):
-                    for name in names:
-                        fn = specs[name].fn
-                        t0 = time.perf_counter()
-                        fn(spark, SF_DIR).count()
-                        dt = round(time.perf_counter() - t0, 3)
-                        extra[name] = min(extra.get(name, dt), dt)
-                sweeps.append(extra)
-            budgets = {
-                name: round(statistics.median(s[name] for s in sweeps), 3)
-                for name in timings
-            }
-            with open(budget_path, "w") as f:
-                json.dump({"sf": out["sf"], "budgets": budgets}, f, indent=1, sort_keys=True)
-            print(
-                f"wrote {budget_path} (per-query median of 3 sweeps)",
-                file=sys.stderr,
-            )
-        if "--check" in sys.argv:
-            def _rerun(name: str) -> float:
-                t0 = time.perf_counter()
-                specs[name].fn(spark, SF_DIR).count()
-                return round(time.perf_counter() - t0, 3)
-
-            sys.exit(_check(out, budget_path, _rerun))
-    finally:
-        clear()
-
-
 #: allowed drift over budget before --check flags a query. Budgets are the
 #: committed per-query seconds at sf0.1 (PERF.md explains the snapshot).
 #: Even after speed-normalizing, per-query scheduling/GC jitter on this
@@ -137,19 +56,64 @@ def main() -> None:
 #: repeated runs with identical plans), so the bar is 30%: anything over
 #: it has historically been a real plan change (welford's epoch-cast
 #: regression was 1.7x; dedup_clusters' extra rounds 1.5x), while
-#: everything under it has reproduced as noise.
-DRIFT = 1.30
+#: everything under it has reproduced as noise. Budgets under 0.3 s are
+#: floored there: sub-0.3 s queries jitter by scheduler noise.
+DRIFT, FLOOR = 1.30, 0.3
+
+#: tier-2 drift bar: one timed run per query (no min-of-2), so the
+#: noise floor is higher than the headline tier's — the gate exists to
+#: catch a QUADRATIC blowup hiding off the headline bench, not 30%
+#: drifts (the headline tier owns those).
+TIER2_DRIFT, TIER2_FLOOR = 2.0, 0.5
 
 
-def _check(out: dict, budget_path: str, rerun=None) -> int:
-    if not os.path.exists(budget_path):
-        print("--check: no perf_budgets.json; run --write-budgets first", file=sys.stderr)
+def _sf():
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    return float(sf) if sf.replace(".", "", 1).isdigit() else sf
+
+
+def timed_count(fn, spark, sf_dir: str):
+    """Run ``fn(spark, sf_dir).count()`` once; return the DataFrame, its
+    row count and the wall seconds, planning included."""
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    rows = df.count()
+    return df, rows, round(time.perf_counter() - t0, 3)
+
+
+def _sweep(spark, specs, names, passes: int) -> dict[str, float]:
+    """Time every name ``passes`` times over the list; return each
+    query's minimum (steady-state plan cost, not first-run codegen/JIT
+    noise)."""
+    timings: dict[str, float] = {}
+    for _ in range(passes):
+        for name in names:
+            dt = timed_count(specs[name].fn, spark, SF_DIR)[2]
+            timings[name] = min(timings.get(name, dt), dt)
+    return timings
+
+
+def _write(path: str, budgets: dict[str, float]) -> None:
+    with open(path, "w") as f:
+        json.dump({"sf": _sf(), "budgets": budgets}, f, indent=1, sort_keys=True)
+    print(f"wrote {path}", file=sys.stderr)
+
+
+def _gate(timings: dict[str, float], ref_path: str, drift: float, floor: float, rerun) -> int:
+    """Exit code of the regression gate: 1 if any query's speed-normalized
+    time exceeds ``max(budget, floor) * drift`` and a warm ``rerun(name)``
+    confirms it, or if ``ref_path`` is missing; 0 otherwise, including
+    when the budgets are for another sf."""
+    ref_name = os.path.basename(ref_path)
+    if not os.path.exists(ref_path):
+        print(f"--check: no {ref_name}; write it first", file=sys.stderr)
         return 1
-    with open(budget_path) as f:
+    with open(ref_path) as f:
         ref = json.load(f)
-    if ref.get("sf") != out["sf"]:
-        print(f"--check: budgets are for sf={ref.get('sf')}, run is sf={out['sf']}; skipping", file=sys.stderr)
+    if ref.get("sf") != _sf():
+        print(f"--check: {ref_name} is for sf={ref.get('sf')}, run is sf={_sf()}; skipping", file=sys.stderr)
         return 0
+    budgets = ref["budgets"]
     # normalize out host-speed noise: this container's wall-clock swings
     # ~±25% run to run (shared host), which would flag every query on a
     # slow run. Scale measured times by the MEDIAN per-query
@@ -158,146 +122,94 @@ def _check(out: dict, budget_path: str, rerun=None) -> int:
     # still trips the gate. Median, not total ratio (round-8 verdict):
     # one heavy outlier regressing would otherwise drag the whole
     # normalization factor with it and partially mask itself.
-    import statistics
-
-    common = [n for n in out["queries"] if n in ref["budgets"]]
-    ratios = [
-        ref["budgets"][n] / out["queries"][n] for n in common if out["queries"][n] > 0
-    ]
+    ratios = [budgets[n] / sec for n, sec in timings.items() if n in budgets and sec > 0]
     speed = statistics.median(ratios) if ratios else 1.0
+
+    def over(sec: float, budget: float) -> bool:
+        return sec * speed > max(budget, floor) * drift
+
+    # PERF.md bench policy, applied mechanically: a flag from one sweep on
+    # a shared host is not actionable by itself (cold costs — memo-index
+    # builds, codegen, the Python datasource's interpreter spin-up — land
+    # stochastically across a pass). Re-run only the flagged few warm and
+    # keep the min; real plan regressions reproduce, jitter does not.
     flagged = []
-    for name, sec in sorted(out["queries"].items()):
-        budget = ref["budgets"].get(name)
-        # floor tiny budgets: sub-0.3 s queries jitter by scheduler noise
-        if budget is not None and sec * speed > max(budget, 0.3) * DRIFT:
-            flagged.append((name, sec * speed, budget))
-    # PERF.md bench policy, applied mechanically (same as --tier2): a
-    # min-of-2 flag on a shared host is not actionable by itself — re-run
-    # only the flagged few warm and keep the min; real plan regressions
-    # reproduce, scheduler/GC jitter does not.
-    if flagged and rerun is not None:
-        confirmed = []
-        for name, _, budget in flagged:
-            warm = min(out["queries"][name], rerun(name))
-            if warm * speed > max(budget, 0.3) * DRIFT:
-                confirmed.append((name, warm * speed, budget))
-            else:
-                print(f"--check {name}: min-of-2 {out['queries'][name]:.3f}s was "
-                      f"jitter; warm re-run {warm:.3f}s within budget", file=sys.stderr)
-        flagged = confirmed
-    for name, sec, budget in flagged:
-        print(f"--check DRIFT {name}: {sec:.3f}s (speed-normalized x{speed:.2f}) "
-              f"vs budget {budget:.3f}s ({sec / budget:.2f}x)", file=sys.stderr)
-    new = [n for n in out["queries"] if n not in ref["budgets"]]
+    for name, sec in sorted(timings.items()):
+        if name not in budgets or not over(sec, budgets[name]):
+            continue
+        warm = min(sec, rerun(name))
+        if over(warm, budgets[name]):
+            flagged.append(name)
+            print(f"--check DRIFT {name}: {warm * speed:.3f}s (speed-normalized x{speed:.2f}) "
+                  f"vs budget {budgets[name]:.3f}s ({warm * speed / budgets[name]:.2f}x)",
+                  file=sys.stderr)
+        else:
+            print(f"--check {name}: {sec:.3f}s was jitter; warm re-run {warm:.3f}s within budget",
+                  file=sys.stderr)
+    new = sorted(n for n in timings if n not in budgets)
     if new:
-        print(f"--check: {len(new)} unbudgeted queries (run --write-budgets): {new}", file=sys.stderr)
+        print(f"--check: {len(new)} unbudgeted queries: {new}", file=sys.stderr)
     if not flagged:
-        print("--check: all queries within budget", file=sys.stderr)
+        print(f"--check: all queries within {drift}x of {ref_name}", file=sys.stderr)
     return 1 if flagged else 0
 
 
-#: tier-2 drift bar: one timed run per query (no min-of-2), so the
-#: noise floor is higher than the headline tier's — the gate exists to
-#: catch a QUADRATIC blowup hiding off the headline bench, not 30%
-#: drifts (the headline tier owns those).
-TIER2_DRIFT = 2.0
-
-
-def _tier2() -> int:
-    """Coverage tier (round-8 verdict #5): time EVERY registered query
-    once at $SPARK_GRAFT_SF_DIR so no operator's cost is invisible to
-    the bench. Writes ``perf_tier2.json``; with ``--check``, compares
-    against the committed snapshot (median-speed-normalized, generous
-    2x bar) instead of writing. Memoized pipeline caches are released
-    on every exit path (the warm-confirm pass needs them live until
-    then)."""
+def main() -> int:
     from flink_cookbook_spark.pipeline._cache import clear
+    from flink_cookbook_spark.registry import all_specs
+    from flink_cookbook_spark.session import get_spark
 
+    tier2 = "--tier2" in sys.argv
+    spark = get_spark(app_name="fcs-bench-tier2" if tier2 else "fcs-bench")
+    specs = all_specs()
+    if tier2:
+        names = sorted(specs)
+    else:
+        names = [n for n in HEADLINE if n in specs]
+        # also bench anything tagged "bench" that is not already headline
+        names += [n for n, s in sorted(specs.items()) if "bench" in s.tags and n not in names]
+
+    # warm up the JVM + parquet footer caches with a trivial action
+    spark.range(1).count()
+
+    # The memoized pipeline indexes are released in the finally below —
+    # AFTER --check's warm-confirm pass, which must see the same warm
+    # memo state the sweep ran under (minhash_lsh_pairs et al. would
+    # otherwise pay a full index rebuild and read as false regressions).
     try:
-        return _tier2_run()
+        timings = _sweep(spark, specs, names, 1 if tier2 else 2)
+        print(json.dumps({
+            "metric": "tier2_all_queries_total" if tier2 else "headline_queries_total",
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "queries": timings,
+            "sf": _sf(),
+        }))
+
+        def rerun(name: str) -> float:
+            return _sweep(spark, specs, [name], 1)[name]
+
+        if tier2:
+            path = os.path.join(REPO_ROOT, "perf_tier2.json")
+            if "--check" in sys.argv:
+                return _gate(timings, path, TIER2_DRIFT, TIER2_FLOOR, rerun)
+            _write(path, timings)
+            return 0
+        path = os.path.join(REPO_ROOT, "perf_budgets.json")
+        if "--write-budgets" in sys.argv:
+            # Budgets are the per-query median of three min-of-2 sweeps,
+            # never one sweep's values. The two extra sweeps run fully
+            # warm (memo caches and JIT from the printed sweep, whose
+            # first pass is the cold one), so the median leans mildly
+            # toward warm floors.
+            sweeps = [timings] + [_sweep(spark, specs, names, 2) for _ in range(2)]
+            _write(path, {n: round(statistics.median(s[n] for s in sweeps), 3) for n in timings})
+        if "--check" in sys.argv:
+            return _gate(timings, path, DRIFT, FLOOR, rerun)
+        return 0
     finally:
         clear()
 
 
-def _tier2_run() -> int:
-    from flink_cookbook_spark.registry import all_specs
-    from flink_cookbook_spark.session import get_spark
-
-    spark = get_spark(app_name="fcs-bench-tier2")
-    specs = all_specs()
-    spark.range(1).count()
-    timings: dict[str, float] = {}
-    for name, spec in sorted(specs.items()):
-        t0 = time.perf_counter()
-        spec.fn(spark, SF_DIR).count()
-        timings[name] = round(time.perf_counter() - t0, 3)
-
-    # NOTE: the memoized pipeline caches are cleared at the END of this
-    # function (not here): the --check warm-confirm pass re-runs flagged
-    # queries and must see the same warm memo state the sweep ran under,
-    # or memo-dependent queries pay a full index rebuild alone and read
-    # as false regressions.
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    out = {
-        "metric": "tier2_all_queries_total",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "sf": float(sf) if sf.replace(".", "", 1).isdigit() else sf,
-    }
-    print(json.dumps(out))
-    path = os.path.join(REPO_ROOT, "perf_tier2.json")
-    if "--check" not in sys.argv:
-        with open(path, "w") as f:
-            json.dump({"sf": out["sf"], "budgets": timings}, f, indent=1, sort_keys=True)
-        print(f"wrote {path}", file=sys.stderr)
-        return 0
-    if not os.path.exists(path):
-        print("--tier2 --check: no perf_tier2.json; run --tier2 first", file=sys.stderr)
-        return 1
-    import statistics
-
-    with open(path) as f:
-        ref = json.load(f)
-    if ref.get("sf") != out["sf"]:
-        print(f"--tier2 --check: snapshot is sf={ref.get('sf')}, run is sf={out['sf']}; skipping", file=sys.stderr)
-        return 0
-    common = [n for n in timings if n in ref["budgets"] and timings[n] > 0]
-    ratios = [ref["budgets"][n] / timings[n] for n in common]
-    speed = statistics.median(ratios) if ratios else 1.0
-    flagged = []
-    for name, sec in sorted(timings.items()):
-        budget = ref["budgets"].get(name)
-        if budget is not None and sec * speed > max(budget, 0.5) * TIER2_DRIFT:
-            flagged.append((name, sec * speed, budget))
-    # The PERF.md bench policy, applied mechanically: a single-run flag
-    # is not actionable — cold costs (memo-index builds, codegen, the
-    # Python datasource's interpreter spin-up) land stochastically
-    # across a 369-query alphabetical pass, so a handful of queries
-    # always read ~2x on one pass. Re-run ONLY the flagged few warm and
-    # keep the min; a real plan regression reproduces, jitter does not.
-    if flagged:
-        confirmed = []
-        for name, _, budget in flagged:
-            t0 = time.perf_counter()
-            specs[name].fn(spark, SF_DIR).count()
-            warm = min(timings[name], round(time.perf_counter() - t0, 3))
-            if warm * speed > max(budget, 0.5) * TIER2_DRIFT:
-                confirmed.append((name, warm * speed, budget))
-            else:
-                print(f"--tier2 {name}: single-run {timings[name]:.3f}s was "
-                      f"jitter; warm re-run {warm:.3f}s within bar", file=sys.stderr)
-        flagged = confirmed
-    for name, sec, budget in flagged:
-        print(f"--tier2 DRIFT {name}: {sec:.3f}s (normalized x{speed:.2f}) "
-              f"vs snapshot {budget:.3f}s ({sec / budget:.2f}x)", file=sys.stderr)
-    new = [n for n in timings if n not in ref["budgets"]]
-    if new:
-        print(f"--tier2 --check: {len(new)} unsnapshotted queries: {sorted(new)}", file=sys.stderr)
-    if not flagged:
-        print("--tier2 --check: all queries within the 2x coverage bar", file=sys.stderr)
-    return 1 if flagged else 0
-
-
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

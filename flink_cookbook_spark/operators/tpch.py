@@ -39,7 +39,7 @@ from flink_cookbook_spark.registry import NUDGE, register, rnd
 # both engines: Spark's BigDecimal.doubleValue is correctly rounded,
 # while DuckDB casts via int -> double then divides (double-rounding),
 # and they diverge by 1 ulp. PROBED, not just documented
-# (probe_decimal53.py, round 12): zero divergences in 20k-cent windows
+# (`probe.py decimal53`, round 12): zero divergences in 20k-cent windows
 # below 2^53; the FIRST divergent sum is exactly 2^53+1; ~32% of odd
 # cents diverge above; Spark is the correctly-rounded side at every
 # probed point. If a >1000x probe ever flags a money query, suspect

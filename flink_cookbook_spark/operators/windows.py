@@ -805,7 +805,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grows with the corpus — DECIMAL discipline (operators/tpch.py), so
     # the sum (and the cumulative window over it) is exact and
     # engine-identical at any scale; the cast back to double is correctly
-    # rounded well below the 2^53 boundary (probe_decimal53.py).
+    # rounded well below the 2^53 boundary (`probe.py decimal53`).
     # round-13: widened 12,2 -> 14,2 to match the package-wide money
     # width — on per-value overflow Spark (non-ANSI) yields NULL while
     # DuckDB errors, so a narrower width makes the engines fail

@@ -890,7 +890,7 @@ register(
 #: below cluster parallelism — worse, AQE
 #: coalesces the join's tiny INPUT (a few MB of vectors) into ONE
 #: partition while the pair OUTPUT is quadratic in cell size. Found
-#: empirically by the round-7 sf1 probe (probe_sf1.py): at 20k vectors
+#: empirically by the round-7 sf1 probe (`probe.py time`): at 20k vectors
 #: the manifest's pair stage collapsed to a single task computing
 #: ~10^8 array-fold cosines (>15 min; 122 s gridded; 31 s after also
 #: hoisting the per-vector norms out of the pair expression). Each side

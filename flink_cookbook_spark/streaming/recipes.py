@@ -33,6 +33,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from flink_cookbook_spark.functions.time import epoch_seconds
+from flink_cookbook_spark.operators.metrics import (
+    MIN_BASELINE,
+    PCT_THRESHOLD,
+    Z_THRESHOLD,
+)
 from flink_cookbook_spark.streaming.sarimax import (
     FIXTURE_CONFIG,
     STATE_SCHEMA,
@@ -41,11 +46,6 @@ from flink_cookbook_spark.streaming.sarimax import (
     baseline_streaming,
     replay_key,
 )
-
-#: reference alert thresholds (flinkarima.py:516-533)
-Z_THRESHOLD = 3.0
-PCT_THRESHOLD = 50.0
-MIN_BASELINE = 1.0
 
 
 def windowed_avg_stream(

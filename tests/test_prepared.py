@@ -3,8 +3,7 @@
 The driver-identical oracle comparison for every registered query runs
 in tests/test_oracle.py — duplicating it here would double the suite
 cost for 103 queries. This module keeps the ground-truth property tests
-plus cohort-wide lints (HUGEINT oracle columns, empty inputs, bounded
-broadcasts) over the tag."""
+plus the cohort-wide empty-input lint over the tag."""
 
 from __future__ import annotations
 
@@ -84,21 +83,6 @@ def test_pq_code_compresses_and_reconstructs(spark, sf_dir):
     assert all(r.ca >= 0 and r.cb >= 0 for r in rows)
     assert all(r.mse >= 0 for r in rows)
     assert any(r.mse > 0 for r in rows)
-
-
-def test_prepared_oracles_pass_hugeint_lint():
-    """Hold the prepared-r8 oracles to the HUGEINT lint (same DESCRIBE
-    check the registry-wide lint enforces)."""
-    from tests.conftest import SF_DIR
-
-    con = duckdb_connection(SF_DIR)
-    offenders = []
-    for name, spec in _r8_specs().items():
-        for col, typ, *_ in con.execute("DESCRIBE " + spec.oracle).fetchall():
-            if "HUGEINT" in typ.upper():
-                offenders.append(f"{name}.{col}: {typ}")
-    con.close()
-    assert not offenders, offenders
 
 
 def test_funnel_always_emits_every_stage(spark, sf_dir):
@@ -812,40 +796,6 @@ def test_decile_lift_partitions_customers(spark, sf_dir):
     assert lifts == sorted(lifts)
     assert rows[-1].decile == 10 and rows[-1].lift >= 1.0
     assert abs(rows[0].cum_share_from_top - 1.0) < 1e-3
-
-
-def test_prepared_broadcast_hints_are_bounded(spark, sf_dir):
-    """Pre-registration broadcast lint: every F.broadcast in a prepared
-    operator must hint a bounded subtree (1-row aggregate, constant
-    local relation, or a capped md5 sample), mirroring the registry-wide
-    test_no_forced_broadcast_of_unbounded_aggregate. The capped samples
-    (contrastive mining, kNN audit) are bounded BY CONSTRUCTION:
-    mod = max(1, n // CAP) keeps the sampled side <= ~2*CAP rows at any
-    corpus size."""
-    import inspect
-
-    #: capped-sample designs whose broadcast side is bounded by the
-    #: md5-mod construction, not by plan shape alone
-    capped = {"contrastive_pair_mining", "knn_label_consistency"}
-    from tests.test_plans import _broadcast_hint_subtrees, _hint_is_bounded
-
-    offenders = []
-    for name, spec in _r8_specs().items():
-        if name in capped:
-            continue
-        fn = spec.fn
-        try:
-            src = inspect.getsource(fn)
-        except (OSError, TypeError):
-            continue
-        if "F.broadcast(" not in src:
-            continue
-        df = fn(spark, sf_dir)
-        for sub in _broadcast_hint_subtrees(df):
-            if not _hint_is_bounded(sub):
-                offenders.append(name)
-                break
-    assert not offenders, offenders
 
 
 def test_water_filling_exhausts_budget(spark, sf_dir):
