@@ -38,6 +38,44 @@ MIN_BASELINE = 1.0
 WINDOW_SECONDS = 300
 #: emit cadence: fit/emit every Nth window sample (flinkarima.py:218-224)
 EMIT_EVERY_N = 5
+#: the alert schema of every-window alerting, batch flagship and stream
+ALERT_COLS = [
+    "user_id", "window_start", "alert_type", "severity", "observed", "baseline",
+    "deviation", "pct_deviation", "z_score", "baseline_window_start",
+]
+
+
+def score_alerts(
+    scored: DataFrame,
+    z_threshold: float = Z_THRESHOLD,
+    pct_threshold: float = PCT_THRESHOLD,
+    min_baseline: float = MIN_BASELINE,
+) -> DataFrame:
+    """J2, the alert rule (flinkarima.py:516-533) as column expressions:
+    score ``observed`` against ``baseline`` and ``running_std``, keep the
+    rows past either threshold, and append ``deviation``,
+    ``pct_deviation``, ``z_score``, ``alert_type`` and ``severity``."""
+    deviation = F.col("observed") - F.col("baseline")
+    pct = F.when(
+        F.col("baseline") >= min_baseline, deviation / F.col("baseline") * 100.0
+    ).otherwise(F.lit(0.0))
+    z = F.when(F.col("running_std") > 0, deviation / F.col("running_std")).otherwise(
+        F.lit(0.0)
+    )
+    return (
+        scored.withColumn("deviation", deviation)
+        .withColumn("pct_deviation", pct)
+        .withColumn("z_score", z)
+        .where(
+            (F.abs(F.col("z_score")) >= z_threshold)
+            | (F.abs(F.col("pct_deviation")) >= pct_threshold)
+        )
+        .withColumn("alert_type", F.lit("cpu_deviation"))
+        .withColumn(
+            "severity",
+            F.when(F.abs(F.col("z_score")) >= 2 * z_threshold, "high").otherwise("medium"),
+        )
+    )
 
 
 def five_min_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -883,9 +883,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # job on the result). The returned frame is a projection of the last
     # checkpointed generation: self-contained blocks, no lineage back
     # through earlier rounds. Superseded generations become unreferenced
-    # as the loop rebinds and the ContextCleaner releases their blocks;
-    # live storage stays bounded at ~2 label-table generations, same as
-    # the old explicit unpersist discipline.
+    # as the loop rebinds, and the ContextCleaner releases their blocks
+    # once the JVM garbage-collects them: storage returns to ~2 label-
+    # table generations eventually, not at every round, so a long loop
+    # can hold several generations at once.
     for _ in range(20):  # diameter bound; fixture clusters converge in <=3
         neighbor_min = (
             edges.join(labels, edges.doc2 == labels.doc_id)

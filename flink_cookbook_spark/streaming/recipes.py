@@ -9,7 +9,9 @@ Spark re-expression decided in SURVEY.md sections 1.4 / 2.1-J1 / 7.1:
   reference has no late-data story; watermarking adds one);
 - the stateful model runs in applyInPandasWithState, co-partitioned on
   the key — Flink's broadcast edge disappears entirely because Spark
-  hash-partitions both the baseline and alert paths on node_id;
+  hash-partitions both the baseline and alert paths on node_id. The key's
+  latest baseline is operator state: ``continuous_alerts_stream`` scores
+  every window against it, ``alerts_stream`` the emission windows only;
 - sinks are pluggable writeStream formats (console == the reference's
   print sink; memory for tests; parquet/kafka for production).
 
@@ -28,15 +30,19 @@ production deployment, and each query checkpoints independently (R1).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Iterator
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from flink_cookbook_spark.functions.time import epoch_seconds
 from flink_cookbook_spark.operators.metrics import (
+    ALERT_COLS,
     MIN_BASELINE,
     PCT_THRESHOLD,
     Z_THRESHOLD,
+    score_alerts,
 )
 from flink_cookbook_spark.streaming.sarimax import (
     FIXTURE_CONFIG,
@@ -162,36 +168,16 @@ def alerts_stream(
     pct_threshold: float = PCT_THRESHOLD,
     min_baseline: float = MIN_BASELINE,
 ) -> DataFrame:
-    """J1+J2 streaming: the stateful operator already holds the latest
-    baseline per key, so enrichment is state lookup, not a broadcast
-    join; the deviation/alert filter is pure column expressions on its
-    output. Here the baseline operator emits records only on cadence, so
-    alerts fire on cadence windows (the continuous-alert variant joins
-    via foreachBatch against the latest-baseline table). Thresholds
-    default to the reference's (flinkarima.py:516-533) and are
-    overridable from the CLI's --z-threshold/--pct-threshold/
-    --min-baseline knobs."""
-    baselines = baseline_streaming(windowed, cfg)
-    deviation = F.col("observed") - F.col("baseline")
-    pct = F.when(
-        F.col("baseline") >= min_baseline, deviation / F.col("baseline") * 100.0
-    ).otherwise(F.lit(0.0))
-    z = F.when(F.col("running_std") > 0, deviation / F.col("running_std")).otherwise(
-        F.lit(0.0)
-    )
-    return (
-        baselines.withColumn("deviation", deviation)
-        .withColumn("pct_deviation", pct)
-        .withColumn("z_score", z)
-        .where(
-            (F.abs(F.col("z_score")) >= z_threshold)
-            | (F.abs(F.col("pct_deviation")) >= pct_threshold)
-        )
-        .withColumn("alert_type", F.lit("cpu_deviation"))
-        .withColumn(
-            "severity",
-            F.when(F.abs(F.col("z_score")) >= 2 * z_threshold, "high").otherwise("medium"),
-        )
+    """J1+J2 streaming on the baseline operator's emissions: the
+    stateful operator already holds the latest baseline per key, so
+    enrichment is state lookup, not a broadcast join; the J2 alert rule
+    (``score_alerts``) is pure column expressions on its output. The
+    operator emits only on cadence, so alerts fire on cadence windows;
+    ``continuous_alerts_stream`` scores every window. Thresholds default
+    to the reference's (flinkarima.py:516-533) and are overridable from
+    the CLI's --z-threshold/--pct-threshold/--min-baseline knobs."""
+    return score_alerts(
+        baseline_streaming(windowed, cfg), z_threshold, pct_threshold, min_baseline
     )
 
 
@@ -284,204 +270,73 @@ def stream_stream_left_outer_join(
     )
 
 
-#: the latest-baseline table: each key's newest emission
-_LATEST_SCHEMA = "user_id long, window_start long, baseline double, running_std double"
+#: a key's latest emission, carried in state next to its model state
+_LATEST_SCHEMA = "baseline_window_start long, baseline double, running_std double"
 _LATEST_COLS = [c.split()[0] for c in _LATEST_SCHEMA.split(", ")]
-_STATE_COLS = ["user_id", *_KeyState.__slots__]
-#: cogrouped fold output, one row per key: its newest emission of the
-#: batch (null when none) and its model state
-_FOLD_SCHEMA = f"{_LATEST_SCHEMA}, {STATE_SCHEMA}"
+_SCORED_SCHEMA = (
+    "user_id long, window_start long, observed double, baseline double, "
+    "running_std double, baseline_window_start long"
+)
 
 
-def continuous_alerts_foreach_batch(
-    windowed: DataFrame,
-    baseline_table: str,
-    alert_sink: list | None = None,
-    cfg: BaselineConfig = FIXTURE_CONFIG,
-    state_root: str | None = None,
-    checkpoint: str | None = None,
-) -> StreamingQuery:
-    """J1 variant: continuous alerting via foreachBatch — every raw
-    window sample is joined (broadcast, the small side is the per-key
-    latest-baseline table) against a continuously updated baseline table,
-    so alerts fire on EVERY window, not only cadence windows.
+def continuous_alerts_stream(
+    windowed: DataFrame, cfg: BaselineConfig = FIXTURE_CONFIG
+) -> DataFrame:
+    """J1+J2 on every window, as the reference and the batch flagship
+    ``pipeline_alerts_end_to_end`` do: each window sample is scored
+    against its key's latest baseline emitted at or before it (inclusive:
+    an emission window scores against its own baseline); windows before
+    the key's first emission are dropped (flinkarima.py:288-376).
 
-    This is the analogue of the reference's broadcast map state
-    (flinkarima.py:288-376): the latest-baseline table plays
-    MapState[node_id -> latest baseline], last-write-wins per key;
-    ``foreachBatch`` gives the exactly-once micro-batch boundary.
-
-    Executor-side and restart-safe: per-key model state and the
-    latest-baseline table are epoch-versioned parquet snapshots under
-    ``state_root`` (production swaps these writes for Delta MERGE or a
-    compacted Kafka topic — same dataflow). Micro-batch N scores against
-    the newest snapshot older than N (broadcast join, pure column exprs),
-    then folds the batch into per-key state with ONE cogrouped
-    applyInPandas pass and writes snapshot N; nothing model-related ever
-    reaches the driver, and a replayed epoch after restart re-reads its
-    predecessor snapshot AND overwrites its own outputs — state, latest,
-    and the alert partition ``{state_root}/alerts/epoch=N`` are all
-    epoch-keyed overwrites, so replay is idempotent end-to-end (an
-    appending alert sink would duplicate the replayed epoch's alerts).
-    ``alert_sink`` (a plain list) is the TEST sink — the only
-    ``collect``.
-
-    Snapshot listing/retention goes through the Hadoop FileSystem API of
-    ``state_root``'s scheme — the same view the executors write through —
-    so the recipe works unchanged on HDFS/S3/local (driver-local
-    os.listdir would silently see nothing on a distributed FS and reset
-    state every batch).
-    """
-    import os
-    import re
-    import tempfile
-
+    One ``applyInPandasWithState`` operator keyed on ``user_id``. Its
+    state is the baseline operator's ``STATE_SCHEMA`` row plus the key's
+    latest emission, so the reference's broadcast MapState becomes
+    co-partitioned per-key state, checkpointed with the query. Per group
+    it steps the samples through ``replay_key`` and as-of joins them to
+    the carried and new emissions; the J2 rule (``score_alerts``) stays
+    in column expressions. The alerts do not depend on where micro-batch
+    boundaries fall."""
     import pandas as pd
 
-    from pyspark.sql import functions as FF
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    root = state_root or tempfile.mkdtemp(prefix=f"fcs_{baseline_table}_")
+    n_model = len(_KeyState.__slots__)
 
-    def _fs_and_path(spark: SparkSession, base: str):
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(base)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return fs, jpath
+    def run(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
+        ks, emits = _KeyState(), []
+        if state.exists:
+            row = tuple(state.get)
+            ks = _KeyState.from_state(row[:n_model])
+            if row[n_model] is not None:
+                emits.append(row[n_model:])
+        samples = pd.concat(pdf_iter, ignore_index=True).sort_values("window_start")
+        recs = replay_key(ks, key[0], samples, cfg)
+        emits += [(r["window_start"], r["baseline"], r["running_std"]) for r in recs]
+        state.update((*ks.to_state(), *(max(emits) if emits else (None,) * 3)))
+        if emits:
+            scored = pd.merge_asof(  # backward, exact matches included
+                samples[["window_start", "avg_value"]],
+                pd.DataFrame(sorted(emits), columns=_LATEST_COLS),
+                left_on="window_start",
+                right_on="baseline_window_start",
+            ).dropna(subset=["baseline_window_start"])
+            yield pd.DataFrame({
+                "user_id": key[0],
+                "window_start": scored["window_start"],
+                "observed": scored["avg_value"],
+                "baseline": scored["baseline"],
+                "running_std": scored["running_std"],
+                "baseline_window_start": scored["baseline_window_start"].astype("int64"),
+            })
 
-    def _list_epochs(spark: SparkSession, kind: str) -> list[int]:
-        fs, jpath = _fs_and_path(spark, os.path.join(root, kind))
-        if not fs.exists(jpath):
-            return []
-        return sorted(
-            int(m.group(1))
-            for st in fs.listStatus(jpath)
-            if (m := re.fullmatch(r"epoch=(\d+)", st.getPath().getName()))
-        )
-
-    def _snapshot_before(spark: SparkSession, kind: str, epoch_id: int) -> str | None:
-        prior = [e for e in _list_epochs(spark, kind) if e < epoch_id]
-        return os.path.join(root, kind, f"epoch={max(prior)}") if prior else None
-
-    def _fold(key, state_pdf: pd.DataFrame, samples_pdf: pd.DataFrame):
-        (uid,) = key
-        ks = (
-            _KeyState.from_state(state_pdf.iloc[0][_STATE_COLS[1:]])
-            if len(state_pdf)
-            else _KeyState()
-        )
-        recs = replay_key(ks, uid, samples_pdf, cfg)
-        newest = recs[-1] if recs else {}
-        row = dict(zip(_STATE_COLS, (int(uid), *ks.to_state())))
-        row.update({c: newest.get(c) for c in _LATEST_COLS[1:]})
-        return pd.DataFrame([row])
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select("user_id", "window_start", "avg_value")
-        prev_latest = _snapshot_before(spark, "latest", epoch_id)
-        prev_state = _snapshot_before(spark, "state", epoch_id)
-        latest_df = (
-            spark.read.parquet(prev_latest)
-            if prev_latest
-            else spark.createDataFrame([], _LATEST_SCHEMA)
-        )
-        state_df = (
-            spark.read.parquet(prev_state)
-            if prev_state
-            else spark.createDataFrame([], f"user_id long, {STATE_SCHEMA}")
-        )
-        # 1. score this batch against the previous epoch's latest
-        #    baselines: broadcast join + pure column exprs (J2), fully
-        #    distributed (the latest table is one row per key).
-        dev = FF.col("avg_value") - FF.col("baseline")
-        pct = FF.when(
-            FF.col("baseline") >= MIN_BASELINE, dev / FF.col("baseline") * 100.0
-        ).otherwise(FF.lit(0.0))
-        z = FF.when(
-            FF.col("running_std") > 0, dev / FF.col("running_std")
-        ).otherwise(FF.lit(0.0))
-        alerts = (
-            batch.join(
-                FF.broadcast(latest_df.withColumnRenamed("window_start", "baseline_ws")),
-                "user_id",
-            )
-            .where(FF.col("baseline_ws") <= FF.col("window_start"))
-            .withColumn("z_score", z)
-            .withColumn("pct_deviation", pct)
-            .where(
-                (FF.abs(FF.col("z_score")) >= Z_THRESHOLD)
-                | (FF.abs(FF.col("pct_deviation")) >= PCT_THRESHOLD)
-            )
-            .withColumn(
-                "severity",
-                FF.when(FF.abs(FF.col("z_score")) >= 2 * Z_THRESHOLD, "high").otherwise(
-                    "medium"
-                ),
-            )
-            .select(
-                "user_id", "window_start", FF.col("avg_value").alias("observed"),
-                "baseline", "z_score", "pct_deviation", "severity",
-            )
-        )
-        if alert_sink is not None:  # test sink — the only collect()
-            alert_sink.extend(r.asDict() for r in alerts.collect())
-        else:  # production shape: executor-side, epoch-keyed so a
-            # replayed epoch overwrites its own alerts (idempotent),
-            # never re-appends them.
-            alerts.write.mode("overwrite").parquet(
-                os.path.join(root, "alerts", f"epoch={epoch_id}")
-            )
-        # 2. fold the batch into per-key model state, executor-side:
-        #    cogroup is a full-outer keyed merge, so keys absent from
-        #    this batch carry their state forward unchanged.
-        folded = (
-            state_df.groupBy("user_id")
-            .cogroup(batch.groupBy("user_id"))
-            .applyInPandas(_fold, schema=_FOLD_SCHEMA)
-        )
-        folded.persist()
-        folded.select(*_STATE_COLS).write.mode("overwrite").parquet(
-            os.path.join(root, "state", f"epoch={epoch_id}")
-        )
-        # upsert: newest emission per key wins over the previous table
-        emits = folded.where(FF.col("window_start").isNotNull()).select(*_LATEST_COLS)
-        merged = (
-            emits.withColumn("gen", FF.lit(1))
-            .unionByName(latest_df.withColumn("gen", FF.lit(0)))
-            .withColumn(
-                "rn",
-                FF.row_number().over(
-                    Window.partitionBy("user_id").orderBy(
-                        FF.col("window_start").desc(), FF.col("gen").desc()
-                    )
-                ),
-            )
-            .where(FF.col("rn") == 1)
-            .select(*_LATEST_COLS)
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(root, "latest", f"epoch={epoch_id}")
-        )
-        folded.unpersist()
-        # retention: keep the newest two snapshots (restart replay of
-        # epoch N re-reads the newest snapshot < N), drop older. Alerts
-        # are the output product — every epoch partition is kept.
-        for kind in ("state", "latest"):
-            fs, _ = _fs_and_path(spark, os.path.join(root, kind))
-            for e in _list_epochs(spark, kind)[:-2]:
-                _, victim = _fs_and_path(
-                    spark, os.path.join(root, kind, f"epoch={e}")
-                )
-                fs.delete(victim, True)
-
-    writer = (
-        windowed.writeStream.outputMode("append")
-        .queryName(baseline_table)
-        .foreachBatch(process_batch)
+    scored = windowed.groupBy("user_id").applyInPandasWithState(
+        run,
+        outputStructType=_SCORED_SCHEMA,
+        stateStructType=f"{STATE_SCHEMA}, {_LATEST_SCHEMA}",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return score_alerts(scored).select(*ALERT_COLS)
 
 
 def to_sink(

@@ -22,8 +22,8 @@ fit of the reference's ARIMA(1,1,1)x(0,1,1,s) model
 and, where statsmodels is installed, against statsmodels itself).
 
 One per-sample step, ``_process_sample``, and two replays of it:
-``replay_key`` steps one key's ordered frame (streaming state and the
-foreachBatch fold), ``_vectorized_runner`` steps every key of a batch
+``replay_key`` steps one key's ordered frame (the streaming operators'
+state), ``_vectorized_runner`` steps every key of a batch
 partition at once (``baseline_batch``). Both produce the same bits.
 
 State-update order replicated exactly (flinkarima.py:191-239):
@@ -742,62 +742,33 @@ def pipeline_alerts_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter (J2 thresholds z>=3 or pct>=50, severity high at 2x). This is
     the complete dataflow of flinkarima.py:392-476 as one lazy plan."""
     from flink_cookbook_spark.operators.metrics import (
-        MIN_BASELINE,
-        PCT_THRESHOLD,
-        Z_THRESHOLD,
+        ALERT_COLS,
         _windowed,
         asof_join,
+        score_alerts,
     )
 
     win = _windowed(spark, sf_dir)
     baselines = baseline_batch(
         win, FIXTURE_CONFIG, input_copartitioned=True
-    ).select(
-        "user_id",
-        "window_start",
-        F.col("baseline").alias("baseline_value"),
-        F.col("running_std").alias("baseline_std"),
-    )
+    ).select("user_id", "window_start", "baseline", "running_std")
     enriched = asof_join(
         win,
         baselines,
         key="user_id",
         left_ts="window_start",
         right_ts="window_start",
-        value_cols=["baseline_value", "baseline_std"],
+        value_cols=["baseline", "running_std"],
         how="inner",
+    ).select(
+        "user_id",
+        "window_start",
+        F.col("avg_value").alias("observed"),
+        F.col("baseline_asof").alias("baseline"),
+        F.col("running_std_asof").alias("running_std"),
+        F.col("window_start_asof").alias("baseline_window_start"),
     )
-    deviation = F.col("avg_value") - F.col("baseline_value_asof")
-    pct = F.when(
-        F.col("baseline_value_asof") >= MIN_BASELINE,
-        deviation / F.col("baseline_value_asof") * 100.0,
-    ).otherwise(F.lit(0.0))
-    z = F.when(
-        F.col("baseline_std_asof") > 0, deviation / F.col("baseline_std_asof")
-    ).otherwise(F.lit(0.0))
-    return (
-        enriched.withColumn("deviation", deviation)
-        .withColumn("pct_deviation", pct)
-        .withColumn("z_score", z)
-        .where(
-            (F.abs(F.col("z_score")) >= Z_THRESHOLD)
-            | (F.abs(F.col("pct_deviation")) >= PCT_THRESHOLD)
-        )
-        .select(
-            "user_id",
-            "window_start",
-            F.lit("cpu_deviation").alias("alert_type"),
-            F.when(F.abs(F.col("z_score")) >= 2 * Z_THRESHOLD, "high")
-            .otherwise("medium")
-            .alias("severity"),
-            F.col("avg_value").alias("observed"),
-            F.col("baseline_value_asof").alias("baseline"),
-            "deviation",
-            "pct_deviation",
-            "z_score",
-            F.col("window_start_asof").alias("baseline_window_start"),
-        )
-    )
+    return score_alerts(enriched).select(*ALERT_COLS)
 
 
 register(

@@ -119,6 +119,45 @@ def test_batch_twin_equals_plain_python(spark, sf_dir):
     assert got and all(got[k] == pytest.approx(want[k], abs=1e-9) for k in want)
 
 
+def test_windowed_memo_is_copartitioned_by_user(spark, sf_dir):
+    """The ``input_copartitioned=True`` contract of the callers over the
+    ``_windowed`` memo: no key spans two partitions of the materialized
+    memo, and skipping the repartition changes no baseline. AQE merges
+    the fixture memo into one partition, where the contract holds
+    trivially, so the checks also run on the memo rebuilt over 4
+    partitions."""
+    from pyspark.sql import functions as F
+
+    from flink_cookbook_spark.operators.metrics import _windowed
+    from flink_cookbook_spark.pipeline import _cache
+
+    def check(memo) -> int:
+        parts = memo.select("user_id", F.spark_partition_id().alias("p"))
+        split = parts.groupBy("user_id").agg(F.countDistinct("p").alias("n"))
+        assert split.where("n > 1").count() == 0
+        assert sorted(baseline_batch(memo, input_copartitioned=True).collect()) == sorted(
+            baseline_batch(memo).collect()
+        )
+        return parts.select("p").distinct().count()
+
+    check(_windowed(spark, sf_dir))
+    confs = {  # 4 shuffle partitions that AQE finds too big to merge
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "4",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1",
+    }
+    old = {k: spark.conf.get(k) for k in confs}
+    _cache.clear()
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        assert check(_windowed(spark, sf_dir)) > 1
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+        _cache.clear()  # later callers rebuild the memo under the session's confs
+
+
 #: per method, a config and a key count for the runner-equality pin: the
 #: css config stays small (a real optimizer fit per emitted record)
 _RUNNER_CASES = {

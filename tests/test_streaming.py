@@ -159,16 +159,28 @@ def test_streaming_baseline_equals_batch_twin(spark, windowed_stage_dir):
 
 
 def test_streaming_alerts_pipeline(spark, windowed_stage_dir):
-    """End-to-end streaming recipe stage 2: stateful baseline -> alert
-    filter, through a memory sink."""
-    from flink_cookbook_spark.streaming.recipes import alerts_stream
+    """alerts_stream alerts on the baseline operator's emission windows
+    only: its alerts are exactly the every-window alerts of
+    continuous_alerts_stream whose baseline was emitted at the window
+    itself, equal on every shared column."""
+    from flink_cookbook_spark.streaming.recipes import (
+        alerts_stream,
+        continuous_alerts_stream,
+    )
 
     _run_to_memory(alerts_stream(_read_stream(spark, windowed_stage_dir)), "alerts_s")
-    rows = spark.sql("SELECT * FROM alerts_s").collect()
-    for r in rows:
-        assert r.alert_type == "cpu_deviation"
-        assert r.severity in ("high", "medium")
-        assert abs(r.z_score) >= 3.0 or abs(r.pct_deviation) >= 50.0
+    _run_to_memory(
+        continuous_alerts_stream(_read_stream(spark, windowed_stage_dir)), "alerts_every"
+    )
+    on_emit, every = spark.table("alerts_s"), spark.table("alerts_every")
+    shared = [c for c in every.columns if c in on_emit.columns]
+    assert len(shared) == 9
+    got = sorted(on_emit.select(*shared).collect())
+    want = sorted(
+        every.where("baseline_window_start = window_start").select(*shared).collect()
+    )
+    assert got and got == want
+    assert every.count() > len(want)  # and alerts on the windows between
 
 
 def test_default_session_widths(spark):
@@ -188,16 +200,18 @@ def test_default_session_widths(spark):
     assert re.search(rf"hashpartitioning\(k#\d+L, {cpus}\), ENSURE_REQUIREMENTS", plan), plan
 
 
+@pytest.mark.parametrize("alerts", ["alerts_stream", "continuous_alerts_stream"])
 def test_alerts_stream_width_independent_and_restart_parity(
-    spark, windowed_stage_dir, tmp_path
+    spark, windowed_stage_dir, tmp_path, alerts
 ):
-    """The flagship baseline -> alert query emits the same alerts at 1
-    and 4 state partitions. A checkpoint started at 4 partitions, stopped
+    """Both baseline -> alert queries emit the same alerts at 1 and 4
+    state partitions. A checkpoint started at 4 partitions, stopped
     and restarted under the default session over more input keeps its 4
     partitions (Spark reads the width from the checkpoint) and emits
     exactly an uninterrupted run's alerts: no duplicates, no gaps."""
-    from flink_cookbook_spark.streaming.recipes import alerts_stream
+    from flink_cookbook_spark.streaming import recipes
 
+    alerts_stream = getattr(recipes, alerts)
     win = spark.read.parquet(windowed_stage_dir)
     rows = win.orderBy("window_start", "user_id").collect()
     split = rows[len(rows) // 2].window_start
@@ -288,20 +302,49 @@ def test_parse_metrics_drops_invalid(spark):
     assert rows == {"n1": (55.5, 123), "n2": (10.0, 0)}
 
 
-def test_continuous_alerts_foreach_batch(spark, windowed_stage_dir):
-    """J1 foreachBatch variant: alerts fire on every window (not only
-    cadence windows) against the latest broadcast baseline table."""
-    from flink_cookbook_spark.streaming.recipes import continuous_alerts_foreach_batch
+def test_continuous_alerts_stream_equals_flagship(spark, sf_dir, tmp_path):
+    """J1+J2 on every window: the windowed memo fed to
+    continuous_alerts_stream in three triggers, with a stop and a restart
+    from the checkpoint before the third, gives exactly the batch
+    flagship's alerts, on every column."""
+    from flink_cookbook_spark.operators.metrics import _windowed
+    from flink_cookbook_spark.streaming.recipes import continuous_alerts_stream
+    from flink_cookbook_spark.streaming.sarimax import pipeline_alerts_end_to_end
 
-    sink: list = []
-    q = continuous_alerts_foreach_batch(
-        _read_stream(spark, windowed_stage_dir), "latest_baselines", sink
-    )
-    q.processAllAvailable()
+    win = _windowed(spark, sf_dir)
+    starts = sorted(r[0] for r in win.select("window_start").distinct().collect())
+    cuts = [starts[len(starts) // 3], starts[2 * len(starts) // 3]]
+    chunks = [
+        win.where(F.col("window_start") < cuts[0]),
+        win.where(F.col("window_start").between(cuts[0], cuts[1] - 1)),
+        win.where(F.col("window_start") >= cuts[1]),
+    ]
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+
+    def start():
+        return (
+            continuous_alerts_stream(spark.readStream.schema(win.schema).parquet(src))
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    for i, chunk in enumerate(chunks):
+        chunk.coalesce(1).write.mode("append").parquet(src)
+        if i == 0:
+            q = start()
+        if i == 2:  # "crash" and restart from the checkpoint
+            q.stop()
+            q = start()
+        q.processAllAvailable()
     q.stop()
-    for a in sink:
-        assert abs(a["z_score"]) >= 3.0 or abs(a["pct_deviation"]) >= 50.0
-        assert a["severity"] in ("high", "medium")
+    commits = [f for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit()]
+    assert sorted(commits) == ["0", "1", "2"]  # one micro-batch per chunk
+
+    got, want = spark.read.parquet(out), pipeline_alerts_end_to_end(spark, sf_dir)
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect()) == sorted(want.collect())
 
 
 def test_cli_batch_mode_runs(spark, capsys):
@@ -392,9 +435,7 @@ def test_dedup_within_watermark(spark, events_stream_dir):
 def test_multi_batch_state_continuity(spark, windowed_stage_dir, tmp_path):
     """State must persist ACROSS micro-batches: feed the windowed series
     in three time-ordered chunks (separate triggers) and require the
-    stateful baseline operator to emit exactly the batch twin's records,
-    and the foreachBatch variant to keep its model state growing."""
-    from flink_cookbook_spark.streaming.recipes import continuous_alerts_foreach_batch
+    stateful baseline operator to emit exactly the batch twin's records."""
     from flink_cookbook_spark.streaming.sarimax import baseline_batch, baseline_streaming
 
     win = spark.read.parquet(windowed_stage_dir).orderBy("window_start")
@@ -405,29 +446,22 @@ def test_multi_batch_state_continuity(spark, windowed_stage_dir, tmp_path):
     # never splits it mid-write across micro-batches in file order
     src = str(tmp_path / "chunked")
 
-    schema = "window_start long, user_id long, avg_value double"
     spark.createDataFrame(thirds[0], schema=win.schema).coalesce(1).write.mode("overwrite").parquet(src)
 
-    stream = spark.readStream.schema(win.schema).option("maxFilesPerTrigger", "100").parquet(src)
-    sink: list = []
-    q_alerts = continuous_alerts_foreach_batch(stream, "latest_mb", sink)
     q_base = (
         baseline_streaming(spark.readStream.schema(win.schema).parquet(src))
         .writeStream.format("memory").queryName("baselines_mb").outputMode("append")
         .start()
     )
-    q_alerts.processAllAvailable(); q_base.processAllAvailable()
+    q_base.processAllAvailable()
     for chunk in thirds[1:]:
         spark.createDataFrame(chunk, schema=win.schema).coalesce(1).write.mode("append").parquet(src)
-        q_alerts.processAllAvailable(); q_base.processAllAvailable()
-    q_alerts.stop(); q_base.stop()
+        q_base.processAllAvailable()
+    q_base.stop()
 
     got = sorted(spark.sql("SELECT * FROM baselines_mb").collect())
     want = sorted(baseline_batch(spark.read.parquet(windowed_stage_dir)).collect())
     assert got and got == want, (len(got), len(want))
-    # foreachBatch variant: model state survived batches => alerts fired
-    # on post-warmup batches too (not only the first)
-    assert sink, "continuous alerts must fire across micro-batches"
 
 
 def test_update_mode_aggregation(spark, events_stream_dir):
@@ -482,63 +516,6 @@ def test_rate_micro_batch_source_deterministic(spark):
     for k in common:
         assert a[k] == b[k], f"replay diverged at ts {k}"
         assert all(0.0 <= c <= 100.0 for _, c in a[k])  # clamp holds
-
-
-def test_continuous_alerts_restart_safe(spark, windowed_stage_dir, tmp_path):
-    """Kill the foreachBatch query between chunks and start a NEW query
-    from the same checkpoint + state root: model state must resume from
-    the epoch-versioned snapshot (the old driver-dict variant silently
-    reset to empty after recovery), so the final latest-baseline table
-    equals the batch twin's newest emission per key over ALL the data."""
-    import glob
-    import os
-
-    from flink_cookbook_spark.streaming.recipes import continuous_alerts_foreach_batch
-    from flink_cookbook_spark.streaming.sarimax import baseline_batch
-
-    win = spark.read.parquet(windowed_stage_dir).orderBy("window_start")
-    rows = win.collect()
-    halves = [rows[: len(rows) // 2], rows[len(rows) // 2 :]]
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    state_root = str(tmp_path / "state")
-
-    def run_query():
-        stream = spark.readStream.schema(win.schema).parquet(src)
-        return continuous_alerts_foreach_batch(
-            stream, "latest_restart", alert_sink=None,
-            state_root=state_root, checkpoint=ckpt,
-        )
-
-    spark.createDataFrame(halves[0], schema=win.schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    q1 = run_query()
-    q1.processAllAvailable()
-    q1.stop()  # "crash"
-    spark.createDataFrame(halves[1], schema=win.schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q2 = run_query()  # restart from checkpoint
-    q2.processAllAvailable()
-    q2.stop()
-
-    newest = sorted(
-        glob.glob(os.path.join(state_root, "latest", "epoch=*")),
-        key=lambda p: int(p.rsplit("=", 1)[1]),
-    )[-1]
-    got = {
-        r.user_id: (r.window_start, round(r.baseline, 9))
-        for r in spark.read.parquet(newest).collect()
-    }
-    base = baseline_batch(spark.read.parquet(windowed_stage_dir)).collect()
-    want: dict = {}
-    for r in sorted(base, key=lambda r: (r.user_id, r.window_start)):
-        want[r.user_id] = (r.window_start, round(r.baseline, 9))
-    assert got == want and got
-    # executor-side alert sink was written (no driver collect path used)
-    alerts = spark.read.parquet(os.path.join(state_root, "alerts"))
-    assert alerts.count() > 0
 
 
 def test_cli_stream_mode_runs(spark, tmp_path):
