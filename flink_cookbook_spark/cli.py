@@ -147,23 +147,18 @@ def run(argv: list[str] | None = None) -> int:
                 "avg_value",
             )
         )
-        # node_id is a string here; the model schema keys by long for the
-        # fixture tables — map through a dense key for display purposes.
-        windowed = windowed.withColumn(
-            "user_id", F.pmod(F.xxhash64("user_id"), F.lit(1_000_000))
-        )
         baselines = baseline_batch(windowed, cfg)
         baselines.show(20, truncate=False)
         return 0
     # stream mode: the full two-query topology (window agg -> durable
-    # parquet intermediate -> stateful baseline model -> alert filter ->
-    # console), as in ARCHITECTURE.md and tests/test_streaming.py. Each
-    # query checkpoints independently (R1); the intermediate directory
-    # is where the reference's Kafka hop sits in production.
+    # parquet intermediate -> stateful baseline model -> alert on every
+    # window -> console), as in ARCHITECTURE.md and tests/test_streaming.py.
+    # Each query checkpoints independently (R1); the intermediate
+    # directory is where the reference's Kafka hop sits in production.
     import os
 
     from flink_cookbook_spark.streaming.recipes import (
-        alerts_stream,
+        continuous_alerts_stream,
         to_sink,
         windowed_avg_stream,
     )
@@ -178,13 +173,8 @@ def run(argv: list[str] | None = None) -> int:
         if args.use_datagen
         else kafka_metrics_stream(spark, args.kafka_topic, args.bootstrap_servers)
     )
-    # stage 1: window agg -> durable intermediate (keyed long for the
-    # model operator's schema, as in batch mode)
-    windowed = windowed_avg_stream(metrics).select(
-        F.pmod(F.xxhash64("user_id"), F.lit(1_000_000)).alias("user_id"),
-        "window_start",
-        "avg_value",
-    )
+    # stage 1: window agg -> durable intermediate, keyed by node id
+    windowed = windowed_avg_stream(metrics).select("user_id", "window_start", "avg_value")
     inter_dir = os.path.join(args.checkpoint_dir, "intermediate")
     os.makedirs(inter_dir, exist_ok=True)
     q_window = to_sink(
@@ -196,10 +186,8 @@ def run(argv: list[str] | None = None) -> int:
     )
     # stage 2: stateful model + alert filter over the intermediate,
     # honoring the model/threshold knobs
-    stage2_src = spark.readStream.schema(
-        "user_id long, window_start long, avg_value double"
-    ).parquet(inter_dir)
-    alerts = alerts_stream(
+    stage2_src = spark.readStream.schema(windowed.schema).parquet(inter_dir)
+    alerts = continuous_alerts_stream(
         stage2_src,
         cfg,
         z_threshold=args.z_threshold,

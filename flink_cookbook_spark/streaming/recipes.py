@@ -7,11 +7,12 @@ source -> parse -> key_by(node_id) -> 5-min tumble avg -> SARIMAX state op
 Spark re-expression decided in SURVEY.md sections 1.4 / 2.1-J1 / 7.1:
 - event-time windows + watermarks instead of processing time (the
   reference has no late-data story; watermarking adds one);
-- the stateful model runs in applyInPandasWithState, co-partitioned on
-  the key — Flink's broadcast edge disappears entirely because Spark
-  hash-partitions both the baseline and alert paths on node_id. The key's
-  latest baseline is operator state: ``continuous_alerts_stream`` scores
-  every window against it, ``alerts_stream`` the emission windows only;
+- the stateful model is ONE applyInPandasWithState operator
+  (``sarimax.model_stream``), co-partitioned on the key — Flink's
+  broadcast edge disappears because the key's latest baseline is its own
+  operator state. ``continuous_alerts_stream`` (the CLI's stage 2)
+  scores every window against it; ``alerts_stream`` and
+  ``baseline_streaming`` keep its emission windows only;
 - sinks are pluggable writeStream formats (console == the reference's
   print sink; memory for tests; parquet/kafka for production).
 
@@ -30,8 +31,6 @@ production deployment, and each query checkpoints independently (R1).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -46,11 +45,9 @@ from flink_cookbook_spark.operators.metrics import (
 )
 from flink_cookbook_spark.streaming.sarimax import (
     FIXTURE_CONFIG,
-    STATE_SCHEMA,
     BaselineConfig,
-    _KeyState,
     baseline_streaming,
-    replay_key,
+    model_stream,
 )
 
 
@@ -168,14 +165,12 @@ def alerts_stream(
     pct_threshold: float = PCT_THRESHOLD,
     min_baseline: float = MIN_BASELINE,
 ) -> DataFrame:
-    """J1+J2 streaming on the baseline operator's emissions: the
-    stateful operator already holds the latest baseline per key, so
-    enrichment is state lookup, not a broadcast join; the J2 alert rule
-    (``score_alerts``) is pure column expressions on its output. The
-    operator emits only on cadence, so alerts fire on cadence windows;
-    ``continuous_alerts_stream`` scores every window. Thresholds default
-    to the reference's (flinkarima.py:516-533) and are overridable from
-    the CLI's --z-threshold/--pct-threshold/--min-baseline knobs."""
+    """J1+J2 streaming on the model operator's emission windows only
+    (``baseline_streaming``); ``continuous_alerts_stream`` scores every
+    window. The J2 alert rule (``score_alerts``) is pure column
+    expressions. Thresholds default to the reference's
+    (flinkarima.py:516-533), as the CLI's --z-threshold/--pct-threshold/
+    --min-baseline knobs do."""
     return score_alerts(
         baseline_streaming(windowed, cfg), z_threshold, pct_threshold, min_baseline
     )
@@ -270,73 +265,21 @@ def stream_stream_left_outer_join(
     )
 
 
-#: a key's latest emission, carried in state next to its model state
-_LATEST_SCHEMA = "baseline_window_start long, baseline double, running_std double"
-_LATEST_COLS = [c.split()[0] for c in _LATEST_SCHEMA.split(", ")]
-_SCORED_SCHEMA = (
-    "user_id long, window_start long, observed double, baseline double, "
-    "running_std double, baseline_window_start long"
-)
-
-
 def continuous_alerts_stream(
-    windowed: DataFrame, cfg: BaselineConfig = FIXTURE_CONFIG
+    windowed: DataFrame,
+    cfg: BaselineConfig = FIXTURE_CONFIG,
+    z_threshold: float = Z_THRESHOLD,
+    pct_threshold: float = PCT_THRESHOLD,
+    min_baseline: float = MIN_BASELINE,
 ) -> DataFrame:
     """J1+J2 on every window, as the reference and the batch flagship
-    ``pipeline_alerts_end_to_end`` do: each window sample is scored
-    against its key's latest baseline emitted at or before it (inclusive:
-    an emission window scores against its own baseline); windows before
-    the key's first emission are dropped (flinkarima.py:288-376).
-
-    One ``applyInPandasWithState`` operator keyed on ``user_id``. Its
-    state is the baseline operator's ``STATE_SCHEMA`` row plus the key's
-    latest emission, so the reference's broadcast MapState becomes
-    co-partitioned per-key state, checkpointed with the query. Per group
-    it steps the samples through ``replay_key`` and as-of joins them to
-    the carried and new emissions; the J2 rule (``score_alerts``) stays
-    in column expressions. The alerts do not depend on where micro-batch
-    boundaries fall."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    n_model = len(_KeyState.__slots__)
-
-    def run(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        ks, emits = _KeyState(), []
-        if state.exists:
-            row = tuple(state.get)
-            ks = _KeyState.from_state(row[:n_model])
-            if row[n_model] is not None:
-                emits.append(row[n_model:])
-        samples = pd.concat(pdf_iter, ignore_index=True).sort_values("window_start")
-        recs = replay_key(ks, key[0], samples, cfg)
-        emits += [(r["window_start"], r["baseline"], r["running_std"]) for r in recs]
-        state.update((*ks.to_state(), *(max(emits) if emits else (None,) * 3)))
-        if emits:
-            scored = pd.merge_asof(  # backward, exact matches included
-                samples[["window_start", "avg_value"]],
-                pd.DataFrame(sorted(emits), columns=_LATEST_COLS),
-                left_on="window_start",
-                right_on="baseline_window_start",
-            ).dropna(subset=["baseline_window_start"])
-            yield pd.DataFrame({
-                "user_id": key[0],
-                "window_start": scored["window_start"],
-                "observed": scored["avg_value"],
-                "baseline": scored["baseline"],
-                "running_std": scored["running_std"],
-                "baseline_window_start": scored["baseline_window_start"].astype("int64"),
-            })
-
-    scored = windowed.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=_SCORED_SCHEMA,
-        stateStructType=f"{STATE_SCHEMA}, {_LATEST_SCHEMA}",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return score_alerts(scored).select(*ALERT_COLS)
+    ``pipeline_alerts_end_to_end`` do: ``score_alerts`` over every row of
+    ``model_stream``, each window against its key's latest baseline at or
+    before it (windows before the first emission are dropped,
+    flinkarima.py:288-376). Thresholds as in ``alerts_stream``."""
+    return score_alerts(
+        model_stream(windowed, cfg), z_threshold, pct_threshold, min_baseline
+    ).select(*ALERT_COLS)
 
 
 def to_sink(

@@ -11,7 +11,8 @@ Catalyst cannot express, so it lives behind a pandas-UDF boundary —
 ``mapInPandas`` over key-clustered partitions in batch,
 ``applyInPandasWithState`` in streaming (Arrow-batched state, vs the
 reference's per-record pickling). Everything around it (window agg,
-enrichment join, alert filter) stays relational.
+enrichment join, alert filter) stays relational. Both key on the input's
+``user_id`` type.
 
 Two forecasters (``BaselineConfig.method``): ``ewma``, a closed-form
 numpy fallback (seasonal-naive level + EWMA of the seasonally
@@ -22,9 +23,11 @@ fit of the reference's ARIMA(1,1,1)x(0,1,1,s) model
 and, where statsmodels is installed, against statsmodels itself).
 
 One per-sample step, ``_process_sample``, and two replays of it:
-``replay_key`` steps one key's ordered frame (the streaming operators'
-state), ``_vectorized_runner`` steps every key of a batch
-partition at once (``baseline_batch``). Both produce the same bits.
+``replay_key`` steps one key's ordered frame (``model_step``, the one
+streaming operator's group step), ``_vectorized_runner`` steps every key
+of a batch partition at once (``baseline_batch``). Both produce the same
+bits. The streaming baseline and alert streams are views of
+``model_stream``'s rows.
 
 State-update order replicated exactly (flinkarima.py:191-239):
 scale with PRE-update mean/std -> append + trim history -> Welford update
@@ -103,6 +106,14 @@ STATE_SCHEMA = (
     "count long, mean double, m2 double, counter int, "
     "scaled array<double>, raw array<double>"
 )
+#: ``model_stream``'s state: the model state plus the key's latest emission
+MODEL_STATE_SCHEMA = (
+    f"{STATE_SCHEMA}, baseline_window_start long, baseline double, running_std double"
+)
+#: ``model_stream``'s rows: the latest emission's ``baseline`` and
+#: ``running_std``; other record fields are null off the emission windows
+ASOF_SCHEMA = f"{BASELINE_SCHEMA}, baseline_window_start long"
+ASOF_COLS = [c.split()[0] for c in ASOF_SCHEMA.split(", ")]
 
 #: EWMA smoothing constant of the closed-form forecaster
 FALLBACK_ALPHA = 0.3
@@ -249,7 +260,7 @@ def _process_sample(
 
 
 def replay_key(
-    state: _KeyState, user_id: int, samples: pd.DataFrame, cfg: BaselineConfig
+    state: _KeyState, user_id, samples: pd.DataFrame, cfg: BaselineConfig
 ) -> list[dict]:
     """Step one key's ``(window_start, avg_value)`` samples through
     ``_process_sample`` in window order, advancing ``state``; returns the
@@ -258,10 +269,45 @@ def replay_key(
     for row in samples.sort_values("window_start").itertuples(index=False):
         rec = _process_sample(state, float(row.avg_value), cfg)
         if rec is not None:
-            rec["user_id"] = int(user_id)
+            rec["user_id"] = user_id
             rec["window_start"] = int(row.window_start)
             out.append(rec)
     return out
+
+
+def model_step(
+    user_id, samples: pd.DataFrame, state_row: tuple | None, cfg: BaselineConfig
+) -> tuple[pd.DataFrame, tuple]:
+    """One key's group step of ``model_stream``, from its stored
+    ``MODEL_STATE_SCHEMA`` row (None for a new key): ``replay_key`` over
+    the samples, then each sample at or after the key's first emission
+    as of the latest emission at or before it (an emission window is its
+    own). Returns the ``ASOF_COLS`` rows in window order and the new state
+    row; the rows do not depend on how the series is split into calls."""
+    n = len(_KeyState.__slots__)
+    ks = _KeyState.from_state(state_row[:n]) if state_row else _KeyState()
+    recs = replay_key(ks, user_id, samples, cfg)
+    emits = [state_row[n:]] if state_row and state_row[n] is not None else []
+    emits = sorted(emits + [(r["window_start"], r["baseline"], r["running_std"]) for r in recs])
+    if not emits:
+        return pd.DataFrame(columns=ASOF_COLS), (*ks.to_state(), None, None, None)
+    e_ws, e_b, e_std = (np.array(c) for c in zip(*emits))
+    ws = samples["window_start"].to_numpy(np.int64)
+    order = np.argsort(ws)
+    at = np.searchsorted(e_ws, ws[order], side="right") - 1
+    rows, at = order[at >= 0], at[at >= 0]
+    ws = ws[rows]
+    pos = np.searchsorted(ws, [r["window_start"] for r in recs])
+    out = {"user_id": user_id, "window_start": ws,
+           "observed": samples["avg_value"].to_numpy(np.float64)[rows]}
+    asof = {"baseline": e_b[at], "running_std": e_std[at], "baseline_window_start": e_ws[at]}
+    for c in ASOF_COLS[3:]:  # in column order: pandas reorders columns slowly
+        if c in asof:
+            out[c] = asof[c]
+        else:  # a record field: the emission rows' value, else null
+            out[c] = np.full(len(ws), None, object)
+            out[c][pos] = [r[c] for r in recs]
+    return pd.DataFrame(out), (*ks.to_state(), *emits[-1])
 
 
 def _vectorized_runner(cfg: BaselineConfig):
@@ -304,7 +350,7 @@ def _vectorized_runner(cfg: BaselineConfig):
 
     def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # uid -> (count, mean, m2, counter, histlen, scaled_row, raw_row)
-        carry: dict[int, tuple] = {}
+        carry: dict = {}
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -316,7 +362,8 @@ def _vectorized_runner(cfg: BaselineConfig):
             cut = np.flatnonzero(uids[1:] != uids[:-1]) + 1
             starts = np.concatenate(([0], cut))
             seglen = np.diff(np.concatenate((starts, [n])))
-            keys = uids[starts]
+            # Python scalars: NumPy ones hash and build rows ~10 % slower
+            keys = uids[starts].tolist()
             m = len(keys)
             count = np.zeros(m, np.int64)
             mean = np.zeros(m, np.float64)
@@ -326,7 +373,7 @@ def _vectorized_runner(cfg: BaselineConfig):
             hist_s = np.zeros((m, H), np.float64)
             hist_r = np.zeros((m, H), np.float64)
             for j, uid in enumerate(keys):
-                st = carry.get(int(uid))
+                st = carry.get(uid)
                 if st is not None:
                     count[j], mean[j], m2[j], counter[j], histlen[j] = st[:5]
                     hist_s[j] = st[5]
@@ -420,7 +467,7 @@ def _vectorized_runner(cfg: BaselineConfig):
                             int(j),
                             t,
                             {
-                                "user_id": int(keys[j]),
+                                "user_id": keys[j],
                                 "window_start": int(wss[starts[j] + t]),
                                 "observed": float(ex[i]),
                                 "baseline": float(baseline[i]),
@@ -434,7 +481,7 @@ def _vectorized_runner(cfg: BaselineConfig):
                         )
                     )
             for j, uid in enumerate(keys):
-                carry[int(uid)] = (
+                carry[uid] = (
                     count[j], mean[j], m2[j], counter[j], histlen[j],
                     hist_s[j].copy(), hist_r[j].copy(),
                 )
@@ -474,32 +521,53 @@ def baseline_batch(
     a mis-declared input would split a key's state across partitions."""
     clustered = windowed if input_copartitioned else windowed.repartition("user_id")
     return clustered.sortWithinPartitions("user_id", "window_start").mapInPandas(
-        _vectorized_runner(cfg), schema=BASELINE_SCHEMA
+        _vectorized_runner(cfg), schema=_keyed_like(windowed, BASELINE_SCHEMA)
+    )
+
+
+def _keyed_like(windowed: DataFrame, schema: str) -> str:
+    """``schema`` with ``user_id`` of ``windowed``'s key type: the model
+    keys on the input's key, a long fixture id or a string node id."""
+    key_type = windowed.schema["user_id"].dataType.simpleString()
+    return schema.replace("user_id long", f"user_id {key_type}", 1)
+
+
+def model_stream(
+    windowed_stream: DataFrame, cfg: BaselineConfig = FIXTURE_CONFIG
+) -> DataFrame:
+    """The one streaming model operator: ``model_step`` per key and
+    trigger in applyInPandasWithState, keyed on ``user_id`` of any type.
+    The state, co-partitioned with the key, replaces the reference's
+    broadcast of the latest baseline (SURVEY.md J1 note). Emits an
+    ``ASOF_SCHEMA`` row per window at or after the key's first emission."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    def run(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
+        # a key's rows can span multiple Arrow chunks in shuffle order —
+        # concatenate BEFORE sorting or samples process out of window order
+        samples = pd.concat(pdf_iter, ignore_index=True)
+        rows, row = model_step(key[0], samples, state.get if state.exists else None, cfg)
+        state.update(row)
+        yield rows
+
+    return windowed_stream.groupBy("user_id").applyInPandasWithState(
+        run,
+        outputStructType=_keyed_like(windowed_stream, ASOF_SCHEMA),
+        stateStructType=MODEL_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
 def baseline_streaming(
     windowed_stream: DataFrame, cfg: BaselineConfig = FIXTURE_CONFIG
 ) -> DataFrame:
-    """Streaming form: applyInPandasWithState keeps a ``STATE_SCHEMA``
-    row per key across micro-batches — co-partitioned on the key, so no
-    broadcast is ever needed (SURVEY.md J1 note)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def run(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        ks = _KeyState.from_state(state.get) if state.exists else _KeyState()
-        # a key's rows can span multiple Arrow chunks in shuffle order —
-        # concatenate BEFORE sorting or samples process out of window order
-        recs = replay_key(ks, key[0], pd.concat(pdf_iter, ignore_index=True), cfg)
-        state.update(ks.to_state())
-        yield pd.DataFrame(recs, columns=BASELINE_COLS)
-
-    return windowed_stream.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=BASELINE_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    """Streaming twin of ``baseline_batch``: the emission rows of
+    ``model_stream``, as ``BASELINE_COLS`` records."""
+    return (
+        model_stream(windowed_stream, cfg)
+        .where(F.col("baseline_window_start") == F.col("window_start"))
+        .select(*BASELINE_COLS)
     )
 
 

@@ -173,9 +173,7 @@ def synthetic_metrics_batch(
         F.lit(1704067200) + (F.col("tick") / F.lit(rate_per_node)).cast("long")
     )
     df = base.select(
-        F.concat(F.lit("node-"), F.lpad(F.col("node_no").cast("string"), 2, "0")).alias(
-            "node_id"
-        ),
+        F.format_string("node-%02d", "node_no").alias("node_id"),
         ts.alias("ts"),
     )
     return df.select(
@@ -211,9 +209,7 @@ def synthetic_metrics_stream(
     else:
         rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
     df = rate.select(
-        F.concat(
-            F.lit("node-"), F.lpad((F.col("value") % n_nodes).cast("string"), 2, "0")
-        ).alias("node_id"),
+        F.format_string("node-%02d", F.col("value") % n_nodes).alias("node_id"),
         F.col("timestamp").alias("ts"),
     )
     return df.select(
@@ -242,7 +238,7 @@ def _generator_grid_sql(n_rows: int) -> str:
     """DuckDB twin of ``synthetic_metrics_batch``'s (node_id, tsl) grid."""
     return f"""
 grid AS (
-  SELECT 'node-' || lpad(CAST(range % {N_NODES} AS VARCHAR), 2, '0') AS node_id,
+  SELECT printf('node-%02d', range % {N_NODES}) AS node_id,
          1704067200 + CAST(floor((range // {N_NODES}) / 2.0) AS BIGINT) AS tsl
   FROM range({n_rows})
 )"""

@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 
 from flink_cookbook_spark.streaming.sarimax import (
+    ASOF_COLS,
     BASELINE_COLS,
     FIXTURE_CONFIG,
     BaselineConfig,
@@ -16,6 +17,7 @@ from flink_cookbook_spark.streaming.sarimax import (
     baseline_batch,
     forecast_next,
     model_name,
+    model_step,
     replay_key,
 )
 
@@ -211,6 +213,48 @@ def test_vectorized_runner_equals_scalar_loop(method):
         assert gv == wv, f"column {c} diverged (first mismatch: " + str(
             next((i, a, b) for i, (a, b) in enumerate(zip(gv, wv)) if a != b)
         )
+
+
+def test_model_step_independent_of_trigger_boundaries():
+    """The streaming model operator's per-key group step gives the same
+    rows for one key's series in one call as split at trigger boundaries
+    (fixed and random), its state passed on through the state-row tuple.
+    Its emission rows are ``replay_key``'s records, and every row carries
+    the latest emission at or before it (``merge_asof``, the oracle)."""
+    cfg = FIXTURE_CONFIG
+    series = _runner_input(1, 2 * cfg.max_history + 40)[["window_start", "avg_value"]]
+    want, state = model_step("node-07", series, None, cfg)
+    assert list(want.columns) == ASOF_COLS
+    last = want.iloc[-1]
+    assert state[6:] == (last["baseline_window_start"], last["baseline"], last["running_std"])
+
+    recs = pd.DataFrame(replay_key(_KeyState(), "node-07", series, cfg), columns=BASELINE_COLS)
+    emit = want[want["baseline_window_start"] == want["window_start"]]
+    pd.testing.assert_frame_equal(
+        emit[BASELINE_COLS].reset_index(drop=True), recs, check_dtype=False, check_exact=True
+    )
+    asof = pd.merge_asof(
+        series, recs[["window_start", "baseline", "running_std"]].assign(
+            baseline_window_start=recs["window_start"]
+        ), on="window_start",
+    ).dropna(subset=["baseline_window_start"]).reset_index(drop=True)
+    for c in ("window_start", "baseline", "running_std", "baseline_window_start"):
+        assert want[c].tolist() == asof[c].tolist(), c
+    assert want["observed"].tolist() == asof["avg_value"].tolist()
+
+    rng = np.random.default_rng(11)
+    splits = [[5, 14, 15, 16, 100]] + [
+        sorted(rng.choice(np.arange(1, len(series)), rng.integers(1, 12), replace=False))
+        for _ in range(6)
+    ]
+    for cuts in splits:
+        row, parts = None, []
+        for a, b in zip([0, *cuts], [*cuts, len(series)]):
+            rows, row = model_step("node-07", series.iloc[a:b], row, cfg)
+            parts.append(rows)
+        got = pd.concat([p.astype(object) for p in parts if len(p)], ignore_index=True)
+        pd.testing.assert_frame_equal(got, want.astype(object), check_exact=True)
+        assert row == state, cuts
 
 
 def test_fit_failure_drops_one_record_in_both_runners(monkeypatch, caplog):

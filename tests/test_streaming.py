@@ -183,6 +183,84 @@ def test_streaming_alerts_pipeline(spark, windowed_stage_dir):
     assert every.count() > len(want)  # and alerts on the windows between
 
 
+def test_continuous_alerts_stream_thresholds(spark, windowed_stage_dir):
+    """continuous_alerts_stream at non-default thresholds equals
+    score_alerts at those thresholds over the batch as-of rows: every
+    window with its key's latest batch baseline at or before it."""
+    from flink_cookbook_spark.operators.metrics import ALERT_COLS, asof_join, score_alerts
+    from flink_cookbook_spark.streaming.recipes import continuous_alerts_stream
+    from flink_cookbook_spark.streaming.sarimax import baseline_batch
+
+    knobs = {"z_threshold": 2.0, "pct_threshold": 25.0, "min_baseline": 5.0}
+    _run_to_memory(
+        continuous_alerts_stream(_read_stream(spark, windowed_stage_dir), **knobs),
+        "alerts_knobs",
+    )
+    win = spark.read.parquet(windowed_stage_dir)
+    rows = asof_join(
+        win,
+        baseline_batch(win).select("user_id", "window_start", "baseline", "running_std"),
+        key="user_id",
+        left_ts="window_start",
+        right_ts="window_start",
+        value_cols=["baseline", "running_std"],
+    ).select(
+        "user_id",
+        "window_start",
+        F.col("avg_value").alias("observed"),
+        F.col("baseline_asof").alias("baseline"),
+        F.col("running_std_asof").alias("running_std"),
+        F.col("window_start_asof").alias("baseline_window_start"),
+    )
+    want = sorted(score_alerts(rows, **knobs).select(*ALERT_COLS).collect())
+    assert sorted(spark.table("alerts_knobs").collect()) == want
+    assert len(want) > score_alerts(rows).count()  # the knobs change the alerts
+
+
+def test_model_keys_by_node_id(spark, tmp_path):
+    """The model operator keys on the input's key, here a string node id:
+    two node ids whose old model key, pmod(xxhash64(node_id), 1e6),
+    collides get two independent baselines, each equal to its own
+    single-key replay and keyed by the node id."""
+    import numpy as np
+    import pandas as pd
+
+    from flink_cookbook_spark.streaming.sarimax import (
+        BASELINE_COLS,
+        FIXTURE_CONFIG,
+        _KeyState,
+        baseline_streaming,
+        replay_key,
+    )
+
+    pair = ["node-1942", "node-4010"]
+    old_keys = spark.createDataFrame([(n,) for n in pair], "node_id string").select(
+        F.pmod(F.xxhash64("node_id"), F.lit(1_000_000))
+    )
+    assert old_keys.distinct().count() == 1
+    rng = np.random.default_rng(3)
+    pdf = pd.DataFrame(
+        [(n, 300 * t, float(rng.normal(30 + 30 * i, 5))) for i, n in enumerate(pair)
+         for t in range(60)],
+        columns=["user_id", "window_start", "avg_value"],
+    )
+    src = str(tmp_path / "win")
+    schema = "user_id string, window_start long, avg_value double"
+    spark.createDataFrame(pdf, schema).coalesce(1).write.parquet(src)
+    _run_to_memory(
+        baseline_streaming(spark.readStream.schema(schema).parquet(src)), "baselines_node"
+    )
+    got = spark.table("baselines_node")
+    assert dict(got.dtypes)["user_id"] == "string"
+    want = [
+        tuple(r[c] for c in BASELINE_COLS)
+        for n, g in pdf.groupby("user_id")
+        for r in replay_key(_KeyState(), n, g, FIXTURE_CONFIG)
+    ]
+    assert {r[0] for r in want} == set(pair)
+    assert sorted(tuple(r) for r in got.collect()) == sorted(want)
+
+
 def test_default_session_widths(spark):
     """get_spark() defaults: streaming state on one partition (the
     reference's job parallelism), batch shuffles at the core count
@@ -266,6 +344,16 @@ def test_synthetic_generator_value_model(spark):
     assert [r.cpu for r in a] == [r.cpu for r in b]  # rand(seed) determinism
     assert all(0.0 <= r.cpu <= 100.0 for r in a)
     assert len({r.node_id for r in a}) == 5
+
+
+def test_synthetic_generator_names_every_node(spark):
+    """Node ids are zero-padded to two digits, never truncated: 150
+    nodes give 150 distinct ids."""
+    from flink_cookbook_spark.streaming.sources import synthetic_metrics_batch
+
+    ids = {r.node_id for r in synthetic_metrics_batch(spark, n_rows=300, n_nodes=150).collect()}
+    assert len(ids) == 150
+    assert {"node-07", "node-99", "node-123"} <= ids
 
 
 def test_json_wire_roundtrip_lossless(spark):
@@ -518,13 +606,22 @@ def test_rate_micro_batch_source_deterministic(spark):
         assert all(0.0 <= c <= 100.0 for _, c in a[k])  # clamp holds
 
 
-def test_cli_stream_mode_runs(spark, tmp_path):
+def test_cli_stream_mode_runs(spark, tmp_path, monkeypatch):
     """C1 stream mode: the chained two-query topology (window agg ->
-    parquet intermediate -> stateful model -> alert filter) starts,
-    runs for the requested duration, and shuts down cleanly with the
-    model/threshold knobs wired through."""
+    parquet intermediate keyed by node id -> every-window model operator
+    -> alert filter -> console) starts, runs for the requested duration
+    and shuts down cleanly, with the CLI's thresholds in stage 2."""
     from flink_cookbook_spark.cli import run
+    from flink_cookbook_spark.operators.metrics import ALERT_COLS
+    from flink_cookbook_spark.streaming import recipes
 
+    real, started = recipes.to_sink, {}
+
+    def to_sink(df, **kw):
+        started[kw["query_name"]] = (df, kw["fmt"], real(df, **kw))
+        return started[kw["query_name"]][2]
+
+    monkeypatch.setattr(recipes, "to_sink", to_sink)
     rc = run([
         "--mode", "stream", "--use-datagen",
         "--nodes", "3", "--rate", "20", "--duration-seconds", "8",
@@ -533,6 +630,14 @@ def test_cli_stream_mode_runs(spark, tmp_path):
         "--seasonal-order", "0,1,1,2", "--z-threshold", "2.5",
     ])
     assert rc == 0
+    windowed, _, _ = started["window_agg"]
+    assert dict(windowed.dtypes)["user_id"] == "string"
+    alerts, fmt, q = started["sarimax_baseline"]
+    assert fmt == "console" and alerts.columns == ALERT_COLS
+    plan = alerts._jdf.queryExecution().analyzed().toString()
+    assert plan.count("FlatMapGroupsInPandasWithState") == 1, plan
+    assert re.search(r"abs\(z_score#\d+\) >= 2\.5", plan), plan
+    assert q.recentProgress  # stage 2 ran
 
 
 def test_stream_static_join(spark, events_stream_dir):
