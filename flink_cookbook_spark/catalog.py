@@ -64,9 +64,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # clock IS the instant, so this cast is value-preserving.
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
-    """Register temp views so operators can be expressed in SQL too."""
-    for name in tables:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,11 +1,13 @@
-"""CLI: the reference's 17-argument launch surface (C1), Spark-first.
+"""CLI: the reference's launch surface (C1), Spark-first.
 
 Twin of parse_args/run_job (/root/reference/src/flinkarima.py:479-534 and
 run_job.sh:21-47): same knobs, same defaults — source selection, datagen
-shape, parallelism, checkpointing, history bounds, emit cadence, SARIMA
-orders, alert thresholds. ``--mode batch`` replays a parquet metric table
-through the batch twins; ``--mode stream`` runs the two-query Structured
-Streaming topology (see ARCHITECTURE.md).
+shape, parallelism, checkpoint directory, history bounds, emit cadence,
+SARIMA orders, alert thresholds. The reference's checkpoint interval has
+no flag: Structured Streaming commits offsets and state at every
+micro-batch, so the interval is the trigger. ``--mode batch`` replays a
+parquet metric table through the batch twins; ``--mode stream`` runs the
+two-query Structured Streaming topology (see ARCHITECTURE.md).
 """
 
 from __future__ import annotations
@@ -60,7 +62,6 @@ def build_parser() -> argparse.ArgumentParser:
                    "partition, batch shuffles at the core count. A "
                    "streaming checkpoint keeps the state width of its "
                    "first start")
-    p.add_argument("--checkpoint-ms", type=int, default=60_000)
     p.add_argument("--checkpoint-dir", default="/tmp/fcs-checkpoints")
     # model state (flinkarima.py:500-515)
     p.add_argument("--max-history", type=int, default=1440)

@@ -138,10 +138,12 @@ def _windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(rnd(F.avg("value")).alias("avg_value"))
             .select(epoch_seconds("w.start").alias("window_start"), "user_id", "avg_value")
             # materialize partitioned by the key every consumer clusters
-            # on: the persisted relation's hashpartitioning(user_id) is
-            # recognized through InMemoryTableScan (the session enables
-            # canChangeCachedPlanOutputPartitioning), so each downstream
-            # per-user window/aggregate elides its Exchange. One extra
+            # on: this repartition("user_id") is what lets the per-user
+            # Window, Aggregate and model (``baseline_batch``) consumers
+            # skip their Exchange — the persisted relation's
+            # hashpartitioning(user_id) is recognized through
+            # InMemoryTableScan (the session enables
+            # canChangeCachedPlanOutputPartitioning). One extra
             # 3 MB shuffle at build time buys exchange-free consumers —
             # the on-disk analogue is writing the continuous aggregate
             # bucketed by user_id.

@@ -10,8 +10,13 @@ Spark-first design (SURVEY.md section 4.2): the model is the one operator
 Catalyst cannot express, so it lives behind a pandas-UDF boundary —
 ``mapInPandas`` over key-clustered partitions in batch,
 ``applyInPandasWithState`` in streaming (Arrow-batched state, vs the
-reference's per-record pickling). Everything around it (window agg,
-enrichment join, alert filter) stays relational. Both key on the input's
+reference's per-record pickling). The batch replay states the layout it
+needs (each key's rows in one partition, in window order) as a
+``row_number()`` window and the planner supplies it: over the
+hash-partitioned ``_windowed`` memo the physical shape is
+``MapInPandas <- Window <- Sort <- InMemoryTableScan``, no exchange.
+Everything around it (window agg, enrichment join, alert filter) stays
+relational. Both key on the input's
 ``user_id`` type.
 
 Two forecasters (``BaselineConfig.method``): ``ewma``, a closed-form
@@ -493,34 +498,24 @@ def _vectorized_runner(cfg: BaselineConfig):
     return run_partition
 
 
-def baseline_batch(
-    windowed: DataFrame,
-    cfg: BaselineConfig = FIXTURE_CONFIG,
-    *,
-    input_copartitioned: bool = False,
-) -> DataFrame:
+def baseline_batch(windowed: DataFrame, cfg: BaselineConfig = FIXTURE_CONFIG) -> DataFrame:
     """Batch twin: replay each key's ordered window series through the
     exact state loop.
 
-    Physical shape: hash-repartition on the key, sort within partitions
-    by (key, window_start) — both JVM-side — then ONE mapInPandas pass
-    (``_vectorized_runner``) whose per-key state survives Arrow-batch
-    boundaries. Compared to applyInPandas-per-group this amortizes the
-    Python/pandas overhead across whole record batches (thousands of
-    tiny keys per batch, the 100 TB cardinality shape) while computing
-    the identical sequence of per-sample operations.
-
-    ``input_copartitioned=True`` skips the repartition: callers feeding
-    the memoized windowed aggregate (already materialized hash-
-    partitioned by user_id) declare that every key's rows are already
-    physically in one partition, eliding a redundant full exchange of
-    the series. The correctness contract is physical layout, not what
-    Catalyst knows — AQE partition coalescing merges whole partitions,
-    so the co-location survives it. Only pass True when the input
-    demonstrably clusters keys (the memo, or a filter/projection of it);
-    a mis-declared input would split a key's state across partitions."""
-    clustered = windowed if input_copartitioned else windowed.repartition("user_id")
-    return clustered.sortWithinPartitions("user_id", "window_start").mapInPandas(
+    Physical shape: the replay needs every key's rows in one partition,
+    in ``window_start`` order — the reference's ``key_by``. A
+    ``row_number()`` over ``partitionBy(user_id).orderBy(window_start)``
+    states that need to the planner, which adds the hash exchange only
+    when the input is not already hash-partitioned by ``user_id`` (over
+    the ``_windowed`` memo: ``MapInPandas <- Window <- Sort <-
+    InMemoryTableScan``) and the sort in every case. Then ONE
+    mapInPandas pass (``_vectorized_runner``), whose per-key state
+    survives Arrow-batch boundaries: compared to applyInPandas-per-group
+    it amortizes the Python/pandas overhead across whole record batches
+    (thousands of tiny keys per batch, the 100 TB cardinality shape)
+    while computing the identical sequence of per-sample operations."""
+    by_key = Window.partitionBy("user_id").orderBy("window_start")
+    return windowed.withColumn("_seq", F.row_number().over(by_key)).mapInPandas(
         _vectorized_runner(cfg), schema=_keyed_like(windowed, BASELINE_SCHEMA)
     )
 
@@ -578,11 +573,7 @@ def sarimax_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_sarimax.py)."""
     from flink_cookbook_spark.operators.metrics import _windowed
 
-    # the memo is materialized hash-partitioned by user_id, so the
-    # replay's repartition is redundant — declare the co-location
-    return baseline_batch(
-        _windowed(spark, sf_dir), FIXTURE_CONFIG, input_copartitioned=True
-    )
+    return baseline_batch(_windowed(spark, sf_dir), FIXTURE_CONFIG)
 
 
 register("sarimax_baseline", oracle=None, tags=("model", "A5", "A8", "stateful"))(
@@ -817,9 +808,9 @@ def pipeline_alerts_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     win = _windowed(spark, sf_dir)
-    baselines = baseline_batch(
-        win, FIXTURE_CONFIG, input_copartitioned=True
-    ).select("user_id", "window_start", "baseline", "running_std")
+    baselines = baseline_batch(win, FIXTURE_CONFIG).select(
+        "user_id", "window_start", "baseline", "running_std"
+    )
     enriched = asof_join(
         win,
         baselines,
@@ -864,12 +855,9 @@ def pipeline_alerts_fallback_oracle(spark: SparkSession, sf_dir: str) -> DataFra
     ordering — zero additional exchanges or sorts, identical match
     semantics (the sweep frame includes the current row, so an emit row
     is its own latest baseline, exactly the union sweep's tie-break),
-    and identical rounded values (same expressions, same frames)."""
-    from flink_cookbook_spark.operators.metrics import (
-        MIN_BASELINE,
-        PCT_THRESHOLD,
-        Z_THRESHOLD,
-    )
+    and identical rounded values (same expressions, same frames). The
+    alert rule is the shared J2 ``score_alerts``."""
+    from flink_cookbook_spark.operators.metrics import ALERT_COLS, score_alerts
 
     scored = _fallback_scored(spark, sf_dir, all_rows=True)
     baseline_raw = F.greatest(
@@ -894,38 +882,14 @@ def pipeline_alerts_fallback_oracle(spark: SparkSession, sf_dir: str) -> DataFra
     enriched = marked.select(
         "user_id",
         "window_start",
-        "avg_value",
-        F.last("_b_val", ignorenulls=True).over(sweep).alias("baseline_value_asof"),
-        F.last("_b_std", ignorenulls=True).over(sweep).alias("baseline_std_asof"),
-        F.last("_b_ts", ignorenulls=True).over(sweep).alias("window_start_asof"),
-    ).where(F.col("window_start_asof").isNotNull())
-    deviation = F.col("avg_value") - F.col("baseline_value_asof")
-    pct = F.when(
-        F.col("baseline_value_asof") >= MIN_BASELINE,
-        deviation / F.col("baseline_value_asof") * 100.0,
-    ).otherwise(F.lit(0.0))
-    z = F.when(
-        F.col("baseline_std_asof") > 0, deviation / F.col("baseline_std_asof")
-    ).otherwise(F.lit(0.0))
-    return (
-        enriched.withColumn("deviation_u", deviation)
-        .withColumn("pct_u", pct)
-        .withColumn("z_u", z)
-        .where((F.abs(F.col("z_u")) >= Z_THRESHOLD) | (F.abs(F.col("pct_u")) >= PCT_THRESHOLD))
-        .select(
-            "user_id",
-            "window_start",
-            F.lit("cpu_deviation").alias("alert_type"),
-            F.when(F.abs(F.col("z_u")) >= 2 * Z_THRESHOLD, "high")
-            .otherwise("medium")
-            .alias("severity"),
-            F.col("avg_value").alias("observed"),
-            F.col("baseline_value_asof").alias("baseline"),
-            rnd("deviation_u").alias("deviation"),
-            rnd("pct_u").alias("pct_deviation"),
-            rnd("z_u").alias("z_score"),
-            F.col("window_start_asof").alias("baseline_window_start"),
-        )
+        F.col("avg_value").alias("observed"),
+        F.last("_b_val", ignorenulls=True).over(sweep).alias("baseline"),
+        F.last("_b_std", ignorenulls=True).over(sweep).alias("running_std"),
+        F.last("_b_ts", ignorenulls=True).over(sweep).alias("baseline_window_start"),
+    ).where(F.col("baseline_window_start").isNotNull())
+    rounded = {"deviation", "pct_deviation", "z_score"}
+    return score_alerts(enriched).select(
+        *(rnd(c).alias(c) if c in rounded else c for c in ALERT_COLS)
     )
 
 
@@ -1012,7 +976,7 @@ def baseline_method_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     for m in ("css", "ewma"):
         cfg = dataclasses.replace(FIXTURE_CONFIG, method=m)
         legs.append(
-            baseline_batch(win, cfg, input_copartitioned=True)
+            baseline_batch(win, cfg)
             .agg(
                 F.max("model").alias("model"),
                 F.count("*").cast("long").alias("n_records"),

@@ -121,26 +121,37 @@ def test_batch_twin_equals_plain_python(spark, sf_dir):
     assert got and all(got[k] == pytest.approx(want[k], abs=1e-9) for k in want)
 
 
-def test_windowed_memo_is_copartitioned_by_user(spark, sf_dir):
-    """The ``input_copartitioned=True`` contract of the callers over the
-    ``_windowed`` memo: no key spans two partitions of the materialized
-    memo, and skipping the repartition changes no baseline. AQE merges
-    the fixture memo into one partition, where the contract holds
-    trivially, so the checks also run on the memo rebuilt over 4
-    partitions."""
+def _replay_to_scan(df) -> list[str]:
+    """Lines of ``df``'s executed plan from the replay's MapInPandas down
+    to the first cached scan. Read after an action: only then is AQE's
+    final plan, with every exchange it kept, the executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    assert "isFinalPlan=true" in plan[0], plan[0]
+    top = next(i for i, line in enumerate(plan) if "MapInPandas" in line)
+    scan = next(i for i in range(top, len(plan)) if "InMemoryTableScan" in plan[i])
+    return plan[top : scan + 1]
+
+
+def test_baseline_batch_clusters_through_the_planner(spark, sf_dir):
+    """``baseline_batch`` states the layout its replay needs (every key's
+    rows in one partition, in window order) and the planner supplies it.
+    Over the ``_windowed`` memo, materialized hash-partitioned by
+    user_id, the executed plan has no Exchange between the replay and
+    the cached scan; a round-robin copy of the memo still gives the
+    memo's rows. AQE merges the fixture memo into one partition, so the
+    checks also run on the memo rebuilt over 4 partitions."""
     from pyspark.sql import functions as F
 
     from flink_cookbook_spark.operators.metrics import _windowed
     from flink_cookbook_spark.pipeline import _cache
 
     def check(memo) -> int:
-        parts = memo.select("user_id", F.spark_partition_id().alias("p"))
-        split = parts.groupBy("user_id").agg(F.countDistinct("p").alias("n"))
-        assert split.where("n > 1").count() == 0
-        assert sorted(baseline_batch(memo, input_copartitioned=True).collect()) == sorted(
-            baseline_batch(memo).collect()
-        )
-        return parts.select("p").distinct().count()
+        replay = baseline_batch(memo)
+        rows = sorted(replay.collect())
+        path = _replay_to_scan(replay)
+        assert not any("Exchange" in line for line in path), "\n".join(path)
+        assert rows and sorted(baseline_batch(memo.repartition(4)).collect()) == rows
+        return memo.select(F.spark_partition_id()).distinct().count()
 
     check(_windowed(spark, sf_dir))
     confs = {  # 4 shuffle partitions that AQE finds too big to merge

@@ -111,6 +111,35 @@ def test_streaming_session_window(spark, events_stream_dir):
         assert r.n_events >= 1
 
 
+def test_sliding_window_stream_equals_batch_twin(spark, sf_dir, events_stream_dir):
+    """Sliding windows (10 min, 5 min slide): the stream emits exactly
+    the windows its final watermark closed, and each equals the
+    ``sliding_window_agg`` batch twin, averages compared after ``rnd``."""
+    from flink_cookbook_spark.operators.windows import sliding_window_agg
+    from flink_cookbook_spark.registry import rnd
+    from flink_cookbook_spark.streaming.recipes import sliding_window_stream
+
+    stream = sliding_window_stream(_metrics_view(_read_stream(spark, events_stream_dir)))
+    _run_to_memory(stream, "sliding")
+    got = {
+        (int(r.node_id), r.window_start, r.window_end): r.avg_value
+        for r in spark.table("sliding").select(
+            "node_id", "window_start", "window_end", rnd("avg_value").alias("avg_value")
+        ).collect()
+    }
+    # the final watermark lies in [max_ts - 600, max_ts - 599) seconds
+    # (10-minute delay), so a window is closed iff it ends at or before
+    # max_ts - 600
+    max_ts = spark.read.parquet(events_stream_dir).agg(F.max(F.col("ts").cast("long"))).collect()[0][0]
+    want = {
+        (r.user_id, r.window_start, r.window_end): r.avg_value
+        for r in sliding_window_agg(spark, sf_dir).collect()
+        if r.window_end <= max_ts - 600
+    }
+    assert len(want) > 100
+    assert got == want
+
+
 def test_streaming_dedup(spark, events_stream_dir):
     from flink_cookbook_spark.streaming.recipes import dedup_stream
 
