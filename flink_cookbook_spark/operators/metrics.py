@@ -458,16 +458,9 @@ def asof_join(
     right_ts: str,
     value_cols: list[str],
     how: str = "inner",
-    direction: str = "backward",
 ) -> DataFrame:
     """Generic as-of (latest-value) join: for each left row, attach the
-    most recent right row with ``right_ts <= left_ts`` on the same key
-    (``direction='backward'``, the default), or the EARLIEST right row
-    with ``right_ts >= left_ts`` (``direction='forward'`` — the
-    next-scheduled-value lookup). Both directions are the same
-    single-shuffle union + sorted sweep; forward just flips the sort
-    tie-break and sweeps a following frame with first() instead of a
-    preceding frame with last().
+    most recent right row with ``right_ts <= left_ts`` on the same key.
 
     Twin of the reference's broadcast latest-value join (J1,
     flinkarima.py:288-376). The reference needs Flink broadcast state only
@@ -489,44 +482,34 @@ def asof_join(
         *[F.lit(None).cast(right.schema[c].dataType).alias(f"_r_{c}") for c in value_cols],
         F.lit(None).cast("long").alias("_r_ts"),
     )
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    # backward: right rows sort BEFORE left rows at equal ts => a baseline
-    # emitted at ts is visible to a left row at the same ts (documented
-    # order: right_ts <= left_ts, latest wins — SURVEY.md section 7.3).
-    # forward: right rows sort AFTER left rows at equal ts so a following
-    # frame starting at the current row still includes the equal-ts match
-    # (right_ts >= left_ts, earliest wins).
-    right_side = 0 if direction == "backward" else 2
+    # right rows sort BEFORE left rows at equal ts => a baseline emitted
+    # at ts is visible to a left row at the same ts (documented order:
+    # right_ts <= left_ts, latest wins — SURVEY.md section 7.3).
     marked_right = right.select(
         F.col(key).alias("_k"),
         F.col(right_ts).alias("_ts"),
-        F.lit(right_side).alias("_side"),
+        F.lit(0).alias("_side"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
         *[F.col(c).alias(f"_r_{c}") for c in value_cols],
         epoch_seconds(right_ts).alias("_r_ts"),
     )
     # deterministic tie-break among RIGHT rows sharing (key, ts): order by
-    # the carried value columns too, so backward's last() always picks the
-    # greatest value tuple (forward's first() the least) instead of
-    # whichever row the shuffle happened to deliver last. Left rows are
-    # unaffected (their _r_* are all NULL and the sweep reads only _r_*).
-    base = Window.partitionBy("_k").orderBy(
-        "_ts", "_side", *[F.col(f"_r_{c}") for c in value_cols]
+    # the carried value columns too, so last() always picks the greatest
+    # value tuple instead of whichever row the shuffle happened to deliver
+    # last. Left rows are unaffected (their _r_* are all NULL and the
+    # sweep reads only _r_*).
+    sweep = (
+        Window.partitionBy("_k")
+        .orderBy("_ts", "_side", *[F.col(f"_r_{c}") for c in value_cols])
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    if direction == "backward":
-        sweep = base.rowsBetween(Window.unboundedPreceding, 0)
-        pick = lambda c: F.last(c, ignorenulls=True)  # noqa: E731
-    else:
-        sweep = base.rowsBetween(0, Window.unboundedFollowing)
-        pick = lambda c: F.first(c, ignorenulls=True)  # noqa: E731
     filled = marked_left.unionByName(marked_right).select(
         "*",
         *[
-            pick(f"_r_{c}").over(sweep).alias(f"_f_{c}")
+            F.last(f"_r_{c}", ignorenulls=True).over(sweep).alias(f"_f_{c}")
             for c in value_cols
         ],
-        pick("_r_ts").over(sweep).alias("_f_ts"),
+        F.last("_r_ts", ignorenulls=True).over(sweep).alias("_f_ts"),
     )
     out = filled.where(F.col("_side") == 1)
     if how == "inner":

@@ -7,6 +7,21 @@ no Python in the hot path; hyperplanes are deterministic md5-derived
 sign vectors materialized as literals so the DuckDB oracle reproduces
 them bit-for-bit.
 
+One vector-quantizer core serves the IVF, IMI/PQ and k-means queries
+(the inverted multi-index paper's framing: every index is nearest
+centroid plus Lloyd):
+- ``_sqdist`` / ``_dot`` / ``_norm``: the sequential folds, the order
+  DuckDB uses, so distances are bit-identical before rounding;
+- ``_centroid_row``: every centroid set enters a plan as one broadcast
+  row of ``array<struct<cid, cemb>>`` columns;
+- ``_nearest`` / ``_nearest_n``: argmin and top-n over (dist, cid)
+  structs, ties to the lowest cid; ``_assign`` is the map-only
+  nearest-centroid pass built on ``_nearest``;
+- ``_md5_sample`` / ``_train_sample`` / ``_lloyd``: the engine-portable
+  md5-coin sample and the numpy Lloyd trainer the coarse quantizers run
+  on it. The distributed k-means (``_kmeans_model``) keeps its own
+  update, whose empty clusters drop.
+
 Scale notes (100 TB / billions of vectors):
 - brute force is query-count x corpus-size: fine for small query sets
   (the broadcast-queries pattern below — corpus stays partitioned, the
@@ -46,6 +61,28 @@ def _dot(a, b) -> F.Column:
 
 def _norm(a) -> F.Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def _sqdist(v, c) -> F.Column:
+    """Squared L2 distance, the same sequential fold as ``_dot``."""
+    return F.aggregate(
+        F.zip_with(v, c, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def _md5_sample(df: DataFrame, salt: str, cap: int) -> tuple[int, DataFrame]:
+    """(row count, capped deterministic sample of ``df``): the rows whose
+    md5 coin over ``salt || vec_id`` is divisible by ``max(1, n // cap)``,
+    so the sample holds ~``cap`` rows at any corpus size. md5, not
+    F.hash: an engine-portable coin, so each DuckDB oracle reproduces the
+    exact sample (F.hash is Spark-private murmur3 and could not)."""
+    n = df.count()
+    coin = F.conv(
+        F.substring(F.md5(F.concat(F.lit(salt), F.col("vec_id").cast("string"))), 1, 15),
+        16,
+        10,
+    ).cast("long")
+    return n, df.where(coin % max(1, n // cap) == 0)
 
 
 def _emb_double(df: DataFrame) -> DataFrame:
@@ -157,14 +194,18 @@ def lsh_bucket_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     projections. Vectors with high cosine similarity collide with high
     probability (P(bit match) = 1 - angle/pi per plane)."""
     emb = _emb_double(load(spark, sf_dir, "embeddings"))
-    planes = _hyperplanes()
+    return emb.select("vec_id", "label", _lsh_bucket().alias("bucket"))
+
+
+def _lsh_bucket() -> F.Column:
+    """The int bucket id of the ``emb`` column: bit p is set when the
+    projection on hyperplane p is >= 0."""
     bucket = None
-    for p, signs in enumerate(planes):
-        plane_lit = F.array(*[F.lit(float(s)) for s in signs])
-        proj = _dot(F.col("emb"), plane_lit)
+    for p, signs in enumerate(_hyperplanes()):
+        proj = _dot(F.col("emb"), F.array(*[F.lit(float(s)) for s in signs]))
         bit = F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
         bucket = bit if bucket is None else bucket + bit
-    return emb.select("vec_id", "label", bucket.cast("int").alias("bucket"))
+    return bucket.cast("int")
 
 
 def _lsh_bucket_sql() -> str:
@@ -258,106 +299,59 @@ MAX_TRAIN_VECTORS = 512
 NPROBE = 3
 
 
-def _assign_cells(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """Nearest-centroid assignment as a MAP-ONLY pass: the k x DIM
-    centroid matrix enters the plan as broadcast DATA — a single row
-    holding array<struct<cid, cemb>> — and the argmin is
-    ``array_min(transform(...))`` over (dist, cid) structs, so assignment
-    costs zero shuffles (the earlier crossJoin + groupBy(vec_id) argmin
-    paid a full shuffle per k-means iteration). Shipping centroids as
-    data, not literal expressions, keeps the plan structurally identical
-    every iteration so Catalyst analysis/codegen cost is paid once. Ties
-    resolve to the lowest centroid id via (dist, cid) struct ordering."""
-    spark = emb.sparkSession
-    cdf = spark.createDataFrame(
-        [([(i, [float(v) for v in c]) for i, c in enumerate(centroids)],)],
-        "cents array<struct<cid: int, cemb: array<double>>>",
+def _centroid_row(spark: SparkSession, **sets) -> DataFrame:
+    """ONE broadcast row holding each centroid set, a list of
+    (cid, centroid) pairs, as an ``array<struct<cid, cemb>>`` column named
+    by its keyword. Centroids enter a plan as DATA, not literal
+    expressions, so the plan is structurally identical every iteration and
+    Catalyst analysis/codegen cost is paid once."""
+    return spark.createDataFrame(
+        [tuple([(int(cid), [float(v) for v in c]) for cid, c in cs] for cs in sets.values())],
+        ", ".join(f"{name} array<struct<cid: int, cemb: array<double>>>" for name in sets),
     )
-    sqdist = lambda cemb: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("emb"), cemb, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    best = F.array_min(
-        F.transform(F.col("cents"), lambda c: F.struct(sqdist(c.cemb).alias("dist"), c.cid.alias("cid")))
-    )
-    return (
-        emb.crossJoin(F.broadcast(cdf))  # one broadcast row, never a shuffle
-        .select("vec_id", "emb", best.getField("cid").alias("cid"))
-    )  # keeps emb: callers reuse the assignment as (vector, cell) pairs
 
 
-def _probe_cells(
-    emb_df: DataFrame, centroids: list[list[float]], nprobe: int
-) -> DataFrame:
-    """Top-``nprobe`` nearest centroids per vector, as the same map-only
-    broadcast pass as ``_assign_cells`` — ``array_sort`` over (dist, cid)
-    structs then explode the leading slice. Output has nprobe rows per
-    input vector: (vec_id, emb, cid)."""
-    spark = emb_df.sparkSession
-    cdf = spark.createDataFrame(
-        [([(i, [float(v) for v in c]) for i, c in enumerate(centroids)],)],
-        "cents array<struct<cid: int, cemb: array<double>>>",
+def _by_dist(v, cents) -> F.Column:
+    """(dist, cid) struct per centroid of the array column ``cents``;
+    struct ordering sends distance ties to the lowest cid."""
+    return F.transform(
+        cents, lambda c: F.struct(_sqdist(v, c.cemb).alias("dist"), c.cid.alias("cid"))
     )
-    sqdist = lambda cemb: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("emb"), cemb, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    ranked = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("cents"),
-                lambda c: F.struct(sqdist(c.cemb).alias("dist"), c.cid.alias("cid")),
-            )
-        ),
-        1,
-        nprobe,
-    )
-    return emb_df.crossJoin(F.broadcast(cdf)).select(
+
+
+def _nearest(v, cents) -> F.Column:
+    """The (dist, cid) struct of the centroid nearest to ``v``."""
+    return F.array_min(_by_dist(v, cents))
+
+
+def _nearest_n(v, cents, n: int) -> F.Column:
+    """The cids of the ``n`` centroids nearest to ``v``, nearest first;
+    its first element is ``_nearest``'s cid."""
+    return F.transform(F.slice(F.array_sort(_by_dist(v, cents)), 1, n), lambda x: x.cid)
+
+
+def _assign(emb: DataFrame, pairs) -> DataFrame:
+    """Nearest-centroid assignment as a MAP-ONLY pass over ``emb``
+    (vec_id, emb): the centroid pairs cross-join in as one broadcast row
+    and the argmin is ``_nearest``, so assignment costs zero shuffles (the
+    earlier crossJoin + groupBy(vec_id) argmin paid a full shuffle per
+    k-means iteration). Returns (vec_id, emb, cid, sqdist); keeping emb
+    lets callers reuse the assignment as (vector, cell) pairs."""
+    best = _nearest(F.col("emb"), F.col("cents"))
+    return emb.crossJoin(F.broadcast(_centroid_row(emb.sparkSession, cents=pairs))).select(
         "vec_id",
         "emb",
-        F.explode(F.transform(ranked, lambda x: x.cid)).alias("cid"),
+        best.getField("cid").alias("cid"),
+        best.getField("dist").alias("sqdist"),
     )
 
 
-def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
-    """Deterministic Lloyd's k-means on a capped hash-sample of the
-    embedding corpus.
-
-    Two distributed jobs total — a count (to size the sampling rate) and
-    a bounded collect (<= ~MAX_TRAIN_VECTORS rows by construction) — then
-    KMEANS_ITERS Lloyd iterations in numpy on the driver. Compared to
-    running each Lloyd pass as a cluster job, this removes 2 jobs per
-    iteration whose input is a few hundred KB; at any corpus size the
-    driver never holds more than the capped sample (the footprint of a
-    broadcast dim table), which is why faiss and friends train coarse
-    quantizers exactly this way. Seeds are the first k sample vectors by
-    vec_id; ties in the numpy argmin resolve to the lowest cid, matching
-    ``_assign_cells``'s (dist, cid) struct ordering. No RNG anywhere —
-    the hash sample, seeds, and iteration count are all deterministic.
-    """
-    emb = _emb_double(load(spark, sf_dir, "embeddings")).select("vec_id", "emb")
-    n = emb.count()
-    mod = max(1, n // MAX_TRAIN_VECTORS)
-    # md5-PRF sample, not F.hash: an engine-portable coin, so the DuckDB
-    # oracle (_ivf_oracle, registered on ivf_topk) reproduces the exact
-    # training set. F.hash is Spark-private murmur3 and could not.
-    coin = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("ivfsample:"), F.col("vec_id").cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    rows = emb.where(coin % mod == 0).collect()
-    rows.sort(key=lambda r: r.vec_id)
-    if not rows:  # empty corpus: no centroids, every downstream join empty
-        return []
-    X = np.array([r.emb for r in rows], dtype=np.float64)
-    k = min(_adaptive_k(n), len(X))
+def _lloyd(X: np.ndarray, k: int) -> list[list[float]]:
+    """KMEANS_ITERS Lloyd rounds in numpy over the rows of ``X``, seeded
+    with its first ``k`` rows. Distance ties go to the lowest cid
+    (argmin takes the first index, the (dist, cid) order of
+    ``_nearest``) and an empty cluster keeps its centroid (the oracles'
+    coalesce carry). No RNG anywhere."""
     C = X[:k].copy()
     for _ in range(KMEANS_ITERS):
         d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
@@ -367,6 +361,31 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
             if len(members):
                 C[c] = members.mean(axis=0)
     return [[float(v) for v in row] for row in C]
+
+
+def _train_sample(spark: SparkSession, sf_dir: str, salt: str) -> tuple[int, np.ndarray]:
+    """(corpus size, training matrix): the ``_md5_sample`` of the corpus,
+    capped at ~MAX_TRAIN_VECTORS, collected in vec_id order.
+
+    Two distributed jobs — the count that sizes the sampling rate and a
+    bounded collect — and the driver never holds more than the capped
+    sample (the footprint of a broadcast dim table), at any corpus size.
+    Coarse quantizers train on this sample in numpy (``_lloyd``) instead
+    of running each Lloyd pass as a cluster job over a few hundred KB;
+    faiss and friends train the same way."""
+    emb = _emb_double(load(spark, sf_dir, "embeddings")).select("vec_id", "emb")
+    n, sample = _md5_sample(emb, salt, MAX_TRAIN_VECTORS)
+    rows = sorted(sample.collect(), key=lambda r: r.vec_id)
+    return n, np.array([r.emb for r in rows], dtype=np.float64)
+
+
+def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
+    """The IVF coarse quantizer: ``_lloyd`` with the adaptive cell count
+    on the ``ivfsample:`` training sample (the sample ``_ivf_oracle``
+    replays). An empty corpus has no centroids, and every downstream join
+    is empty."""
+    n, X = _train_sample(spark, sf_dir, "ivfsample:")
+    return _lloyd(X, min(_adaptive_k(n), len(X))) if len(X) else []
 
 
 def _ivf_index(spark: SparkSession, sf_dir: str):
@@ -382,11 +401,14 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
     from flink_cookbook_spark.pipeline._cache import memo_persist, memo_value
 
     centroids = memo_value(
-        spark, "ivf_centroids", sf_dir, lambda: _kmeans_centroids(spark, sf_dir)
+        spark, "ivf_centroids", sf_dir, lambda: _ivf_centroids(spark, sf_dir)
     )
     emb = _emb_double(load(spark, sf_dir, "embeddings")).select("vec_id", "emb")
     cells = memo_persist(
-        spark, "ivf_cells", sf_dir, lambda: _assign_cells(emb, centroids)
+        spark,
+        "ivf_cells",
+        sf_dir,
+        lambda: _assign(emb, enumerate(centroids)).drop("sqdist"),
     )
     return centroids, cells
 
@@ -402,10 +424,12 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes -> top-k); recall vs brute force additionally pinned in
     tests/test_pipeline.py."""
     centroids, cells = _ivf_index(spark, sf_dir)
-    queries = cells.where(F.col("vec_id") < N_QUERIES).select("vec_id", "emb")  # noqa: E501  (body continues below)
-    probes = _probe_cells(queries, centroids, NPROBE).select(
+    queries = cells.where(F.col("vec_id") < N_QUERIES).select("vec_id", "emb")
+    cdf = _centroid_row(spark, cents=enumerate(centroids))
+    probes = queries.crossJoin(F.broadcast(cdf)).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"),
-        _norm(F.col("emb")).alias("qn"), "cid",
+        _norm(F.col("emb")).alias("qn"),
+        F.explode(_nearest_n(F.col("emb"), F.col("cents"), NPROBE)).alias("cid"),
     )
     # candidate norms once per corpus row (hoisted above the join, same
     # floats); candidates pay only the dot fold per probe hit
@@ -434,7 +458,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_oracle() -> str:
     """Full IVF replay as unrolled CTEs: the md5-coin training sample
     (modulus derived in-SQL from the corpus count, exactly like
-    ``_kmeans_centroids``), seeds = first k sample vectors by vec_id,
+    ``_train_sample``), seeds = first k sample vectors by vec_id,
     KMEANS_ITERS Lloyd rounds WITH numpy's empty-cluster carry
     (coalesce keeps the old centroid), full-corpus nearest-centroid
     assignment, NPROBE probe cells per query, and the within-cell
@@ -545,14 +569,7 @@ def embedding_cosine_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bucket equi-join replaces the all-pairs cross product (the
     100 TB shape)."""
     emb = _emb_double(load(spark, sf_dir, "embeddings"))
-    planes = _hyperplanes()
-    bucket = None
-    for p, signs in enumerate(planes):
-        plane_lit = F.array(*[F.lit(float(s)) for s in signs])
-        proj = _dot(F.col("emb"), plane_lit)
-        bit = F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    withb = emb.select("vec_id", F.col("emb"), bucket.cast("int").alias("bucket"))
+    withb = emb.select("vec_id", F.col("emb"), _lsh_bucket().alias("bucket"))
     # norms once per vector BEFORE the bucket join; the pair stage pays
     # only the dot fold (identical floats — same expression, hoisted)
     a = withb.select(
@@ -593,6 +610,33 @@ WHERE list_dot_product(a.e, b.e)
 )(embedding_cosine_dup_pairs)
 
 
+def _int8_scale(v: str) -> F.Column:
+    """Per-vector symmetric int8 scale of array column ``v``."""
+    return F.greatest(F.array_max(F.transform(v, F.abs)), F.lit(1e-12)) / F.lit(127.0)
+
+
+def _int8_sq_err(v: str) -> F.Column:
+    """Per-component squared reconstruction error of ``v``'s int8 code,
+    at the scale held in column ``q_scale``. Internal name q_scale, NOT
+    the output name "scale": references to a column from inside a HOF
+    lambda resolve against the select list's LATERAL aliases before
+    input columns (unlike plain expressions), so an output alias
+    `rnd(scale).alias("scale")` would silently feed the ROUNDED scale
+    back into the quantizer."""
+    return F.transform(
+        v,
+        lambda x: F.pow(
+            x
+            - F.greatest(
+                F.lit(-127.0),
+                F.least(F.lit(127.0), F.floor(x / F.col("q_scale") + F.lit(0.5))),
+            )
+            * F.col("q_scale"),
+            F.lit(2.0),
+        ),
+    )
+
+
 def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 scalar quantization with per-vector scale —
     the storage-compression step of a production vector index (4x
@@ -607,30 +651,8 @@ def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    # internal name q_scale, NOT the output name "scale": references to a
-    # column from inside a HOF lambda resolve against the select list's
-    # LATERAL aliases before input columns (unlike plain expressions), so
-    # an output alias `rnd(scale).alias("scale")` would silently feed the
-    # ROUNDED scale back into the quantizer.
-    scaled = emb.withColumn(
-        "q_scale",
-        F.greatest(
-            F.array_max(F.transform("e", F.abs)), F.lit(1e-12)
-        )
-        / F.lit(127.0),
-    )
-    sq_err = F.transform(
-        "e",
-        lambda x: F.pow(
-            x
-            - F.greatest(
-                F.lit(-127.0),
-                F.least(F.lit(127.0), F.floor(x / F.col("q_scale") + F.lit(0.5))),
-            )
-            * F.col("q_scale"),
-            F.lit(2.0),
-        ),
-    )
+    scaled = emb.withColumn("q_scale", _int8_scale("e"))
+    sq_err = _int8_sq_err("e")
     return scaled.select(
         "vec_id",
         rnd(F.col("q_scale"), 8).alias("scale"),
@@ -714,47 +736,16 @@ KM_K = 8  # clusters; seeds = embeddings of vec_id 0..KM_K-1
 KM_ITERS = 2  # fixed Lloyd update rounds (unrolled in the oracle SQL)
 
 
-def _assign_with_dist(emb: DataFrame, pairs: list[tuple[int, list[float]]]) -> DataFrame:
-    """Map-only nearest-centroid assignment carrying the distance.
-
-    Same broadcast-data shape as ``_assign_cells`` but (a) centroid ids
-    are EXPLICIT (stable across iterations even if a cluster empties and
-    drops out of the list) and (b) the argmin struct's distance is kept,
-    so the final pass can emit it. Ties resolve to the lowest cid via
-    (dist, cid) struct ordering."""
-    spark = emb.sparkSession
-    cdf = spark.createDataFrame(
-        [([(int(cid), [float(v) for v in c]) for cid, c in pairs],)],
-        "cents array<struct<cid: int, cemb: array<double>>>",
-    )
-    sqdist = lambda cemb: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("emb"), cemb, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(sqdist(c.cemb).alias("dist"), c.cid.alias("cid")),
-        )
-    )
-    return emb.crossJoin(F.broadcast(cdf)).select(
-        "vec_id",
-        "emb",
-        best.getField("cid").alias("cid"),
-        best.getField("dist").alias("sqdist"),
-    )
-
-
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Lloyd k-means over the embedding corpus — the semantic
     clustering primitive (SemDeDup-style cluster-then-dedup, corpus topic
     maps, IVF coarse quantizers trained IN-cluster when the sample-based
-    path of ``_kmeans_centroids`` isn't enough).
+    path of ``_ivf_centroids`` isn't enough).
 
     Every heavy step is distributed and shuffle-minimal:
-    - assignment is the ``_assign_cells`` map-only broadcast pass (zero
-      shuffles; centroids travel as one broadcast row);
+    - assignment is the ``_assign`` map-only broadcast pass (zero
+      shuffles; centroids travel as one broadcast row, with explicit
+      cids that stay stable when a cluster empties and drops);
     - the centroid update is posexplode + one hash aggregate on
       (cid, dim) — map-side partial means make shuffle volume k x dims
       regardless of corpus size (the ``label_centroids`` shape);
@@ -769,8 +760,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     full value-hash check, not a rows-only pass.
     """
     emb, pairs = _kmeans_model(spark, sf_dir)
-    final = _assign_with_dist(emb, pairs)
-    return final.select(
+    return _assign(emb, pairs).select(
         "vec_id",
         F.col("cid").alias("cluster"),
         rnd(F.sqrt("sqdist"), 4).alias("dist"),
@@ -803,7 +793,7 @@ def _kmeans_model(spark: SparkSession, sf_dir: str):
         seeds = emb.where(F.col("vec_id") < k).collect()  # k rows, bounded
         pairs = [(int(r.vec_id), list(r.emb)) for r in sorted(seeds, key=lambda r: r.vec_id)]
         for _ in range(KM_ITERS):
-            assigned = _assign_with_dist(emb, pairs)
+            assigned = _assign(emb, pairs)
             rows = (
                 assigned.select("cid", F.posexplode("emb").alias("pos", "val"))
                 .groupBy("cid", "pos")
@@ -966,7 +956,7 @@ def semantic_cluster_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash-checked.
     """
     emb, pairs = _kmeans_model(spark, sf_dir)
-    assigned = _assign_with_dist(emb, pairs).select("vec_id", "emb", "cid")
+    assigned = _assign(emb, pairs).select("vec_id", "emb", "cid")
     cos = _dot(F.col("e1"), F.col("e2")) / (F.col("n1") * F.col("n2"))
     return (
         _cell_pairs(assigned)
@@ -1011,7 +1001,7 @@ WHERE list_dot_product(a.v, b.v)
 SIM_CURVE_THRESHOLDS = (0.30, 0.50, 0.70, 0.90, 0.99)
 #: hard cap on the calibration sample size: the md5-coin modulus is
 #: derived as n // CAP (the IVF training-sample pattern,
-#: ``_kmeans_centroids``), so the pair cross-join input is bounded by a
+#: ``_train_sample``), so the pair cross-join input is bounded by a
 #: CONSTANT (~CAP vectors -> ~CAP²/2 pairs) at any corpus size — at
 #: 100 TB the modulus grows with the corpus and the pair set does not.
 SIM_CURVE_MAX_VECTORS = 512
@@ -1032,16 +1022,8 @@ def similarity_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     so every threshold always emits a row — zero counts included.
     """
     emb = _emb_double(load(spark, sf_dir, "embeddings"))
-    # one scalar count sizes the sampling rate (the IVF trainer pattern)
-    n_corpus = emb.count()
-    mod = max(1, n_corpus // SIM_CURVE_MAX_VECTORS)
-    coin = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("simcurve:"), F.col("vec_id").cast("string"))),
-            1, 15,
-        ), 16, 10,
-    ).cast("long")
-    sample = emb.where(coin % mod == 0).select("vec_id", "emb")
+    _, sample = _md5_sample(emb, "simcurve:", SIM_CURVE_MAX_VECTORS)
+    sample = sample.select("vec_id", "emb")
     # norms once per sampled vector, not once per pair (same floats)
     a = sample.select(
         F.col("vec_id").alias("ida"), F.col("emb").alias("ea"),
@@ -1145,7 +1127,7 @@ def embedding_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd + pair-dedup + quantization end to end.
     """
     emb, pairs = _kmeans_model(spark, sf_dir)
-    assigned = _assign_with_dist(emb, pairs).select("vec_id", "emb", "cid")
+    assigned = _assign(emb, pairs).select("vec_id", "emb", "cid")
     cos = _dot(F.col("e1"), F.col("e2")) / (F.col("n1") * F.col("n2"))
     drops = (
         _cell_pairs(assigned)
@@ -1154,22 +1136,8 @@ def embedding_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     survivors = assigned.join(drops, "vec_id", "left_anti")
-    scaled = survivors.withColumn(
-        "q_scale",
-        F.greatest(F.array_max(F.transform("emb", F.abs)), F.lit(1e-12)) / F.lit(127.0),
-    )
-    sq_err = F.transform(
-        "emb",
-        lambda x: F.pow(
-            x
-            - F.greatest(
-                F.lit(-127.0),
-                F.least(F.lit(127.0), F.floor(x / F.col("q_scale") + F.lit(0.5))),
-            )
-            * F.col("q_scale"),
-            F.lit(2.0),
-        ),
-    )
+    scaled = survivors.withColumn("q_scale", _int8_scale("emb"))
+    sq_err = _int8_sq_err("emb")
     return scaled.select(
         "vec_id",
         F.col("cid").alias("cluster"),
@@ -1243,67 +1211,21 @@ def _imi_k(n: int) -> int:
 def _imi_centroids(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[list[float]], list[list[float]]]:
-    """Train both half-space quantizers on ONE capped md5 sample (the
-    ``_kmeans_centroids`` recipe: count -> bounded collect -> numpy
-    Lloyd with first-k'-by-vec_id seeds, lowest-cid argmin ties,
-    empty-cluster carry). Returns (half-A centroids, half-B centroids),
-    each k' x IMI_SUBDIM — driver state is two tiny matrices."""
-    emb = _emb_double(load(spark, sf_dir, "embeddings")).select("vec_id", "emb")
-    n = emb.count()
-    mod = max(1, n // MAX_TRAIN_VECTORS)
-    coin = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("imisample:"), F.col("vec_id").cast("string"))),
-            1, 15,
-        ), 16, 10,
-    ).cast("long")
-    rows = emb.where(coin % mod == 0).collect()
-    rows.sort(key=lambda r: r.vec_id)
-    if not rows:
+    """Train both half-space quantizers with ``_lloyd`` on ONE
+    ``imisample:`` training sample (the sample ``_imi_oracle`` replays).
+    Returns (half-A centroids, half-B centroids), each k' x IMI_SUBDIM —
+    driver state is two tiny matrices."""
+    n, X = _train_sample(spark, sf_dir, "imisample:")
+    if not len(X):
         return [], []
-    X = np.array([r.emb for r in rows], dtype=np.float64)
     k = min(_imi_k(n), len(X))
-
-    def lloyd(H: np.ndarray) -> list[list[float]]:
-        C = H[:k].copy()
-        for _ in range(KMEANS_ITERS):
-            d2 = ((H[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            cid = d2.argmin(axis=1)  # first (lowest) index on ties
-            for c in range(k):
-                members = H[cid == c]
-                if len(members):
-                    C[c] = members.mean(axis=0)
-        return [[float(v) for v in row] for row in C]
-
-    return lloyd(X[:, :IMI_SUBDIM]), lloyd(X[:, IMI_SUBDIM:])
+    return _lloyd(X[:, :IMI_SUBDIM], k), _lloyd(X[:, IMI_SUBDIM:], k)
 
 
-def _imi_broadcast_row(spark: SparkSession, ca, cb):
-    """Both centroid sets as ONE broadcast row of struct arrays."""
-    return spark.createDataFrame(
-        [(
-            [(i, [float(v) for v in c]) for i, c in enumerate(ca)],
-            [(i, [float(v) for v in c]) for i, c in enumerate(cb)],
-        )],
-        "ca_cents array<struct<cid: int, cemb: array<double>>>, "
-        "cb_cents array<struct<cid: int, cemb: array<double>>>",
-    )
-
-
-def _imi_half_exprs():
-    """(half-A slice, half-B slice, sqdist builder) shared by assignment
-    and probing."""
-    ha = F.slice(F.col("emb"), 1, IMI_SUBDIM)
-    hb = F.slice(F.col("emb"), IMI_SUBDIM + 1, IMI_SUBDIM)
-
-    def sqd(half, cemb):
-        return F.aggregate(
-            F.zip_with(half, cemb, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    return ha, hb, sqd
+def _half(i: int) -> F.Column:
+    """Product half ``i`` (0 or 1) of the ``emb`` column. A function, not
+    a module constant: a Column needs a live SparkContext."""
+    return F.slice(F.col("emb"), i * IMI_SUBDIM + 1, IMI_SUBDIM)
 
 
 def _imi_cells(spark: SparkSession, sf_dir: str):
@@ -1320,22 +1242,12 @@ def _imi_cells(spark: SparkSession, sf_dir: str):
     emb = _emb_double(load(spark, sf_dir, "embeddings")).select("vec_id", "emb")
 
     def build():
-        cdf = _imi_broadcast_row(spark, ca, cb)
-        ha, hb, sqd = _imi_half_exprs()
-
-        def best(cents_col, half):
-            return F.array_min(
-                F.transform(
-                    cents_col,
-                    lambda c: F.struct(sqd(half, c.cemb).alias("dist"), c.cid.alias("cid")),
-                )
-            ).getField("cid")
-
+        cdf = _centroid_row(spark, ca_cents=enumerate(ca), cb_cents=enumerate(cb))
         return emb.crossJoin(F.broadcast(cdf)).select(
             "vec_id",
             "emb",
-            best(F.col("ca_cents"), ha).alias("ca"),
-            best(F.col("cb_cents"), hb).alias("cb"),
+            _nearest(_half(0), F.col("ca_cents")).getField("cid").alias("ca"),
+            _nearest(_half(1), F.col("cb_cents")).getField("cid").alias("cb"),
             _norm(F.col("emb")).alias("cn"),
         )
 
@@ -1360,33 +1272,17 @@ def imi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     result provably equals brute force; the multi-index actually prunes
     from ~1300 vectors up (k' >= 3), where the synthetic-corpus pytest
     checks recall and the cross-engine hash."""
-    cents, cells = _imi_cells(spark, sf_dir)
-    ca, cb = cents
+    (ca, cb), cells = _imi_cells(spark, sf_dir)
     queries = cells.where(F.col("vec_id") < N_QUERIES).select("vec_id", "emb")
-    cdf = _imi_broadcast_row(spark, ca, cb)
-    ha, hb, sqd = _imi_half_exprs()
-
-    def topn(cents_col, half):
-        ranked = F.slice(
-            F.array_sort(
-                F.transform(
-                    cents_col,
-                    lambda c: F.struct(sqd(half, c.cemb).alias("dist"), c.cid.alias("cid")),
-                )
-            ),
-            1,
-            IMI_NPROBE,
-        )
-        return F.transform(ranked, lambda x: x.cid)
-
+    cdf = _centroid_row(spark, ca_cents=enumerate(ca), cb_cents=enumerate(cb))
     probes = (
         queries.crossJoin(F.broadcast(cdf))
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("emb").alias("qemb"),
             _norm(F.col("emb")).alias("qn"),
-            F.explode(topn(F.col("ca_cents"), ha)).alias("ca"),
-            topn(F.col("cb_cents"), hb).alias("pbs"),
+            F.explode(_nearest_n(_half(0), F.col("ca_cents"), IMI_NPROBE)).alias("ca"),
+            _nearest_n(_half(1), F.col("cb_cents"), IMI_NPROBE).alias("pbs"),
         )
         .select(
             "query_id", "qemb", "qn", "ca", F.explode("pbs").alias("cb")
@@ -1576,24 +1472,15 @@ def pq_reconstruction_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: reuses the memoized IMI index (training cost already
     paid; assignment map-only); reconstruction + MSE are zero-shuffle
     array math against the broadcast centroid row."""
-    cents, cells = _imi_cells(spark, sf_dir)
-    ca, cb = cents
-    cdf = _imi_broadcast_row(spark, ca, cb)
+    (ca, cb), cells = _imi_cells(spark, sf_dir)
+    cdf = _centroid_row(spark, ca_cents=enumerate(ca), cb_cents=enumerate(cb))
     rec_a = F.element_at(
         F.filter(F.col("ca_cents"), lambda c: c.cid == F.col("ca")), 1
     ).getField("cemb")
     rec_b = F.element_at(
         F.filter(F.col("cb_cents"), lambda c: c.cid == F.col("cb")), 1
     ).getField("cemb")
-    recon = F.concat(rec_a, rec_b)
-    mse = (
-        F.aggregate(
-            F.zip_with(F.col("emb"), recon, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / F.lit(float(DIM))
-    )
+    mse = _sqdist(F.col("emb"), F.concat(rec_a, rec_b)) / F.lit(float(DIM))
     return (
         cells.crossJoin(F.broadcast(cdf))
         .select("vec_id", "ca", "cb", rnd(mse, 8).alias("mse"))
@@ -1737,18 +1624,10 @@ def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     never corpus^2 (the ``similarity_threshold_curve`` fix, applied from
     birth); ranking is two bounded window passes with (cosine, vec_id)
     tie-breaks, and per-vector norms are hoisted above the join."""
-    emb = _emb_double(load(spark, sf_dir, "embeddings"))
-    n = emb.count()
-    mod = max(1, n // CONTRAST_MAX_VECTORS)
-    coin = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("contrast:"), F.col("vec_id").cast("string"))),
-            1, 15,
-        ), 16, 10,
-    ).cast("long")
-    s = emb.where(coin % mod == 0).select(
-        "vec_id", "label", "emb", _norm(F.col("emb")).alias("nrm")
+    _, s = _md5_sample(
+        _emb_double(load(spark, sf_dir, "embeddings")), "contrast:", CONTRAST_MAX_VECTORS
     )
+    s = s.select("vec_id", "label", "emb", _norm(F.col("emb")).alias("nrm"))
     a = s.select(
         F.col("vec_id").alias("aid"), F.col("label").alias("al"),
         F.col("emb").alias("av"), F.col("nrm").alias("an"),
@@ -1844,21 +1723,12 @@ def knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``mod = max(1, n // cap)``, the IVF-trainer pattern), so the
     broadcast-nested-loop pair space is ≤ cap² ≈ 90k rows at any corpus
     size, and the per-anchor top-K is one bounded window."""
-    emb = load(spark, sf_dir, "embeddings")
-    n = emb.count()
-    mod = max(1, n // KNN_MAX_VECTORS)
-    coin = F.conv(
-        F.substring(F.md5(F.concat(F.lit("knn:"), F.col("vec_id").cast("string"))), 1, 15),
-        16, 10,
-    ).cast("long")
-    s = emb.where(coin % mod == 0).select(
+    _, s = _md5_sample(load(spark, sf_dir, "embeddings"), "knn:", KNN_MAX_VECTORS)
+    s = s.select(
         "vec_id", "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    s = s.withColumn(
-        "nrm",
-        F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)),
-    )
+    s = s.withColumn("nrm", _norm(F.col("v")))
     a = s.select(
         F.col("vec_id").alias("aid"), F.col("label").alias("al"),
         F.col("v").alias("av"), F.col("nrm").alias("an"),
@@ -1867,15 +1737,12 @@ def knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("bid"), F.col("label").alias("bl"),
         F.col("v").alias("bv"), F.col("nrm").alias("bn"),
     )
-    dot = F.aggregate(
-        F.zip_with("av", "bv", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     pairs = (
         a.crossJoin(F.broadcast(b))
         .where(F.col("aid") != F.col("bid"))
         .select(
             "aid", "al", "bid", "bl",
-            (dot / (F.col("an") * F.col("bn"))).alias("cos"),
+            (_dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn"))).alias("cos"),
         )
     )
     w = Window.partitionBy("aid").orderBy(F.col("cos").desc(), F.col("bid").asc())
@@ -1963,13 +1830,6 @@ def rank_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("emb").alias("cemb"),
         _norm(F.col("emb")).alias("cn"),
     )
-    l2sq = F.aggregate(
-        F.zip_with(
-            F.col("qemb"), F.col("cemb"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     scored = (
         corpus.crossJoin(F.broadcast(queries))
         .where(F.col("cand_id") != F.col("query_id"))
@@ -1980,7 +1840,7 @@ def rank_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _dot(F.col("qemb"), F.col("cemb"))
                 / (F.col("qn") * F.col("cn"))
             ).alias("cos_raw"),
-            l2sq.alias("l2sq"),
+            _sqdist(F.col("qemb"), F.col("cemb")).alias("l2sq"),
         )
     )
     w_cos = Window.partitionBy("query_id").orderBy(
@@ -2087,16 +1947,6 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "emb", F.col("embedding").cast("array<double>")
     )
     dims = list(MAT_DIMS) + [MAT_FULL_DIM]
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def _norm(a):
-        return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
     queries = emb.where(F.col("vec_id") < MAT_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
@@ -2243,13 +2093,6 @@ def mmd_linear_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").withColumn(
         "emb", F.col("embedding").cast("array<double>")
     )
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
 
     def group(par: int) -> DataFrame:
         g = (
@@ -2527,21 +2370,11 @@ def random_projection_distortion(
     dot products against literal arrays — zero shuffle), one
     consecutive-id equi-join for pairs, bounded constants."""
     emb = _emb_double(load(spark, sf_dir, "embeddings"))
-    signs = _jl_signs()
-
-    def fold_dot(vec_col, lits):
-        arr = F.array(*[F.lit(v) for v in lits])
-        return F.aggregate(
-            F.zip_with(vec_col, arr, lambda x, s: x * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     projected = emb.select(
         "vec_id",
         "emb",
         F.array(
-            *[fold_dot(F.col("emb"), signs[j]) for j in range(JL_OUT_DIMS)]
+            *[_dot(F.col("emb"), F.array(*map(F.lit, row))) for row in _jl_signs()]
         ).alias("proj"),
     )
     a = projected.select(
@@ -2554,20 +2387,10 @@ def random_projection_distortion(
         F.col("emb").alias("e2"),
         F.col("proj").alias("p2"),
     )
-    true_d2 = F.aggregate(
-        F.zip_with(F.col("e1"), F.col("e2"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    proj_d2 = F.aggregate(
-        F.zip_with(F.col("p1"), F.col("p2"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     pairs = a.join(b, "pair_id").select(
         "pair_id",
-        true_d2.alias("true_d2_u"),
-        (proj_d2 / F.lit(float(JL_OUT_DIMS))).alias("jl_est_u"),
+        _sqdist(F.col("e1"), F.col("e2")).alias("true_d2_u"),
+        (_sqdist(F.col("p1"), F.col("p2")) / F.lit(float(JL_OUT_DIMS))).alias("jl_est_u"),
     )
     scored = pairs.select(
         "pair_id",

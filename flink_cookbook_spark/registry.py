@@ -112,118 +112,14 @@ def _driver_evidence(root: str | None = None) -> tuple[dict[str, dict], dict[str
 #: record for them: name -> round count at the time of the change. A
 #: green recorded in or before that round no longer describes the
 #: current query, so the entry forces re-pend until the driver records
-#: a LATER result (then the gate self-clears; stale entries are
-#: harmless). Only list queries whose VALUES changed — plan-only or
+#: a LATER result (then the gate self-clears and the entry is inert:
+#: delete it). Only list queries whose VALUES changed — plan-only or
 #: comment changes keep old greens valid.
 REVERIFY_AFTER: dict[str, int] = {
-    # round 6: every 8th doc now carries a real BMP payload through the
-    # vendored decoder — different stats rows than the all-stub output
-    "multimodal_features": 5,
-    # round 6: + 0.0 signed-zero normalization on the acf columns
-    "autocorrelation": 5,
-    # round 7: sample modulus now derived from the corpus count (capped,
-    # scale-safe), thresholds widened to the fixture's cosine range, and
-    # the sweep re-expressed as conditional aggregation so all 5 rows
-    # always emit — the r6 green was a vacuous 0-row == 0-row match
-    "similarity_threshold_curve": 6,
-    # round 7: same vacuous-green class, found by the new >=1-row oracle
-    # lint — anti-join now excludes URGENT-order customers (real rows;
-    # the unfiltered form matched empty sets), and the LSH dup confirm
-    # threshold moved inside the fixture's cosine range (0.95 -> 0.35)
-    "join_anti": 6,
-    "embedding_cosine_dup_pairs": 6,
-    # round 9: quartile scores now come from broadcast discrete
-    # percentile cutpoints instead of three global ntile windows — tied
-    # values share a score (value-quantiles, not equal-count buckets),
-    # so r/f/m_score and segment values differ from the ntile form
-    "rfm_segments": 8,
-    # round 10: p05/p95 cutpoints moved from interpolated percentiles
-    # to discrete order statistics (the 10x probe caught the engines'
-    # interpolation arithmetic diverging by an ulp exactly on a
-    # boundary tie-mass) — cutpoint values, clip counts, and the
-    # winsorized mean all shift slightly
-    "winsorized_stats": 9,
-    # round 11: rewritten from Spark's value-buffering exact
-    # ``percentile`` (whose serialized partials killed the 30x-probe
-    # JVM) to the distributed two-pass distinct-value order statistic.
-    # Interpolation now evaluates lo + frac*(hi - lo) (DuckDB's
-    # expression) instead of Percentile's lo*(1-frac) + hi*frac — can
-    # differ by an ulp, which a rounding tie could surface, so the old
-    # green does not vouch for the new arithmetic.
-    "exact_quantiles": 10,
-    # round 11: same conversion for the other two unbounded-cardinality
-    # exact-percentile users (conversion latencies ~all-distinct per
-    # user; part revenues ~all-distinct per part) — identical
-    # ulp-of-interpolation caveat as exact_quantiles above.
-    "funnel_time_to_convert": 10,
-    # (abc_xyz_classification's round-11 entry superseded by its
-    # round-13 entry below — one key, the later round)
-    # round 11: per-decile revenue converted to the DECIMAL money sum
-    # (the 100x heavy-table sweep flipped a cent at 4.6e11 money units
-    # in the double sum) and shares now divide the exact decimal-cast
-    # doubles — decile_rev/rev_share/cum/lift can all move in the last
-    # rounded digit vs the old double arithmetic.
-    "decile_lift_table": 10,
-    # round 11: the rest of the 100x heavy-table sweep's cent-flip
-    # harvest — money sums converted to the DECIMAL discipline, so the
-    # rounded money outputs (and gini's shares, whose denominators now
-    # come from the exact decimal) can move in the last digit
-    "q17_small_quantity_revenue": 10,
-    "q19_disjunctive_predicates": 10,
-    "orc_scan_roundtrip": 10,
-    "schema_evolution_scan": 10,
-    "parameterized_sql_query": 10,
-    "revenue_concentration_gini": 10,
-    # round 12: SS columns re-scaled per observation (ssb_per_obs /
-    # ssw_per_obs) — the 1000x tail sweep caught the raw extensive SS
-    # totals diverging at the 14th significant digit at 100M rows,
-    # which no fixed-dp rounding absorbs; column names and values both
-    # changed.
-    "anova_oneway": 11,
-    # round 12: proactive DECIMAL conversion of the remaining raw
-    # double money sums whose per-group row counts grow with the
-    # corpus (the q1/q6 cent-flip class, same audit that drove the
-    # r11 conversions): agg_stats.weighted and cohort_ltv_curve's
-    # rev/cum_ltv — the rounded money outputs can move in the last
-    # digit vs the old double arithmetic.
-    "agg_stats": 11,
-    "cohort_ltv_curve": 11,
-    # round 12 (late): partitioned_scan_pruning FLIPPED 2 cents at
-    # 2.5e12 money units in the 1000x tail sweep — its raw double
-    # sum_price (and the same pattern in csv_scan_roundtrip,
-    # yoy_segment_growth's segment-year revenue, and value_at_risk's
-    # daily revenue diffs) converted to the DECIMAL discipline.
-    "partitioned_scan_pruning": 11,
-    "csv_scan_roundtrip": 11,
-    "yoy_segment_growth": 11,
-    "value_at_risk": 11,
-    # round 13: revenue_share_hierarchy was the LAST raw discounted-
-    # price sum in the package — the r12 reconciliation sweep caught
-    # 16/25 nation rows flipping cents at ~1.17e12 at 1000x. Converted
-    # to the DECIMAL discipline (exact decimal sum + decimal window
-    # sums, cast to double only for the share divisions), so revenue
-    # and both share columns can move in the last rounded digit.
-    "revenue_share_hierarchy": 12,
-    # round 13: the follow-up grep for raw money sums whose GROUP grain
-    # does not scale with sf (fixed-dim keys) converted two more:
-    # window_running_frames' per-supplier running revenue (prefix sums
-    # over a fixed supplier catalog) and abc_xyz_classification's
-    # per-part revenue (which also feeds its class cutpoints — the old
-    # 4-dp pre-round of a raw double sum could move a part across a
-    # class boundary at scale). Rounded outputs / class assignments can
-    # move in the last digit vs the double arithmetic.
-    "window_running_frames": 12,
-    "abc_xyz_classification": 12,
-    # hill_tail_index needs NO entry for its round-11 try_divide fix:
-    # the NULL branch only fires when the top-(k+1) order statistics
-    # are ALL ties (a >=100x-replication artifact); at driver scale the
-    # division is unchanged, so existing greens still describe it.
-    # logistic_churn_baseline needs NO entry despite its round-9 AUC
-    # rewrite (exact midrank Mann-Whitney -> 1e6-cell binned): its ONLY
-    # driver record is CORRECTNESS_r09, taken AFTER the rewrite, so the
-    # stored hash already describes the current (binned) form — an
-    # entry of 8 would be a no-op and an entry of 9 would wrongly
-    # discard a valid green.
+    # the method-dispatch rewrite (one baseline step, two replays) changed
+    # its output from 3 rows to 2; its last green record (CORRECTNESS_r07)
+    # describes the 3-row form
+    "baseline_method_dispatch": 14,
 }
 
 

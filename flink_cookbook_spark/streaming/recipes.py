@@ -51,18 +51,24 @@ from flink_cookbook_spark.streaming.sarimax import (
 )
 
 
-def windowed_avg_stream(
-    metrics: DataFrame,
-    watermark: str = "10 minutes",
-    window: str = "5 minutes",
-) -> DataFrame:
+#: event-time lateness every recipe's watermark tolerates
+WATERMARK = "10 minutes"
+#: the reference's tumbling window (W1)
+WINDOW = "5 minutes"
+#: inactivity gap of the fixed-gap session windows
+SESSION_GAP = "30 minutes"
+#: how far before a raw metric the stream-stream joins look for a baseline
+MAX_LAG = "15 minutes"
+
+
+def windowed_avg_stream(metrics: DataFrame) -> DataFrame:
     """W1/W2 streaming: event-time tumbling window average per node with
     a watermark bounding state and late data (the reference used
     processing time and kept no late-data bound — flinkarima.py:420-422).
     Emits on window close (append mode compatible)."""
     return (
-        metrics.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("node_id"))
+        metrics.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", WINDOW).alias("w"), F.col("node_id"))
         .agg(
             F.avg("cpu").alias("avg_value"),
             F.count("*").alias("n_events"),
@@ -78,11 +84,11 @@ def windowed_avg_stream(
     )
 
 
-def sliding_window_stream(metrics: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def sliding_window_stream(metrics: DataFrame) -> DataFrame:
     """Sliding windows (10-min window, 5-min slide) — engine surface
     beyond the reference's tumble-only windows (SURVEY.md section 2.2)."""
     return (
-        metrics.withWatermark("ts", watermark)
+        metrics.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "node_id")
         .agg(F.avg("cpu").alias("avg_value"))
         .select(
@@ -94,13 +100,13 @@ def sliding_window_stream(metrics: DataFrame, watermark: str = "10 minutes") -> 
     )
 
 
-def session_window_stream(metrics: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_window_stream(metrics: DataFrame) -> DataFrame:
     """Session windows with a fixed inactivity gap — batch twin:
     sessionize in operators/windows.py. For a per-event gap see
     ``session_window_stream_dynamic``."""
     return (
-        metrics.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", gap).alias("w"), "node_id")
+        metrics.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "node_id")
         .agg(F.count("*").alias("n_events"), F.avg("cpu").alias("avg_value"))
         .select(
             "node_id",
@@ -123,7 +129,7 @@ def session_window_stream_dynamic(metrics: DataFrame) -> DataFrame:
         F.lit("15 minutes")
     )
     return (
-        metrics.withWatermark("ts", "10 minutes")
+        metrics.withWatermark("ts", WATERMARK)
         .groupBy(F.session_window("ts", gap).alias("w"), "node_id")
         .agg(
             F.count("*").alias("n_events"),
@@ -139,21 +145,19 @@ def session_window_stream_dynamic(metrics: DataFrame) -> DataFrame:
     )
 
 
-def dedup_stream(metrics: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def dedup_stream(metrics: DataFrame) -> DataFrame:
     """Streaming dedup within the watermark horizon (SURVEY.md section
     2.2: absent from the reference; one line in Spark)."""
-    return metrics.withWatermark("ts", watermark).dropDuplicates(["node_id", "event_time"])
+    return metrics.withWatermark("ts", WATERMARK).dropDuplicates(["node_id", "event_time"])
 
 
-def dedup_stream_within_watermark(
-    metrics: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
+def dedup_stream_within_watermark(metrics: DataFrame) -> DataFrame:
     """dropDuplicatesWithinWatermark: dedup keyed on business identity
     only (no event-time column in the key) — duplicates arriving with
     *different* timestamps inside the watermark window still collapse,
     the at-least-once-ingestion case dropDuplicates cannot handle; state
     evicts after the watermark delay."""
-    return metrics.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return metrics.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["node_id", "event_time"]
     )
 
@@ -176,11 +180,7 @@ def alerts_stream(
     )
 
 
-def stream_static_enrichment_join(
-    stream: DataFrame,
-    dim: DataFrame,
-    key: str = "node_id",
-) -> DataFrame:
+def stream_static_enrichment_join(stream: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static left join: every micro-batch enriches against a
     batch dimension table (the lookup-table pattern — user attributes,
     routing config, model registry rows).
@@ -193,49 +193,24 @@ def stream_static_enrichment_join(
     and frequent; at 100 TB/day the dimension side stays broadcast-
     sized while the stream side never repartitions.
     """
-    return stream.join(F.broadcast(dim), key, "left")
+    return stream.join(F.broadcast(dim), "node_id", "left")
 
 
-def stream_stream_enrichment_join(
-    raw: DataFrame,
-    baselines: DataFrame,
-    max_lag: str = "15 minutes",
-) -> DataFrame:
+def stream_stream_enrichment_join(raw: DataFrame, baselines: DataFrame) -> DataFrame:
     """Stream-stream inner join (engine surface beyond the reference):
     each raw metric joins baseline records for the same key within a
     bounded event-time range. Watermarks on BOTH sides bound the join
     state — Spark buffers only rows inside the watermark horizon, the
     missing piece in the reference's unbounded broadcast map.
 
-    The time-range predicate (baseline.bts in [raw.ts - max_lag, raw.ts])
+    The time-range predicate (baseline.bts in [raw.ts - MAX_LAG, raw.ts])
     is what makes state eviction possible; an unbounded as-of would keep
     all history forever in a true stream-stream setting.
     """
-    r = raw.withWatermark("ts", "10 minutes").alias("r")
-    b = baselines.withWatermark("bts", "10 minutes").alias("b")
-    return r.join(
-        b,
-        F.expr(
-            f"""
-            r.node_id = b.node_id AND
-            b.bts BETWEEN r.ts - INTERVAL {max_lag} AND r.ts
-            """
-        ),
-        "inner",
-    ).select(
-        F.col("r.node_id").alias("node_id"),
-        F.col("r.ts").alias("ts"),
-        F.col("r.cpu").alias("cpu"),
-        F.col("b.bts").alias("baseline_ts"),
-        F.col("b.baseline").alias("baseline"),
-    )
+    return _lagged_join(raw, baselines, "inner")
 
 
-def stream_stream_left_outer_join(
-    raw: DataFrame,
-    baselines: DataFrame,
-    max_lag: str = "15 minutes",
-) -> DataFrame:
+def stream_stream_left_outer_join(raw: DataFrame, baselines: DataFrame) -> DataFrame:
     """LEFT OUTER stream-stream join: like the inner variant, but a raw
     metric with NO baseline inside its lag horizon still emits (null
     baseline columns) — the shape monitoring needs, where "no baseline
@@ -245,17 +220,23 @@ def stream_stream_left_outer_join(
     why BOTH watermarks and the time-range bound are mandatory here
     (without them the unmatched state could never be finalized or
     evicted)."""
-    r = raw.withWatermark("ts", "10 minutes").alias("r")
-    b = baselines.withWatermark("bts", "10 minutes").alias("b")
+    return _lagged_join(raw, baselines, "left_outer")
+
+
+def _lagged_join(raw: DataFrame, baselines: DataFrame, how: str) -> DataFrame:
+    """Both stream-stream joins: raw metrics against same-key baselines
+    from at most MAX_LAG before them, watermarked on both sides."""
+    r = raw.withWatermark("ts", WATERMARK).alias("r")
+    b = baselines.withWatermark("bts", WATERMARK).alias("b")
     return r.join(
         b,
         F.expr(
             f"""
             r.node_id = b.node_id AND
-            b.bts BETWEEN r.ts - INTERVAL {max_lag} AND r.ts
+            b.bts BETWEEN r.ts - INTERVAL {MAX_LAG} AND r.ts
             """
         ),
-        "left_outer",
+        how,
     ).select(
         F.col("r.node_id").alias("node_id"),
         F.col("r.ts").alias("ts"),
@@ -287,14 +268,14 @@ def to_sink(
     fmt: str = "console",
     query_name: str = "fcs_stream",
     checkpoint: str | None = None,
-    output_mode: str = "append",
     **options,
 ) -> StreamingQuery:
-    """O1/R1: sink + checkpointing. ``console`` mirrors the reference's
-    print sink; ``memory`` backs tests; parquet/kafka are the production
-    paths. Checkpointing (60 s in the reference, flinkarima.py:394) is
+    """O1/R1: sink + checkpointing, in append mode (every recipe emits
+    only finalized rows). ``console`` mirrors the reference's print sink;
+    ``memory`` backs tests; parquet/kafka are the production paths.
+    Checkpointing (60 s in the reference, flinkarima.py:394) is
     per-query state-store checkpointing here."""
-    writer = df.writeStream.format(fmt).outputMode(output_mode).queryName(query_name)
+    writer = df.writeStream.format(fmt).outputMode("append").queryName(query_name)
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
     for k, v in options.items():

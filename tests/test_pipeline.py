@@ -161,6 +161,64 @@ def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
     assert hits / total >= 0.64, f"IVF recall {hits}/{total}"
 
 
+def test_lloyd_seeds_ties_and_empty_cluster():
+    """The numpy trainer shared by the IVF and IMI quantizers, on a
+    hand-checked array. Seeds are rows 0-2: C = [0, 4, 4].
+    Round 1: the point at 2 is equidistant from all three centroids and
+    joins cid 0 (lowest cid wins ties); every point at 3-5 ties between
+    cids 1 and 2 and joins cid 1, so C = [mean(0, 2), mean(4, 4, 3, 5)]
+    = [1, 4] and cid 2, empty, keeps its seed 4. Later rounds reassign
+    nobody. Ties going to the highest cid, or an empty cluster dropping
+    or moving, would each give a different matrix."""
+    import numpy as np
+
+    from flink_cookbook_spark.pipeline.similarity import _lloyd
+
+    X = np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 0.0], [3.0, 0.0], [5.0, 0.0], [2.0, 0.0]])
+    before = X.copy()
+    assert _lloyd(X, 3) == [[1.0, 0.0], [4.0, 0.0], [4.0, 0.0]]
+    assert (X == before).all()  # the seeds are copied, not trained in place
+    assert _lloyd(X, 1) == [[3.0, 0.0]]  # one cell: the mean of every row
+
+
+def test_nearest_n_leads_with_the_assigned_cell(spark, sf_dir):
+    """IVF probes a query's own cell first: for every fixture vector the
+    first of ``_nearest_n``'s cids is ``_assign``'s cid. A duplicate of
+    centroid 0 under a HIGHER cid, placed FIRST in the broadcast array,
+    makes every vector of cell 0 a distance tie: both passes must send
+    it to cid 0, whatever the array order."""
+    from flink_cookbook_spark.catalog import load
+    from flink_cookbook_spark.pipeline.similarity import (
+        NPROBE,
+        _assign,
+        _centroid_row,
+        _emb_double,
+        _ivf_centroids,
+        _nearest_n,
+    )
+
+    emb = _emb_double(load(spark, sf_dir, "embeddings")).select("vec_id", "emb")
+    cents = _ivf_centroids(spark, sf_dir)
+    pairs = [(len(cents), cents[0])] + list(enumerate(cents))
+    probed = (
+        _assign(emb, pairs)
+        .crossJoin(F.broadcast(_centroid_row(spark, cents=pairs)))
+        .select(
+            "vec_id",
+            "cid",
+            _nearest_n(F.col("emb"), F.col("cents"), 1).alias("first"),
+            _nearest_n(F.col("emb"), F.col("cents"), NPROBE).alias("probes"),
+        )
+        .collect()
+    )
+    assert len(probed) == emb.count() > 0
+    assert {r.cid for r in probed} <= set(range(len(cents)))
+    assert any(r.cid == 0 for r in probed)
+    for r in probed:
+        assert r.first == [r.cid] and r.probes[0] == r.cid, r
+        assert len(set(r.probes)) == NPROBE, r
+
+
 def test_imi_topk_fixture_equals_brute_and_prunes_when_engaged(spark, sf_dir, tmp_path):
     """Two contracts for the inverted multi-index:
 
@@ -642,7 +700,7 @@ def test_kmeans_lloyd_wcss_monotone(spark, sf_dir):
     from flink_cookbook_spark.pipeline.similarity import (
         DIM,
         KM_K,
-        _assign_with_dist,
+        _assign,
         _emb_double,
     )
 
@@ -651,7 +709,7 @@ def test_kmeans_lloyd_wcss_monotone(spark, sf_dir):
     pairs = [(int(r.vec_id), list(r.emb)) for r in seeds]
     wcss = []
     for _ in range(3):
-        assigned = _assign_with_dist(emb, pairs)
+        assigned = _assign(emb, pairs)
         wcss.append(assigned.agg(F.sum("sqdist")).collect()[0][0])
         rows = (
             assigned.select("cid", F.posexplode("emb").alias("pos", "val"))

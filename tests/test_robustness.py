@@ -311,15 +311,14 @@ def test_queries_survive_empty_tables(spark, tmp_path):
 
 
 def test_asof_join_matches_pandas_merge_asof(spark):
-    """Independent cross-check: both directions of the engine's as-of
-    join must agree with pandas.merge_asof on randomized-but-seeded data
-    with duplicate timestamps, missing matches, and exact-tie cases.
+    """Independent cross-check: the engine's as-of join must agree with
+    backward pandas.merge_asof on randomized-but-seeded data with
+    duplicate timestamps, missing matches, and exact-tie cases.
 
     pandas resolves equal right-side timestamps by taking the LAST row
-    in sort order (backward) / FIRST (forward); the engine's
-    deterministic value tie-break orders right rows by their value
-    columns, so feeding pandas the value-sorted frame makes the two
-    contracts comparable exactly."""
+    in sort order; the engine's deterministic value tie-break orders
+    right rows by their value columns, so feeding pandas the
+    value-sorted frame makes the two contracts comparable exactly."""
     import numpy as np
     import pandas as pd
 
@@ -344,43 +343,40 @@ def test_asof_join_matches_pandas_merge_asof(spark):
     left = spark.createDataFrame(left_pd.assign(lts=left_pd.lts))
     right = spark.createDataFrame(right_pd)
 
-    for direction in ("backward", "forward"):
-        got = (
-            asof_join(
-                left,
-                right,
-                key="k",
-                left_ts="lts",
-                right_ts="rts",
-                value_cols=["bval"],
-                how="left",
-                direction=direction,
-            )
-            .select("k", "lts", "payload", "bval_asof")
-            .toPandas()
-            .sort_values(["k", "lts", "payload"])
-            .reset_index(drop=True)
+    got = (
+        asof_join(
+            left,
+            right,
+            key="k",
+            left_ts="lts",
+            right_ts="rts",
+            value_cols=["bval"],
+            how="left",
         )
-        rp = right_pd.sort_values(["rts", "bval"]).reset_index(drop=True)
-        # tie contracts line up under one ascending (rts, bval) sort:
-        # merge_asof backward keeps the LAST tied row (= greatest bval =
-        # the engine's last() pick) and forward keeps the FIRST tied row
-        # (= least bval = the engine's first() pick).
-        want = (
-            pd.merge_asof(
-                left_pd.sort_values("lts"),
-                rp.sort_values("rts", kind="mergesort"),
-                left_on="lts",
-                right_on="rts",
-                by="k",
-                direction=direction,
-                allow_exact_matches=True,
-            )
-            .sort_values(["k", "lts", "payload"])
-            .reset_index(drop=True)
+        .select("k", "lts", "payload", "bval_asof")
+        .toPandas()
+        .sort_values(["k", "lts", "payload"])
+        .reset_index(drop=True)
+    )
+    rp = right_pd.sort_values(["rts", "bval"]).reset_index(drop=True)
+    # tie contracts line up under one ascending (rts, bval) sort:
+    # merge_asof backward keeps the LAST tied row (= greatest bval = the
+    # engine's last() pick).
+    want = (
+        pd.merge_asof(
+            left_pd.sort_values("lts"),
+            rp.sort_values("rts", kind="mergesort"),
+            left_on="lts",
+            right_on="rts",
+            by="k",
+            direction="backward",
+            allow_exact_matches=True,
         )
-        mism = (got["bval_asof"].fillna(-1) != want["bval"].fillna(-1)).sum()
-        assert mism == 0, f"{direction}: {mism} mismatches"
+        .sort_values(["k", "lts", "payload"])
+        .reset_index(drop=True)
+    )
+    mism = (got["bval_asof"].fillna(-1) != want["bval"].fillna(-1)).sum()
+    assert mism == 0, f"{mism} mismatches"
 
 
 def test_oracle_lint_no_hugeint_outputs(sf_dir):
