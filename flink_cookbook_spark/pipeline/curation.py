@@ -550,52 +550,13 @@ def training_data_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _manifest_oracle() -> str:
-    from flink_cookbook_spark.pipeline.dedup import (
-        _SHINGLES_CTE,
-        _band_sql,
-        _minhash_sql_cols,
-        JACCARD_THRESHOLD,
-        LSH_BANDS,
-    )
+    from flink_cookbook_spark.pipeline.dedup import _LSH_VERIFIED_SQL
     from flink_cookbook_spark.pipeline.text import CHUNK_STRIDE, CHUNK_TOKENS, STOPWORDS
 
     return (
-        "WITH "
-        + _SHINGLES_CTE
+        _LSH_VERIFIED_SQL
         + f""",
-sigs AS (
-  SELECT doc_id,
-         {_minhash_sql_cols()}
-  FROM shingles GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, band_id,
-         CASE band_id
-           {" ".join(f"WHEN {b} THEN {_band_sql(b)}" for b in range(LSH_BANDS))}
-         END AS band_key
-  FROM sigs, (SELECT unnest(range(0, {LSH_BANDS})) AS band_id)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.doc1, c.doc2, count(*) AS n_common
-  FROM cand c
-  JOIN shingles s1 ON s1.doc_id = c.doc1
-  JOIN shingles s2 ON s2.doc_id = c.doc2 AND s1.shingle = s2.shingle
-  GROUP BY 1, 2
-),
-near_losers AS (
-  SELECT DISTINCT i.doc2 AS doc_id
-  FROM inter i
-  JOIN sizes sa ON i.doc1 = sa.doc_id
-  JOIN sizes sb ON i.doc2 = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common) >= {JACCARD_THRESHOLD}
-),
+near_losers AS (SELECT DISTINCT doc2 AS doc_id FROM verified),
 ft AS (
   SELECT doc_id,
          string_split(text, ' ') AS ts,

@@ -5,6 +5,25 @@ index — no pairwise cross product), MinHash+LSH (shingle -> minhash ->
 band -> bucket-join), and SimHash. All hashing is engine-portable
 (md5-derived 60-bit integers) so every stage is DuckDB-oracle-checkable.
 
+The near-duplicate family is one chain, each stage written once per
+engine and composed by every query and oracle that needs it:
+
+- shingles: ``_shingles`` (memoized, df-capped index) + ``_sizes`` /
+  ``_SHINGLES_CTE`` (``shingles``, ``sizes``);
+- signatures: ``_minhash_signatures_df`` / ``_SIGS_CTE``;
+- bands + candidates: ``_lsh_candidates_df`` / ``_CAND_CTE``;
+- verify: ``_exact_jaccard`` (candidate pair counter + the one Jaccard
+  tail ``_jaccard``), ``_lsh_verified_pairs_df`` / ``_VERIFY_CTE``
+  (``exact``, ``verified``);
+- all-pairs truth: ``_shared_shingles`` (the inverted-index pair
+  counter) + ``_jaccard`` / ``_OVERLAP_CTE`` + ``_TRUE_PAIRS_CTE``
+  (``overlap``, ``true_pairs``);
+- clusters: ``dedup_clusters``' label propagation / ``_CLUSTERS_CTE``
+  (``edges``, ``reach``, ``clusters``).
+
+SimHash has one builder per engine too (``_simhash_df`` /
+``_simhash_sql``), parameterized by bit width.
+
 Scale notes (100 TB):
 - exact dedup is one hash aggregate on a fingerprint — the canonical
   map-side-combinable shape.
@@ -213,11 +232,50 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: ``shingles`` is MATERIALIZED: DuckDB (1.0) inlines CTEs by default,
-#: so every reference re-derives the whole extraction — the pair-family
-#: oracles reference it 3-5x (sizes + both join sides), which measured
-#: 23x slower on dedup_pair_triangles at sf0.1 and a 30+ minute hang at
-#: the 10x probe. Materialization is oracle-plan-only: values unchanged.
+#: universal-hash family over the Mersenne prime 2^31-1: one md5 per
+#: shingle, then k cheap affine mixes h_i = (a_i*h + b_i) mod p — the
+#: textbook minhash construction; 16x fewer md5 evaluations than seeding
+#: the cryptographic hash per permutation. a_i/b_i are fixed odd/dense
+#: constants so both engines reproduce them literally. a*h < 2^62 fits
+#: int64, and Spark/DuckDB agree on positive int64 arithmetic.
+MERSENNE_P = (1 << 31) - 1
+_MINHASH_PARAMS = [(2 * i + 3, 7 * i + 1) for i in range(MINHASH_K)]
+
+
+def _minhash_sql_cols() -> str:
+    base = f"({_SQL_HASH.format(x='shingle')} % {MERSENNE_P})"
+    cols = []
+    for i, (a, b) in enumerate(_MINHASH_PARAMS):
+        cols.append(f"min(({a} * {base} + {b}) % {MERSENNE_P}) AS mh{i}")
+    return ",\n         ".join(cols)
+
+
+def _band_sql(b: int) -> str:
+    cols = " || ',' || ".join(
+        f"CAST(mh{b * LSH_ROWS + r} AS VARCHAR)" for r in range(LSH_ROWS)
+    )
+    return f"md5({cols})"
+
+
+# --------------------------------------------------------------------------
+# the near-duplicate chain as DuckDB oracle stages
+# --------------------------------------------------------------------------
+#
+# Each stage of shingle -> signature -> band -> candidate -> verify ->
+# cluster, and the all-pairs truth beside it, is ONE fixed CTE string;
+# every near-dup oracle is ``_with(<the stages it reads>)`` plus its own
+# tail. DuckDB (1.0) inlines a plain CTE at every reference — the pair
+# oracles reference ``shingles`` 3-5x, which measured 23x slower on
+# dedup_pair_triangles at sf0.1 and a 30+ minute hang at the 10x probe —
+# and it computes a MATERIALIZED CTE even when nothing reads it. So the
+# stages that are re-read and small (one row per doc or per near-dup
+# pair: ``sigs``, ``exact``, ``true_pairs``), and ``shingles``, are
+# MATERIALIZED, and every oracle reads each materialized stage it
+# includes. ``overlap`` and ``cand`` stay inlined: they grow with the
+# duplication of the corpus, and held in memory at the 10x probe they
+# made the oracles slower (cand) or pushed them past a 5 GB DuckDB memory
+# cap (overlap). Materialization is oracle-plan-only: values unchanged.
+
 _SHINGLES_CTE = f"""
 toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents
          WHERE len(string_split(text, ' ')) >= 3),
@@ -235,8 +293,159 @@ shingles AS MATERIALIZED (
   WHERE df <= greatest({SHINGLE_DF_CAP},
                        CAST(ceil({SHINGLE_DF_FRAC} *
                             (SELECT count(*) FROM documents)) AS BIGINT))
+),
+sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id)
+"""
+
+#: exact Jaccard of a pair relation (doc1, doc2, n_common) joined to
+#: ``sizes sa`` on doc1 and ``sizes sb`` on doc2.
+_JACCARD_SQL = "n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common)"
+
+#: all-pairs overlap: the inverted-index self-join — every doc1 < doc2
+#: sharing a shingle, with the shared count, never doc x doc. The
+#: corpus-sized relation of the family (~1M rows at sf0.1); each oracle
+#: reads it once.
+_OVERLAP_CTE = """
+overlap AS (
+  SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS n_common
+  FROM shingles a JOIN shingles b
+    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
 )
 """
+
+#: all-pairs truth: the overlapping pairs at or above the Jaccard
+#: threshold.
+_TRUE_PAIRS_CTE = f"""
+true_pairs AS MATERIALIZED (
+  SELECT doc1, doc2, {_JACCARD_SQL} AS jaccard_raw
+  FROM overlap
+  JOIN sizes sa ON doc1 = sa.doc_id
+  JOIN sizes sb ON doc2 = sb.doc_id
+  WHERE {_JACCARD_SQL} >= {JACCARD_THRESHOLD}
+)
+"""
+
+#: MinHash signature per document: doc_id, mh0..mh15.
+_SIGS_CTE = f"""
+sigs AS MATERIALIZED (
+  SELECT doc_id,
+         {_minhash_sql_cols()}
+  FROM shingles GROUP BY doc_id
+)
+"""
+
+#: LSH candidates: one row per (doc, band) keyed by the md5 of the
+#: band's rows, then every doc1 < doc2 sharing a band key.
+_CAND_CTE = f"""
+bands AS (
+  SELECT doc_id, band_id,
+         CASE band_id
+           {" ".join(f"WHEN {b} THEN {_band_sql(b)}" for b in range(LSH_BANDS))}
+         END AS band_key
+  FROM sigs, (SELECT unnest(range(0, {LSH_BANDS})) AS band_id)
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
+  FROM bands a JOIN bands b
+    ON a.band_id = b.band_id AND a.band_key = b.band_key
+   AND a.doc_id < b.doc_id
+)
+"""
+
+#: candidate verify: ``exact`` is each candidate's exact Jaccard (a
+#: candidate sharing no shingle has no row), ``verified`` the candidates
+#: at or above the threshold. ``exact`` is the materialized one: the
+#: estimator reads it unfiltered, and ``verified`` is a filter over it
+#: that the cluster recursion and dedup_pair_triangles re-read.
+_VERIFY_CTE = f"""
+inter AS (
+  SELECT c.doc1, c.doc2, count(*) AS n_common
+  FROM cand c
+  JOIN shingles s1 ON s1.doc_id = c.doc1
+  JOIN shingles s2 ON s2.doc_id = c.doc2 AND s1.shingle = s2.shingle
+  GROUP BY 1, 2
+),
+exact AS MATERIALIZED (
+  SELECT doc1, doc2, {_JACCARD_SQL} AS jaccard_raw
+  FROM inter
+  JOIN sizes sa ON doc1 = sa.doc_id
+  JOIN sizes sb ON doc2 = sb.doc_id
+),
+verified AS (
+  SELECT doc1, doc2, jaccard_raw FROM exact
+  WHERE jaccard_raw >= {JACCARD_THRESHOLD}
+)
+"""
+
+#: transitive clusters: ``reach`` is the recursive closure of the
+#: undirected verified-pair graph; ``clusters`` labels each clustered
+#: doc with its component's minimum doc_id.
+_CLUSTERS_CTE = """
+edges AS (
+  SELECT doc1 AS src, doc2 AS dst FROM verified
+  UNION
+  SELECT doc2, doc1 FROM verified
+),
+reach(src, dst) AS (
+  SELECT src, dst FROM edges
+  UNION
+  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+),
+clusters AS (
+  SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
+  FROM reach GROUP BY src
+)
+"""
+
+
+def _with(*stages: str) -> str:
+    """An oracle's shared stages, in dependency order. RECURSIVE only
+    matters to ``_CLUSTERS_CTE``; every oracle opens the same way."""
+    return "WITH RECURSIVE " + ",\n".join(s.strip() for s in stages)
+
+
+_LSH_VERIFIED_SQL = _with(_SHINGLES_CTE, _SIGS_CTE, _CAND_CTE, _VERIFY_CTE)
+_CLUSTERS_SQL = _with(_SHINGLES_CTE, _SIGS_CTE, _CAND_CTE, _VERIFY_CTE, _CLUSTERS_CTE)
+_TRUE_PAIRS_SQL = _with(_SHINGLES_CTE, _OVERLAP_CTE, _TRUE_PAIRS_CTE)
+
+
+# --------------------------------------------------------------------------
+# the near-duplicate chain in Spark
+# --------------------------------------------------------------------------
+
+
+def _sizes(sh: DataFrame) -> DataFrame:
+    """Per-document shingle-set size: (doc_id, n_shingles)."""
+    return sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
+
+
+def _shared_shingles(sh: DataFrame) -> DataFrame:
+    """The inverted-index pair counter: (doc1 < doc2, n_common) for every
+    pair of documents sharing a shingle — a self-join on shingle, never
+    a doc x doc cross product."""
+    a = sh.alias("a")
+    b = sh.alias("b")
+    return (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
+        .agg(F.count("*").alias("n_common"))
+    )
+
+
+def _jaccard(sh: DataFrame, shared: DataFrame) -> DataFrame:
+    """The exact-Jaccard tail: (doc1, doc2, n_common) -> (doc1, doc2,
+    jaccard_raw), |A n B| / (|A| + |B| - |A n B|)."""
+    sizes = _sizes(sh)
+    sa = sizes.select(F.col("doc_id").alias("doc1"), F.col("n_shingles").alias("n1"))
+    sb = sizes.select(F.col("doc_id").alias("doc2"), F.col("n_shingles").alias("n2"))
+    jac = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
+    return (
+        shared.join(sa, "doc1")
+        .join(sb, "doc2")
+        .withColumn("jaccard_raw", jac)
+        .select("doc1", "doc2", "jaccard_raw")
+    )
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,22 +454,9 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     |A union B| = |A|+|B|-|A intersect B|) — never a doc x doc cross
     product."""
     sh = _shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    inter = _observe_candidates(inter, "ngram_jaccard_pairs")
-    sa = sizes.select(F.col("doc_id").alias("doc1"), F.col("n_shingles").alias("n1"))
-    sb = sizes.select(F.col("doc_id").alias("doc2"), F.col("n_shingles").alias("n2"))
-    jac = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
+    shared = _observe_candidates(_shared_shingles(sh), "ngram_jaccard_pairs")
     return (
-        inter.join(sa, "doc1")
-        .join(sb, "doc2")
-        .withColumn("jaccard_raw", jac)
+        _jaccard(sh, shared)
         .where(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
         .select("doc1", "doc2", rnd("jaccard_raw", 4).alias("jaccard"))
     )
@@ -270,22 +466,9 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: ``prefix_filter_jaccard_pairs``, whose claim is precisely that prefix
 #: filtering returns the identical pair set as the unfiltered index.
 _JACCARD_PAIRS_ORACLE = (
-    "WITH "
-    + _SHINGLES_CTE
-    + f""",
-sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS n_common
-  FROM shingles a JOIN shingles b
-    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc1, doc2,
-       round(n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common) + 1e-6, 4) AS jaccard
-FROM inter
-JOIN sizes sa ON doc1 = sa.doc_id
-JOIN sizes sb ON doc2 = sb.doc_id
-WHERE n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common) >= {JACCARD_THRESHOLD}
+    _TRUE_PAIRS_SQL
+    + """
+SELECT doc1, doc2, round(jaccard_raw + 1e-6, 4) AS jaccard FROM true_pairs
 """
 )
 
@@ -294,16 +477,6 @@ register(
     oracle=_JACCARD_PAIRS_ORACLE,
     tags=("dedup", "llm-pipeline", "near-dup", "bench"),
 )(ngram_jaccard_pairs)
-
-
-#: universal-hash family over the Mersenne prime 2^31-1: one md5 per
-#: shingle, then k cheap affine mixes h_i = (a_i*h + b_i) mod p — the
-#: textbook minhash construction; 16x fewer md5 evaluations than seeding
-#: the cryptographic hash per permutation. a_i/b_i are fixed odd/dense
-#: constants so both engines reproduce them literally. a*h < 2^62 fits
-#: int64, and Spark/DuckDB agree on positive int64 arithmetic.
-MERSENNE_P = (1 << 31) - 1
-_MINHASH_PARAMS = [(2 * i + 3, 7 * i + 1) for i in range(MINHASH_K)]
 
 
 def _minhash_signatures_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,14 +497,6 @@ def _minhash_signatures_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo_persist(spark, "minhash_sigs", sf_dir, build)
 
 
-def _minhash_sql_cols() -> str:
-    base = f"({_SQL_HASH.format(x='shingle')} % {MERSENNE_P})"
-    cols = []
-    for i, (a, b) in enumerate(_MINHASH_PARAMS):
-        cols.append(f"min(({a} * {base} + {b}) % {MERSENNE_P}) AS mh{i}")
-    return ",\n         ".join(cols)
-
-
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (k=16) per document — the compressed set
     representation whose collision probability estimates Jaccard."""
@@ -340,13 +505,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "minhash_signatures",
-    oracle="WITH "
-    + _SHINGLES_CTE
-    + f"""
-SELECT doc_id,
-         {_minhash_sql_cols()}
-FROM shingles GROUP BY doc_id
-""",
+    oracle=_with(_SHINGLES_CTE, _SIGS_CTE) + "\nSELECT * FROM sigs\n",
     tags=("dedup", "llm-pipeline", "minhash"),
 )(minhash_signatures)
 
@@ -357,13 +516,6 @@ def _band_exprs() -> list[F.Column]:
         cols = [F.col(f"mh{b * LSH_ROWS + r}").cast("string") for r in range(LSH_ROWS)]
         out.append(F.md5(F.concat_ws(",", *cols)).alias(f"band{b}"))
     return out
-
-
-def _band_sql(b: int) -> str:
-    cols = " || ',' || ".join(
-        f"CAST(mh{b * LSH_ROWS + r} AS VARCHAR)" for r in range(LSH_ROWS)
-    )
-    return f"md5({cols})"
 
 
 def _lsh_candidates_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,24 +555,15 @@ def _exact_jaccard(spark: SparkSession, sf_dir: str, cand: DataFrame) -> DataFra
     (doc1, doc2, jaccard_raw). The expensive verify stage — runs only on
     candidates, never doc x doc."""
     sh = _shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     sh1 = sh.select(F.col("doc_id").alias("doc1"), F.col("shingle").alias("s1"))
     sh2 = sh.select(F.col("doc_id").alias("d2"), F.col("shingle").alias("s2"))
-    inter = (
+    shared = (
         cand.join(sh1, "doc1")
         .join(sh2, (F.col("doc2") == F.col("d2")) & (F.col("s1") == F.col("s2")))
         .groupBy("doc1", "doc2")
         .agg(F.count("*").alias("n_common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc1"), F.col("n_shingles").alias("n1"))
-    sb = sizes.select(F.col("doc_id").alias("doc2"), F.col("n_shingles").alias("n2"))
-    jac = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
-    return (
-        inter.join(sa, "doc1")
-        .join(sb, "doc2")
-        .withColumn("jaccard_raw", jac)
-        .select("doc1", "doc2", "jaccard_raw")
-    )
+    return _jaccard(sh, shared)
 
 
 def _lsh_verified_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -451,50 +594,6 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified = _lsh_verified_pairs_df(spark, sf_dir)
     return verified.select("doc1", "doc2", rnd("jaccard_raw", 4).alias("jaccard"))
 
-
-#: LSH candidate + exact-verify pipeline as oracle CTEs, ending in a
-#: ``verified`` relation (doc1, doc2, jaccard_raw >= threshold) — shared
-#: by ``minhash_lsh_pairs`` and ``incremental_dedup_new_batch``.
-_LSH_VERIFIED_SQL = (
-    "WITH "
-    + _SHINGLES_CTE
-    + f""",
-sigs AS (
-  SELECT doc_id,
-         {_minhash_sql_cols()}
-  FROM shingles GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, band_id,
-         CASE band_id
-           {" ".join(f"WHEN {b} THEN {_band_sql(b)}" for b in range(LSH_BANDS))}
-         END AS band_key
-  FROM sigs, (SELECT unnest(range(0, {LSH_BANDS})) AS band_id)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.doc1, c.doc2, count(*) AS n_common
-  FROM cand c
-  JOIN shingles s1 ON s1.doc_id = c.doc1
-  JOIN shingles s2 ON s2.doc_id = c.doc2 AND s1.shingle = s2.shingle
-  GROUP BY 1, 2
-)
-, verified AS (
-  SELECT i.doc1, i.doc2,
-         n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common) AS jaccard_raw
-  FROM inter i
-  JOIN sizes sa ON i.doc1 = sa.doc_id
-  JOIN sizes sb ON i.doc2 = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common) >= {JACCARD_THRESHOLD}
-)
-"""
-)
 
 register(
     "minhash_lsh_pairs",
@@ -545,27 +644,8 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "minhash_jaccard_estimate",
-    oracle="WITH "
-    + _SHINGLES_CTE
+    oracle=_LSH_VERIFIED_SQL
     + f""",
-sigs AS (
-  SELECT doc_id,
-         {_minhash_sql_cols()}
-  FROM shingles GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, band_id,
-         CASE band_id
-           {" ".join(f"WHEN {b} THEN {_band_sql(b)}" for b in range(LSH_BANDS))}
-         END AS band_key
-  FROM sigs, (SELECT unnest(range(0, {LSH_BANDS})) AS band_id)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-),
 est AS (
   SELECT c.doc1, c.doc2,
          ({" + ".join(f"CASE WHEN s1.mh{i} = s2.mh{i} THEN 1 ELSE 0 END" for i in range(MINHASH_K))})
@@ -573,26 +653,11 @@ est AS (
   FROM cand c
   JOIN sigs s1 ON s1.doc_id = c.doc1
   JOIN sigs s2 ON s2.doc_id = c.doc2
-),
-sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.doc1, c.doc2, count(*) AS n_common
-  FROM cand c
-  JOIN shingles x1 ON x1.doc_id = c.doc1
-  JOIN shingles x2 ON x2.doc_id = c.doc2 AND x1.shingle = x2.shingle
-  GROUP BY 1, 2
-),
-exact AS (
-  SELECT i.doc1, i.doc2,
-         n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common) AS exact
-  FROM inter i
-  JOIN sizes sa ON i.doc1 = sa.doc_id
-  JOIN sizes sb ON i.doc2 = sb.doc_id
 )
 SELECT e.doc1, e.doc2,
        round(e.est + 1e-6, 4) AS est_jaccard,
-       round(coalesce(x.exact, 0.0) + 1e-6, 4) AS exact_jaccard,
-       round(abs(e.est - coalesce(x.exact, 0.0)) + 1e-6, 4) AS abs_err
+       round(coalesce(x.jaccard_raw, 0.0) + 1e-6, 4) AS exact_jaccard,
+       round(abs(e.est - coalesce(x.jaccard_raw, 0.0)) + 1e-6, 4) AS abs_err
 FROM est e LEFT JOIN exact x ON e.doc1 = x.doc1 AND e.doc2 = x.doc2
 """,
     tags=("dedup", "llm-pipeline", "minhash", "estimator"),
@@ -602,12 +667,11 @@ FROM est e LEFT JOIN exact x ON e.doc1 = x.doc1 AND e.doc2 = x.doc2
 SIMHASH_BITS = 16  # demo width; production uses 64 — same construction
 
 
-def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash per document over word tokens: for each bit position, sum
-    +1/-1 according to the token-hash bit, then take the sign. Near-dups
-    land at small Hamming distance. 16-bit here (64 in production) so the
-    whole computation stays a single codegen'd aggregate — one column
-    expression per bit, no explosion of rows."""
+def _simhash_df(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
+    """doc_id + a ``bits``-wide SimHash over word tokens: for each bit
+    position, sum +1/-1 according to the token-hash bit, then take the
+    sign. One codegen'd aggregate — one column expression per bit, no
+    explosion of rows."""
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
@@ -617,36 +681,52 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
             ).alias(f"b{i}")
-            for i in range(SIMHASH_BITS)
+            for i in range(bits)
         ]
     )
     sim = None
-    for i in range(SIMHASH_BITS):
+    for i in range(bits):
         term = F.when(F.col(f"b{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
     return bit_sums.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-_SIMHASH_BIT_SQL = ",\n         ".join(
-    f"sum(CASE WHEN (h // {1 << i}) % 2 = 1 THEN 1 ELSE -1 END) AS b{i}"
-    for i in range(SIMHASH_BITS)
-)
-_SIMHASH_COMBINE_SQL = " + ".join(
-    f"CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END" for i in range(SIMHASH_BITS)
-)
-
-register(
-    "simhash",
-    oracle=f"""
-WITH toks AS (
+def _simhash_sql(bits: int) -> tuple[str, str]:
+    """The oracle twin of ``_simhash_df``: the ``toks`` and ``bits`` CTEs
+    of a ``bits``-wide SimHash, and the expression combining the bit
+    sums into the hash."""
+    bit_sums = ",\n         ".join(
+        f"sum(CASE WHEN (h // {1 << i}) % 2 = 1 THEN 1 ELSE -1 END) AS b{i}"
+        for i in range(bits)
+    )
+    ctes = f"""WITH toks AS (
   SELECT doc_id, {_SQL_HASH.format(x='tok')} AS h
   FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
 ),
 bits AS (
   SELECT doc_id,
-         {_SIMHASH_BIT_SQL}
+         {bit_sums}
   FROM toks GROUP BY doc_id
-)
+)"""
+    combine = " + ".join(
+        f"CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END" for i in range(bits)
+    )
+    return ctes, combine
+
+
+def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash per document over word tokens. Near-dups land at small
+    Hamming distance. 16-bit here (64 in production) so the whole
+    computation stays a single codegen'd aggregate."""
+    return _simhash_df(spark, sf_dir, SIMHASH_BITS)
+
+
+_SIMHASH_CTES, _SIMHASH_COMBINE_SQL = _simhash_sql(SIMHASH_BITS)
+
+register(
+    "simhash",
+    oracle=f"""
+{_SIMHASH_CTES}
 SELECT doc_id, CAST({_SIMHASH_COMBINE_SQL} AS BIGINT) AS simhash
 FROM bits
 """,
@@ -669,15 +749,7 @@ def simhash_bucket_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "simhash_bucket_dups",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {_SQL_HASH.format(x='tok')} AS h
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-),
-bits AS (
-  SELECT doc_id,
-         {_SIMHASH_BIT_SQL}
-  FROM toks GROUP BY doc_id
-),
+{_SIMHASH_CTES},
 sims AS (
   SELECT doc_id, CAST({_SIMHASH_COMBINE_SQL} AS BIGINT) AS simhash FROM bits
 )
@@ -701,41 +773,15 @@ HAMMING_R = 3
 
 
 def _simhash_wide_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id + 60-bit SimHash (same construction as ``simhash``, full
-    portable-hash width — one codegen'd aggregate, no row explosion).
-    Memoized (one row per doc): the band self-join consumes it twice."""
-
-    def build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents")
-        toks = docs.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("tok")
-        ).withColumn("h", _portable_hash(F.col("tok")))
-        bit_sums = toks.groupBy("doc_id").agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1
-                    ).otherwise(-1)
-                ).alias(f"b{i}")
-                for i in range(NEARSIM_BITS)
-            ]
-        )
-        sim = None
-        for i in range(NEARSIM_BITS):
-            term = F.when(F.col(f"b{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
-            sim = term if sim is None else sim + term
-        return bit_sums.select("doc_id", sim.cast("long").alias("simhash"))
-
-    return memo_persist(spark, "simhash_wide", sf_dir, build)
+    """doc_id + 60-bit SimHash (``simhash``'s construction at the full
+    portable-hash width). Memoized (one row per doc): the band self-join
+    consumes it twice."""
+    return memo_persist(
+        spark, "simhash_wide", sf_dir, lambda: _simhash_df(spark, sf_dir, NEARSIM_BITS)
+    )
 
 
-_WIDE_BIT_SQL = ",\n         ".join(
-    f"sum(CASE WHEN (h // {1 << i}) % 2 = 1 THEN 1 ELSE -1 END) AS b{i}"
-    for i in range(NEARSIM_BITS)
-)
-_WIDE_COMBINE_SQL = " + ".join(
-    f"CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END" for i in range(NEARSIM_BITS)
-)
+_WIDE_CTES, _WIDE_COMBINE_SQL = _simhash_sql(NEARSIM_BITS)
 
 
 def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -790,15 +836,7 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "simhash_near_pairs",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, {_SQL_HASH.format(x='tok')} AS h
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-),
-bits AS (
-  SELECT doc_id,
-         {_WIDE_BIT_SQL}
-  FROM toks GROUP BY doc_id
-),
+{_WIDE_CTES},
 sims AS (
   SELECT doc_id, CAST({_WIDE_COMBINE_SQL} AS BIGINT) AS simhash FROM bits
 ),
@@ -916,64 +954,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DEDUP_CLUSTERS_ORACLE = (
-    "WITH RECURSIVE "
-    + _SHINGLES_CTE.strip().lstrip()
-    + f""",
-sigs AS (
-  SELECT doc_id,
-         {_minhash_sql_cols()}
-  FROM shingles GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, band_id,
-         CASE band_id
-           {" ".join(f"WHEN {b} THEN {_band_sql(b)}" for b in range(LSH_BANDS))}
-         END AS band_key
-  FROM sigs, (SELECT unnest(range(0, {LSH_BANDS})) AS band_id)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.doc1, c.doc2, count(*) AS n_common
-  FROM cand c
-  JOIN shingles s1 ON s1.doc_id = c.doc1
-  JOIN shingles s2 ON s2.doc_id = c.doc2 AND s1.shingle = s2.shingle
-  GROUP BY 1, 2
-),
-verified AS (
-  SELECT i.doc1, i.doc2
-  FROM inter i
-  JOIN sizes sa ON i.doc1 = sa.doc_id
-  JOIN sizes sb ON i.doc2 = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common) >= {JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT doc1 AS src, doc2 AS dst FROM verified
-  UNION
-  SELECT doc2, doc1 FROM verified
-),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-)
-SELECT src AS doc_id,
-       least(src, min(dst)) AS cluster_id,
-       src = least(src, min(dst)) AS is_keeper
-FROM reach
-GROUP BY src
-"""
-)
-
 register(
     "dedup_clusters",
-    oracle=_DEDUP_CLUSTERS_ORACLE,
+    oracle=_CLUSTERS_SQL
+    + """
+SELECT doc_id, cluster_id, doc_id = cluster_id AS is_keeper FROM clusters
+""",
     tags=("dedup", "llm-pipeline", "clustering", "iterative", "bench"),
 )(dedup_clusters)
 
@@ -1047,56 +1033,8 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "dedup_canonical_docs",
-    oracle="WITH RECURSIVE "
-    + _SHINGLES_CTE.strip().lstrip()
-    + f""",
-sigs AS (
-  SELECT doc_id,
-         {_minhash_sql_cols()}
-  FROM shingles GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, band_id,
-         CASE band_id
-           {" ".join(f"WHEN {b} THEN {_band_sql(b)}" for b in range(LSH_BANDS))}
-         END AS band_key
-  FROM sigs, (SELECT unnest(range(0, {LSH_BANDS})) AS band_id)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.doc1, c.doc2, count(*) AS n_common
-  FROM cand c
-  JOIN shingles s1 ON s1.doc_id = c.doc1
-  JOIN shingles s2 ON s2.doc_id = c.doc2 AND s1.shingle = s2.shingle
-  GROUP BY 1, 2
-),
-verified AS (
-  SELECT i.doc1, i.doc2
-  FROM inter i
-  JOIN sizes sa ON i.doc1 = sa.doc_id
-  JOIN sizes sb ON i.doc2 = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common) >= {JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT doc1 AS src, doc2 AS dst FROM verified
-  UNION
-  SELECT doc2, doc1 FROM verified
-),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
-clusters AS (
-  SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-  FROM reach GROUP BY src
-),
+    oracle=_CLUSTERS_SQL
+    + """,
 ranked AS (
   SELECT c.cluster_id, c.doc_id, d.n_chars,
          row_number() OVER (PARTITION BY c.cluster_id
@@ -1163,42 +1101,8 @@ def dedup_pair_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "dedup_pair_triangles",
-    oracle="WITH "
-    + _SHINGLES_CTE
-    + f""",
-sigs AS (
-  SELECT doc_id,
-         {_minhash_sql_cols()}
-  FROM shingles GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, band_id,
-         CASE band_id
-           {" ".join(f"WHEN {b} THEN {_band_sql(b)}" for b in range(LSH_BANDS))}
-         END AS band_key
-  FROM sigs, (SELECT unnest(range(0, {LSH_BANDS})) AS band_id)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.doc1, c.doc2, count(*) AS n_common
-  FROM cand c
-  JOIN shingles s1 ON s1.doc_id = c.doc1
-  JOIN shingles s2 ON s2.doc_id = c.doc2 AND s1.shingle = s2.shingle
-  GROUP BY 1, 2
-),
-verified AS MATERIALIZED (
-  SELECT i.doc1, i.doc2
-  FROM inter i
-  JOIN sizes sa ON i.doc1 = sa.doc_id
-  JOIN sizes sb ON i.doc2 = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common) >= {JACCARD_THRESHOLD}
-),
+    oracle=_LSH_VERIFIED_SQL
+    + """,
 tris AS (
   SELECT p1.doc1 AS x, p1.doc2 AS y, p2.doc2 AS z
   FROM verified p1
@@ -1257,43 +1161,8 @@ def cross_source_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "cross_source_leakage",
-    oracle="WITH "
-    + _SHINGLES_CTE
-    + f""",
-sigs AS (
-  SELECT doc_id,
-         {_minhash_sql_cols()}
-  FROM shingles GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, band_id,
-         CASE band_id
-           {" ".join(f"WHEN {b} THEN {_band_sql(b)}" for b in range(LSH_BANDS))}
-         END AS band_key
-  FROM sigs, (SELECT unnest(range(0, {LSH_BANDS})) AS band_id)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.doc1, c.doc2, count(*) AS n_common
-  FROM cand c
-  JOIN shingles s1 ON s1.doc_id = c.doc1
-  JOIN shingles s2 ON s2.doc_id = c.doc2 AND s1.shingle = s2.shingle
-  GROUP BY 1, 2
-),
-verified AS (
-  SELECT i.doc1, i.doc2,
-         n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common) AS jaccard_raw
-  FROM inter i
-  JOIN sizes sa ON i.doc1 = sa.doc_id
-  JOIN sizes sb ON i.doc2 = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common) >= {JACCARD_THRESHOLD}
-)
+    oracle=_LSH_VERIFIED_SQL
+    + """
 SELECT v.doc1, v.doc2, d1.source AS source1, d2.source AS source2,
        round(v.jaccard_raw + 1e-6, 4) AS jaccard
 FROM verified v
@@ -1315,26 +1184,26 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     detector Jaccard misses (a 50-line doc fully quoted inside a
     5000-line doc has tiny Jaccard but containment 1.0).
 
-    Same inverted-index shape as ``ngram_jaccard_pairs`` (equi-join on
-    the df-capped shingle index, never doc x doc); the only change is
-    normalizing the intersection by EACH side's size and emitting both
-    directions that clear the threshold.
+    Same inverted-index pair counter as ``ngram_jaccard_pairs`` (equi-
+    join on the df-capped shingle index, never doc x doc); the only
+    change is fanning each unordered pair out to both directions and
+    normalizing the intersection by the source side's size.
     """
     sh = _shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("src_doc"), F.col("b.doc_id").alias("in_doc"))
-        .agg(F.count("*").alias("n_common"))
-    )
+    inter = _shared_shingles(sh).select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("doc1").alias("src_doc"), F.col("doc2").alias("in_doc"), "n_common"
+                ),
+                F.struct(
+                    F.col("doc2").alias("src_doc"), F.col("doc1").alias("in_doc"), "n_common"
+                ),
+            )
+        ).alias("p")
+    ).select("p.src_doc", "p.in_doc", "p.n_common")
     inter = _observe_candidates(inter, "containment_pairs")
-    ssz = sizes.select(F.col("doc_id").alias("src_doc"), F.col("n_shingles").alias("n_src"))
+    ssz = _sizes(sh).select(F.col("doc_id").alias("src_doc"), F.col("n_shingles").alias("n_src"))
     return (
         inter.join(ssz, "src_doc")
         .withColumn("containment_raw", F.col("n_common") / F.col("n_src"))
@@ -1350,20 +1219,15 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "containment_pairs",
-    oracle="WITH "
-    + _SHINGLES_CTE
-    + f""",
-sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS src_doc, b.doc_id AS in_doc, count(*) AS n_common
-  FROM shingles a JOIN shingles b
-    ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-  GROUP BY 1, 2
-)
-SELECT i.src_doc, i.in_doc, i.n_common,
-       round(i.n_common * 1.0 / s.n_shingles + 1e-6, 4) AS containment
-FROM inter i JOIN sizes s ON i.src_doc = s.doc_id
-WHERE i.n_common * 1.0 / s.n_shingles >= {CONTAINMENT_THRESHOLD}
+    oracle=_with(_SHINGLES_CTE, _OVERLAP_CTE)
+    + f"""
+SELECT src_doc, in_doc, n_common,
+       round(n_common * 1.0 / s.n_shingles + 1e-6, 4) AS containment
+FROM (SELECT CASE WHEN flip THEN doc2 ELSE doc1 END AS src_doc,
+             CASE WHEN flip THEN doc1 ELSE doc2 END AS in_doc, n_common
+      FROM overlap, (SELECT unnest([false, true]) AS flip)) i
+JOIN sizes s ON i.src_doc = s.doc_id
+WHERE n_common * 1.0 / s.n_shingles >= {CONTAINMENT_THRESHOLD}
 """,
     tags=("dedup", "llm-pipeline", "near-dup", "containment"),
 )(containment_pairs)
@@ -1496,11 +1360,11 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number()
         .over(Window.partitionBy("doc_id").orderBy("df", "shingle"))
         .alias("rank"),
-        F.count("*").over(w_doc).alias("n_shingles"),
+        F.count("*").over(w_doc).alias("set_size"),
     )
     prefix = ranked.where(
         F.col("rank")
-        <= F.floor((1 - JACCARD_THRESHOLD) * F.col("n_shingles")) + 1
+        <= F.floor((1 - JACCARD_THRESHOLD) * F.col("set_size")) + 1
     ).select("doc_id", "shingle")
     a = prefix.alias("a")
     b = prefix.alias("b")
@@ -1514,22 +1378,8 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     cands = _observe_candidates(cands, "prefix_filter_jaccard_pairs")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    sh1 = sh.select(F.col("doc_id").alias("doc1"), "shingle")
-    sh2 = sh.select(F.col("doc_id").alias("doc2"), "shingle")
-    inter = (
-        cands.join(sh1, "doc1")
-        .join(sh2, ["doc2", "shingle"])
-        .groupBy("doc1", "doc2")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc1"), F.col("n_shingles").alias("n1"))
-    sb = sizes.select(F.col("doc_id").alias("doc2"), F.col("n_shingles").alias("n2"))
-    jac = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
     return (
-        inter.join(sa, "doc1")
-        .join(sb, "doc2")
-        .withColumn("jaccard_raw", jac)
+        _exact_jaccard(spark, sf_dir, cands)
         .where(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
         .select("doc1", "doc2", rnd("jaccard_raw", 4).alias("jaccard"))
     )
@@ -1777,26 +1627,12 @@ SELECT {b} AS bands, {r} AS rows_per_band,
           FROM (SELECT doc_id, unnest([{keys_sql}]) AS band_key FROM sigs) a
           JOIN (SELECT doc_id, unnest([{keys_sql}]) AS band_key FROM sigs) b
             ON a.band_key = b.band_key AND a.doc_id < b.doc_id) c
-        JOIN tp ON c.doc1 = tp.doc1 AND c.doc2 = tp.doc2) AS n_true_covered""")
+        JOIN true_pairs tp ON c.doc1 = tp.doc1 AND c.doc2 = tp.doc2) AS n_true_covered""")
         # Spark's concat_ws on a leading int literal renders identically
         # (no trailing .0) because the band index is a string-cast int
     union = "\nUNION ALL\n".join(legs)
-    # true pairs from the exact-Jaccard oracle, shingles CTE shared
-    jacc_body = _JACCARD_PAIRS_ORACLE.split("WITH ", 1)[1]
-    return f"""
-WITH {jacc_body.split("SELECT doc1, doc2,", 1)[0].rstrip().rstrip(")").rstrip() + ")"} ,
-tp AS (
-  SELECT doc1, doc2 FROM inter
-  JOIN sizes sa ON doc1 = sa.doc_id
-  JOIN sizes sb ON doc2 = sb.doc_id
-  WHERE n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common) >= 0.5
-),
-sigs AS (
-  SELECT doc_id,
-         {_minhash_sql_cols()}
-  FROM shingles GROUP BY doc_id
-),
-ntrue AS (SELECT CAST(count(*) AS BIGINT) AS n_true_pairs FROM tp),
+    return _with(_SHINGLES_CTE, _OVERLAP_CTE, _TRUE_PAIRS_CTE, _SIGS_CTE) + f""",
+ntrue AS (SELECT CAST(count(*) AS BIGINT) AS n_true_pairs FROM true_pairs),
 cfg AS (
 {union}
 )
@@ -1834,8 +1670,6 @@ def minhash_band_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     config. True pairs come from the exact inverted-index join,
     computed once and memoized (``ngram_jaccard_pairs`` is also a
     registered query — same session reuse)."""
-    from flink_cookbook_spark.pipeline._cache import memo_persist
-
     sigs = _minhash_signatures_df(spark, sf_dir)
     true_pairs = memo_persist(
         spark,
@@ -1922,29 +1756,19 @@ def minhash_band_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # near-dup cluster size histogram
 # --------------------------------------------------------------------------
 
-def _cluster_histogram_oracle() -> str:
-    """Wraps the registered recursive label-propagation oracle as a
-    subquery (DuckDB permits WITH RECURSIVE inside FROM) and aggregates
-    cluster sizes on top — the composed query stays hash-exact against
-    the composed Spark plan."""
-    inner = _DEDUP_CLUSTERS_ORACLE
-    return f"""
+@register(
+    "dedup_cluster_size_histogram",
+    oracle=_CLUSTERS_SQL
+    + """
 SELECT cluster_size, n_clusters,
        cluster_size * n_clusters AS n_docs,
        round((cluster_size * n_clusters) * 1.0
              / sum(cluster_size * n_clusters) OVER () + 1e-6, 6) AS corpus_share
 FROM (
   SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters FROM (
-    SELECT cluster_id, count(*) AS cluster_size
-    FROM ({inner})
-    GROUP BY cluster_id)
+    SELECT cluster_id, count(*) AS cluster_size FROM clusters GROUP BY cluster_id)
   GROUP BY cluster_size)
-"""
-
-
-@register(
-    "dedup_cluster_size_histogram",
-    oracle=_cluster_histogram_oracle(),
+""",
     tags=("prepared-r8",),
 )
 def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1975,48 +1799,14 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # measured LSH recall/precision audit
 # --------------------------------------------------------------------------
 
-def _lsh_recall_oracle() -> str:
-    return (
-        "WITH "
-        + _SHINGLES_CTE
-        + f""",
-sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS n_common
-  FROM shingles a JOIN shingles b
-    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-truth AS (
-  SELECT doc1, doc2
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = doc1
-  JOIN sizes sb ON sb.doc_id = doc2
-  WHERE n_common * 1.0 / (sa.n_shingles + sb.n_shingles - n_common)
-        >= {JACCARD_THRESHOLD}
-),
-sigs AS (
-  SELECT doc_id,
-         {_minhash_sql_cols()}
-  FROM shingles GROUP BY doc_id
-),
-stacked AS (
-  SELECT doc_id, band_id,
-         CASE band_id
-           {" ".join(f"WHEN {b} THEN {_band_sql(b)}" for b in range(LSH_BANDS))}
-         END AS band_key
-  FROM sigs, (SELECT unnest(range(0, {LSH_BANDS})) AS band_id)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-  FROM stacked a JOIN stacked b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-),
-nt AS (SELECT count(*) AS n_true_pairs FROM truth),
+@register(
+    "lsh_recall_estimate",
+    oracle=_with(_SHINGLES_CTE, _OVERLAP_CTE, _TRUE_PAIRS_CTE, _SIGS_CTE, _CAND_CTE)
+    + f""",
+nt AS (SELECT count(*) AS n_true_pairs FROM true_pairs),
 nc AS (SELECT count(*) AS n_candidates FROM cand),
 nh AS (SELECT count(*) AS n_hits
-       FROM truth t JOIN cand c ON t.doc1 = c.doc1 AND t.doc2 = c.doc2)
+       FROM true_pairs t JOIN cand c ON t.doc1 = c.doc1 AND t.doc2 = c.doc2)
 SELECT n_true_pairs, n_candidates, n_hits,
        round(CASE WHEN n_true_pairs > 0
                   THEN n_hits * 1.0 / n_true_pairs ELSE 1.0 END + 1e-6, 6)
@@ -2028,13 +1818,7 @@ SELECT n_true_pairs, n_candidates, n_hits,
                        {LSH_BANDS}) + 1e-6, 6)
          AS s_curve_recall_at_threshold
 FROM nt CROSS JOIN nc CROSS JOIN nh
-"""
-    )
-
-
-@register(
-    "lsh_recall_estimate",
-    oracle=_lsh_recall_oracle(),
+""",
     tags=("prepared-r8",),
 )
 def lsh_recall_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2049,27 +1833,9 @@ def lsh_recall_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     two 1-row aggregates joined — nothing scales beyond the dedup
     pipeline it measures."""
     sh = _shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc1"), F.col("n_shingles").alias("n1"))
-    sb = sizes.select(F.col("doc_id").alias("doc2"), F.col("n_shingles").alias("n2"))
     truth = (
-        inter.join(sa, "doc1")
-        .join(sb, "doc2")
-        .where(
-            F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
-            >= JACCARD_THRESHOLD
-        )
+        _jaccard(sh, _shared_shingles(sh))
+        .where(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
         .select("doc1", "doc2")
     )
     cand = _lsh_candidates_df(spark, sf_dir)

@@ -2303,17 +2303,19 @@ def _jl_signs() -> list[list[float]]:
 
 
 def _jl_oracle() -> str:
-    signs = _jl_signs()
+    sign_rows = ", ".join(
+        "[%s]" % ", ".join(repr(v) for v in row) for row in _jl_signs()
+    )
     proj_exprs = ", ".join(
-        "list_sum(list_transform(range(1, %d), i -> e[i] * ([%s])[i]))"
-        % (JL_IN_DIMS + 1, ", ".join(repr(v) for v in signs[j]))
+        f"list_sum(list_transform(range(1, {JL_IN_DIMS + 1}), i -> e[i] * sg[{j + 1}][i]))"
         for j in range(JL_OUT_DIMS)
     )
     return f"""
 WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+signs AS (SELECT [{sign_rows}] AS sg),
 projected AS (
   SELECT vec_id, e, [{proj_exprs}] AS proj
-  FROM emb
+  FROM emb, signs
 ),
 pairs AS (
   SELECT a.vec_id AS pair_id,

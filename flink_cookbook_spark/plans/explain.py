@@ -43,11 +43,24 @@ def read_schema_columns(df: DataFrame) -> set[str]:
 
 
 def count_exchanges(df: DataFrame) -> int:
-    """Shuffle count in the physical plan (Exchange nodes; excludes
-    BroadcastExchange and AQE reuse). Formatted plans list nodes as
-    '(n) Exchange' with the partitioning in the detail block."""
-    plan = formatted_plan(df)
-    return len(re.findall(r"\(\d+\) Exchange\b", plan))
+    """Shuffles the query itself runs: ShuffleExchangeExec nodes in its
+    executed plan and subqueries (BroadcastExchange and reused exchanges
+    excluded). The walk unwraps AQE (AdaptiveSparkPlanExec and its query
+    stages) and stops at InMemoryTableScanExec, whose cached relation's
+    build shuffles ran when it was materialized, not in this query."""
+
+    def walk(node) -> int:
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        n = int(cls == "ShuffleExchangeExec")
+        for nodes in (node.children(), node.subqueries()):
+            n += sum(walk(nodes.apply(i)) for i in range(nodes.size()))
+        return n
+
+    return walk(df._jdf.queryExecution().executedPlan())
 
 
 def has_broadcast_join(df: DataFrame) -> bool:

@@ -344,6 +344,18 @@ def test_shingle_df_cap_precedes_self_join(spark, sf_dir):
     assert count_exchanges(df) == 1
 
 
+def test_count_exchanges_stops_at_cached_relation(spark, sf_dir):
+    """A query over a memoized relation counts only its own shuffles: the
+    shingle index's build exchange ran when the memo was materialized,
+    so a bare select over it reads 0, and a round-robin repartition of
+    it reads exactly its own 1."""
+    from flink_cookbook_spark.pipeline.dedup import _shingles
+
+    memo = _shingles(spark, sf_dir)
+    assert count_exchanges(memo.select("doc_id")) == 0
+    assert count_exchanges(memo.repartition(4)) == 1
+
+
 def test_winsorize_broadcasts_cutpoints(spark, sf_dir):
     """Percentile cutpoints (5 groups x 2 doubles) must broadcast; the
     fact side must not shuffle for the join."""

@@ -737,14 +737,28 @@ def test_bmp_codec_roundtrip_property():
 def test_lsh_recall_consistency(spark, sf_dir):
     """Hits are bounded by both truth and candidates; recall/precision
     are consistent ratios in [0, 1]; the analytic s-curve constant is
-    1-(1-0.5^r)^b for the shipped band config."""
+    1-(1-0.5^r)^b for the shipped band config. The audit agrees with the
+    queries it audits: its hits are minhash_lsh_pairs' rows, its truth
+    is ngram_jaccard_pairs' rows, and the shipped config's row of
+    minhash_band_sensitivity counts the same candidates and hits."""
     from flink_cookbook_spark.pipeline.dedup import (
         LSH_BANDS,
         LSH_ROWS,
         lsh_recall_estimate,
+        minhash_band_sensitivity,
+        minhash_lsh_pairs,
+        ngram_jaccard_pairs,
     )
 
     r = lsh_recall_estimate(spark, sf_dir).collect()[0]
+    assert r.n_hits == minhash_lsh_pairs(spark, sf_dir).count()
+    assert r.n_true_pairs == ngram_jaccard_pairs(spark, sf_dir).count()
+    (shipped,) = [
+        b for b in minhash_band_sensitivity(spark, sf_dir).collect()
+        if (b.bands, b.rows_per_band) == (LSH_BANDS, LSH_ROWS)
+    ]
+    assert shipped.n_candidate_pairs == r.n_candidates
+    assert shipped.n_true_covered == r.n_hits
     assert 0 <= r.n_hits <= min(r.n_true_pairs, r.n_candidates)
     # the rounding NUDGE (+1e-6) legitimately reports exact 1.0 as 1.000001
     assert 0.0 <= r.recall <= 1.0 + 2e-6
