@@ -28,7 +28,10 @@ TABLES = (
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table as a DataFrame (lazy; no action triggered).
+    """Load one fixture table as a DataFrame. Not free: each call runs a
+    Spark job ("parquet at NativeMethodAccessorImpl") that infers the
+    file's schema, again when the session re-reads a table it has read
+    before. The rows themselves are read lazily, by the query's action.
 
     ``events.ts`` has shipped in three parquet encodings across fixture
     regenerations: TIMESTAMP(NANOS) (read as long via

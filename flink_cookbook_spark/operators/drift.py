@@ -16,7 +16,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.operators.stats import SPLIT_EPOCH_S
+from flink_cookbook_spark.operators.stats import (
+    DAY_S,
+    HOUR_S,
+    SPLIT_EPOCH_S,
+    TYPE_DAILY_CTE,
+    TYPE_HOURLY_CTE,
+    mean_series,
+)
 from flink_cookbook_spark.registry import NUDGE, register, rnd
 
 
@@ -504,23 +511,20 @@ def slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Western Electric control-chart rules
 # --------------------------------------------------------------------------
 
-_WE_ORACLE = """
-WITH hourly AS (
-  SELECT event_type, CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         avg(value) AS v
-  FROM events GROUP BY 1, 2
-),
+_WE_ORACLE = f"""
+WITH {TYPE_HOURLY_CTE},
 center AS (
   SELECT event_type, avg(v) AS cl, stddev_samp(v) AS sig
   FROM hourly GROUP BY event_type
 ),
 flagged AS (
-  SELECT j.event_type, j.h,
+  SELECT j.event_type, j.bucket_start,
          CASE WHEN abs(j.v - c.cl) > 3.0 * c.sig THEN 1 ELSE 0 END AS r1,
          CASE WHEN abs(sum(CASE WHEN j.v > c.cl THEN 1 ELSE -1 END)
-                        OVER (PARTITION BY j.event_type ORDER BY j.h
+                        OVER (PARTITION BY j.event_type ORDER BY j.bucket_start
                               ROWS BETWEEN 8 PRECEDING AND CURRENT ROW)) = 9
-                   AND count(*) OVER (PARTITION BY j.event_type ORDER BY j.h
+                   AND count(*) OVER (PARTITION BY j.event_type
+                                      ORDER BY j.bucket_start
                               ROWS BETWEEN 8 PRECEDING AND CURRENT ROW) = 9
               THEN 1 ELSE 0 END AS r4
   FROM hourly j JOIN center c ON j.event_type = c.event_type
@@ -547,15 +551,7 @@ def western_electric_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: center/sigma are one per-key aggregate joined back
     (bounded); the consecutive-run rule is one keyed ordered window
     (9-row frame sum); the summary is a per-key reduce."""
-    ev = load(spark, sf_dir, "events")
-    sec = F.col("ts").cast("double")
-    hourly = (
-        ev.select(
-            "event_type", (F.floor(sec / 3600)).cast("long").alias("h"), "value"
-        )
-        .groupBy("event_type", "h")
-        .agg(F.avg("value").alias("v"))
-    )
+    hourly = mean_series(spark, sf_dir, "event_type", HOUR_S)
     center = hourly.groupBy("event_type").agg(
         F.avg("v").alias("cl"), F.stddev_samp("v").alias("sig")
     )
@@ -563,12 +559,12 @@ def western_electric_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.when(F.col("v") > F.col("cl"), 1).otherwise(-1)
     w9 = (
         Window.partitionBy("event_type")
-        .orderBy("h")
+        .orderBy("bucket_start")
         .rowsBetween(-8, 0)
     )
     flagged = j.select(
         "event_type",
-        "h",
+        "bucket_start",
         (F.abs(F.col("v") - F.col("cl")) > 3.0 * F.col("sig")).cast(
             "int"
         ).alias("r1"),
@@ -615,32 +611,27 @@ def _ewma_oracle() -> str:
     lam = EWMA_LAMBDA
     terms = []
     for j in range(EWMA_W):
-        lag = "x" if j == 0 else f"lag(x, {j}) OVER w"
+        lag = "v" if j == 0 else f"lag(v, {j}) OVER w"
         terms.append(
             f"COALESCE({lam * _EWMA_DECAY[j]!r} * ({lag}), 0.0)"
         )
     zsum = "\n           + ".join(terms)
     anchors = ", ".join(repr(v) for v in _EWMA_DECAY)
     return f"""
-WITH daily AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) * 86400 AS day_start,
-         avg(value) AS x
-  FROM events GROUP BY 1, 2
-),
+WITH {TYPE_DAILY_CTE},
 stats AS (
-  SELECT event_type, avg(x) AS mu0, stddev_samp(x) AS sigma
+  SELECT event_type, avg(v) AS mu0, stddev_samp(v) AS sigma
   FROM daily GROUP BY event_type
 ),
 seq AS (
-  SELECT d.event_type, d.day_start, d.x,
+  SELECT d.event_type, d.bucket_start, d.v,
          CAST(row_number() OVER w AS BIGINT) AS t,
          {zsum} AS zpart
   FROM daily d
-  WINDOW w AS (PARTITION BY d.event_type ORDER BY d.day_start)
+  WINDOW w AS (PARTITION BY d.event_type ORDER BY d.bucket_start)
 ),
 calc AS (
-  SELECT s.event_type, s.day_start, s.t, s.x,
+  SELECT s.event_type, s.bucket_start, s.t, s.v,
          s.zpart + ([{anchors}])[least(s.t, {EWMA_W}) + 1] * st.mu0 AS z,
          st.mu0,
          st.sigma
@@ -650,8 +641,8 @@ calc AS (
            AS sig_t
   FROM seq s JOIN stats st ON s.event_type = st.event_type
 )
-SELECT event_type, day_start, CAST(t AS INTEGER) AS t,
-       round(x + {NUDGE}, 4) AS x,
+SELECT event_type, bucket_start AS day_start, CAST(t AS INTEGER) AS t,
+       round(v + {NUDGE}, 4) AS x,
        round(z + {NUDGE}, 4) AS ewma,
        round(mu0 - {EWMA_L} * sig_t + {NUDGE}, 4) AS lcl,
        round(mu0 + {EWMA_L} * sig_t + {NUDGE}, 4) AS ucl,
@@ -683,28 +674,17 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     series stats via one more aggregate broadcast back; one ordered
     window per key carrying ``EWMA_W`` lag expressions (a single
     window pass) over the calendar-bounded day axis."""
-    ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            (F.floor(F.col("ts").cast("double") / 86400) * 86400)
-            .cast("long")
-            .alias("day_start"),
-            "value",
-        )
-        .groupBy("event_type", "day_start")
-        .agg(F.avg("value").alias("x"))
-    )
+    daily = mean_series(spark, sf_dir, "event_type", DAY_S)
     stats = daily.groupBy("event_type").agg(
-        F.avg("x").alias("mu0"), F.stddev_samp("x").alias("sigma")
+        F.avg("v").alias("mu0"), F.stddev_samp("v").alias("sigma")
     )
-    w = Window.partitionBy("event_type").orderBy("day_start")
+    w = Window.partitionBy("event_type").orderBy("bucket_start")
     seq = daily.select(
         "event_type",
-        "day_start",
-        F.col("x").alias("l0"),
+        "bucket_start",
+        F.col("v").alias("l0"),
         F.row_number().over(w).alias("t"),
-        *[F.lag("x", j).over(w).alias(f"l{j}") for j in range(1, EWMA_W)],
+        *[F.lag("v", j).over(w).alias(f"l{j}") for j in range(1, EWMA_W)],
     )
     joined = seq.join(F.broadcast(stats), "event_type")
     z = None
@@ -726,7 +706,7 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     lcl_r = rnd(F.col("mu0") - EWMA_L * sig_t, 4)
     return joined.select(
         "event_type",
-        "day_start",
+        F.col("bucket_start").alias("day_start"),
         F.col("t").alias("t"),
         rnd("l0", 4).alias("x"),
         z_r.alias("ewma"),
@@ -745,32 +725,27 @@ PH_LAMBDA = 10.0  #: alarm threshold on the PH excursion
 
 
 _PH_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) * 86400 AS day_start,
-         avg(value) AS x
-  FROM events GROUP BY 1, 2
-),
+WITH {TYPE_DAILY_CTE},
 dev AS (
-  SELECT event_type, day_start, x,
-         x - avg(x) OVER (PARTITION BY event_type ORDER BY day_start
+  SELECT event_type, bucket_start, v,
+         v - avg(v) OVER (PARTITION BY event_type ORDER BY bucket_start
                           ROWS UNBOUNDED PRECEDING) - {PH_DELTA} AS dev
   FROM daily
 ),
 m AS (
-  SELECT event_type, day_start, x,
-         sum(dev) OVER (PARTITION BY event_type ORDER BY day_start
+  SELECT event_type, bucket_start, v,
+         sum(dev) OVER (PARTITION BY event_type ORDER BY bucket_start
                         ROWS UNBOUNDED PRECEDING) AS m
   FROM dev
 ),
 ph AS (
-  SELECT event_type, day_start, round(x + {NUDGE}, 4) AS x,
+  SELECT event_type, bucket_start, round(v + {NUDGE}, 4) AS x,
          m - least(0, min(m) OVER (PARTITION BY event_type
-                                   ORDER BY day_start
+                                   ORDER BY bucket_start
                                    ROWS UNBOUNDED PRECEDING)) AS ph_raw
   FROM m
 )
-SELECT event_type, day_start, x,
+SELECT event_type, bucket_start AS day_start, x,
        round(ph_raw + {NUDGE}, 4) AS ph_stat,
        round(ph_raw + {NUDGE}, 4) > {PH_LAMBDA} AS alarm
 FROM ph
@@ -794,36 +769,25 @@ def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one combinable (event_type, day) aggregate; three
     window passes (running mean, running sum, prefix min) over the SAME
     per-key ordering — one exchange, calendar-bounded partitions."""
-    ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            (F.floor(F.col("ts").cast("double") / 86400) * 86400)
-            .cast("long")
-            .alias("day_start"),
-            "value",
-        )
-        .groupBy("event_type", "day_start")
-        .agg(F.avg("value").alias("x"))
-    )
-    w = Window.partitionBy("event_type").orderBy("day_start")
+    daily = mean_series(spark, sf_dir, "event_type", DAY_S)
+    w = Window.partitionBy("event_type").orderBy("bucket_start")
     wp = w.rowsBetween(Window.unboundedPreceding, 0)
     dev = daily.select(
         "event_type",
-        "day_start",
-        "x",
-        (F.col("x") - F.avg("x").over(wp) - PH_DELTA).alias("dev"),
+        "bucket_start",
+        "v",
+        (F.col("v") - F.avg("v").over(wp) - PH_DELTA).alias("dev"),
     )
     m = dev.select(
         "event_type",
-        "day_start",
-        "x",
+        "bucket_start",
+        "v",
         F.sum("dev").over(wp).alias("m"),
     )
     ph = m.select(
         "event_type",
-        "day_start",
-        rnd("x", 4).alias("x"),
+        "bucket_start",
+        rnd("v", 4).alias("x"),
         (F.col("m") - F.least(F.lit(0.0), F.min("m").over(wp))).alias(
             "ph_raw"
         ),
@@ -831,7 +795,7 @@ def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ph_r = rnd("ph_raw", 4)
     return ph.select(
         "event_type",
-        "day_start",
+        F.col("bucket_start").alias("day_start"),
         "x",
         ph_r.alias("ph_stat"),
         (ph_r > PH_LAMBDA).alias("alarm"),

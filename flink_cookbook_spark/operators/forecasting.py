@@ -9,6 +9,14 @@ Mann-Kendall), stationarity (a Dickey-Fuller proxy), whiteness
 seasonal strength), memory (Hurst exponent, effective sample size) and
 lead-lag structure between series (rolling cross-correlation, Kendall's
 tau, a Spearman lead-lag screen, a Granger-causality proxy).
+
+The mean-series queries read one shared series per key and cadence:
+``stats.mean_series(spark, sf_dir, "event_type", DAY_S | HOUR_S)`` in
+Spark and the ``TYPE_DAILY_CTE`` / ``TYPE_HOURLY_CTE`` text in their
+oracles; both floor whole epoch seconds (Spark through ``epoch_seconds``).
+The count-based series (periodogram, rolling cross-correlation, Kendall's
+tau) and the corpus-wide hourly mean of the PACF are different aggregates
+and build their own.
 """
 
 from __future__ import annotations
@@ -17,6 +25,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
+from flink_cookbook_spark.operators.stats import (
+    DAY_S,
+    HOUR_S,
+    TYPE_DAILY_CTE,
+    TYPE_HOURLY_CTE,
+    mean_series,
+)
 from flink_cookbook_spark.registry import NUDGE, register, rnd
 
 
@@ -237,14 +252,9 @@ def _hw_oracle() -> str:
     a, b, g, p = HW_ALPHA, HW_BETA, HW_GAMMA, HW_PERIOD
     l_new = f"{a} * (vals[i + 1] - s[1]) + {1 - a} * (l + b)"
     return f"""
-WITH RECURSIVE hourly AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 3600) * 3600 AS h,
-         avg(value) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH RECURSIVE {TYPE_HOURLY_CTE},
 series AS (
-  SELECT event_type, list(v ORDER BY h) AS vals
+  SELECT event_type, list(v ORDER BY bucket_start) AS vals
   FROM hourly GROUP BY event_type
 ),
 steps AS (
@@ -295,17 +305,9 @@ def holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin replays the identical fold as a RECURSIVE CTE carrying
     the seasonal list — NOT list_reduce (the in-place coupled-
     recurrence hazard documented at ``holt_linear_forecast``)."""
-    ev = load(spark, sf_dir, "events")
-    sec = F.col("ts").cast("double")
-    hourly = (
-        ev.select(
-            "event_type", (F.floor(sec / 3600) * 3600).alias("h"), "value"
-        )
-        .groupBy("event_type", "h")
-        .agg(F.avg("value").alias("v"))
-    )
+    hourly = mean_series(spark, sf_dir, "event_type", HOUR_S)
     series = hourly.groupBy("event_type").agg(
-        F.array_sort(F.collect_list(F.struct("h", "v"))).alias("sv")
+        F.array_sort(F.collect_list(F.struct("bucket_start", "v"))).alias("sv")
     )
     a, b, g, p = HW_ALPHA, HW_BETA, HW_GAMMA, HW_PERIOD
     l0 = f"aggregate(slice(vals, 1, {p}), 0.0D, (acc, x) -> acc + x) / {p}"
@@ -348,16 +350,13 @@ def holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Theil-Sen robust trend per key
 # --------------------------------------------------------------------------
 
-_THEILSEN_ORACLE = """
-WITH daily AS (
-  SELECT event_type, CAST(floor(epoch(ts) / 86400) AS BIGINT) AS d,
-         avg(value) AS v
-  FROM events GROUP BY 1, 2
-),
+_THEILSEN_ORACLE = f"""
+WITH {TYPE_DAILY_CTE},
+days AS (SELECT event_type, bucket_start // {DAY_S} AS d, v FROM daily),
 pairs AS (
   SELECT a.event_type, a.d AS d1, b.d AS d2,
          (b.v - a.v) / CAST(b.d - a.d AS DOUBLE) AS slope
-  FROM daily a JOIN daily b
+  FROM days a JOIN days b
     ON a.event_type = b.event_type AND a.d < b.d
 ),
 med_slope AS (
@@ -371,7 +370,7 @@ med_slope AS (
 ),
 resid AS (
   SELECT d.event_type, m.n_pairs, m.ts_slope, d.v - m.ts_slope * d.d AS r, d.d
-  FROM daily d JOIN med_slope m ON d.event_type = m.event_type
+  FROM days d JOIN med_slope m ON d.event_type = m.event_type
 )
 SELECT event_type, n_days, n_pairs,
        round(ts_slope + 1e-6, 6) AS slope_per_day,
@@ -399,10 +398,8 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable agg FIRST; the pairwise slope set is quadratic only in
     the bounded daily-series length (30 days -> 435 pairs per key),
     and per-key medians are rank-limited window picks."""
-    ev = load(spark, sf_dir, "events")
-    day = F.floor(F.col("ts").cast("double") / 86400).cast("long")
-    daily = ev.groupBy("event_type", day.alias("d")).agg(
-        F.avg("value").alias("v")
+    daily = mean_series(spark, sf_dir, "event_type", DAY_S).select(
+        "event_type", (F.col("bucket_start") / DAY_S).cast("long").alias("d"), "v"
     )
     a = daily.select("event_type", F.col("d").alias("d1"), F.col("v").alias("v1"))
     c = daily.select("event_type", F.col("d").alias("d2"), F.col("v").alias("v2"))
@@ -468,19 +465,14 @@ BACKTEST_SEASON = 24
 
 
 _BACKTEST_ORACLE = f"""
-WITH hourly AS (
-  SELECT event_type,
-         CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 AS h,
-         avg(value) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH {TYPE_HOURLY_CTE},
 lagged AS (
   SELECT event_type, v,
          lag(v, 1) OVER w AS l1,
          lag(v, 2) OVER w AS l2,
          lag(v, {BACKTEST_SEASON}) OVER w AS ls
   FROM hourly
-  WINDOW w AS (PARTITION BY event_type ORDER BY h)
+  WINDOW w AS (PARTITION BY event_type ORDER BY bucket_start)
 ),
 preds AS (
   SELECT event_type, v, t.method,
@@ -520,16 +512,8 @@ def forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one combinable hash agg to (key, hour), one per-key
     ordered window pass for the lags, a 3-way in-plan method unpivot,
     and one bounded final agg + windowed winner pick."""
-    ev = load(spark, sf_dir, "events")
-    sec = F.col("ts").cast("double")
-    hourly = (
-        ev.select(
-            "event_type", (F.floor(sec / 3600) * 3600).alias("h"), "value"
-        )
-        .groupBy("event_type", "h")
-        .agg(F.avg("value").alias("v"))
-    )
-    w = Window.partitionBy("event_type").orderBy("h")
+    hourly = mean_series(spark, sf_dir, "event_type", HOUR_S)
+    w = Window.partitionBy("event_type").orderBy("bucket_start")
     lagged = hourly.select(
         "event_type",
         "v",
@@ -584,14 +568,11 @@ HURST_BLOCKS = (8, 16, 32)
 
 
 _HURST_ORACLE = f"""
-WITH hourly AS (
-  SELECT event_type, CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         avg(value) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH {TYPE_HOURLY_CTE},
 indexed AS (
   SELECT event_type, v,
-         row_number() OVER (PARTITION BY event_type ORDER BY h) - 1 AS i
+         row_number() OVER (PARTITION BY event_type ORDER BY bucket_start) - 1
+           AS i
   FROM hourly
 ),
 fanned AS (
@@ -658,16 +639,8 @@ def hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats are hash aggs over (key, size, block) with the in-block
     cumulative deviation one bounded keyed window; the final fit is a
     per-key 3-point regression."""
-    ev = load(spark, sf_dir, "events")
-    sec = F.col("ts").cast("double")
-    hourly = (
-        ev.select(
-            "event_type", (F.floor(sec / 3600)).cast("long").alias("h"), "value"
-        )
-        .groupBy("event_type", "h")
-        .agg(F.avg("value").alias("v"))
-    )
-    wk = Window.partitionBy("event_type").orderBy("h")
+    hourly = mean_series(spark, sf_dir, "event_type", HOUR_S)
+    wk = Window.partitionBy("event_type").orderBy("bucket_start")
     indexed = hourly.select(
         "event_type", "v", (F.row_number().over(wk) - 1).alias("i")
     )
@@ -826,19 +799,15 @@ CONFORMAL_SEASON = 24
 
 
 _CONFORMAL_ORACLE = f"""
-WITH hourly AS (
-  SELECT event_type, CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         avg(value) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH {TYPE_HOURLY_CTE},
 scored AS (
   SELECT * FROM (
-    SELECT event_type, h, v,
+    SELECT event_type, bucket_start, v,
            lag(v, {CONFORMAL_SEASON}) OVER w AS pred,
            row_number() OVER w AS rn,
            count(*) OVER (PARTITION BY event_type) AS n_tot
     FROM hourly
-    WINDOW w AS (PARTITION BY event_type ORDER BY h)
+    WINDOW w AS (PARTITION BY event_type ORDER BY bucket_start)
   ) WHERE pred IS NOT NULL
 ),
 cal AS (
@@ -896,19 +865,11 @@ def conformal_prediction_interval(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape: one (key, hour) agg, one per-key lag window, one
     rank-limited calibration-quantile pick, one eval aggregate — all
     keyed, nothing global."""
-    ev = load(spark, sf_dir, "events")
-    sec = F.col("ts").cast("double")
-    hourly = (
-        ev.select(
-            "event_type", (F.floor(sec / 3600)).cast("long").alias("h"), "value"
-        )
-        .groupBy("event_type", "h")
-        .agg(F.avg("value").alias("v"))
-    )
-    wk = Window.partitionBy("event_type").orderBy("h")
+    hourly = mean_series(spark, sf_dir, "event_type", HOUR_S)
+    wk = Window.partitionBy("event_type").orderBy("bucket_start")
     scored = hourly.select(
         "event_type",
-        "h",
+        "bucket_start",
         "v",
         F.lag("v", CONFORMAL_SEASON).over(wk).alias("pred"),
         F.row_number().over(wk).alias("rn"),
@@ -967,25 +928,21 @@ ESS_LAGS = (1, 2, 3, 4, 5)
 
 def _ess_oracle() -> str:
     lag_cols = ",\n         ".join(
-        f"lag(x, {k}) OVER w AS x{k}" for k in ESS_LAGS
+        f"lag(v, {k}) OVER w AS x{k}" for k in ESS_LAGS
     )
     corr_cols = ",\n         ".join(
-        f"corr(x, x{k}) AS r{k}" for k in ESS_LAGS
+        f"corr(v, x{k}) AS r{k}" for k in ESS_LAGS
     )
     rho = " + ".join(
         f"greatest(COALESCE(r{k}, 0.0), 0.0)" for k in ESS_LAGS
     )
     return f"""
-WITH hourly AS (
-  SELECT event_type, CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         avg(value) AS x
-  FROM events GROUP BY 1, 2
-),
+WITH {TYPE_HOURLY_CTE},
 lagged AS (
-  SELECT event_type, x,
+  SELECT event_type, v,
          {lag_cols}
   FROM hourly
-  WINDOW w AS (PARTITION BY event_type ORDER BY h)
+  WINDOW w AS (PARTITION BY event_type ORDER BY bucket_start)
 ),
 agg AS (
   SELECT event_type, count(*) AS n_obs,
@@ -1015,24 +972,16 @@ def effective_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     window pass, one per-key ``corr`` aggregate per lag — identical
     plan shape to ``autocorrelation``, generalized to the lag sweep
     and reduced to the single actionable number."""
-    ev = load(spark, sf_dir, "events")
-    sec = F.col("ts").cast("double")
-    hourly = (
-        ev.select(
-            "event_type", (F.floor(sec / 3600)).cast("long").alias("h"), "value"
-        )
-        .groupBy("event_type", "h")
-        .agg(F.avg("value").alias("x"))
-    )
-    w = Window.partitionBy("event_type").orderBy("h")
+    hourly = mean_series(spark, sf_dir, "event_type", HOUR_S)
+    w = Window.partitionBy("event_type").orderBy("bucket_start")
     lagged = hourly.select(
         "event_type",
-        "x",
-        *[F.lag("x", k).over(w).alias(f"x{k}") for k in ESS_LAGS],
+        "v",
+        *[F.lag("v", k).over(w).alias(f"x{k}") for k in ESS_LAGS],
     )
     agg = lagged.groupBy("event_type").agg(
         F.count("*").alias("n_obs"),
-        *[F.corr("x", f"x{k}").alias(f"r{k}") for k in ESS_LAGS],
+        *[F.corr("v", f"x{k}").alias(f"r{k}") for k in ESS_LAGS],
     )
     rho_sum = None
     for k in ESS_LAGS:
@@ -1206,19 +1155,14 @@ MK_Z_CRIT = 1.96  #: two-sided normal critical value at alpha = 0.05
 
 
 _MK_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) * 86400 AS day_start,
-         round(avg(value) + {NUDGE}, 9) AS x
-  FROM events GROUP BY 1, 2
-),
+WITH {TYPE_DAILY_CTE},
 pairs AS (
   SELECT a.event_type,
          CAST(sign(b.x - a.x) AS BIGINT) AS sgn,
-         round((b.x - a.x) / ((b.day_start - a.day_start) / 86400.0)
+         round((b.x - a.x) / ((b.bucket_start - a.bucket_start) / 86400.0)
                + {NUDGE}, 9) AS slope
   FROM daily a JOIN daily b
-    ON a.event_type = b.event_type AND b.day_start > a.day_start
+    ON a.event_type = b.event_type AND b.bucket_start > a.bucket_start
 ),
 per AS (
   SELECT event_type, CAST(sum(sgn) AS BIGINT) AS s_stat,
@@ -1275,23 +1219,12 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the DAILY aggregate — calendar-bounded (days^2/2 pairs per
     type, never event-cardinality). Sen's slope is an exact percentile
     over those bounded pairs."""
-    ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            (F.floor(F.col("ts").cast("double") / 86400) * 86400)
-            .cast("long")
-            .alias("day_start"),
-            "value",
-        )
-        .groupBy("event_type", "day_start")
-        .agg(F.round(F.avg("value") + F.lit(NUDGE), 9).alias("x"))
-    )
+    daily = mean_series(spark, sf_dir, "event_type", DAY_S)
     d1 = daily.select(
-        "event_type", F.col("day_start").alias("t1"), F.col("x").alias("x1")
+        "event_type", F.col("bucket_start").alias("t1"), F.col("x").alias("x1")
     )
     d2 = daily.select(
-        "event_type", F.col("day_start").alias("t2"), F.col("x").alias("x2")
+        "event_type", F.col("bucket_start").alias("t2"), F.col("x").alias("x2")
     )
     pairs = (
         d1.join(d2, "event_type")
@@ -1355,18 +1288,13 @@ SPEARMAN_MAX_LAG = 3  #: lags screened (days); 0 = contemporaneous
 
 
 _SPEARMAN_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) * 86400 AS day_start,
-         round(avg(value) + {NUDGE}, 9) AS x
-  FROM events GROUP BY 1, 2
-),
+WITH {TYPE_DAILY_CTE},
 lags AS (SELECT unnest(range(0, {SPEARMAN_MAX_LAG + 1})) AS lag),
 joined AS (
   SELECT a.event_type AS type_a, b.event_type AS type_b, l.lag,
          a.x AS xa, b.x AS xb
   FROM daily a CROSS JOIN lags l
-  JOIN daily b ON a.day_start + l.lag * 86400 = b.day_start
+  JOIN daily b ON a.bucket_start + l.lag * 86400 = b.bucket_start
   WHERE a.event_type < b.event_type
 ),
 ranked AS (
@@ -1402,29 +1330,18 @@ def spearman_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the calendar-bounded daily aggregate; rank windows are
     partitioned per (pair, lag) — overlap-bounded partitions, never
     event-cardinality."""
-    ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            (F.floor(F.col("ts").cast("double") / 86400) * 86400)
-            .cast("long")
-            .alias("day_start"),
-            "value",
-        )
-        .groupBy("event_type", "day_start")
-        .agg(F.round(F.avg("value") + F.lit(NUDGE), 9).alias("x"))
-    )
+    daily = mean_series(spark, sf_dir, "event_type", DAY_S)
     lags = spark.range(SPEARMAN_MAX_LAG + 1).select(
         F.col("id").cast("long").alias("lag")
     )
     a = daily.select(
         F.col("event_type").alias("type_a"),
-        F.col("day_start").alias("day_a"),
+        F.col("bucket_start").alias("day_a"),
         F.col("x").alias("xa"),
     ).crossJoin(F.broadcast(lags))
     b = daily.select(
         F.col("event_type").alias("type_b"),
-        F.col("day_start").alias("day_b"),
+        F.col("bucket_start").alias("day_b"),
         F.col("x").alias("xb"),
     )
     joined = a.join(
@@ -1461,15 +1378,10 @@ ADF_CRIT = -2.86  #: DF tau critical value, constant-only model, n->inf, 5%
 
 
 _ADF_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) * 86400 AS day_start,
-         round(avg(value) + {NUDGE}, 9) AS x
-  FROM events GROUP BY 1, 2
-),
+WITH {TYPE_DAILY_CTE},
 lagged AS (
   SELECT event_type, x,
-         lag(x) OVER (PARTITION BY event_type ORDER BY day_start) AS xl
+         lag(x) OVER (PARTITION BY event_type ORDER BY bucket_start) AS xl
   FROM daily
 ),
 obs AS (
@@ -1521,19 +1433,8 @@ def adf_unit_root_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one lag window per type over the calendar-bounded
     daily aggregate, then ONE combinable aggregate carrying the five
     OLS sufficient sums — everything after is per-type algebra."""
-    ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            (F.floor(F.col("ts").cast("double") / 86400) * 86400)
-            .cast("long")
-            .alias("day_start"),
-            "value",
-        )
-        .groupBy("event_type", "day_start")
-        .agg(F.round(F.avg("value") + F.lit(NUDGE), 9).alias("x"))
-    )
-    w = Window.partitionBy("event_type").orderBy("day_start")
+    daily = mean_series(spark, sf_dir, "event_type", DAY_S)
+    w = Window.partitionBy("event_type").orderBy("bucket_start")
     lagged = daily.select(
         "event_type",
         "x",
@@ -1580,25 +1481,20 @@ def adf_unit_root_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _SEASONAL_ORACLE = f"""
-WITH daily0 AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) * 86400 AS day_start,
-         round(avg(value) + {NUDGE}, 9) AS x
-  FROM events GROUP BY 1, 2
-),
-daily AS (
-  SELECT event_type, day_start, x,
-         (day_start // 86400 + 4) % 7 AS dow,
-         day_start / 86400.0 AS t
-  FROM daily0
+WITH {TYPE_DAILY_CTE},
+dated AS (
+  SELECT event_type, bucket_start, x,
+         (bucket_start // 86400 + 4) % 7 AS dow,
+         bucket_start / 86400.0 AS t
+  FROM daily
 ),
 dowm AS (
   SELECT event_type, dow, avg(x) AS dow_mean
-  FROM daily GROUP BY 1, 2
+  FROM dated GROUP BY 1, 2
 ),
 seas AS (
   SELECT d.event_type, d.x - m.dow_mean AS resid_s, d.x, d.t
-  FROM daily d JOIN dowm m
+  FROM dated d JOIN dowm m
     ON d.event_type = m.event_type AND d.dow = m.dow
 ),
 g AS (
@@ -1646,24 +1542,13 @@ def seasonal_strength_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: calendar-bounded daily aggregate; the dow model is a
     broadcast 7-row join; the trend model is the 5-sum OLS; ONE
     combinable pass each. No windows at all."""
-    ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            (F.floor(F.col("ts").cast("double") / 86400) * 86400)
-            .cast("long")
-            .alias("day_start"),
-            "value",
-        )
-        .groupBy("event_type", "day_start")
-        .agg(F.round(F.avg("value") + F.lit(NUDGE), 9).alias("x"))
-    )
+    daily = mean_series(spark, sf_dir, "event_type", DAY_S)
     daily = daily.select(
         "event_type",
-        "day_start",
+        "bucket_start",
         "x",
-        ((F.col("day_start") / 86400 + 4) % 7).cast("long").alias("dow"),
-        (F.col("day_start") / F.lit(86400.0)).alias("t"),
+        ((F.col("bucket_start") / 86400 + 4) % 7).cast("long").alias("dow"),
+        (F.col("bucket_start") / F.lit(86400.0)).alias("t"),
     )
     dowm = daily.groupBy("event_type", "dow").agg(
         F.avg("x").alias("dow_mean")
@@ -1720,7 +1605,7 @@ def _lb_oracle() -> str:
     )
     lags = ",\n         ".join(
         f"lag(d.x, {k}) OVER (PARTITION BY d.event_type"
-        f" ORDER BY d.day_start) AS xl{k}"
+        f" ORDER BY d.bucket_start) AS xl{k}"
         for k in range(1, LB_LAGS + 1)
     )
     rdefs = ",\n         ".join(
@@ -1735,12 +1620,7 @@ def _lb_oracle() -> str:
         f"round(r{k} + {NUDGE}, 6) AS r{k}" for k in range(1, LB_LAGS + 1)
     )
     return f"""
-WITH daily AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) * 86400 AS day_start,
-         round(avg(value) + {NUDGE}, 9) AS x
-  FROM events GROUP BY 1, 2
-),
+WITH {TYPE_DAILY_CTE},
 means AS (
   SELECT event_type, avg(x) AS xbar, count(*) AS n_days
   FROM daily GROUP BY 1
@@ -1791,22 +1671,11 @@ def ljung_box_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: calendar-bounded daily aggregate; ONE broadcast mean
     join; LB_LAGS lag columns from one per-type window pass; one
     combinable aggregate of the lagged products."""
-    ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            (F.floor(F.col("ts").cast("double") / 86400) * 86400)
-            .cast("long")
-            .alias("day_start"),
-            "value",
-        )
-        .groupBy("event_type", "day_start")
-        .agg(F.round(F.avg("value") + F.lit(NUDGE), 9).alias("x"))
-    )
+    daily = mean_series(spark, sf_dir, "event_type", DAY_S)
     means = daily.groupBy("event_type").agg(
         F.avg("x").alias("xbar"), F.count("*").alias("n_days")
     )
-    w = Window.partitionBy("event_type").orderBy("day_start")
+    w = Window.partitionBy("event_type").orderBy("bucket_start")
     lagged = daily.select(
         "event_type",
         "x",
@@ -1852,17 +1721,12 @@ GRANGER_CRIT = 3.8415  #: F(1, inf) 5% critical value
 
 
 _GRANGER_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) * 86400 AS day_start,
-         round(avg(value) + {NUDGE}, 9) AS x
-  FROM events GROUP BY 1, 2
-),
+WITH {TYPE_DAILY_CTE},
 lagged AS (
-  SELECT event_type, day_start, x,
-         lag(x) OVER (PARTITION BY event_type ORDER BY day_start) AS xl,
-         day_start - lag(day_start) OVER (PARTITION BY event_type
-                                          ORDER BY day_start) AS gap
+  SELECT event_type, bucket_start, x,
+         lag(x) OVER (PARTITION BY event_type ORDER BY bucket_start) AS xl,
+         bucket_start - lag(bucket_start) OVER (PARTITION BY event_type
+                                          ORDER BY bucket_start) AS gap
   FROM daily
 ),
 clean AS (
@@ -1871,7 +1735,7 @@ clean AS (
 j AS (
   SELECT a.event_type AS type_a, b.event_type AS type_b,
          b.x AS y, b.xl AS bl, a.xl AS al
-  FROM clean b JOIN clean a ON b.day_start = a.day_start
+  FROM clean b JOIN clean a ON b.bucket_start = a.bucket_start
   WHERE a.event_type <> b.event_type
 ),
 g AS (
@@ -1932,38 +1796,27 @@ def granger_causality_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the per-type daily+lag table self-equi-joins ON DAY
     (k^2 rows per day, calendar x k^2 bounded), then ONE combinable
     aggregate of the ten OLS sums per ordered pair — algebra after."""
-    ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            (F.floor(F.col("ts").cast("double") / 86400) * 86400)
-            .cast("long")
-            .alias("day_start"),
-            "value",
-        )
-        .groupBy("event_type", "day_start")
-        .agg(F.round(F.avg("value") + F.lit(NUDGE), 9).alias("x"))
-    )
-    w = Window.partitionBy("event_type").orderBy("day_start")
+    daily = mean_series(spark, sf_dir, "event_type", DAY_S)
+    w = Window.partitionBy("event_type").orderBy("bucket_start")
     lagged = daily.select(
         "event_type",
-        "day_start",
+        "bucket_start",
         "x",
         F.lag("x").over(w).alias("xl"),
-        (F.col("day_start") - F.lag("day_start").over(w)).alias("gap"),
+        (F.col("bucket_start") - F.lag("bucket_start").over(w)).alias("gap"),
     ).where(F.col("xl").isNotNull() & (F.col("gap") == 86400))
     b = lagged.select(
         F.col("event_type").alias("type_b"),
-        "day_start",
+        "bucket_start",
         F.col("x").alias("y"),
         F.col("xl").alias("bl"),
     )
     a = lagged.select(
         F.col("event_type").alias("type_a"),
-        "day_start",
+        "bucket_start",
         F.col("xl").alias("al"),
     )
-    j = b.join(a, "day_start").where(F.col("type_a") != F.col("type_b"))
+    j = b.join(a, "bucket_start").where(F.col("type_a") != F.col("type_b"))
     g = j.groupBy("type_a", "type_b").agg(
         F.count("*").alias("n_obs"),
         F.sum("y").alias("sy"),

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
+from flink_cookbook_spark.functions.time import epoch_seconds
 from flink_cookbook_spark.pipeline.dedup import _SQL_HASH, _portable_hash
 from flink_cookbook_spark.pipeline.text import INV_LN2
 from flink_cookbook_spark.registry import NUDGE, register, rnd
@@ -30,6 +31,95 @@ from flink_cookbook_spark.registry import NUDGE, register, rnd
 #: second-half test, and the train/eval split of held-out scoring. At
 #: production scale this is "reference window vs current window".
 SPLIT_EPOCH_S = 1705363200
+
+DAY_S = 86400  #: seconds per daily bucket
+HOUR_S = 3600  #: seconds per hourly bucket
+
+# --------------------------------------------------------------------------
+# per-key calendar mean series: the one input of the series diagnostics
+# --------------------------------------------------------------------------
+#
+# The forecasters, drift monitors and repeated-measures tests here, in
+# ``drift.py``, ``forecasting.py`` and ``timeseries.py`` all read one
+# thing: a key's regular series of mean ``value`` per calendar bucket.
+# ``mean_series`` builds it in Spark and ``series_cte`` is its DuckDB
+# text; each oracle composes the shared CTEs it reads by interpolation.
+
+
+def mean_series(
+    spark: SparkSession, sf_dir: str, key: str, seconds: int
+) -> DataFrame:
+    """One row per (``key``, bucket holding events): ``bucket_start``
+    (event time floored to ``seconds`` through ``epoch_seconds``), ``n``
+    events, ``v`` = avg(value) and ``x`` = ``v`` rounded to 9 dp. Tests
+    that rank, sign, pair or binarize the means read ``x`` so ties are
+    engine-identical; smoothers and forecasters read ``v``. Catalyst
+    prunes the columns a caller does not read and folds the rounding
+    into the aggregate."""
+    sec = epoch_seconds("ts")
+    return (
+        load(spark, sf_dir, "events")
+        .select(
+            key, (F.floor(sec / seconds) * seconds).alias("bucket_start"), "value"
+        )
+        .groupBy(key, "bucket_start")
+        .agg(F.count("*").alias("n"), F.avg("value").alias("v"))
+        .withColumn("x", rnd("v", 9))
+    )
+
+
+def complete_days(daily: DataFrame) -> DataFrame:
+    """The per-type daily series restricted to complete days (every
+    event type has a mean that day), with the panel width ``k``: the
+    blocks of the repeated-measures tests."""
+    k_row = daily.agg(F.countDistinct("event_type").alias("k"))
+    day_counts = daily.groupBy("bucket_start").agg(F.count("*").alias("cnt"))
+    return (
+        daily.join(day_counts, "bucket_start")
+        .crossJoin(F.broadcast(k_row))
+        .where(F.col("cnt") == F.col("k"))
+    )
+
+
+def daily_median(daily: DataFrame) -> DataFrame:
+    """Each event type's median 9-dp daily mean, rounded to 9 dp: the
+    line the binary day-state tests flag against."""
+    return daily.groupBy("event_type").agg(
+        rnd(F.expr("percentile(x, 0.5)"), 9).alias("med")
+    )
+
+
+def series_cte(name: str, key: str, seconds: int) -> str:
+    """``mean_series`` as the DuckDB CTE ``name``: same columns, same
+    bucket arithmetic (whole epoch seconds, floored)."""
+    return f"""{name} AS (
+  SELECT {key},
+         (CAST(floor(epoch(ts)) AS BIGINT) // {seconds}) * {seconds}
+           AS bucket_start,
+         count(*) AS n, avg(value) AS v,
+         round(avg(value) + {NUDGE}, 9) AS x
+  FROM events GROUP BY 1, 2
+)"""
+
+
+#: the series CTEs in use: per event type by day and by hour.
+TYPE_DAILY_CTE = series_cte("daily", "event_type", DAY_S)
+TYPE_HOURLY_CTE = series_cte("hourly", "event_type", HOUR_S)
+
+#: ``complete_days`` over ``daily``: CTE ``complete``.
+COMPLETE_DAYS_CTE = """k_row AS (SELECT count(DISTINCT event_type) AS k FROM daily),
+dc AS (SELECT bucket_start, count(*) AS cnt FROM daily GROUP BY 1),
+complete AS (
+  SELECT d.event_type, d.bucket_start, d.x, k.k
+  FROM daily d JOIN dc ON d.bucket_start = dc.bucket_start CROSS JOIN k_row k
+  WHERE dc.cnt = k.k
+)"""
+
+#: ``daily_median`` over ``daily``: CTE ``med``.
+DAILY_MEDIAN_CTE = f"""med AS (
+  SELECT event_type, round(quantile_cont(x, 0.5) + {NUDGE}, 9) AS med
+  FROM daily GROUP BY 1
+)"""
 
 # --------------------------------------------------------------------------
 # Kaplan-Meier survival of signup -> first-purchase delay
@@ -1702,23 +1792,12 @@ def levene_variance_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _FRIEDMAN_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) * 86400 AS day_start,
-         round(avg(value) + {NUDGE}, 9) AS x
-  FROM events GROUP BY 1, 2
-),
-k_row AS (SELECT count(DISTINCT event_type) AS k FROM daily),
-dc AS (SELECT day_start, count(*) AS cnt FROM daily GROUP BY 1),
-complete AS (
-  SELECT d.event_type, d.day_start, d.x, k.k
-  FROM daily d JOIN dc ON d.day_start = dc.day_start CROSS JOIN k_row k
-  WHERE dc.cnt = k.k
-),
+WITH {TYPE_DAILY_CTE},
+{COMPLETE_DAYS_CTE},
 ranked AS (
   SELECT event_type, k,
-         rank() OVER (PARTITION BY day_start ORDER BY x)
-         + (count(*) OVER (PARTITION BY day_start, x) - 1) / 2.0
+         rank() OVER (PARTITION BY bucket_start ORDER BY x)
+         + (count(*) OVER (PARTITION BY bucket_start, x) - 1) / 2.0
            AS midrank
   FROM complete
 ),
@@ -1757,30 +1836,12 @@ def friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one calendar-bounded daily aggregate; the ranking
     window is partitioned PER DAY (k rows per partition — constant);
     everything after is k-bounded algebra."""
-    ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            (F.floor(F.col("ts").cast("double") / 86400) * 86400)
-            .cast("long")
-            .alias("day_start"),
-            "value",
-        )
-        .groupBy("event_type", "day_start")
-        .agg(F.round(F.avg("value") + F.lit(NUDGE), 9).alias("x"))
-    )
-    k_row = daily.agg(F.countDistinct("event_type").alias("k"))
-    day_counts = daily.groupBy("day_start").agg(F.count("*").alias("cnt"))
-    complete = (
-        daily.join(day_counts, "day_start")
-        .crossJoin(F.broadcast(k_row))
-        .where(F.col("cnt") == F.col("k"))
-    )
-    w_rank = Window.partitionBy("day_start").orderBy("x")
-    w_tie = Window.partitionBy("day_start", "x")
+    complete = complete_days(mean_series(spark, sf_dir, "event_type", DAY_S))
+    w_rank = Window.partitionBy("bucket_start").orderBy("x")
+    w_tie = Window.partitionBy("bucket_start", "x")
     ranked = complete.select(
         "event_type",
-        "day_start",
+        "bucket_start",
         "k",
         (
             F.rank().over(w_rank)
@@ -2080,35 +2141,22 @@ def odds_ratio_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _COCHRAN_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) * 86400 AS day_start,
-         round(avg(value) + {NUDGE}, 9) AS x
-  FROM events GROUP BY 1, 2
-),
-k_row AS (SELECT count(DISTINCT event_type) AS k FROM daily),
-dc AS (SELECT day_start, count(*) AS cnt FROM daily GROUP BY 1),
-med AS (
-  SELECT event_type, round(quantile_cont(x, 0.5) + {NUDGE}, 9) AS med
-  FROM daily GROUP BY 1
-),
-complete AS (
-  SELECT d.event_type, d.day_start, k.k,
-         CAST(d.x > m.med AS BIGINT) AS s
-  FROM daily d
-  JOIN dc ON d.day_start = dc.day_start
-  CROSS JOIN k_row k
-  JOIN med m ON d.event_type = m.event_type
-  WHERE dc.cnt = k.k
+WITH {TYPE_DAILY_CTE},
+{COMPLETE_DAYS_CTE},
+{DAILY_MEDIAN_CTE},
+flagged AS (
+  SELECT c.event_type, c.bucket_start, c.k,
+         CAST(c.x > m.med AS BIGINT) AS s
+  FROM complete c JOIN med m ON c.event_type = m.event_type
 ),
 rows_r AS (
-  SELECT day_start, CAST(sum(s) AS BIGINT) AS r_i
-  FROM complete GROUP BY 1
+  SELECT bucket_start, CAST(sum(s) AS BIGINT) AS r_i
+  FROM flagged GROUP BY 1
 ),
 cols_c AS (
   SELECT event_type, max(k) AS k, count(*) AS n_days,
          CAST(sum(s) AS BIGINT) AS c_j
-  FROM complete GROUP BY 1
+  FROM flagged GROUP BY 1
 ),
 rtot AS (
   SELECT CAST(sum(r_i) AS BIGINT) AS t,
@@ -2141,36 +2189,18 @@ def cochran_q_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type median join -> two bounded aggregates (per-day row sums,
     per-type column sums). Nothing touches event cardinality after
     the first groupBy."""
-    ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            (F.floor(F.col("ts").cast("double") / 86400) * 86400)
-            .cast("long")
-            .alias("day_start"),
-            "value",
-        )
-        .groupBy("event_type", "day_start")
-        .agg(F.round(F.avg("value") + F.lit(NUDGE), 9).alias("x"))
-    )
-    k_row = daily.agg(F.countDistinct("event_type").alias("k"))
-    day_counts = daily.groupBy("day_start").agg(F.count("*").alias("cnt"))
-    med = daily.groupBy("event_type").agg(
-        F.round(F.expr("percentile(x, 0.5)") + F.lit(NUDGE), 9).alias("med")
-    )
+    daily = mean_series(spark, sf_dir, "event_type", DAY_S)
     complete = (
-        daily.join(day_counts, "day_start")
-        .crossJoin(F.broadcast(k_row))
-        .where(F.col("cnt") == F.col("k"))
-        .join(F.broadcast(med), "event_type")
+        complete_days(daily)
+        .join(F.broadcast(daily_median(daily)), "event_type")
         .select(
             "event_type",
-            "day_start",
+            "bucket_start",
             "k",
             (F.col("x") > F.col("med")).cast("long").alias("s"),
         )
     )
-    rows_r = complete.groupBy("day_start").agg(F.sum("s").alias("r_i"))
+    rows_r = complete.groupBy("bucket_start").agg(F.sum("s").alias("r_i"))
     cols_c = complete.groupBy("event_type").agg(
         F.max("k").alias("k"),
         F.count("*").alias("n_days"),
@@ -2331,26 +2361,18 @@ MCNEMAR_CRIT = 3.841  #: chi-square 5% critical value at df = 1
 
 
 _MCNEMAR_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) * 86400 AS day_start,
-         round(avg(value) + {NUDGE}, 9) AS x
-  FROM events GROUP BY 1, 2
-),
-med AS (
-  SELECT event_type, round(quantile_cont(x, 0.5) + {NUDGE}, 9) AS med
-  FROM daily GROUP BY 1
-),
+WITH {TYPE_DAILY_CTE},
+{DAILY_MEDIAN_CTE},
 flagged AS (
-  SELECT d.event_type, d.day_start, d.x > m.med AS hi
+  SELECT d.event_type, d.bucket_start, d.x > m.med AS hi
   FROM daily d JOIN med m ON d.event_type = m.event_type
 ),
 paired AS (
   SELECT event_type, hi,
-         lag(hi) OVER (PARTITION BY event_type ORDER BY day_start)
+         lag(hi) OVER (PARTITION BY event_type ORDER BY bucket_start)
            AS hi_prev,
-         day_start - lag(day_start) OVER (PARTITION BY event_type
-                                          ORDER BY day_start) AS gap
+         bucket_start - lag(bucket_start) OVER (PARTITION BY event_type
+                                                ORDER BY bucket_start) AS gap
   FROM flagged
 ),
 g AS (
@@ -2388,33 +2410,19 @@ def mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: calendar-bounded daily aggregate + broadcast median
     join + one lag window per type + ONE combinable count aggregate."""
-    ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            (F.floor(F.col("ts").cast("double") / 86400) * 86400)
-            .cast("long")
-            .alias("day_start"),
-            "value",
-        )
-        .groupBy("event_type", "day_start")
-        .agg(F.round(F.avg("value") + F.lit(NUDGE), 9).alias("x"))
-    )
-    med = daily.groupBy("event_type").agg(
-        F.round(F.expr("percentile(x, 0.5)") + F.lit(NUDGE), 9).alias("med")
-    )
-    flagged = daily.join(F.broadcast(med), "event_type").select(
+    daily = mean_series(spark, sf_dir, "event_type", DAY_S)
+    flagged = daily.join(F.broadcast(daily_median(daily)), "event_type").select(
         "event_type",
-        "day_start",
+        "bucket_start",
         (F.col("x") > F.col("med")).alias("hi"),
     )
-    w = Window.partitionBy("event_type").orderBy("day_start")
+    w = Window.partitionBy("event_type").orderBy("bucket_start")
     paired = flagged.select(
         "event_type",
         "hi",
         F.lag("hi").over(w).alias("hi_prev"),
-        (F.col("day_start") - F.lag("day_start").over(w)).alias("gap"),
-    ).where(F.col("hi_prev").isNotNull() & (F.col("gap") == 86400))
+        (F.col("bucket_start") - F.lag("bucket_start").over(w)).alias("gap"),
+    ).where(F.col("hi_prev").isNotNull() & (F.col("gap") == DAY_S))
     g = paired.groupBy("event_type").agg(
         F.count("*").alias("n_pairs"),
         F.sum((F.col("hi_prev") & ~F.col("hi")).cast("long")).alias("b"),

@@ -25,11 +25,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.operators.stats import SPLIT_EPOCH_S
+from flink_cookbook_spark.operators.stats import (
+    HOUR_S,
+    SPLIT_EPOCH_S,
+    TYPE_HOURLY_CTE,
+    mean_series,
+    series_cte,
+)
 from flink_cookbook_spark.registry import register, rnd
 from flink_cookbook_spark.functions.time import epoch_seconds
 
 _BUCKET = 900  # 15-min gap-fill buckets
+
+#: the per-user series CTEs: 15-minute and hourly means.
+USER_15MIN_CTE = series_cte("obs", "user_id", _BUCKET)
+USER_HOURLY_CTE = series_cte("hourly", "user_id", HOUR_S)
 
 
 def gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -45,17 +55,7 @@ def gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-key left join back, and one WindowExec for the carry — every
     exchange hashes on user_id.
     """
-    ev = load(spark, sf_dir, "events")
-    sec = epoch_seconds("ts")
-    obs = (
-        ev.select(
-            "user_id",
-            ((sec / _BUCKET).cast("long") * _BUCKET).alias("bucket_start"),
-            "value",
-        )
-        .groupBy("user_id", "bucket_start")
-        .agg(F.count("*").alias("n_events"), F.avg("value").alias("avg_value"))
-    )
+    obs = mean_series(spark, sf_dir, "user_id", _BUCKET)
     grid = (
         obs.groupBy("user_id")
         .agg(F.min("bucket_start").alias("lo"), F.max("bucket_start").alias("hi"))
@@ -69,27 +69,21 @@ def gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.select(
         "user_id",
         "bucket_start",
-        F.coalesce("n_events", F.lit(0)).alias("n_events"),
+        F.coalesce("n", F.lit(0)).alias("n_events"),
         rnd(
-            F.last("avg_value", ignorenulls=True).over(
+            F.last("v", ignorenulls=True).over(
                 w.rowsBetween(Window.unboundedPreceding, 0)
             ),
             4,
         ).alias("value_filled"),
-        F.col("n_events").isNull().alias("is_gap"),
+        F.col("n").isNull().alias("is_gap"),
     )
 
 
 register(
     "gap_fill_locf",
     oracle=f"""
-WITH obs AS (
-  SELECT user_id,
-         (CAST(floor(epoch(ts)) AS BIGINT) // {_BUCKET}) * {_BUCKET} AS bucket_start,
-         count(*) AS n_events,
-         avg(value) AS avg_value
-  FROM events GROUP BY 1, 2
-),
+WITH {USER_15MIN_CTE},
 bounds AS (
   SELECT user_id, min(bucket_start) AS lo, max(bucket_start) AS hi
   FROM obs GROUP BY 1
@@ -99,17 +93,17 @@ grid AS (
   FROM bounds
 ),
 joined AS (
-  SELECT g.user_id, g.bucket_start, o.n_events, o.avg_value,
-         sum(CASE WHEN o.avg_value IS NOT NULL THEN 1 ELSE 0 END)
+  SELECT g.user_id, g.bucket_start, o.n, o.v,
+         sum(CASE WHEN o.v IS NOT NULL THEN 1 ELSE 0 END)
            OVER (PARTITION BY g.user_id ORDER BY g.bucket_start) AS carry_grp
   FROM grid g LEFT JOIN obs o
     ON g.user_id = o.user_id AND g.bucket_start = o.bucket_start
 )
 SELECT user_id, bucket_start,
-       CAST(coalesce(n_events, 0) AS BIGINT) AS n_events,
-       round(max(avg_value) OVER (PARTITION BY user_id, carry_grp) + 1e-6, 4)
+       CAST(coalesce(n, 0) AS BIGINT) AS n_events,
+       round(max(v) OVER (PARTITION BY user_id, carry_grp) + 1e-6, 4)
          AS value_filled,
-       n_events IS NULL AS is_gap
+       n IS NULL AS is_gap
 FROM joined
 """,
     tags=("timeseries", "gapfill", "bench"),
@@ -681,52 +675,37 @@ def autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lag rows with no predecessor drop out of the aggregate on both
     engines via NULL propagation).
     """
-    ev = load(spark, sf_dir, "events")
-    sec = epoch_seconds("ts")
-    obs = (
-        ev.select(
-            "user_id",
-            ((sec / _BUCKET).cast("long") * _BUCKET).alias("bucket_start"),
-            "value",
-        )
-        .groupBy("user_id", "bucket_start")
-        .agg(F.avg("value").alias("x"))
-    )
+    obs = mean_series(spark, sf_dir, "user_id", _BUCKET)
     w = Window.partitionBy("user_id").orderBy("bucket_start")
     lagged = obs.select(
         "user_id",
-        "x",
-        F.lag("x", 1).over(w).alias("x1"),
-        F.lag("x", 2).over(w).alias("x2"),
+        "v",
+        F.lag("v", 1).over(w).alias("x1"),
+        F.lag("v", 2).over(w).alias("x2"),
     )
     return lagged.groupBy("user_id").agg(
-        F.count("x").alias("n_buckets"),
+        F.count("v").alias("n_buckets"),
         # + 0.0 normalizes IEEE negative zero (DuckDB round() preserves
         # the sign of zero; hash-relevant — bit at sf0.1)
-        (rnd(F.corr("x", "x1"), 4) + F.lit(0.0)).alias("lag1_acf"),
-        (rnd(F.corr("x", "x2"), 4) + F.lit(0.0)).alias("lag2_acf"),
+        (rnd(F.corr("v", "x1"), 4) + F.lit(0.0)).alias("lag1_acf"),
+        (rnd(F.corr("v", "x2"), 4) + F.lit(0.0)).alias("lag2_acf"),
     )
 
 
 register(
     "autocorrelation",
     oracle=f"""
-WITH obs AS (
-  SELECT user_id,
-         (CAST(floor(epoch(ts)) AS BIGINT) // {_BUCKET}) * {_BUCKET} AS bucket_start,
-         avg(value) AS x
-  FROM events GROUP BY 1, 2
-),
+WITH {USER_15MIN_CTE},
 lagged AS (
-  SELECT user_id, x,
-         lag(x, 1) OVER (PARTITION BY user_id ORDER BY bucket_start) AS x1,
-         lag(x, 2) OVER (PARTITION BY user_id ORDER BY bucket_start) AS x2
+  SELECT user_id, v,
+         lag(v, 1) OVER (PARTITION BY user_id ORDER BY bucket_start) AS x1,
+         lag(v, 2) OVER (PARTITION BY user_id ORDER BY bucket_start) AS x2
   FROM obs
 )
 SELECT user_id,
-       count(x) AS n_buckets,
-       round(corr(x, x1) + 1e-6, 4) + 0.0 AS lag1_acf,
-       round(corr(x, x2) + 1e-6, 4) + 0.0 AS lag2_acf
+       count(v) AS n_buckets,
+       round(corr(v, x1) + 1e-6, 4) + 0.0 AS lag1_acf,
+       round(corr(v, x2) + 1e-6, 4) + 0.0 AS lag2_acf
 FROM lagged
 GROUP BY user_id
 """,
@@ -798,32 +777,22 @@ def seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     Edge buckets use the window's natural shrinking frame on BOTH
     engines (ROWS BETWEEN semantics), so no NULL trimming is needed.
     """
-    ev = load(spark, sf_dir, "events")
-    sec = epoch_seconds("ts")
-    hourly = (
-        ev.select(
-            "user_id",
-            ((sec / 3600).cast("long") * 3600).alias("bucket_start"),
-            "value",
-        )
-        .groupBy("user_id", "bucket_start")
-        .agg(F.avg("value").alias("x"))
-    )
+    hourly = mean_series(spark, sf_dir, "user_id", HOUR_S)
     trend_w = (
         Window.partitionBy("user_id").orderBy("bucket_start").rowsBetween(-12, 12)
     )
     trended = hourly.select(
         "user_id",
         "bucket_start",
-        "x",
-        F.avg("x").over(trend_w).alias("trend"),
+        "v",
+        F.avg("v").over(trend_w).alias("trend"),
         ((F.col("bucket_start") % 86400) / 3600).cast("int").alias("hod"),
-    ).withColumn("detrended", F.col("x") - F.col("trend"))
+    ).withColumn("detrended", F.col("v") - F.col("trend"))
     seas_w = Window.partitionBy("user_id", "hod")
     return trended.select(
         "user_id",
         "bucket_start",
-        rnd("x").alias("x"),
+        rnd("v").alias("x"),
         rnd("trend").alias("trend"),
         rnd(F.avg("detrended").over(seas_w)).alias("seasonal"),
         rnd(
@@ -834,23 +803,18 @@ def seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "seasonal_decompose",
-    oracle="""
-WITH hourly AS (
-  SELECT user_id,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 3600) * 3600 AS bucket_start,
-         avg(value) AS x
-  FROM events GROUP BY 1, 2
-),
+    oracle=f"""
+WITH {USER_HOURLY_CTE},
 trended AS (
-  SELECT user_id, bucket_start, x,
-         avg(x) OVER (PARTITION BY user_id ORDER BY bucket_start
+  SELECT user_id, bucket_start, v,
+         avg(v) OVER (PARTITION BY user_id ORDER BY bucket_start
                       ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS trend,
          CAST((bucket_start % 86400) // 3600 AS INTEGER) AS hod
   FROM hourly
 ),
-det AS (SELECT *, x - trend AS detrended FROM trended)
+det AS (SELECT *, v - trend AS detrended FROM trended)
 SELECT user_id, bucket_start,
-       round(x + 1e-6, 4) AS x,
+       round(v + 1e-6, 4) AS x,
        round(trend + 1e-6, 4) AS trend,
        round(avg(detrended) OVER (PARTITION BY user_id, hod) + 1e-6, 4) AS seasonal,
        round(detrended - avg(detrended) OVER (PARTITION BY user_id, hod) + 1e-6, 4) AS residual
@@ -1627,15 +1591,9 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the 'b' expression observes the freshly computed 'l'), silently
     corrupting any coupled recurrence.
     """
-    ev = load(spark, sf_dir, "events")
-    sec = epoch_seconds("ts")
-    hourly = (
-        ev.select("event_type", (F.floor(sec / 3600) * 3600).alias("h"), "value")
-        .groupBy("event_type", "h")
-        .agg(F.avg("value").alias("v"))
-    )
+    hourly = mean_series(spark, sf_dir, "event_type", HOUR_S)
     series = hourly.groupBy("event_type").agg(
-        F.array_sort(F.collect_list(F.struct("h", "v"))).alias("sv")
+        F.array_sort(F.collect_list(F.struct("bucket_start", "v"))).alias("sv")
     )
     a, b = HOLT_ALPHA, HOLT_BETA
     fold = (
@@ -1662,14 +1620,9 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "holt_linear_forecast",
     oracle=f"""
-WITH RECURSIVE hourly AS (
-  SELECT event_type,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 3600) * 3600 AS h,
-         avg(value) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH RECURSIVE {TYPE_HOURLY_CTE},
 series AS (
-  SELECT event_type, list(v ORDER BY h) AS vals
+  SELECT event_type, list(v ORDER BY bucket_start) AS vals
   FROM hourly GROUP BY event_type
 ),
 -- left-fold as a recursive CTE (NOT list_reduce: DuckDB 1.0.0 updates

@@ -1614,28 +1614,42 @@ def _band_sensitivity_oracle() -> str:
                 f"CAST(mh{band * r + i} AS VARCHAR)" for i in range(r)
             )
             keys.append(f"CAST({band} AS VARCHAR) || ':' || {parts}")
-        keys_sql = ", ".join(keys)
-        legs.append(f"""
-SELECT {b} AS bands, {r} AS rows_per_band,
-       (SELECT CAST(count(*) AS BIGINT) FROM (
-          SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-          FROM (SELECT doc_id, unnest([{keys_sql}]) AS band_key FROM sigs) a
-          JOIN (SELECT doc_id, unnest([{keys_sql}]) AS band_key FROM sigs) b
-            ON a.band_key = b.band_key AND a.doc_id < b.doc_id)) AS n_candidate_pairs,
-       (SELECT CAST(count(*) AS BIGINT) FROM (
-          SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-          FROM (SELECT doc_id, unnest([{keys_sql}]) AS band_key FROM sigs) a
-          JOIN (SELECT doc_id, unnest([{keys_sql}]) AS band_key FROM sigs) b
-            ON a.band_key = b.band_key AND a.doc_id < b.doc_id) c
-        JOIN true_pairs tp ON c.doc1 = tp.doc1 AND c.doc2 = tp.doc2) AS n_true_covered""")
+        legs.append(
+            f"SELECT {b} AS bands, doc_id,\n"
+            f"       unnest([{', '.join(keys)}]) AS band_key FROM sigs"
+        )
         # Spark's concat_ws on a leading int literal renders identically
         # (no trailing .0) because the band index is a string-cast int
     union = "\nUNION ALL\n".join(legs)
+    # one config-tagged candidate set, as the Spark side's self-join:
+    # each config's banded join and DISTINCT run once, the true pairs it
+    # covers are the LEFT JOIN's matches, and a config with no
+    # candidates still reports its row
     return _with(_SHINGLES_CTE, _OVERLAP_CTE, _TRUE_PAIRS_CTE, _SIGS_CTE) + f""",
-ntrue AS (SELECT CAST(count(*) AS BIGINT) AS n_true_pairs FROM true_pairs),
-cfg AS (
+banded AS (
 {union}
-)
+),
+cand_cfg AS (
+  SELECT DISTINCT a.bands, a.doc_id AS doc1, b.doc_id AS doc2
+  FROM banded a JOIN banded b
+    ON a.bands = b.bands AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+),
+per AS (
+  SELECT c.bands, count(*) AS n_candidate_pairs,
+         count(tp.doc1) AS n_true_covered
+  FROM cand_cfg c
+  LEFT JOIN true_pairs tp ON c.doc1 = tp.doc1 AND c.doc2 = tp.doc2
+  GROUP BY 1
+),
+cfg AS (
+  SELECT conf.bands, conf.rows_per_band,
+         CAST(coalesce(per.n_candidate_pairs, 0) AS BIGINT) AS n_candidate_pairs,
+         CAST(coalesce(per.n_true_covered, 0) AS BIGINT) AS n_true_covered
+  FROM (VALUES {", ".join(f"({b}, {r})" for b, r in BAND_CONFIGS)})
+         conf(bands, rows_per_band)
+  LEFT JOIN per ON conf.bands = per.bands
+),
+ntrue AS (SELECT CAST(count(*) AS BIGINT) AS n_true_pairs FROM true_pairs)
 SELECT cfg.bands, cfg.rows_per_band, cfg.n_candidate_pairs,
        cfg.n_true_covered, nt.n_true_pairs,
        round(cfg.n_true_covered * 1.0 / greatest(nt.n_true_pairs, 1) + 1e-6, 6)

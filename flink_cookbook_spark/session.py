@@ -29,6 +29,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """The driver heap ``get_spark`` asks for, as a Spark memory string:
+    ``$SPARK_GRAFT_DRIVER_MEM``, else 8g."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+
+
 def get_spark(
     app_name: str = "flink_cookbook_spark",
     master: str | None = None,
@@ -79,7 +85,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
     )

@@ -238,40 +238,33 @@ def _check(spark, args) -> int:
     DuckDB oracle on the replicated data: rounding ties, sketch math and
     adaptive-k derivations must hold as sums grow past the fixtures.
     ``ALL`` checks the whole registry. Exit 1 unless every query is OK."""
-    import duckdb
-
-    from flink_cookbook_spark.catalog import TABLES
     from flink_cookbook_spark.registry import all_specs
-    from tests.oracle_harness import compare
+    from tests.oracle_harness import compare, duckdb_connection
 
     specs = all_specs()
     names = sorted(specs) if args.queries == ["ALL"] else args.queries or CHECK_QUERIES
     results: dict[str, str] = {}
-    with _workdir() as work, duckdb.connect() as con:
+    with _workdir() as work:
         sf_dir = _replicated(spark, args, work)
-        for t in TABLES:
-            path = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.isdir(path):  # Spark writes a directory of parts
-                path = os.path.join(path, "*.parquet")
-            con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{path}'")
-        for name in names:
-            spec = specs.get(name)
-            if spec is None or spec.oracle is None:
-                status = "SKIP (no oracle)"
-            else:
-                try:
-                    # outputs past 2M rows (the 10x gap-fill grid is
-                    # ~42M) exceed spark.driver.maxResultSize: the harness
-                    # then compares memory-bounded streamed checksums
-                    problems = compare(
-                        spec.fn(spark, sf_dir), con, spec.oracle, name,
-                        stream_threshold=2_000_000,
-                    )
-                    status = "OK" if not problems else "FAIL: " + "; ".join(problems)
-                except Exception as exc:  # noqa: BLE001 — record, keep probing
-                    status = f"ERROR: {_error(exc)}"
-            results[name] = status
-            _emit({name: status})
+        with duckdb_connection(sf_dir) as con:
+            for name in names:
+                spec = specs.get(name)
+                if spec is None or spec.oracle is None:
+                    status = "SKIP (no oracle)"
+                else:
+                    try:
+                        # outputs past 2M rows (the 10x gap-fill grid is
+                        # ~42M) exceed spark.driver.maxResultSize: the harness
+                        # then compares memory-bounded streamed checksums
+                        problems = compare(
+                            spec.fn(spark, sf_dir), con, spec.oracle, name,
+                            stream_threshold=2_000_000,
+                        )
+                        status = "OK" if not problems else "FAIL: " + "; ".join(problems)
+                    except Exception as exc:  # noqa: BLE001 — record, keep probing
+                        status = f"ERROR: {_error(exc)}"
+                results[name] = status
+                _emit({name: status})
     n_ok = sum(1 for v in results.values() if v == "OK")
     _emit({"metric": "correctness_probe", "ok": n_ok, "total": len(results)})
     return 0 if n_ok == len(results) else 1

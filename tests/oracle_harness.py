@@ -11,6 +11,8 @@ summation order cannot flip values (registry.ROUND_DP).
 from __future__ import annotations
 
 import math
+import os
+import re
 
 import duckdb
 import numpy as np
@@ -28,14 +30,49 @@ def _is_date_col(col: pd.Series) -> bool:
     return len(vals) > 0 and isinstance(vals.iloc[0], (datetime.date, datetime.datetime))
 
 from flink_cookbook_spark.catalog import TABLES
+from flink_cookbook_spark.session import driver_memory
+
+#: the least memory (MiB) an oracle connection gets, however little the
+#: host has left beside the Spark driver.
+DUCKDB_MEMORY_FLOOR_MIB = 2048
+
+_MIB_PER_UNIT = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def memory_mib(spark_mem: str) -> int:
+    """MiB in a Spark memory string (``8g``, ``8192m``, ``1t``; a bare
+    number is MiB, as Spark reads it)."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", spark_mem.strip().lower())
+    if m is None:
+        raise ValueError(f"not a Spark memory string: {spark_mem!r}")
+    return int(int(m.group(1)) * _MIB_PER_UNIT[m.group(2) or "m"])
+
+
+def duckdb_memory_limit_mib() -> int:
+    """The oracle connection's memory cap: half the host RAM that the
+    Spark driver heap leaves, at least ``DUCKDB_MEMORY_FLOOR_MIB``.
+    DuckDB's default (80 % of RAM) ignores the driver JVM beside it, so
+    a heavy oracle took the host down instead of failing its query. The
+    other half is for what the cap does not count: the JVM past its heap
+    and the Python process holding the compared chunks. On a 15.7 GiB
+    host at the 10x ``gap_fill_locf`` check, the JVM held 9.1 GB for an
+    8 GB heap, and a cap of all 7.7 GiB left let the process reach
+    8.0 GB, so the kernel killed the JVM; at half (3.9 GiB) the oracle
+    still passes and the process peaks at 5.4 GB."""
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    free = host - memory_mib(driver_memory())
+    return max(free // 2, DUCKDB_MEMORY_FLOOR_MIB)
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    """A memory-capped DuckDB with one view per fixture table of
+    ``sf_dir``: a parquet file, or the directory of parts Spark writes."""
+    con = duckdb.connect(config={"memory_limit": f"{duckdb_memory_limit_mib()}MiB"})
     for name in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
-        )
+        path = f"{sf_dir}/{name}.parquet"
+        if os.path.isdir(path):
+            path = f"{path}/*.parquet"
+        con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{path}'")
     return con
 
 

@@ -769,6 +769,43 @@ def test_lsh_recall_consistency(spark, sf_dir):
     assert abs(r.s_curve_recall_at_threshold - want) < 1e-4
 
 
+def test_series_family_reads_one_series(spark, sf_dir):
+    """The series diagnostics read the same per-type mean series, so
+    their series lengths agree per event type: the daily tests' day
+    counts, the complete-day panel's block counts (Friedman and
+    Cochran), and the hourly queries' hour counts."""
+    from flink_cookbook_spark.registry import get_query
+
+    def per_type(name, col):
+        return {
+            r.event_type: r[col]
+            for r in get_query(name).fn(spark, sf_dir).collect()
+        }
+
+    def same(*series):
+        first = series[0]
+        assert first and all(s == first for s in series[1:]), series
+        return first
+
+    daily = same(
+        per_type("ljung_box_test", "n_days"),
+        per_type("mann_kendall_trend", "n_days"),
+        per_type("seasonal_strength_profile", "n_days"),
+        per_type("theil_sen_trend", "n_days"),
+    )
+    complete = same(
+        per_type("friedman_test", "n_days"),
+        per_type("cochran_q_test", "n_days"),
+    )
+    assert all(complete[t] <= daily[t] for t in complete)
+    same(
+        per_type("effective_sample_size", "n_obs"),
+        per_type("western_electric_rules", "n_hours"),
+        per_type("holt_winters_seasonal", "n_points"),
+        per_type("holt_linear_forecast", "n_points"),
+    )
+
+
 def test_interarrival_quantiles_ordered(spark, sf_dir):
     """Gap quantiles are ordered p50 <= p90 <= p99, all non-negative,
     and the per-type gap counts sum to n_events - (type, day) groups."""

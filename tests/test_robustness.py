@@ -866,6 +866,50 @@ def test_streamed_checksum_guards():
     assert {"c": "mixed"} != {"c": "int64"}
 
 
+def _duckdb_limit_mib(con) -> float:
+    """The connection's memory_limit in MiB (DuckDB prints e.g. '7.5 GiB')."""
+    text = con.execute("SELECT current_setting('memory_limit')").fetchone()[0]
+    num, unit = text.split()
+    return float(num) * {"KiB": 1 / 1024, "MiB": 1, "GiB": 1024, "TiB": 1024**2}[unit]
+
+
+def test_oracle_connection_caps_duckdb_memory(sf_dir, tmp_path, monkeypatch):
+    """The oracle connection (the tests' and ``probe.py check``'s) caps
+    DuckDB at half the host RAM the Spark driver heap leaves, never
+    below the floor — not DuckDB's default 80 % of RAM, which ignores
+    the driver JVM and got a 10x check killed with exit 137. It also
+    reads Spark's directory-of-parts layout."""
+    from tests.oracle_harness import DUCKDB_MEMORY_FLOOR_MIB, duckdb_connection
+
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**20
+    for heap, heap_mib in (("2g", 2048), ("3072m", 3072)):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", heap)
+        want = max((host - heap_mib) / 2, DUCKDB_MEMORY_FLOOR_MIB)
+        with duckdb_connection(sf_dir) as con:
+            assert abs(_duckdb_limit_mib(con) - want) < 0.06 * 1024, heap
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", f"{int(host) + 4096}m")
+    with duckdb_connection(sf_dir) as con:
+        got = _duckdb_limit_mib(con)
+    assert abs(got - DUCKDB_MEMORY_FLOOR_MIB) < 0.06 * 1024
+
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    for name in os.listdir(sf_dir):
+        src = os.path.join(sf_dir, name)
+        if name == "events.parquet":
+            (parts / name).mkdir()
+            os.symlink(src, parts / name / "part-00000.parquet")
+        else:
+            os.symlink(src, parts / name)
+    with duckdb_connection(str(parts)) as con:
+        got = con.execute("SELECT count(*) FROM events").fetchone()[0]
+    with duckdb.connect() as con:
+        want = con.execute(
+            f"SELECT count(*) FROM '{sf_dir}/events.parquet'"
+        ).fetchone()[0]
+    assert got == want > 0
+
+
 def test_grouped_exact_percentiles_matches_builtin(spark):
     """The distributed order-statistic helper must reproduce Spark's
     exact ``percentile`` bit-for-bit-after-rounding on adversarial
