@@ -177,12 +177,13 @@ def run(argv: list[str] | None = None) -> int:
     # stage 1: window agg -> durable intermediate, keyed by node id
     windowed = windowed_avg_stream(metrics).select("user_id", "window_start", "avg_value")
     inter_dir = os.path.join(args.checkpoint_dir, "intermediate")
+    window_ckpt = os.path.join(args.checkpoint_dir, "windowed")
     os.makedirs(inter_dir, exist_ok=True)
     q_window = to_sink(
         windowed,
         fmt="parquet",
         query_name="window_agg",  # named operators (R3)
-        checkpoint=os.path.join(args.checkpoint_dir, "windowed"),
+        checkpoint=window_ckpt,
         path=inter_dir,
     )
     # stage 2: stateful model + alert filter over the intermediate,
@@ -204,6 +205,13 @@ def run(argv: list[str] | None = None) -> int:
     q_window.awaitTermination(args.duration_seconds)
     if args.duration_seconds is not None:
         q_window.stop()
+        # stop() aborts the batch in flight, and stage 1 is never idle
+        # between batches (each data batch is followed by a watermark
+        # batch). A trigger-once run from the checkpoint re-runs the batch
+        # its offset log planned, so stage 2's drain sees its windows.
+        windowed.writeStream.format("parquet").option("checkpointLocation", window_ckpt).option(
+            "path", inter_dir
+        ).trigger(once=True).start().awaitTermination()
         q_alerts.processAllAvailable()  # drain what stage 1 committed
         q_alerts.stop()
     else:  # run until externally terminated

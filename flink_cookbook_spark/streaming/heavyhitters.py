@@ -13,15 +13,16 @@ ground-truth test):
   bounded error).
 
 Scale shape: the item space is hash-SHARDED (``item % HH_SHARDS``) and
-each shard maintains its own summary inside
-``applyInPandasWithState`` — state per key is a CONSTANT-size summary
-(capacity entries as one JSON string), shards hash-partition across
-executors, and a global top-k is a cheap merge of per-shard summaries
-(union of candidate sets; per-item counts are exact per shard because
-an item lives in exactly one shard).  This is the third
-key-cardinality-class native streaming operator after the token-bucket
-limiter (``streaming/ratelimit.py``) and the windowed drift monitor
-(``streaming/driftmon.py``).
+each shard maintains its own summary as the state of a
+``streaming/keyed.keyed_step`` step — state per key is a CONSTANT-size
+summary (capacity entries as one JSON string), shards hash-partition
+across executors, and a global top-k is a cheap merge of per-shard
+summaries (union of candidate sets; per-item counts are exact per shard
+because an item lives in exactly one shard).  Like the token-bucket
+limiter (``streaming/ratelimit.py``) it keeps Python state per key; the
+windowed drift monitor (``streaming/driftmon.py``) is not a stateful
+Python operator but a JVM watermarked aggregation, whose state Spark
+keeps per key and open window.
 
 Determinism: events are folded in (t, event_id) order inside each
 micro-batch, and eviction picks the minimum (count, item) pair, so a
@@ -33,11 +34,12 @@ tests/test_streaming.py::test_streaming_heavy_hitters_equals_replay.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from flink_cookbook_spark.streaming.keyed import keyed_step
 
 #: counters kept per shard (the memory budget), and the shard count.
 HH_CAPACITY = 4
@@ -70,52 +72,35 @@ def space_saving_fold(
     return summary
 
 
+def heavy_hitters_step(
+    shard, rows: pd.DataFrame, state_row: tuple | None
+) -> tuple[pd.DataFrame, tuple]:
+    """One shard's trigger: fold ``rows``' items (in (t, event_id)
+    order) into the stored (JSON summary, processed count) state and
+    emit the tracked summary."""
+    enc, n = state_row or ("{}", 0)
+    summary = {int(k): tuple(v) for k, v in json.loads(enc).items()}
+    items = [int(x) for x in rows["item"]]
+    space_saving_fold(summary, items)
+    n += len(items)
+    out = pd.DataFrame([
+        {"shard": int(shard), "item": it, "count_est": c, "err_bound": e, "n_processed": n}
+        for it, (c, e) in sorted(summary.items())
+    ])
+    return out, (json.dumps({str(k): list(v) for k, v in summary.items()}), n)
+
+
 def heavy_hitters_streaming(item_stream: DataFrame) -> DataFrame:
     """Per-shard Space-Saving over a stream with columns
     (item, t, event_id): emits the tracked summary after every
     micro-batch; state is the JSON-encoded summary plus the processed
     count — constant size by construction."""
     from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    state_schema = "summary string, n long"
-
-    def run(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        (shard,) = key
-        if state.exists:
-            enc, n = state.get
-            summary = {int(k): tuple(v) for k, v in json.loads(enc).items()}
-        else:
-            summary, n = {}, 0
-        chunks = [pdf for pdf in pdf_iter]
-        if chunks:
-            whole = pd.concat(chunks, ignore_index=True).sort_values(
-                ["t", "event_id"]
-            )
-            items = [int(x) for x in whole["item"]]
-            space_saving_fold(summary, items)
-            n += len(items)
-        state.update((json.dumps({str(k): list(v) for k, v in summary.items()}), n))
-        yield pd.DataFrame(
-            [
-                {
-                    "shard": int(shard),
-                    "item": it,
-                    "count_est": c,
-                    "err_bound": e,
-                    "n_processed": n,
-                }
-                for it, (c, e) in sorted(summary.items())
-            ]
-        )
 
     sharded = item_stream.withColumn(
         "shard", F.pmod(F.col("item"), F.lit(HH_SHARDS)).cast("long")
     )
-    return sharded.groupBy("shard").applyInPandasWithState(
-        run,
-        outputStructType=HH_SCHEMA,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_step(
+        sharded, "shard", ["t", "event_id"], heavy_hitters_step,
+        "summary string, n long", HH_SCHEMA,
     )

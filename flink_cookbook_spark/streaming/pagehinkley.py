@@ -30,11 +30,11 @@ EXACT (bit-identical), not approximate.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from flink_cookbook_spark.streaming.keyed import keyed_step
 
 #: magnitude tolerance subtracted per step (value units) and the alarm
 #: threshold on the PH excursion. Raw event values are noisier than
@@ -72,50 +72,28 @@ def page_hinkley_fold(
     return (n, sum_x, m, m_min, crossings)
 
 
+def page_hinkley_step(
+    event_type, rows: pd.DataFrame, state_row: tuple | None
+) -> tuple[pd.DataFrame, tuple]:
+    """One key's trigger: fold ``rows``' values (in (t, event_id)
+    order) into the stored PH state and emit the post-batch detector
+    row."""
+    state = page_hinkley_fold(
+        state_row or (0, 0.0, 0.0, 0.0, 0), [float(x) for x in rows["value"]]
+    )
+    n, sum_x, m, m_min, crossings = state
+    ph = m - m_min
+    out = {"event_type": event_type, "n_processed": n, "running_mean": sum_x / n,
+           "ph_stat": ph, "alarm": ph > PH_STREAM_LAMBDA, "n_alarm_crossings": crossings}
+    return pd.DataFrame([out]), state
+
+
 def page_hinkley_streaming(value_stream: DataFrame) -> DataFrame:
     """Per-key Page-Hinkley over a stream with columns
     (event_type, t, event_id, value): emits the post-batch detector
     state per key per micro-batch; state is five scalars by
     construction."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    state_schema = (
-        "n long, sum_x double, m double, m_min double, crossings long"
-    )
-
-    def run(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        (event_type,) = key
-        if state.exists:
-            st = state.get
-            tup = (int(st[0]), float(st[1]), float(st[2]), float(st[3]), int(st[4]))
-        else:
-            tup = (0, 0.0, 0.0, 0.0, 0)
-        chunks = [pdf for pdf in pdf_iter]
-        if chunks:
-            whole = pd.concat(chunks, ignore_index=True).sort_values(
-                ["t", "event_id"]
-            )
-            tup = page_hinkley_fold(tup, [float(x) for x in whole["value"]])
-        n, sum_x, m, m_min, crossings = tup
-        state.update((n, sum_x, m, m_min, crossings))
-        ph = m - m_min
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": event_type,
-                    "n_processed": n,
-                    "running_mean": (sum_x / n) if n else 0.0,
-                    "ph_stat": ph,
-                    "alarm": ph > PH_STREAM_LAMBDA,
-                    "n_alarm_crossings": crossings,
-                }
-            ]
-        )
-
-    return value_stream.groupBy("event_type").applyInPandasWithState(
-        run,
-        outputStructType=PH_SCHEMA,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_step(
+        value_stream, "event_type", ["t", "event_id"], page_hinkley_step,
+        "n long, sum_x double, m double, m_min double, crossings long", PH_SCHEMA,
     )

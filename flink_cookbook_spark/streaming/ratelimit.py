@@ -23,13 +23,12 @@ tests/test_streaming.py::test_streaming_rate_limiter_equals_replay.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
 
 from flink_cookbook_spark.operators.timeseries import RL_BURST, RL_REFILL_S
+from flink_cookbook_spark.streaming.keyed import keyed_step
 
 #: output: one cumulative row per user per micro-batch.
 RL_SCHEMA = (
@@ -38,57 +37,33 @@ RL_SCHEMA = (
 )
 
 
+def rate_limit_step(
+    user_id, rows: pd.DataFrame, state_row: tuple | None
+) -> tuple[pd.DataFrame, tuple]:
+    """One user's trigger: admit or throttle each request of ``rows``
+    (in ``t`` order) from the stored (n, thr, tok, last) bucket; a new
+    user's first request finds a full bucket."""
+    n, thr, tok, last = state_row or (0, 0, None, None)
+    for t in rows["t"]:
+        t = float(t)
+        tok = RL_BURST if last is None else min(RL_BURST, tok + (t - last) / RL_REFILL_S)
+        if tok >= 1.0:
+            tok -= 1.0
+        else:
+            thr += 1
+        last = t
+        n += 1
+    out = {"user_id": int(user_id), "n_requests": n, "n_throttled": thr,
+           "tokens_left": tok, "last_ts": last}
+    return pd.DataFrame([out]), (n, thr, tok, last)
+
+
 def rate_limiter_streaming(req_stream: DataFrame) -> DataFrame:
     """Per-user token bucket over a request stream with columns
     (user_id, t): admit or throttle each request in event order within
     the batch, carrying (tokens, last_ts, counts) across micro-batches
     and restarts. State is four scalars per user."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    state_schema = "n long, thr long, tok double, last double"
-
-    def run(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            n, thr, tok, last = state.get
-            if last == -1.0:  # stored sentinel for "never initialized"
-                tok, last = None, None
-        else:
-            n, thr, tok, last = 0, 0, None, None
-        chunks = [pdf for pdf in pdf_iter]
-        if chunks:
-            whole = pd.concat(chunks, ignore_index=True).sort_values("t")
-            for row in whole.itertuples(index=False):
-                t = float(row.t)
-                if last is None:
-                    tok, last = RL_BURST - 1.0, t
-                    n += 1
-                    continue
-                tok = min(RL_BURST, tok + (t - last) / RL_REFILL_S)
-                if tok >= 1.0:
-                    tok -= 1.0
-                else:
-                    thr += 1
-                last = t
-                n += 1
-        state.update((n, thr, tok if tok is not None else -1.0,
-                      last if last is not None else -1.0))
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": int(user_id),
-                    "n_requests": n,
-                    "n_throttled": thr,
-                    "tokens_left": tok if tok is not None else -1.0,
-                    "last_ts": last if last is not None else -1.0,
-                }
-            ]
-        )
-
-    return req_stream.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=RL_SCHEMA,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_step(
+        req_stream, "user_id", ["t"], rate_limit_step,
+        "n long, thr long, tok double, last double", RL_SCHEMA,
     )

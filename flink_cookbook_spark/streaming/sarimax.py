@@ -51,6 +51,7 @@ import logging
 import math
 from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -59,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.registry import register, rnd
+from flink_cookbook_spark.streaming.keyed import keyed_step
 
 _log = logging.getLogger(__name__)
 
@@ -531,26 +533,14 @@ def model_stream(
     windowed_stream: DataFrame, cfg: BaselineConfig = FIXTURE_CONFIG
 ) -> DataFrame:
     """The one streaming model operator: ``model_step`` per key and
-    trigger in applyInPandasWithState, keyed on ``user_id`` of any type.
+    trigger through ``keyed_step``, keyed on ``user_id`` of any type.
     The state, co-partitioned with the key, replaces the reference's
     broadcast of the latest baseline (SURVEY.md J1 note). Emits an
-    ``ASOF_SCHEMA`` row per window at or after the key's first emission."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def run(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        # a key's rows can span multiple Arrow chunks in shuffle order —
-        # concatenate BEFORE sorting or samples process out of window order
-        samples = pd.concat(pdf_iter, ignore_index=True)
-        rows, row = model_step(key[0], samples, state.get if state.exists else None, cfg)
-        state.update(row)
-        yield rows
-
-    return windowed_stream.groupBy("user_id").applyInPandasWithState(
-        run,
-        outputStructType=_keyed_like(windowed_stream, ASOF_SCHEMA),
-        stateStructType=MODEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    ``ASOF_SCHEMA`` row per window at or after the key's first emission.
+    The shell does not sort: ``replay_key`` orders the samples."""
+    return keyed_step(
+        windowed_stream, "user_id", None, partial(model_step, cfg=cfg),
+        MODEL_STATE_SCHEMA, _keyed_like(windowed_stream, ASOF_SCHEMA),
     )
 
 

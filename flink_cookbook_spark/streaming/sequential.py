@@ -26,7 +26,6 @@ tests/test_streaming.py::test_streaming_sprt_equals_batch.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import pandas as pd
 
@@ -34,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
+from flink_cookbook_spark.streaming.keyed import keyed_step
 from flink_cookbook_spark.operators.experiments import (
     POWER_CONVERT_VALUE,
     SPRT_ALPHA,
@@ -72,6 +72,24 @@ def sprt_observations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("experiment_id", F.lit("exp-1"))
 
 
+def sprt_step(
+    experiment_id, rows: pd.DataFrame, state_row: tuple | None
+) -> tuple[pd.DataFrame, tuple]:
+    """One experiment's trigger: fold ``rows``' outcomes (in
+    (first_ts, user_id) order) into the stored (n, llr, decided_at,
+    decision) state, latching the first boundary crossing."""
+    n, llr, decided_at, decision = state_row or (0, 0.0, -1, "continue")
+    for x in rows["x"]:
+        n += 1
+        llr += x * L1 + (1 - x) * L0
+        if decided_at < 0 and (llr >= UPPER or llr <= LOWER):
+            decided_at = n
+            decision = "accept_h1" if llr >= UPPER else "accept_h0"
+    out = {"experiment_id": experiment_id, "n_total": n, "llr": llr,
+           "decided_at_n": decided_at if decided_at >= 0 else None, "decision": decision}
+    return pd.DataFrame([out]), (n, llr, decided_at, decision)
+
+
 def sprt_streaming(obs_stream: DataFrame) -> DataFrame:
     """Streaming SPRT over an observation stream with columns
     (experiment_id, user_id, first_ts, x): per experiment, fold each
@@ -79,44 +97,7 @@ def sprt_streaming(obs_stream: DataFrame) -> DataFrame:
     running LLR, latch the first boundary crossing, and emit one
     progress row per batch. State is four scalars per experiment —
     trivially inside any state-store budget at any key cardinality."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    state_schema = "n long, llr double, decided_at long, decision string"
-
-    def run(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        (experiment_id,) = key
-        if state.exists:
-            n, llr, decided_at, decision = state.get
-        else:
-            n, llr, decided_at, decision = 0, 0.0, -1, "continue"
-        chunks = [pdf for pdf in pdf_iter]
-        if chunks:
-            whole = pd.concat(chunks, ignore_index=True).sort_values(
-                ["first_ts", "user_id"]
-            )
-            for row in whole.itertuples(index=False):
-                n += 1
-                llr += row.x * L1 + (1 - row.x) * L0
-                if decided_at < 0 and (llr >= UPPER or llr <= LOWER):
-                    decided_at = n
-                    decision = "accept_h1" if llr >= UPPER else "accept_h0"
-        state.update((n, llr, decided_at, decision))
-        yield pd.DataFrame(
-            [
-                {
-                    "experiment_id": experiment_id,
-                    "n_total": n,
-                    "llr": llr,
-                    "decided_at_n": decided_at if decided_at >= 0 else None,
-                    "decision": decision,
-                }
-            ]
-        )
-
-    return obs_stream.groupBy("experiment_id").applyInPandasWithState(
-        run,
-        outputStructType=SPRT_SCHEMA,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_step(
+        obs_stream, "experiment_id", ["first_ts", "user_id"], sprt_step,
+        "n long, llr double, decided_at long, decision string", SPRT_SCHEMA,
     )

@@ -226,20 +226,76 @@ def test_vectorized_runner_equals_scalar_loop(method):
         )
 
 
-def test_model_step_independent_of_trigger_boundaries():
-    """The streaming model operator's per-key group step gives the same
-    rows for one key's series in one call as split at trigger boundaries
-    (fixed and random), its state passed on through the state-row tuple.
-    Its emission rows are ``replay_key``'s records, and every row carries
-    the latest emission at or before it (``merge_asof``, the oracle)."""
-    cfg = FIXTURE_CONFIG
-    series = _runner_input(1, 2 * cfg.max_history + 40)[["window_start", "avg_value"]]
-    want, state = model_step("node-07", series, None, cfg)
+def _carry_cases() -> dict:
+    """Per streaming step: (step, the shell's order, key, one key's
+    input in arrival order)."""
+    from functools import partial
+
+    from flink_cookbook_spark.streaming.heavyhitters import heavy_hitters_step
+    from flink_cookbook_spark.streaming.pagehinkley import page_hinkley_step
+    from flink_cookbook_spark.streaming.ratelimit import rate_limit_step
+    from flink_cookbook_spark.streaming.sequential import sprt_step
+
+    rng = np.random.default_rng(3)
+    n = 400
+    t = np.cumsum(rng.exponential(40.0, n)).round(3)  # bursts throttle, gaps refill
+    ev = pd.DataFrame({"t": t, "event_id": np.arange(n)})
+    shift = np.where(np.arange(n) < n // 2, 10.0, 25.0)  # a mean shift PH alarms on
+    return {
+        "model": (partial(model_step, cfg=FIXTURE_CONFIG), None, "node-07",
+                  _runner_input(1, 2 * FIXTURE_CONFIG.max_history + 40)[
+                      ["window_start", "avg_value"]]),
+        "rate_limit": (rate_limit_step, ["t"], 7, ev[["t"]]),
+        "heavy_hitters": (heavy_hitters_step, ["t", "event_id"], 1,
+                          ev.assign(item=rng.zipf(1.6, n) % 23)),
+        "page_hinkley": (page_hinkley_step, ["t", "event_id"], "purchase",
+                         ev.assign(value=shift + rng.normal(0, 3, n))),
+        "sprt": (sprt_step, ["first_ts", "user_id"], "exp-1",
+                 pd.DataFrame({"first_ts": t, "user_id": np.arange(n),
+                               "x": (rng.random(n) < 0.2).astype(int)})),
+    }
+
+
+@pytest.mark.parametrize("name", list(_carry_cases()))
+def test_step_independent_of_trigger_boundaries(name):
+    """Each streaming operator's step, run through the shell's per-group
+    path (``apply_step``), ends in the same state row when one key's
+    input arrives in one trigger as when it is split at trigger
+    boundaries (fixed and random), shuffled and cut into two Arrow
+    chunks within each trigger, its state passed on through the state
+    row. The model emits a row per window, so all its rows must be
+    equal; the other steps emit their post-trigger state, so the last
+    trigger's rows must be."""
+    from flink_cookbook_spark.streaming.keyed import apply_step
+
+    step, order, key, series = _carry_cases()[name]
+    want, state = apply_step(step, order, key, [series], None)
+    assert len(want)
+    rng = np.random.default_rng(11)
+    splits = [[5, 14, 15, 16, 100]] + [
+        sorted(rng.choice(np.arange(1, len(series)), rng.integers(1, 12), replace=False))
+        for _ in range(6)
+    ]
+    for cuts in splits:
+        row, parts = None, []
+        for a, b in zip([0, *cuts], [*cuts, len(series)]):
+            trigger = series.iloc[a:b].sample(frac=1, random_state=int(b))
+            chunks = [trigger.iloc[: len(trigger) // 2], trigger.iloc[len(trigger) // 2:]]
+            rows, row = apply_step(step, order, key, chunks, row)
+            parts.append(rows)
+        assert row == state, cuts
+        if name == "model":
+            got = pd.concat([p.astype(object) for p in parts if len(p)], ignore_index=True)
+            pd.testing.assert_frame_equal(got, want.astype(object), check_exact=True)
+        else:
+            pd.testing.assert_frame_equal(rows, want, check_exact=True)
+    if name != "model":
+        return
+
     assert list(want.columns) == ASOF_COLS
     last = want.iloc[-1]
     assert state[6:] == (last["baseline_window_start"], last["baseline"], last["running_std"])
-
-    recs = pd.DataFrame(replay_key(_KeyState(), "node-07", series, cfg), columns=BASELINE_COLS)
+    recs = pd.DataFrame(replay_key(_KeyState(), key, series, FIXTURE_CONFIG), columns=BASELINE_COLS)
     emit = want[want["baseline_window_start"] == want["window_start"]]
     pd.testing.assert_frame_equal(
         emit[BASELINE_COLS].reset_index(drop=True), recs, check_dtype=False, check_exact=True
@@ -252,20 +308,6 @@ def test_model_step_independent_of_trigger_boundaries():
     for c in ("window_start", "baseline", "running_std", "baseline_window_start"):
         assert want[c].tolist() == asof[c].tolist(), c
     assert want["observed"].tolist() == asof["avg_value"].tolist()
-
-    rng = np.random.default_rng(11)
-    splits = [[5, 14, 15, 16, 100]] + [
-        sorted(rng.choice(np.arange(1, len(series)), rng.integers(1, 12), replace=False))
-        for _ in range(6)
-    ]
-    for cuts in splits:
-        row, parts = None, []
-        for a, b in zip([0, *cuts], [*cuts, len(series)]):
-            rows, row = model_step("node-07", series.iloc[a:b], row, cfg)
-            parts.append(rows)
-        got = pd.concat([p.astype(object) for p in parts if len(p)], ignore_index=True)
-        pd.testing.assert_frame_equal(got, want.astype(object), check_exact=True)
-        assert row == state, cuts
 
 
 def test_fit_failure_drops_one_record_in_both_runners(monkeypatch, caplog):

@@ -667,6 +667,9 @@ def test_cli_stream_mode_runs(spark, tmp_path, monkeypatch):
     assert plan.count("FlatMapGroupsInPandasWithState") == 1, plan
     assert re.search(r"abs\(z_score#\d+\) >= 2\.5", plan), plan
     assert q.recentProgress  # stage 2 ran
+    ckpt = tmp_path / "ckpt" / "windowed"
+    last = max(int(f.name) for f in (ckpt / "offsets").iterdir() if f.name.isdigit())
+    assert (ckpt / "commits" / str(last)).exists(), f"stage 1 batch {last} aborted"
 
 
 def test_stream_static_join(spark, events_stream_dir):
@@ -1041,6 +1044,30 @@ def test_streaming_minute_rate_feeds_rate_profile(spark, sf_dir, events_stream_d
     want = {r.event_type: r.asDict()
             for r in event_rate_profile(spark, sf_dir).collect()}
     assert got == want
+
+
+def test_keyed_operators_plan_shape(spark, events_stream_dir):
+    """Each keyed streaming operator other than the model plans as one
+    stateful group operator behind one hash exchange on its key."""
+    from flink_cookbook_spark.streaming.heavyhitters import heavy_hitters_streaming
+    from flink_cookbook_spark.streaming.pagehinkley import page_hinkley_streaming
+    from flink_cookbook_spark.streaming.ratelimit import rate_limiter_streaming
+    from flink_cookbook_spark.streaming.sequential import sprt_streaming
+
+    ev = _read_stream(spark, events_stream_dir)
+    t = F.col("ts").cast("double")
+    ops = [
+        rate_limiter_streaming(ev.select("user_id", t.alias("t"))),
+        heavy_hitters_streaming(ev.select(F.col("user_id").alias("item"), t.alias("t"), "event_id")),
+        page_hinkley_streaming(ev.select("event_type", t.alias("t"), "event_id", "value")),
+        sprt_streaming(ev.select(F.lit("exp-1").alias("experiment_id"), "user_id",
+                                 t.alias("first_ts"), (F.col("value") > 50).cast("int").alias("x"))),
+    ]
+    for df in ops:
+        qe = df._jdf.queryExecution()
+        assert qe.analyzed().toString().count("FlatMapGroupsInPandasWithState") == 1
+        physical = spark._jvm.PythonSQLUtils.explainString(qe, "simple")
+        assert physical.count("Exchange ") == 1, physical
 
 
 def test_streaming_sprt_equals_batch(spark, sf_dir, tmp_path_factory):
